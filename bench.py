@@ -107,7 +107,7 @@ def bench_full_scoring(spark, sf_dir, n_entities):
     records, _, _ = fixture_dataframes(spark, fx)
     names = records.select(simplify_corp(F.col("repo")).alias("string")).distinct()
     cap = int(os.environ.get("SPARK_GRAFT_BLOCK_CAP", "100"))
-    from nama_spark.operators.score import token_similarity_scores_map
+    from nama_spark.operators.score import token_similarity_scores as token_similarity_scores_map
 
     ts = TokenSimilarity(max_block_size=cap).fit(names)
     ts._tokens.count()

@@ -55,13 +55,118 @@ def _empty_topk(df: DataFrame, id_col: str) -> DataFrame:
 
 def _np_elem(dt):
     """numpy dtype for a Spark array<float>/array<double> column, else
-    None (unsupported element types keep the relational path)."""
+    None."""
     if isinstance(dt, T.ArrayType):
         if isinstance(dt.elementType, T.FloatType):
             return np.float32
         if isinstance(dt.elementType, T.DoubleType):
             return np.float64
     return None
+
+
+def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str):
+    """The one numpy cosine top-k kernel: returns ``topk(qid, Q, nid, C)``
+    → DataFrame(query_id, neighbor_id, cos) holding, per query, every
+    non-self row whose cos is at or above its k-th best — ties (and NaNs,
+    kept as +inf in the truncation key) are never dropped, so a downstream
+    global rank window sees every row it could rank ≤ k: a row beaten by
+    ≥k rows of its own batch or cell is beaten by ≥k rows globally.
+
+    ``Q``/``C`` are sequences of per-row vectors; each side is stacked in
+    its own element dtype (a float side widened by a union casts back
+    exactly). Bit-exact vs cosine_sim_expr: each norm squares in its own
+    side's dtype (like transform(x*x) on array<float>), dot products run in
+    the wider of the two dtypes (like zip_with(x*y) after Spark's type
+    coercion), every fold is dimension-sequential float64, and
+    cos = dot / (norm·norm). A NULL or ragged vector raises ValueError
+    naming ``vec_col`` and the first offending id.
+
+    Returned as a nested function so cloudpickle ships it by value: workers
+    never need nama_spark importable."""
+
+    def stack(ids, vecs, dtype):
+        try:
+            M = np.stack(vecs).astype(dtype, copy=False)
+            if M.ndim == 2:
+                return M
+        except (TypeError, ValueError):
+            pass
+        # error path only: name the first NULL, else the first row off the
+        # most common length
+        lens = [len(v) if hasattr(v, "__len__") else None for v in vecs]
+        for i, n in zip(ids, lens):
+            if n is None:
+                raise ValueError(f"{vec_col}: NULL vector at id {i!r}")
+        width = max(set(lens), key=lens.count)
+        for i, n in zip(ids, lens):
+            if n != width:
+                raise ValueError(
+                    f"{vec_col}: ragged vector at id {i!r} "
+                    f"(length {n}, expected {width})"
+                )
+        raise ValueError(f"{vec_col}: vectors do not stack into a matrix")
+
+    def seq_dim_sum(prod):
+        # accumulate over the LAST axis in index order, float64 — the
+        # bit-exact twin of F.aggregate(..., 0.0, acc + x)'s left-to-right
+        # fold (np.sum's pairwise reduction can differ in the last ulp)
+        acc = np.zeros(prod.shape[:-1], dtype=np.float64)
+        for j in range(prod.shape[-1]):
+            acc += prod[..., j].astype(np.float64, copy=False)
+        return acc
+
+    def topk(qid, Q, nid, C):
+        qid = np.asarray(qid)
+        nid = np.asarray(nid)
+        if len(qid) == 0 or len(nid) == 0:
+            return pd.DataFrame({"query_id": qid[:0], "neighbor_id": nid[:0],
+                                 "cos": np.zeros(0, dtype=np.float64)})
+        Q = stack(qid, Q, q_dtype)
+        C = stack(nid, C, c_dtype)
+        if Q.shape[1] != C.shape[1]:
+            raise ValueError(
+                f"{vec_col}: query dim {Q.shape[1]} != corpus dim {C.shape[1]}"
+            )
+        qn = np.sqrt(seq_dim_sum(Q * Q))
+        cn = np.sqrt(seq_dim_sum(C * C))
+        n = len(C)
+        kk = min(k, n)
+        out_q, out_n, out_c = [], [], []
+        # bound the (queries × corpus) cos matrix at ~128M float64 entries
+        step = max(1, (1 << 27) // n)
+        for s in range(0, len(Q), step):
+            Qs = Q[s:s + step]
+            dot = np.zeros((len(Qs), n), dtype=np.float64)
+            for j in range(Q.shape[1]):
+                dot += np.multiply.outer(Qs[:, j], C[:, j]).astype(
+                    np.float64, copy=False
+                )
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = dot / np.multiply.outer(qn[s:s + step], cn)
+            key = np.where(np.isnan(cos), np.inf, cos)
+            self_mask = qid[s:s + step, None] == nid[None, :]
+            key = np.where(self_mask, -np.inf, key)
+            if n > kk:
+                thr = np.partition(key, n - kk, axis=1)[:, n - kk]
+            else:
+                thr = np.full(len(Qs), -np.inf)
+            keep = (key >= thr[:, None]) & ~self_mask
+            for i in range(len(Qs)):
+                sel = np.flatnonzero(keep[i])
+                out_q.append(np.repeat(qid[s + i], len(sel)))
+                out_n.append(nid[sel])
+                out_c.append(cos[i, sel])
+        return pd.DataFrame({"query_id": np.concatenate(out_q),
+                             "neighbor_id": np.concatenate(out_n),
+                             "cos": np.concatenate(out_c)})
+
+    return topk
+
+
+# Query-row count up to which cosine_topk_bruteforce collects the query
+# side and broadcasts it into the numpy scan; bigger query sides take the
+# broadcast-hinted crossJoin.
+_BRUTEFORCE_QUERY_ROWS = 10_000
 
 
 def cosine_topk_bruteforce(
@@ -75,16 +180,18 @@ def cosine_topk_bruteforce(
     """(query_id, neighbor_id, cos) — exact top-k cosine neighbors, excluding
     self-matches. Deterministic tie-break on neighbor id.
 
-    With ``broadcast_queries`` (the small-query-batch contract that already
-    justified the broadcast hint) and float/double vectors, the scan runs
-    as ONE mapInPandas over the corpus (round 6, guide §4.2): the query
-    matrix ships once as a broadcast, every corpus batch scores against it
-    in numpy, and only per-batch per-query top-k rows (ties at the k-th
-    cos included — lossless truncation) reach the global rank window, so
-    the |q|·|corpus| crossJoin rows and their per-row interpreted cosines
-    never materialize. Scoring is bit-exact vs cosine_sim_expr: products
-    in each side's own element dtype, dimension-sequential float64 fold,
-    same norm/divide order (tests/test_ivf_cell_topk.py)."""
+    With ``broadcast_queries`` (the small-query-batch contract) and
+    float/double vectors, this runs one eager driver action first:
+    ``queries.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()``. A query side
+    within the cap ships once as a broadcast and the scan runs as ONE
+    mapInPandas over the corpus (round 6, guide §4.2): every corpus batch
+    scores against it with the _cosine_topk_ties kernel, and only
+    per-batch per-query top-k rows (ties at the k-th cos included —
+    lossless truncation) reach the global rank window, so the
+    |q|·|corpus| crossJoin rows never materialize. Scoring is bit-exact
+    vs cosine_sim_expr (tests/test_ivf_cell_topk.py). A bigger query
+    side, other element types, or ``broadcast_queries=False`` take the
+    crossJoin + cosine_sim_expr path (broadcast-hinted when asked)."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -94,65 +201,28 @@ def cosine_topk_bruteforce(
     )
     q_elem = _np_elem(q.schema["qv"].dataType)
     c_elem = _np_elem(c.schema["cv"].dataType)
+    qrows = None
     if broadcast_queries and q_elem is not None and c_elem is not None:
-        qrows = q.collect()
+        qrows = q.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()
         if not qrows:
             return _empty_topk(corpus, id_col)
-        qid = np.array([r["query_id"] for r in qrows])
-        Q = np.array([r["qv"] for r in qrows], dtype=q_elem)
-        qn_acc = np.zeros(len(Q), dtype=np.float64)
-        P = Q * Q
-        for j in range(Q.shape[1]):
-            qn_acc += P[:, j].astype(np.float64, copy=False)
-        qn = np.sqrt(qn_acc)
-        bc = corpus.sparkSession.sparkContext.broadcast((qid, Q, qn))
-        kk = k
+    if qrows is not None and len(qrows) <= _BRUTEFORCE_QUERY_ROWS:
+        bc = corpus.sparkSession.sparkContext.broadcast((
+            np.array([r["query_id"] for r in qrows]),
+            [r["qv"] for r in qrows],
+        ))
+        topk = _cosine_topk_ties(k, q_elem, c_elem, vec_col)
 
         def scan(batches):
+            qid, qvecs = bc.value
             for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                qid, Q, qn = bc.value
-                C = np.stack(pdf["cv"].to_numpy()).astype(c_elem, copy=False)
-                nid = pdf["neighbor_id"].to_numpy()
-                cn_acc = np.zeros(len(C), dtype=np.float64)
-                PC = C * C
-                for j in range(C.shape[1]):
-                    cn_acc += PC[:, j].astype(np.float64, copy=False)
-                cn = np.sqrt(cn_acc)
-                dot = np.zeros((len(Q), len(C)), dtype=np.float64)
-                for j in range(Q.shape[1]):
-                    dot += np.multiply.outer(Q[:, j], C[:, j]).astype(
-                        np.float64, copy=False
-                    )
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = dot / np.multiply.outer(qn, cn)
-                key = np.where(np.isnan(cos), np.inf, cos)
-                self_mask = qid[:, None] == nid[None, :]
-                key = np.where(self_mask, -np.inf, key)
-                n = len(C)
-                kb = min(kk, n)
-                if n > kb:
-                    thr = np.partition(key, n - kb, axis=1)[:, n - kb]
-                else:
-                    thr = np.full(len(Q), -np.inf)
-                keep = (key >= thr[:, None]) & ~self_mask
-                out_q, out_n, out_c = [], [], []
-                for i in range(len(Q)):
-                    sel = np.flatnonzero(keep[i])
-                    out_q.append(np.repeat(qid[i], len(sel)))
-                    out_n.append(nid[sel])
-                    out_c.append(cos[i, sel])
-                yield pd.DataFrame(
-                    {"query_id": np.concatenate(out_q),
-                     "neighbor_id": np.concatenate(out_n),
-                     "cos": np.concatenate(out_c)}
-                )
+                if len(pdf):
+                    yield topk(qid, qvecs, pdf["neighbor_id"].to_numpy(),
+                               pdf["cv"])
 
-        id_type = c.schema["neighbor_id"].dataType
         out_schema = T.StructType([
             T.StructField("query_id", q.schema["query_id"].dataType),
-            T.StructField("neighbor_id", id_type),
+            T.StructField("neighbor_id", c.schema["neighbor_id"].dataType),
             T.StructField("cos", T.DoubleType()),
         ])
         cand = c.mapInPandas(scan, schema=out_schema)
@@ -566,82 +636,6 @@ def ivf_assign(
     )
 
 
-def _cell_topk_builder(k: int, np_dtype):
-    """applyInPandas cogroup fn: per IVF cell, score every (probe-query ×
-    assigned-vector) cosine in numpy and emit each query's top-k WITH
-    TIES on the k-th cos value. Bit-exact vs the cosine_sim_expr join:
-    products are computed in the INPUT element dtype (float32 arrays
-    multiply in float32 before the double fold, exactly like
-    zip_with(x*y) on array<float>), the fold is dimension-sequential, and
-    cos = dot / (norm·norm) in float64. Ties (and NaNs, kept as +inf in
-    the truncation key) are never dropped, so the downstream global
-    window sees every row it could rank ≤ k — truncation is lossless by
-    the per-cell-superset argument (a pair beaten by ≥k pairs in its own
-    cell is beaten by ≥k pairs globally)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # self-contained closure (no nama_spark module references — workers
-        # may not have the package importable; the repo's UDF convention)
-        def seq_dim_sum(prod):
-            # accumulate over the LAST axis in index order, float64 — the
-            # bit-exact twin of F.aggregate(..., 0.0, acc + x)'s
-            # left-to-right fold (np.sum's pairwise reduction can differ
-            # in the last ulp)
-            acc = np.zeros(prod.shape[:-1], dtype=np.float64)
-            for j in range(prod.shape[-1]):
-                acc += prod[..., j].astype(np.float64, copy=False)
-            return acc
-
-        left = pdf[pdf["side"] == 0]
-        right = pdf[pdf["side"] == 1]
-        if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {"query_id": left["id"][:0],
-                 "neighbor_id": right["id"][:0],
-                 "cos": np.zeros(0, dtype=np.float64)}
-            )
-        Q = np.stack(left["vec"].to_numpy()).astype(np_dtype, copy=False)
-        C = np.stack(right["vec"].to_numpy()).astype(np_dtype, copy=False)
-        qn = np.sqrt(seq_dim_sum(Q * Q))
-        cn = np.sqrt(seq_dim_sum(C * C))
-        qid = left["id"].to_numpy()
-        nid = right["id"].to_numpy()
-        n = len(C)
-        kk = min(k, n)
-        out_q, out_n, out_c = [], [], []
-        # bound the (queries × cell) cos matrix at ~128M float64 entries
-        step = max(1, (1 << 27) // max(1, n))
-        for s in range(0, len(Q), step):
-            Qs = Q[s:s + step]
-            dot = np.zeros((len(Qs), n), dtype=np.float64)
-            for j in range(Q.shape[1]):
-                dot += np.multiply.outer(Qs[:, j], C[:, j]).astype(
-                    np.float64, copy=False
-                )
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / np.multiply.outer(qn[s:s + step], cn)
-            key = np.where(np.isnan(cos), np.inf, cos)
-            self_mask = qid[s:s + step, None] == nid[None, :]
-            key = np.where(self_mask, -np.inf, key)
-            if n > kk:
-                thr = np.partition(key, n - kk, axis=1)[:, n - kk]
-            else:
-                thr = np.full(len(Qs), -np.inf)
-            keep = (key >= thr[:, None]) & ~self_mask
-            for i in range(len(Qs)):
-                sel = np.flatnonzero(keep[i])
-                out_q.append(np.repeat(qid[s + i], len(sel)))
-                out_n.append(nid[sel])
-                out_c.append(cos[i, sel])
-        return pd.DataFrame(
-            {"query_id": np.concatenate(out_q),
-             "neighbor_id": np.concatenate(out_n),
-             "cos": np.concatenate(out_c)}
-        )
-
-    return fn
-
-
 def ivf_topk_delta(
     queries: DataFrame,
     centers: DataFrame,
@@ -659,65 +653,60 @@ def ivf_topk_delta(
     ``nprobe = n_cells`` probes everything: exact top-k (the test anchor).
     Same output contract as ivf_topk: (query_id, neighbor_id, cos, rank).
 
-    The per-cell re-rank runs as ONE cogrouped applyInPandas (round 6,
-    guide §4.2): probe queries and assigned vectors meet per cell, all
-    within-cell cosines run as numpy array math, and only each query's
+    The per-cell re-rank runs as ONE grouped applyInPandas (round 6,
+    guide §4.2): probe queries and assigned vectors meet per cell, the
+    _cosine_topk_ties kernel scores them in numpy, and only each query's
     top-k (ties included) leaves the cell — the candidate fan-out
     (|q| · nprobe · occupancy rows through an exchange, each paying an
     interpreted ~10 µs higher-order cosine) never materializes, and the
     global window ranks |q| · nprobe · k rows instead. Scoring is
-    bit-exact vs the old join (see _cell_topk_builder); non-float vector
-    columns keep the join path."""
+    bit-exact vs the cosine_sim_expr join, mixed float/double sides
+    included; vector columns of other numeric element types are cast to
+    array<double> on entry."""
+    def float_vectors(df):
+        if _np_elem(df.schema[vec_col].dataType) is not None:
+            return df
+        return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
+
+    queries = float_vectors(queries)
+    assigned = float_vectors(assigned)
     if queries.isEmpty():
         return _empty_topk(queries, id_col)
     probes = ivf_assign(queries, centers, nprobe=nprobe,
-                        id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("query_id"), F.col("cell"),
-        F.col(vec_col).alias("qv"),
-    )
-    corpus_cells = assigned.select(
-        "cell", F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-    )
+                        id_col=id_col, vec_col=vec_col)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
-    elem = None
-    vt = probes.schema["qv"].dataType
-    if isinstance(vt, T.ArrayType):
-        if isinstance(vt.elementType, T.FloatType):
-            elem = np.float32
-        elif isinstance(vt.elementType, T.DoubleType):
-            elem = np.float64
-    if elem is not None:
-        id_type = probes.schema["query_id"].dataType
-        out_schema = T.StructType([
-            T.StructField("query_id", id_type),
-            T.StructField("neighbor_id", id_type),
-            T.StructField("cos", T.DoubleType()),
-        ])
-        # one tagged union instead of a cogroup — probes and the index
-        # routinely share lineage (queries drawn from the corpus), which
-        # trips the ambiguous-self-join analyzer on cogroup's dual groupBy
-        tagged = probes.select(
-            "cell", F.lit(0).alias("side"),
-            F.col("query_id").alias("id"), F.col("qv").alias("vec"),
-        ).unionByName(corpus_cells.select(
-            "cell", F.lit(1).alias("side"),
-            F.col("neighbor_id").alias("id"), F.col("cv").alias("vec"),
-        ))
-        cand = tagged.groupBy("cell").applyInPandas(
-            _cell_topk_builder(k, elem), schema=out_schema
-        )
-    else:
-        cand = (
-            probes.join(corpus_cells, "cell")
-            .where(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv")))
-            .select("query_id", "neighbor_id", "cos")
-        )
+    topk = _cosine_topk_ties(
+        k,
+        _np_elem(queries.schema[vec_col].dataType),
+        _np_elem(assigned.schema[vec_col].dataType),
+        vec_col,
+    )
+
+    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
+        q = pdf[pdf["side"] == 0]
+        c = pdf[pdf["side"] == 1]
+        return topk(q["id"].to_numpy(), q["vec"], c["id"].to_numpy(), c["vec"])
+
+    out_schema = T.StructType([
+        T.StructField("query_id", queries.schema[id_col].dataType),
+        T.StructField("neighbor_id", queries.schema[id_col].dataType),
+        T.StructField("cos", T.DoubleType()),
+    ])
+    # one tagged union instead of a cogroup — probes and the index
+    # routinely share lineage (queries drawn from the corpus), which trips
+    # the ambiguous-self-join analyzer on cogroup's dual groupBy. Mixed
+    # element types widen to double here; the kernel casts each side back.
+    tagged = probes.select(
+        "cell", F.lit(0).alias("side"),
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
+    ).unionByName(assigned.select(
+        "cell", F.lit(1).alias("side"),
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
+    ))
     return (
-        cand
+        tagged.groupBy("cell").applyInPandas(per_cell, schema=out_schema)
         .dropDuplicates(["query_id", "neighbor_id"])
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)

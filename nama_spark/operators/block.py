@@ -168,7 +168,6 @@ def prefix_filtered_pairs(
     weights: DataFrame,
     threshold: float,
     measure: str = "jaccard",
-    score_impl: str = "explode",
 ) -> DataFrame:
     """Exact weighted-Jaccard self-join via prefix filtering — the published
     SSJoin/PPJoin technique (Chaudhuri et al., ICDE'06; Xiao et al., WWW'08).
@@ -187,10 +186,7 @@ def prefix_filtered_pairs(
     small blocks), then the exact score filters ≥ t. Per-string windows are
     bounded by tokens-per-string (no skew). Returns (s0, s1, score ≥ t).
     """
-    from nama_spark.operators.score import (
-        token_similarity_scores,
-        token_similarity_scores_map,
-    )
+    from nama_spark.operators.score import token_similarity_scores
 
     if measure != "jaccard":
         # the prefix bound caps the LINEAR intersection weight; the cosine
@@ -211,10 +207,7 @@ def prefix_filtered_pairs(
         .distinct()
     )
     cand = salt_pairs(cand)
-    scorer = (
-        token_similarity_scores_map if score_impl == "map" else token_similarity_scores
-    )
-    scored = scorer(cand, tokens, weights, measure=measure)
+    scored = token_similarity_scores(cand, tokens, weights, measure=measure)
     return scored.where(F.col("score") >= threshold)
 
 

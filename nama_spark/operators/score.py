@@ -1,13 +1,18 @@
 """Pairwise scoring over candidate pairs.
 
-Primary scorers are fully relational (JVM-side, whole-stage codegen):
+Token-set scorers (one definition each, token_similarity[html]:76-143):
 
 - weighted Jaccard  = Σw(∩) / Σw(∪)          (token_similarity[html]:76-107)
 - weighted set-cos  = Σw²(∩) / (‖w(s0)‖·‖w(s1)‖)  (token_similarity[html]:110-143)
 
-computed as one join-aggregate over the exploded token table — no Python in
-the hot path. Σw(∪) = Σw(s0) + Σw(s1) − Σw(∩), so only the intersection needs
-the pairwise join; per-string sums are a linear aggregate.
+``token_similarity_scores`` is the one relational scorer: each string's
+token→weight map joins onto the candidate pairs and the intersection runs as
+a JVM higher-order expression per pair. Σw(∪) = Σw(s0) + Σw(s1) − Σw(∩), so
+only the intersection needs both maps; per-string sums are a linear
+aggregate. ``TokenSimilarity.pair_scores`` swaps in a broadcast-model
+``mapInPandas`` (python sets + dicts) when the fitted token table is small;
+everything else — linkage, prefix filtering, incremental predict, large
+universes — runs the relational scorer.
 
 Fallback signals (north rule: "Jaro-Winkler/Levenshtein fallbacks — no
 per-row Python"):
@@ -42,45 +47,12 @@ _SOFT_TFIDF_DRIVER_CORPUS_ROWS = int(
 )
 
 
-# ---------- relational token-set scorers ----------
-
-def string_token_norms(tokens: DataFrame, weights: DataFrame) -> DataFrame:
-    """(string, w_sum, w2_sum): Σw and Σw² over each string's token *set*."""
-    tw = tokens.join(weights.select("token", "weight"), "token")
-    return tw.groupBy("string").agg(
-        F.sum("weight").alias("w_sum"),
-        F.sum(F.col("weight") * F.col("weight")).alias("w2_sum"),
-    )
-
-
-def pair_intersection_sums(
-    pairs: DataFrame, tokens: DataFrame, weights: DataFrame
-) -> DataFrame:
-    """(s0, s1, iw_sum, iw2_sum): Σw and Σw² over the shared-token set of each
-    candidate pair. Implemented as pairs ⋈ tokens(s0) ⋈ tokens(s1) on the token
-    — cost ∝ candidate_pairs × tokens-per-string, all JVM-side."""
-    tw = tokens.select("string", "token").join(
-        weights.select("token", "weight"), "token"
-    )
-    a = tw.select(
-        F.col("string").alias("s0"), F.col("token"), F.col("weight")
-    )
-    b = tw.select(F.col("string").alias("s1"), F.col("token"))
-    return (
-        pairs.join(a, "s0")
-        .join(b, ["s1", "token"])
-        .groupBy("s0", "s1")
-        .agg(
-            F.sum("weight").alias("iw_sum"),
-            F.sum(F.col("weight") * F.col("weight")).alias("iw2_sum"),
-        )
-    )
-
+# ---------- relational token-set scorer ----------
 
 def string_token_maps(tokens: DataFrame, weights: DataFrame) -> DataFrame:
     """(string, wmap, w_sum, w2_sum): each string's token→weight map plus its
-    Σw / Σw² — built once, joined onto candidate pairs by the map-payload
-    scorer."""
+    Σw / Σw² — built once, joined onto candidate pairs by
+    ``token_similarity_scores``."""
     tw = tokens.join(weights.select("token", "weight"), "token")
     return tw.groupBy("string").agg(
         F.map_from_entries(
@@ -91,20 +63,20 @@ def string_token_maps(tokens: DataFrame, weights: DataFrame) -> DataFrame:
     )
 
 
-def token_similarity_scores_map(
+def token_similarity_scores(
     pairs: DataFrame,
     tokens: DataFrame,
     weights: DataFrame,
     measure: str = "jaccard",
 ) -> DataFrame:
-    """Map-payload variant of ``token_similarity_scores``: instead of
-    exploding (pair × token) rows through two shuffles (≈ pairs ×
-    tokens-per-string intermediate rows), carry each string's token→weight
-    map through TWO equi-joins and compute the intersection with a
-    higher-order expression. Shuffle volume drops from O(pairs·tokens) skinny
-    rows to O(pairs) map-payload rows; the intersection loop runs inside the
-    JVM per row. Wins when tokens-per-string is large (nmgrams) and pairs are
-    many; the exploded variant wins when maps are huge and pairs few."""
+    """(s0, s1, score) for each candidate pair. Pairs with empty intersection
+    score 0 (token_similarity[html]:97-99, 130-132); pairs with a token-less
+    string drop (inner joins).
+
+    Each string's token→weight map rides through TWO equi-joins onto the
+    pairs and the intersection is a higher-order expression evaluated in
+    the JVM per row, so the shuffle carries O(pairs) map-payload rows rather
+    than O(pairs × tokens-per-string) exploded ones."""
     maps = string_token_maps(tokens, weights)
     m0 = maps.select(
         F.col("string").alias("s0"), F.col("wmap").alias("m0"),
@@ -145,47 +117,6 @@ def token_similarity_scores_map(
         score = F.when((inter2 > 0) & (denom > 0), inter2 / denom).otherwise(
             F.lit(0.0)
         )
-    else:
-        raise ValueError(f"unknown measure: {measure}")
-    return df.select("s0", "s1", score.alias("score"))
-
-
-def token_similarity_scores(
-    pairs: DataFrame,
-    tokens: DataFrame,
-    weights: DataFrame,
-    measure: str = "jaccard",
-) -> DataFrame:
-    """(s0, s1, score) for each candidate pair. Pairs with empty intersection
-    score 0 (token_similarity[html]:97-99, 130-132)."""
-    norms = string_token_norms(tokens, weights)
-    inter = pair_intersection_sums(pairs, tokens, weights)
-    n0 = norms.select(
-        F.col("string").alias("s0"),
-        F.col("w_sum").alias("w_sum0"),
-        F.col("w2_sum").alias("w2_sum0"),
-    )
-    n1 = norms.select(
-        F.col("string").alias("s1"),
-        F.col("w_sum").alias("w_sum1"),
-        F.col("w2_sum").alias("w2_sum1"),
-    )
-    df = (
-        pairs.join(inter, ["s0", "s1"], "left")
-        .join(n0, "s0")
-        .join(n1, "s1")
-        .na.fill({"iw_sum": 0.0, "iw2_sum": 0.0})
-    )
-    if measure == "jaccard":
-        union = F.col("w_sum0") + F.col("w_sum1") - F.col("iw_sum")
-        score = F.when(
-            (F.col("iw_sum") > 0) & (union > 0), F.col("iw_sum") / union
-        ).otherwise(F.lit(0.0))
-    elif measure == "cosine":
-        denom = F.sqrt(F.col("w2_sum0")) * F.sqrt(F.col("w2_sum1"))
-        score = F.when(
-            (F.col("iw2_sum") > 0) & (denom > 0), F.col("iw2_sum") / denom
-        ).otherwise(F.lit(0.0))
     else:
         raise ValueError(f"unknown measure: {measure}")
     return df.select("s0", "s1", score.alias("score"))
@@ -411,11 +342,9 @@ def explain_pairs(
 
     (token_similarity_scores over the same tokenizer/weighting — tested
     in test_tokensim.py). Cost: the pair list joins the token table
-    twice and unions — O(pairs × tokens-per-string) skinny rows, the
-    same volume token_similarity_scores' exploded variant shuffles, so
-    explaining a shortlist costs what scoring it did. Intended for the
-    post-hoc shortlist (disputed pairs, audit samples), not the full
-    candidate stream."""
+    twice and unions — O(pairs × tokens-per-string) skinny rows.
+    Intended for the post-hoc shortlist (disputed pairs, audit samples),
+    not the full candidate stream."""
     from nama_spark.functions.tokenize import token_weights, tokens_table
 
     toks = tokens_table(universe, string_col, tokenizer).localCheckpoint(

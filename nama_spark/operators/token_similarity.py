@@ -12,7 +12,8 @@ Spark plan:
     strings → tokens (explode, 1 shuffle)
             → weights (token agg)
             → eligible-token self-join → canonical candidate pairs
-            → relational jaccard/cosine (join-agg, no Python)
+            → jaccard/cosine: broadcast-model mapInPandas when the fitted
+              token table is small, else the relational map-payload scorer
             → filter score ≥ threshold → edges
             → large-star/small-star CC → MatchData
 """
@@ -103,24 +104,12 @@ class TokenSimilarity:
         measure: str = "jaccard",
         max_block_size: int = 100,
         reference_doc_counts: bool = True,
-        score_impl: str = "map",
     ):
         self.tokenizer = tokenizer
         self.weighting = weighting
         self.measure = measure
         self.max_block_size = max_block_size
         self.reference_doc_counts = reference_doc_counts
-        # "map" (token→weight map payload, default) | "explode" (skinny
-        # join-agg). Equality-tested against each other (test_pairs.py).
-        # Round-6 re-measure ON THE THRESHOLDED PATH (the path predict /
-        # TokenSimPass actually execute — the earlier explode-favoring
-        # numbers compared unfiltered counts, where Catalyst eliminates the
-        # intersection join entirely): at cap 100, sf0.1 universe ~5.2k
-        # names / 210k pairs, map scores ≥-threshold edges in 3.7-5.3 s vs
-        # explode's 9.4-12.1 s — the exploded variant shuffles the O(pairs ×
-        # tokens-per-string) fan-out twice, the map variant two O(pairs)
-        # map-payload joins with the intersection loop in-JVM.
-        self.score_impl = score_impl
         self.threshold: float | None = None
         self._tokens: DataFrame | None = None
         self._weights: DataFrame | None = None
@@ -172,9 +161,8 @@ class TokenSimilarity:
         """Build the (string, token, tf) and (token, f, d, weight) tables
         from a collected universe — same rows as tokens_table +
         token_weights (equality-tested), materialized as cached local-data
-        DataFrames so every distributed consumer (block join, the
-        token_similarity_scores functions, incremental paths) works
-        unchanged."""
+        DataFrames so every distributed consumer (block join,
+        token_similarity_scores, incremental paths) works unchanged."""
         import math as _math
         from collections import Counter as _Counter
 
@@ -281,13 +269,11 @@ class TokenSimilarity:
 
     def pair_scores(self, skip_same_group: MatchData | None = None) -> DataFrame:
         """(s0, s1, score) for every candidate pair (cacheable for threshold
-        sweeps)."""
-        # Pin the candidate stream once: token_similarity_scores references
-        # ``pairs`` twice (as the left side of the zero-intersection left
-        # join AND inside pair_intersection_sums), and Spark does not reuse
-        # the block-join+distinct exchange across the two references —
-        # without the pin the whole candidate subtree runs twice per action
-        # (measured at sf0.1, threshold path: 11.3 s → 6.5 s from this pin).
+        sweeps). Two scorers: the broadcast model below when the fitted
+        token table is within _TOKENSIM_BROADCAST_TOKEN_ROWS, else the
+        relational token_similarity_scores."""
+        # Pin the candidate stream once (lazily): the block-join+distinct
+        # subtree runs on the first action and later actions reuse it.
         pairs = self.candidate_pairs().localCheckpoint(eager=False)
         if skip_same_group is not None:
             pairs = anti_join_same_group(pairs, skip_same_group.df)
@@ -313,15 +299,9 @@ class TokenSimilarity:
             # fit-once/predict-many contract the cached token table
             # already has); strings whose tokenization is empty have no
             # model entry and their pairs drop, exactly like the inner
-            # map/norms joins. The gate bounds the broadcast side only —
+            # map joins. The gate bounds the broadcast side only —
             # the pair side scales with the candidate stream.
             return self._pair_scores_broadcast(pairs)
-        if self.score_impl == "map":
-            from nama_spark.operators.score import token_similarity_scores_map
-
-            return token_similarity_scores_map(
-                pairs, self._tokens, self._weights, measure=self.measure
-            )
         return token_similarity_scores(
             pairs, self._tokens, self._weights, measure=self.measure
         )
@@ -330,7 +310,7 @@ class TokenSimilarity:
         """The broadcast-model scorer behind pair_scores' gate: one
         mapInPandas over the candidate stream, sets/weights from a
         per-fit broadcast. Same measure definitions as
-        token_similarity_scores(_map); equality is covered by
+        token_similarity_scores; equality is covered by
         tests/test_tokensim_broadcast_path.py."""
         import pandas as pd
         from pyspark.sql import types as T
@@ -367,7 +347,7 @@ class TokenSimilarity:
                     ma = strs.get(a)
                     mb = strs.get(b)
                     if ma is None or mb is None:
-                        continue  # inner-join drop, same as the JVM paths
+                        continue  # inner-join drop, same as the JVM path
                     ta, sa, wsa, w2a = ma
                     tb, sb, wsb, w2b = mb
                     # iterate the smaller side's SORTED tuple, probe the
@@ -489,10 +469,6 @@ class TokenSimilarity:
         Beyond the reference (nama has no incremental path; its unite is
         already incremental only because everything is in one dict)."""
         from nama_spark.operators.block import token_block_pairs_against
-        from nama_spark.operators.score import (
-            token_similarity_scores,
-            token_similarity_scores_map,
-        )
 
         if threshold is None:
             threshold = self.threshold
@@ -524,12 +500,9 @@ class TokenSimilarity:
         # token_block_pairs_against already ends in a pair-key .distinct();
         # no extra salt repartition needed (see pair_scores)
         pairs = token_block_pairs_against(self._tokens, nw, elig)
-        scorer = (
-            token_similarity_scores_map
-            if self.score_impl == "map"
-            else token_similarity_scores
+        scores = token_similarity_scores(
+            pairs, self._tokens, self._weights, measure=self.measure
         )
-        scores = scorer(pairs, self._tokens, self._weights, measure=self.measure)
         edges = scores.where(F.col("score") >= threshold).select("s0", "s1")
         # every edge touches a new string by construction (blocking was
         # against ``nw``), so the group-quotient unite applies: CC + relabel

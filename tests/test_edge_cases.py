@@ -266,3 +266,47 @@ def test_empty_documents_through_text_ops(spark):
     assert chunks.count() == 0
     assert pack_chunks(chunks).count() == 0
     assert doc_keywords(docs).count() == 0
+
+
+@pytest.mark.parametrize(
+    "bad_id, bad_vec, message",
+    [(7, None, "embedding: NULL vector at id 7"),
+     (9, [0.5, 0.5, 0.5], "embedding: ragged vector at id 9")],
+    ids=["null", "ragged"],
+)
+def test_dirty_vectors_raise_clear_error_through_ann(spark, bad_id, bad_vec, message):
+    """A NULL or ragged corpus vector fails the numpy re-rank with a
+    ValueError naming the column and the row, in both the bruteforce scan
+    and the IVF per-cell top-k."""
+    from nama_spark.operators.ann import (
+        cosine_topk_bruteforce,
+        ivf_assign,
+        ivf_fit_centroids,
+        ivf_topk_delta,
+    )
+
+    rows = [(i, [float(i % 5), 1.0, float(i % 3), 0.5]) for i in range(20)]
+    clean = spark.createDataFrame(rows, EMB)
+    dirty = spark.createDataFrame(
+        [(i, bad_vec if i == bad_id else v) for i, v in rows], EMB
+    )
+    queries = clean.where(F.col("vec_id") < 3)
+    with pytest.raises(Exception, match=message):
+        cosine_topk_bruteforce(dirty, queries, k=3).collect()
+    centers = ivf_fit_centroids(clean, n_cells=2)
+    assigned = ivf_assign(dirty, centers)
+    with pytest.raises(Exception, match=message):
+        ivf_topk_delta(queries, centers, assigned, k=3, nprobe=2).collect()
+
+
+def test_query_corpus_dim_mismatch_raises(spark):
+    """Queries of another dimension than the corpus fail with a ValueError
+    instead of re-ranking on a truncated dot product."""
+    from nama_spark.operators.ann import cosine_topk_bruteforce
+
+    corpus = spark.createDataFrame(
+        [(i, [float(i), 1.0, 0.5, 0.25]) for i in range(10)], EMB
+    )
+    queries = spark.createDataFrame([(100, [1.0, 0.0, 1.0])], EMB)
+    with pytest.raises(Exception, match="embedding: query dim 3 != corpus dim 4"):
+        cosine_topk_bruteforce(corpus, queries, k=3).collect()

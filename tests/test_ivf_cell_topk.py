@@ -1,7 +1,11 @@
-"""Round-6 guard: ivf_topk_delta's per-cell numpy top-k must be BIT-exact
-against the round-5 relational path (cell equi-join + cosine_sim_expr +
-global window) — float32 products, dimension-sequential float64 fold,
-ties at the k-th cos never dropped."""
+"""Round-6 guard: ivf_topk_delta's per-cell numpy top-k and
+cosine_topk_bruteforce's scan must be BIT-exact against the round-5
+relational paths (equi-join or crossJoin + cosine_sim_expr + global window)
+— each side's own element dtype for its norm, the wider dtype for the dot,
+dimension-sequential float64 fold, ties at the k-th cos never dropped.
+
+``vec_type`` is one element type for both sides, or "query,corpus" for
+mixed sides."""
 
 import pytest
 from pyspark.sql import Window
@@ -58,11 +62,23 @@ def _mk_corpus(spark, vec_type, with_dups=False):
     )
 
 
-@pytest.mark.parametrize("vec_type", ["float", "double"])
+VEC_TYPES = ["float", "double", "float,double", "double,float"]
+
+
+def _mk_sides(spark, vec_type, with_dups=False):
+    """(corpus, queries) — the same vectors, each side in its own type."""
+    q_type, _, c_type = vec_type.partition(",")
+    emb = _mk_corpus(spark, c_type or q_type, with_dups).localCheckpoint()
+    if not c_type:
+        return emb, emb.where(F.col("vec_id") < 6)
+    queries = _mk_corpus(spark, q_type, with_dups).where(F.col("vec_id") < 6)
+    return emb, queries.localCheckpoint()
+
+
+@pytest.mark.parametrize("vec_type", VEC_TYPES)
 @pytest.mark.parametrize("with_dups", [False, True])
 def test_cell_topk_bitwise_equals_join_path(spark, vec_type, with_dups):
-    emb = _mk_corpus(spark, vec_type, with_dups).localCheckpoint()
-    queries = emb.where(F.col("vec_id") < 6)
+    emb, queries = _mk_sides(spark, vec_type, with_dups)
     centers = ivf_fit_centroids(emb, n_cells=4).localCheckpoint()
     assigned = ivf_assign(emb, centers).localCheckpoint()
     for nprobe in (4, 2):
@@ -108,12 +124,27 @@ def _bruteforce_join_path(corpus, queries, k):
     )
 
 
-@pytest.mark.parametrize("vec_type", ["float", "double"])
+@pytest.mark.parametrize("vec_type", VEC_TYPES)
 def test_bruteforce_scan_bitwise_equals_join_path(spark, vec_type):
     from nama_spark.operators.ann import cosine_topk_bruteforce
 
-    emb = _mk_corpus(spark, vec_type, with_dups=True).localCheckpoint()
-    queries = emb.where(F.col("vec_id") < 6)
+    emb, queries = _mk_sides(spark, vec_type, with_dups=True)
     ref = {tuple(r) for r in _bruteforce_join_path(emb, queries, 5).collect()}
     got = {tuple(r) for r in cosine_topk_bruteforce(emb, queries, k=5).collect()}
     assert got == ref
+
+
+def test_bruteforce_query_cap_both_sides(spark, monkeypatch):
+    """At the query-row cap the scan runs; one row over it the bounded
+    collect routes to the broadcast crossJoin. Both stay bit-exact."""
+    from nama_spark.operators import ann
+
+    emb, queries = _mk_sides(spark, "float", with_dups=True)
+    ref = {tuple(r) for r in _bruteforce_join_path(emb, queries, 5).collect()}
+    n_q = queries.count()
+    for cap, scan in ((n_q, True), (n_q - 1, False)):
+        monkeypatch.setattr(ann, "_BRUTEFORCE_QUERY_ROWS", cap)
+        out = ann.cosine_topk_bruteforce(emb, queries, k=5)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("MapInPandas" in plan) == scan, (cap, plan)
+        assert {tuple(r) for r in out.collect()} == ref

@@ -1,34 +1,11 @@
-"""top_scored_pairs semantics (match_data.py:458-556) + map/explode scorer
-exact agreement."""
+"""top_scored_pairs semantics (match_data.py:458-556) and the other
+pair-level operators."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from nama_spark.functions.tokenize import token_weights, tokens_table
-from nama_spark.operators.block import eligible_tokens, token_block_pairs
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.operators.pairs import top_scored_pairs
-from nama_spark.operators.score import (
-    token_similarity_scores,
-    token_similarity_scores_map,
-)
-
-
-def test_map_and_explode_scorers_agree_exactly(spark):
-    strings = [f"{a} {b}" for a in ["acme", "globex", "initech"]
-               for b in ["labs", "labz", "systems", "system"]]
-    df = spark.createDataFrame([(s,) for s in strings], ["string"])
-    toks = tokens_table(df)
-    w = token_weights(toks)
-    pairs = token_block_pairs(toks, eligible_tokens(w, 2, 100))
-    for measure in ["jaccard", "cosine"]:
-        a = {(r["s0"], r["s1"]): r["score"]
-             for r in token_similarity_scores(pairs, toks, w, measure).collect()}
-        b = {(r["s0"], r["s1"]): r["score"]
-             for r in token_similarity_scores_map(pairs, toks, w, measure).collect()}
-        assert set(a) == set(b)
-        for k in a:
-            assert a[k] == pytest.approx(b[k], abs=1e-12), (measure, k)
 
 
 def test_top_scored_pairs_semantics(spark):

@@ -10,7 +10,7 @@ from fixtures.make_fixtures import fixture_dataframes, make_fixture
 from nama_spark.functions.tokenize import token_weights, tokens_table
 from nama_spark.operators.block import eligible_tokens, token_block_pairs
 from nama_spark.operators.matchdata import MatchData
-from nama_spark.operators.score import token_similarity_scores_map
+from nama_spark.operators.score import token_similarity_scores
 
 
 def _plan(df) -> str:
@@ -55,7 +55,7 @@ def test_blocking_and_scoring_have_no_cartesian_product(spark):
     toks = tokens_table(df)
     w = token_weights(toks)
     pairs = token_block_pairs(toks, eligible_tokens(w, 2, 100))
-    scored = token_similarity_scores_map(pairs, toks, w)
+    scored = token_similarity_scores(pairs, toks, w)
     plan = _plan(scored)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -109,7 +109,7 @@ def test_small_weights_table_broadcast(spark):
     toks = tokens_table(df)
     w = token_weights(toks)
     pairs = token_block_pairs(toks, eligible_tokens(w, 2, 100))
-    scored = token_similarity_scores_map(pairs, toks, w)
+    scored = token_similarity_scores(pairs, toks, w)
     scored.collect()
     final_plan = _plan(scored)
     assert "BroadcastHashJoin" in final_plan or "isFinalPlan=true" in final_plan

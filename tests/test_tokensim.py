@@ -96,16 +96,21 @@ def test_token_block_pairs_match_oracle(spark, max_block):
 
 @pytest.mark.parametrize("measure", ["jaccard", "cosine"])
 def test_pair_scores_match_oracle(spark, measure):
+    """The relational scorer scores every candidate pair (none dropped) to
+    the oracle's weighted Jaccard / set-cosine."""
     rng = random.Random(2)
     strings = _messy_names(rng)
     df = spark.createDataFrame([(s,) for s in strings], ["string"])
     toks = tokens_table(df)
     wts = token_weights(toks)
     pairs = token_block_pairs(toks, eligible_tokens(wts, 2, 100))
-    scored = token_similarity_scores(pairs, toks, wts, measure=measure)
-    tok_sets, oracle_w, _ = oracle_fit(strings)
+    scored = token_similarity_scores(pairs, toks, wts, measure=measure).collect()
+    tok_sets, oracle_w, doc = oracle_fit(strings)
+    assert {(r["s0"], r["s1"]) for r in scored} == oracle_candidate_pairs(
+        tok_sets, doc, 100
+    )
     fn = oracle_jaccard if measure == "jaccard" else oracle_cosine
-    for r in scored.collect():
+    for r in scored:
         want = fn(tok_sets[r["s0"]], tok_sets[r["s1"]], oracle_w)
         assert r["score"] == pytest.approx(want, abs=1e-9), (r["s0"], r["s1"])
 
@@ -248,8 +253,9 @@ def test_predict_incremental_matches_python_oracle(spark):
 
 
 def test_explain_pairs_reconciles_with_score(spark):
-    """The per-token breakdown sums back to the engine's weighted
-    Jaccard exactly, and flags the shared evidence."""
+    """The per-token breakdown sums back to the engine's weighted Jaccard
+    and set-cosine, both of which match the oracle, and flags the shared
+    evidence."""
     from nama_spark.operators.score import explain_pairs, token_similarity_scores
     from nama_spark.functions.tokenize import token_weights, tokens_table
 
@@ -263,24 +269,45 @@ def test_explain_pairs_reconciles_with_score(spark):
     )
     exp = explain_pairs(pairs, universe).collect()
     toks = tokens_table(universe)
+    wts = token_weights(toks)
     scores = {
-        (r["s0"], r["s1"]): r["score"]
-        for r in token_similarity_scores(
-            pairs, toks, token_weights(toks), measure="jaccard"
-        ).collect()
+        measure: {
+            (r["s0"], r["s1"]): r["score"]
+            for r in token_similarity_scores(
+                pairs, toks, wts, measure=measure
+            ).collect()
+        }
+        for measure in ("jaccard", "cosine")
     }
     import collections
-    agg = collections.defaultdict(lambda: [0.0, 0.0])
+    import math
+    # per pair: Σw[shared], Σw[all], Σw²[shared], Σw²[s0], Σw²[s1]
+    agg = collections.defaultdict(lambda: [0.0] * 5)
     for r in exp:
         key = (r["s0"], r["s1"])
-        agg[key][1] += r["weight"]
+        w = r["weight"]
+        agg[key][1] += w
         if r["shared"]:
-            agg[key][0] += r["weight"]
+            agg[key][0] += w
+            agg[key][2] += w * w
+        if r["in_s0"]:
+            agg[key][3] += w * w
+        if r["in_s1"]:
+            agg[key][4] += w * w
         # side flags are consistent: every row is in at least one side
         assert r["in_s0"] or r["in_s1"]
         assert r["shared"] == (r["in_s0"] and r["in_s1"])
-    assert set(agg) == set(scores)
-    for key, (shared_w, total_w) in agg.items():
-        assert scores[key] == pytest.approx(shared_w / total_w, abs=1e-9)
+    tok_sets, oracle_w, _ = oracle_fit(
+        [r["string"] for r in universe.collect()]
+    )
+    for measure, fn in (("jaccard", oracle_jaccard), ("cosine", oracle_cosine)):
+        assert set(agg) == set(scores[measure])
+        for key, (sw, tw, sw2, w2a, w2b) in agg.items():
+            got = scores[measure][key]
+            assert got == pytest.approx(
+                fn(tok_sets[key[0]], tok_sets[key[1]], oracle_w), abs=1e-9
+            ), (measure, key)
+            want = sw / tw if measure == "jaccard" else sw2 / math.sqrt(w2a * w2b)
+            assert got == pytest.approx(want, abs=1e-9), (measure, key)
     # disjoint pair carries zero shared evidence
     assert agg[("acme corp", "zenith ltd")][0] == 0.0

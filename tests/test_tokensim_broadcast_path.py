@@ -1,6 +1,6 @@
 """Round-6 pair_scores internals: the broadcast-model fast path must
-reproduce the relational scorers (map and explode variants) pair-for-pair
-on both measures, including the inner-join drop of token-less strings."""
+reproduce the relational scorer pair-for-pair on both measures, including
+the inner-join drop of token-less strings."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,24 +26,20 @@ def names(spark):
 
 @pytest.mark.parametrize("measure", ["jaccard", "cosine"])
 def test_broadcast_path_matches_relational(spark, names, measure, monkeypatch):
-    def scores(gate, impl):
+    def scores(gate):
         monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", gate)
-        ts = TokenSimilarity(
-            max_block_size=100, measure=measure, score_impl=impl
-        ).fit(names)
+        ts = TokenSimilarity(max_block_size=100, measure=measure).fit(names)
         return {
             (r["s0"], r["s1"]): r["score"]
             for r in ts.pair_scores().collect()
         }
 
-    fast = scores(10**9, "map")
-    slow_map = scores(-1, "map")
-    slow_explode = scores(-1, "explode")
-    assert set(fast) == set(slow_map) == set(slow_explode)
+    fast = scores(10**9)
+    slow = scores(-1)
+    assert set(fast) == set(slow)
     assert fast, "fixture produced no candidate pairs"
     for k in fast:
-        assert fast[k] == pytest.approx(slow_map[k], abs=1e-12), k
-        assert fast[k] == pytest.approx(slow_explode[k], abs=1e-12), k
+        assert fast[k] == pytest.approx(slow[k], abs=1e-12), k
 
 
 @pytest.mark.parametrize("kind", ["nmgrams23", "bigrams", "trigrams", "words"])
