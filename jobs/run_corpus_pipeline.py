@@ -226,8 +226,10 @@ def _write_checkpoint(spark, ckpt, docs, pairs, funnel):
 
     docs.write.mode("overwrite").parquet(ckpt + "/near_dedup_docs")
     pairs.write.mode("overwrite").parquet(ckpt + "/near_dedup_pairs")
-    spark.createDataFrame(
-        [(_json.dumps(funnel),)], ["value"]
+    from nama_spark.session import local_frame
+
+    local_frame(
+        spark, [(_json.dumps(funnel),)], "value string"
     ).coalesce(1).write.mode("overwrite").text(ckpt + "/funnel")
     return (
         spark.read.parquet(ckpt + "/near_dedup_docs"),

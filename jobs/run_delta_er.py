@@ -105,6 +105,7 @@ def main(argv=None):
     from nama_spark.operators.cluster import stable_entity_ids
     from nama_spark.operators.matchdata import MatchData
     from nama_spark.operators.token_similarity import TokenSimilarity
+    from nama_spark.session import local_frame
     from nama_spark.sources.readers import read_records
 
     spark = SparkSession.builder.appName("nama_spark_delta_er").getOrCreate()
@@ -126,9 +127,7 @@ def main(argv=None):
         md = MatchData.from_unmatched(delta, string_col=args.string_col)
         ts.fit(md.df, string_col="string")
         united = ts.predict(md, threshold=args.threshold)
-        prev_ids = spark.createDataFrame(
-            [], "node string, entity_id string"
-        )
+        prev_ids = local_frame(spark, [], "node string, entity_id string")
         tokens_out = ts._tokens
         n_delta = md.df.count()
         next_version = "v000001"
@@ -138,8 +137,11 @@ def main(argv=None):
                 f"no {args.state}/CURRENT — bootstrap with --init first"
             )
         base = os.path.join(args.state, version)
+        # the job only ever writes elected labels, so re-electing on read
+        # would repeat a universe-wide window per reference to prior.df
         prior = MatchData(
-            spark.read.parquet(os.path.join(base, "clusters"))
+            spark.read.parquet(os.path.join(base, "clusters")),
+            _relabel=False,
         )
         prev_ids = spark.read.parquet(os.path.join(base, "entity_ids"))
         prev_tokens = spark.read.parquet(os.path.join(base, "tokens"))
@@ -159,7 +161,11 @@ def main(argv=None):
         n_delta = delta.select(args.string_col).distinct().count()
         next_version = f"v{int(version[1:]) + 1:06d}"
 
-    assignment = united.df.select(
+    # pin the united partition once: the clusters write, the three reads
+    # inside stable_entity_ids, the golden-record branch and the summary
+    # all consume it, and each would otherwise re-run the whole fold
+    clusters = united.df.localCheckpoint(eager=False)
+    assignment = clusters.select(
         F.col("string").alias("node"), F.col("group").alias("component")
     )
     ids = stable_entity_ids(prev_ids, assignment)
@@ -185,7 +191,7 @@ def main(argv=None):
             spark, args.records_input, catalog=args.catalog
         )
         rec = records.join(
-            united.df.select(
+            clusters.select(
                 F.col("string").alias(args.string_col), "group"
             ),
             args.string_col,
@@ -197,14 +203,14 @@ def main(argv=None):
         if prev_golden_path and os.path.exists(prev_golden_path):
             prev_golden = spark.read.parquet(prev_golden_path)
             changed = (
-                united.df.join(
+                clusters.join(
                     delta.select(
                         F.col(args.string_col).alias("string")
                     ).distinct(),
                     "string", "leftsemi",
                 ).select("group").distinct()
             )
-            alive = united.df.select("group").distinct()
+            alive = clusters.select("group").distinct()
             golden_out = golden_records_delta(
                 prev_golden.join(alive, "group", "leftsemi"),
                 rec, "group", rules, changed,
@@ -217,19 +223,18 @@ def main(argv=None):
             )
         n_golden = golden_out.count()
 
-    _write_state(args.state, next_version, united.df, ids, tokens_out,
+    _write_state(args.state, next_version, clusters, ids, tokens_out,
                  golden=golden_out)
 
-    out_clusters = spark.read.parquet(
-        os.path.join(args.state, next_version, "clusters")
-    )
-    n_strings = out_clusters.count()
-    n_groups = out_clusters.select("group").distinct().count()
+    sizes = clusters.agg(
+        F.count(F.lit(1)).alias("strings"),
+        F.countDistinct("group").alias("groups"),
+    ).first()
     summary = {
         "version": next_version,
         "delta_strings": n_delta,
-        "strings": n_strings,
-        "groups": n_groups,
+        "strings": sizes["strings"],
+        "groups": sizes["groups"],
         "wall_sec": round(time.time() - t0, 2),
     }
     if n_golden is not None:

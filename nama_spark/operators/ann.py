@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nama_spark.operators.embed import cosine_expr
+from nama_spark.session import local_frame
 
 
 def _norm(vec_col):
@@ -371,17 +372,17 @@ def ivf_fit_centroids(
         centers = _np_kmeans(
             X, n_cells, np.random.RandomState(seed), max_iter=max_iter
         )
-        return spark.createDataFrame(
-            [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-            ["cell", "centroid"],
-        )
-    model = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter,
-        featuresCol="features", predictionCol="cell",
-    ).fit(fit_rows.select(array_to_vector(F.col("v")).alias("features")))
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        ["cell", "centroid"],
+    else:
+        centers = KMeans(
+            k=n_cells, seed=seed, maxIter=max_iter,
+            featuresCol="features", predictionCol="cell",
+        ).fit(
+            fit_rows.select(array_to_vector(F.col("v")).alias("features"))
+        ).clusterCenters()
+    return local_frame(
+        spark,
+        [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
+        "cell long, centroid array<double>",
     )
 
 

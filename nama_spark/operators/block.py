@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nama_spark.functions.tokenize import token_weights, tokens_table
+from nama_spark.session import local_frame
 
 
 def exact_key_edges(strings_df: DataFrame, key_col, string_col: str = "string") -> DataFrame:
@@ -275,8 +276,8 @@ def global_rank(
         acc += sizes[pid]
     # explicit schema: an EMPTY input has no partitions → empty offset list
     # → schema inference would throw
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __off long"
+    off_df = local_frame(
+        spark, [(pid, off) for pid, off in offsets.items()], "__pid int, __off long"
     )
     return (
         local.join(F.broadcast(off_df), "__pid")
@@ -323,8 +324,10 @@ def global_cumsum(
         offsets[pid] = acc
         acc += totals[pid]
     # explicit schema (empty-input safe, same as global_rank)
-    off_df = spark.createDataFrame(
-        [(pid, int(off)) for pid, off in offsets.items()], "__pid int, __off long"
+    off_df = local_frame(
+        spark,
+        [(pid, int(off)) for pid, off in offsets.items()],
+        "__pid int, __off long",
     )
     return (
         local.join(F.broadcast(off_df), "__pid")
@@ -608,4 +611,4 @@ def blocking_scheme_stats(
         StructField("rr_milli", LongType()),
     ])
     spark = records.sparkSession
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

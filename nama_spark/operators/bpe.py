@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from nama_spark.session import local_frame
+
 _EOW = "▁"  # end-of-word marker (SentencePiece's U+2581, visible)
 
 
@@ -147,8 +149,8 @@ def bpe_fit(
         # flatten lineage: each merge adds an aggregate-fold projection
         if (rank + 1) % checkpoint_every == 0:
             syms = syms.localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges or [], "rank int, left string, right string, cnt long"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, cnt long"
     )
 
 

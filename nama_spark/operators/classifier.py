@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from nama_spark.session import local_frame
+
 
 def hashed_token_features(
     docs: DataFrame,
@@ -119,7 +121,7 @@ def logreg_fit(
     b = 0.0
     for _ in range(n_iter):
         if w:
-            wdf = spark.createDataFrame(list(w.items()), "f long, w double")
+            wdf = local_frame(spark, list(w.items()), "f long, w double")
             scored = feats.join(F.broadcast(wdf), "f", "left")
         else:
             scored = feats.withColumn("w", F.lit(None).cast("double"))
@@ -146,12 +148,7 @@ def logreg_fit(
             fi, g = row["f"], row["g"]
             w[fi] = w.get(fi, 0.0) - lr * (g + l2 * w.get(fi, 0.0))
         b -= lr * gb
-    wdf = spark.createDataFrame(
-        list(w.items()) or [(0, 0.0)], "f long, w double"
-    )
-    if not w:
-        wdf = wdf.where(F.lit(False))
-    return wdf, b
+    return local_frame(spark, list(w.items()), "f long, w double"), b
 
 
 def logreg_score(

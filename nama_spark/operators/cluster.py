@@ -27,6 +27,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nama_spark.session import local_frame
+
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge set, canonical (u < v), self-loops dropped."""
@@ -151,14 +153,12 @@ def connected_components(
         rows = [(r["u"], r["v"]) for r in e.collect()]
         comp = _union_find_local(rows)
         _log(lineage, "cc", 1, len(comp), "small_graph_union_find", 1.0)
-        if not comp:
-            return spark.createDataFrame([], e.schema).select(
-                F.col("u").alias("node"), F.col("v").alias("component")
-            )
-        out = spark.createDataFrame(
-            list(comp.items()), ["node", "component"]
+        # node ids keep the edge type (strings on the ER path; the module
+        # also runs on integer ids, see the module docstring)
+        t = e.schema["u"].dataType.simpleString()
+        return local_frame(
+            spark, list(comp.items()), f"node {t}, component {t}"
         )
-        return out
 
     for it in range(1, max_iter + 1):
         t0 = time.time()
@@ -312,6 +312,11 @@ def stable_entity_ids(
     per-component windows, so a giant component never serializes into one
     task's sort. The vote table is |nodes with a previous id| rows, the
     argmax tables are |components| / |entity ids| rows.
+
+    ``current`` is read three times (the vote join, the distinct
+    components and the final join), so callers pass a pinned frame
+    (cached or ``localCheckpoint``-ed); an unpinned plan re-runs its whole
+    lineage once per read.
     """
     prev = previous.select("node", "entity_id")
     cur = current.select("node", "component")

@@ -58,6 +58,7 @@ from nama_spark.operators.embed import (
     lsh_candidates,
 )
 from nama_spark.operators.matchdata import MatchData
+from nama_spark.session import local_frame
 
 
 def _always_labels(always_sets: list[list[str]]) -> dict[str, str]:
@@ -268,11 +269,7 @@ def unite_similar_constrained(
     always_edges = []
     for grp in always_sets:
         always_edges += [(grp[0], s) for s in grp[1:]]
-    a_edges = (
-        spark.createDataFrame(always_edges, ["s0", "s1"])
-        if always_edges
-        else spark.createDataFrame([], "s0 string, s1 string")
-    )
+    a_edges = local_frame(spark, always_edges, "s0 string, s1 string")
 
     # components of the unconstrained graph (candidates ∪ always edges)
     # bound all possible merges

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nama_spark.session import local_frame
+
 
 # ---------- exact ----------
 
@@ -340,7 +342,8 @@ def _pair_overlap_pre(
     n_words = (n_bits + 63) // 64
     if (n_hot_docs + 1) * n_words * 8 > _VERIFY_HOT_MASK_MAX_BYTES:
         return _pair_overlap(cand.select("id0", "id1"), it, item_col)
-    bit_tab = spark.createDataFrame(
+    bit_tab = local_frame(
+        spark,
         [(v, i) for i, v in enumerate(hot_vocab)],
         T.StructType(
             [it.schema[item_col], T.StructField("__bit", T.IntegerType())]

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nama_spark.session import local_frame
+
 DEFAULT_DIM = 64
 DEFAULT_BUCKETS = 1 << 16
 DEFAULT_ALPHA = 20.0  # calibration scale (scoring_model.py:11-15 ships alpha)
@@ -892,7 +894,7 @@ def unite_nearest(
 
     spark = embeddings.sparkSession
     if not isinstance(seed_strings, DataFrame):
-        seeds = spark.createDataFrame([(s,) for s in seed_strings], ["seed"])
+        seeds = local_frame(spark, [(s,) for s in seed_strings], "seed string")
     else:
         seeds = seed_strings.select(F.col(seed_strings.columns[0]).alias("seed"))
     seed_vecs = seeds.join(
@@ -925,7 +927,7 @@ def slice_embeddings(embeddings: DataFrame, strings) -> DataFrame:
     if isinstance(strings, DataFrame):
         keys = strings.select(F.col(strings.columns[0]).alias("string"))
     else:
-        keys = spark.createDataFrame([(s,) for s in strings], ["string"])
+        keys = local_frame(spark, [(s,) for s in strings], "string string")
     return embeddings.join(keys.distinct(), "string", "left_semi")
 
 

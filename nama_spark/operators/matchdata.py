@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nama_spark.operators.cluster import labels_for_nodes
+from nama_spark.session import local_frame
 
 def _label_window():
     return (
@@ -254,9 +255,10 @@ class MatchData:
             c0, c1 = arg.columns[:2]
             edges = arg.select(F.col(c0).alias("src"), F.col(c1).alias("dst"))
         elif isinstance(arg, Mapping):
-            spark = df.sparkSession
-            edges = spark.createDataFrame(
-                [(s, f"\0label:{v}") for s, v in arg.items()], ["src", "dst"]
+            edges = local_frame(
+                df.sparkSession,
+                [(s, f"\0label:{v}") for s, v in arg.items()],
+                "src string, dst string",
             )
         elif isinstance(arg, Iterable):
             items = list(arg)
@@ -268,10 +270,7 @@ class MatchData:
             else:
                 items = sorted(items)
                 rows = [(s, items[0]) for s in items[1:]]
-            spark = df.sparkSession
-            edges = spark.createDataFrame(rows or [("", "")], ["src", "dst"]).where(
-                F.col("src") != ""
-            )
+            edges = local_frame(df.sparkSession, rows, "src string, dst string")
         else:
             raise TypeError(f"cannot unite with {type(arg)}")
 
@@ -349,11 +348,12 @@ class MatchData:
             uf = _union_find_local(
                 [(min(r[0], r[1]), max(r[0], r[1])) for r in qe_rows]
             )
-            spark = self.df.sparkSession
             if not uf:
                 return MatchData(self.df, _relabel=False)
-            comp = spark.createDataFrame(
-                list(uf.items()), ["node", "component"]
+            comp = local_frame(
+                self.df.sparkSession,
+                list(uf.items()),
+                "node string, component string",
             )
         else:
             comp = connected_components(qe, **cc_kwargs)
@@ -468,8 +468,8 @@ def _strings_df(like: DataFrame, strings) -> DataFrame:
     if isinstance(strings, DataFrame):
         c = strings.columns[0]
         return strings.select(F.col(c).alias("string"))
-    return like.sparkSession.createDataFrame(
-        [(str(s),) for s in strings], ["string"]
+    return local_frame(
+        like.sparkSession, [(str(s),) for s in strings], "string string"
     )
 
 

@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nama_spark.session import local_frame
+
 
 # Corpus size (distinct strings) under which soft_tfidf_scores collects
 # the corpus, builds the df table driver-side and runs the whole pair
@@ -278,7 +280,7 @@ def alpha_loss_sweep(
     if grid is None:
         grid = [round(1.0 + i, 4) for i in range(50)]
     spark = pairs.sparkSession
-    g = spark.createDataFrame([(float(a),) for a in grid], "alpha double")
+    g = local_frame(spark, [(float(a),) for a in grid], "alpha double")
     z = F.greatest(
         F.col("alpha") * (F.lit(1.0) - F.col(cos_col)), F.lit(float(eps))
     )

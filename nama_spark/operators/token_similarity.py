@@ -33,6 +33,7 @@ from nama_spark.operators.cluster import labels_for_nodes
 from nama_spark.operators.evaluate import score_predicted
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.operators.score import token_similarity_scores
+from nama_spark.session import local_frame
 
 
 # Fitted-token-table row count under which pair_scores ships the score
@@ -133,7 +134,7 @@ class TokenSimilarity:
         # one bounded action; under the gate the whole tokenize+weight
         # chain (6 exchanges + 2 cache materializations of pure stage
         # latency at a few-thousand-string universe) collapses to python
-        # dict math + two local-data createDataFrames with identical rows.
+        # dict math + two Arrow-built local frames with identical rows.
         probe = self._strings.limit(_TOKENSIM_DRIVER_FIT_STRINGS + 1).collect()
         if len(probe) <= _TOKENSIM_DRIVER_FIT_STRINGS:
             self._fit_driver([r["string"] for r in probe])
@@ -160,8 +161,9 @@ class TokenSimilarity:
     def _fit_driver(self, strings: list) -> None:
         """Build the (string, token, tf) and (token, f, d, weight) tables
         from a collected universe — same rows as tokens_table +
-        token_weights (equality-tested), materialized as cached local-data
-        DataFrames so every distributed consumer (block join,
+        token_weights (equality-tested), built with ``session.local_frame``
+        (JVM-resident Arrow relations: no Python worker runs when they are
+        scanned) and cached, so every distributed consumer (block join,
         token_similarity_scores, incremental paths) works unchanged."""
         import math as _math
         from collections import Counter as _Counter
@@ -185,7 +187,7 @@ class TokenSimilarity:
                 T.StructField("tf", T.LongType()),
             ]
         )
-        self._tokens = spark.createDataFrame(tok_rows, tok_schema).cache()
+        self._tokens = local_frame(spark, tok_rows, tok_schema).cache()
         w_rows = []
         for t, f in freq.items():
             d = f if self.reference_doc_counts else nstr[t]
@@ -208,7 +210,7 @@ class TokenSimilarity:
                 T.StructField("weight", T.DoubleType()),
             ]
         )
-        self._weights = spark.createDataFrame(w_rows, w_schema).cache()
+        self._weights = local_frame(spark, w_rows, w_schema).cache()
         self._weights.count()
         self._n_token_rows = self._tokens.count()
         # the score model is already in hand — broadcast it now instead of

@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nama_spark.session import local_frame
+
 
 def partition_stats(df: DataFrame, stage: str) -> list[dict]:
     rows = (
@@ -72,7 +74,7 @@ class LineageLog:
     def to_df(self) -> DataFrame:
         from nama_spark.schema import LINEAGE_SCHEMA
 
-        now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+        now = _dt.datetime.now(_dt.timezone.utc)
         data = [
             (
                 r["stage"],
@@ -86,7 +88,7 @@ class LineageLog:
             )
             for r in self.rows
         ]
-        return self.spark.createDataFrame(data, LINEAGE_SCHEMA)
+        return local_frame(self.spark, data, LINEAGE_SCHEMA)
 
     def flush(self) -> None:
         if self.path and self.rows:

@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -73,3 +74,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples in ``schema`` order).
+
+    The one way the engine turns driver data into a frame. The rows go
+    column-wise into a ``pyarrow.Table`` that streams into the JVM, so the
+    frame is a JVM-resident relation. A list-backed ``createDataFrame``
+    instead re-pickles its rows through Python workers on every
+    evaluation. ``schema`` is a ``StructType`` or a DDL string; it is
+    required because an empty row list has nothing to infer from.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -1133,6 +1133,14 @@ def test_run_delta_er_job(spark, tmp_path):
     toks = spark.read.parquet(state + "/v000002/tokens")
     assert set(r["string"] for r in toks.select("string").distinct().collect()) \
         == set(groups1)
+    # every written version holds elected labels, which is what lets the
+    # next fold read its prior clusters without re-electing them
+    from nama_spark.operators.matchdata import elect_labels
+
+    for c in (c0, c1):
+        elected = elect_labels(c).select("string", "count", "group")
+        assert sorted(c.select("string", "count", "group").collect()) == \
+            sorted(elected.collect())
 
 
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):
