@@ -38,6 +38,30 @@ def cosine_sim_expr(a, b):
     return dot / (_norm(a) * _norm(b))
 
 
+def _sq_dist(a, b):
+    """Squared euclidean distance of two array columns — the one JVM-side
+    distance fold every centroid assignment and PQ lookup table uses."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _top_k(df: DataFrame, k: int, by=None) -> DataFrame:
+    """(query_id, neighbor_id, cos, rank): each query's first ``k`` rows
+    ordered by ``by`` (default cos descending), ties to the lower
+    neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc() if by is None else by, F.col("neighbor_id").asc()
+    )
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
+    )
+
+
 def _empty_topk(df: DataFrame, id_col: str) -> DataFrame:
     """Zero-row (query_id, neighbor_id, cos, rank) frame with the id type
     taken from the input — MLlib fit() (LSH planes, k-means) throws on an
@@ -197,9 +221,6 @@ def cosine_topk_bruteforce(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
     q_elem = _np_elem(q.schema["qv"].dataType)
     c_elem = _np_elem(c.schema["cv"].dataType)
     qrows = None
@@ -226,21 +247,12 @@ def cosine_topk_bruteforce(
             T.StructField("neighbor_id", c.schema["neighbor_id"].dataType),
             T.StructField("cos", T.DoubleType()),
         ])
-        cand = c.mapInPandas(scan, schema=out_schema)
-        return (
-            cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
-        )
+        return _top_k(c.mapInPandas(scan, schema=out_schema), k)
     if broadcast_queries:
         q = F.broadcast(q)
     joined = c.crossJoin(q).where(F.col("query_id") != F.col("neighbor_id"))
-    cos = cosine_sim_expr(F.col("qv"), F.col("cv"))
-    return (
-        joined.withColumn("cos", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
+    return _top_k(
+        joined.withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv"))), k
     )
 
 
@@ -284,15 +296,8 @@ def lsh_topk(
         F.col("datasetB.neighbor_id").alias("neighbor_id"),
         F.col("datasetB.cv").alias("cv"),
     ).where(F.col("query_id") != F.col("neighbor_id"))
-    cos = cosine_sim_expr(F.col("qv"), F.col("cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("cos", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
+    return _top_k(
+        pairs.withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv"))), k
     )
 
 
@@ -339,9 +344,10 @@ def ivf_fit_centroids(
 ) -> DataFrame:
     """(cell, centroid) — k-means centroids fit on a bounded sample
     (``sample_per_cell``·n_cells rows), the persistable half of an IVF
-    index. ``n_cells`` auto-sizes to ~n/400 (capped 4096 — past that use a
-    two-level coarse quantizer, same shape). Fit once, write to parquet,
-    reuse across daily deltas: arriving vectors only need ``ivf_assign``."""
+    index. ``n_cells`` auto-sizes to ~n/400 (capped at
+    ``_IVF_FLAT_MAX_CELLS`` — past that use a two-level coarse quantizer,
+    same shape). Fit once, write to parquet, reuse across daily deltas:
+    arriving vectors only need ``ivf_assign``."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -349,7 +355,7 @@ def ivf_fit_centroids(
     if n == 0:
         raise ValueError("cannot fit IVF centroids on an empty corpus")
     if n_cells is None:
-        n_cells = max(8, min(n // 400, 4096))
+        n_cells = max(8, min(n // 400, _IVF_FLAT_MAX_CELLS))
     n_cells = min(n_cells, n)
     fit_frac = min(1.0, (sample_per_cell * n_cells) / n)
     fit_df = corpus.sample(fraction=fit_frac, seed=seed) if fit_frac < 1.0 else corpus
@@ -385,6 +391,11 @@ def ivf_fit_centroids(
         "cell long, centroid array<double>",
     )
 
+
+# Cell count past which the flat quantizer stops paying: its assignment is
+# a broadcast cross-join of every vector with every centroid. Auto-sized
+# flat indexes stop here; embed.ivf_candidates switches to two levels.
+_IVF_FLAT_MAX_CELLS = 4096
 
 # Fit-sample row count under which k-means runs as a driver-side numpy
 # Lloyd instead of MLlib (bounded collect: rows × dim × 8 B ≈ 25 MB at the
@@ -430,6 +441,46 @@ def _np_kmeans(X: np.ndarray, k: int, rng: np.random.RandomState,
     return centers
 
 
+def _group_kmeans(
+    df: DataFrame, key: str, vec_col: str, k, max_iter: int, seed: int
+) -> DataFrame:
+    """(<key>, idx, centroid) — an independent ``_np_kmeans`` per ``key``
+    group of ``df`` in ONE applyInPandas pass (no driver loop), seeded
+    ``seed + key``. ``k`` is a constant or the name of a column holding
+    each group's k; ``key`` keeps its input type."""
+
+    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+        g = int(pdf[key].iloc[0])
+        X = np.stack(pdf[vec_col].to_numpy()).astype(float)
+        kg = int(pdf[k].iloc[0]) if isinstance(k, str) else k
+        centers = _np_kmeans(
+            X, kg, np.random.RandomState(seed + g), max_iter=max_iter
+        )
+        return pd.DataFrame({
+            key: g,
+            "idx": range(len(centers)),
+            "centroid": [list(map(float, c)) for c in centers],
+        })
+
+    schema = T.StructType([
+        T.StructField(key, df.schema[key].dataType),
+        T.StructField("idx", T.IntegerType()),
+        T.StructField("centroid", T.ArrayType(T.DoubleType())),
+    ])
+    return df.groupBy(key).applyInPandas(fit, schema)
+
+
+def _ivf2_shape(total: int, n_coarse: int | None = None,
+                fine_per_coarse: int | None = None) -> tuple[int, int]:
+    """(n_coarse, fine_per_coarse) for ~``total`` two-level cells: √total
+    coarse cells unless given, the rest split evenly inside each."""
+    if n_coarse is None:
+        n_coarse = max(2, math.ceil(math.sqrt(total)))
+    if fine_per_coarse is None:
+        fine_per_coarse = max(1, math.ceil(total / n_coarse))
+    return n_coarse, fine_per_coarse
+
+
 def ivf2_fit_centroids(
     corpus: DataFrame,
     n_coarse: int | None = None,
@@ -464,11 +515,9 @@ def ivf2_fit_centroids(
     n = corpus.count()
     if n == 0:
         raise ValueError("cannot fit IVF centroids on an empty corpus")
-    total = max(8, n // target_occupancy)
-    if n_coarse is None:
-        n_coarse = max(2, math.ceil(math.sqrt(total)))
-    if fine_per_coarse is None:
-        fine_per_coarse = max(1, math.ceil(total / n_coarse))
+    n_coarse, fine_per_coarse = _ivf2_shape(
+        max(8, n // target_occupancy), n_coarse, fine_per_coarse
+    )
     n_coarse = min(n_coarse, n)
 
     fit_frac = min(1.0, (sample_per_cell * n_coarse * fine_per_coarse) / n)
@@ -494,28 +543,9 @@ def ivf2_fit_centroids(
     sassigned = coarse_model.transform(
         sample.select("v", array_to_vector(F.col("v")).alias("features"))
     ).select("coarse", "v")
-
-    kf, mi, sd = fine_per_coarse, max_iter, seed
-
-    def fit_fine(pdf: pd.DataFrame) -> pd.DataFrame:
-        coarse = int(pdf["coarse"].iloc[0])
-        X = np.stack(pdf["v"].to_numpy())
-        rng = np.random.RandomState(sd + coarse)
-        centers = _np_kmeans(X, kf, rng, max_iter=mi)
-        return pd.DataFrame({
-            "coarse": coarse,
-            "fine": range(len(centers)),
-            "centroid": [list(map(float, c)) for c in centers],
-        })
-
-    schema = T.StructType([
-        T.StructField("coarse", T.IntegerType()),
-        T.StructField("fine", T.IntegerType()),
-        T.StructField("centroid", T.ArrayType(T.DoubleType())),
-    ])
-    fine = sassigned.groupBy("coarse").applyInPandas(fit_fine, schema)
+    fine = _group_kmeans(sassigned, "coarse", "v", fine_per_coarse, max_iter, seed)
     return fine.select(
-        (F.col("coarse").cast("long") * fine_per_coarse + F.col("fine"))
+        (F.col("coarse").cast("long") * fine_per_coarse + F.col("idx"))
         .alias("cell"),
         "coarse",
         "centroid",
@@ -563,35 +593,31 @@ def _ivf2_assign(
         nprobe_coarse = min(n_coarse, max(2, nprobe))
 
     vecs = df.select(id_col, F.col(vec_col).cast("array<double>").alias("__v"))
-    d2c = F.aggregate(
-        F.zip_with(F.col("__v"), F.col("ccentroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, x: a + x,
+    probed = _nearest(
+        vecs.crossJoin(F.broadcast(coarse_tbl)), "coarse",
+        _sq_dist(F.col("__v"), F.col("ccentroid")), nprobe_coarse, id_col,
     )
-    wc = Window.partitionBy(id_col).orderBy(F.col("d2").asc(), F.col("coarse").asc())
-    probed = (
-        vecs.crossJoin(F.broadcast(coarse_tbl))
-        .withColumn("d2", d2c)
-        .select(id_col, "coarse", "d2")
-        .withColumn("__rn", F.row_number().over(wc))
-        .where(F.col("__rn") <= nprobe_coarse)
-        .select(id_col, "coarse")
-    )
-    d2f = F.aggregate(
-        F.zip_with(F.col("__v"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, x: a + x,
-    )
-    wf = Window.partitionBy(id_col).orderBy(F.col("d2").asc(), F.col("cell").asc())
-    cells = (
-        probed.join(vecs, id_col)
-        .join(F.broadcast(centers), "coarse")
-        .withColumn("d2", d2f)
-        .select(id_col, "cell", "d2")
-        .withColumn("__rn", F.row_number().over(wf))
-        .where(F.col("__rn") <= nprobe)
-        .select(id_col, "cell")
+    cells = _nearest(
+        probed.join(vecs, id_col).join(F.broadcast(centers), "coarse"), "cell",
+        _sq_dist(F.col("__v"), F.col("centroid")), nprobe, id_col,
     )
     return cells.join(df.select(id_col, vec_col), id_col).select(
         "cell", id_col, vec_col
+    )
+
+
+def _nearest(pairs: DataFrame, key: str, d2, n: int, id_col: str) -> DataFrame:
+    """(<id_col>, <key>) — per vector, the ``n`` (vector, centroid) rows of
+    ``pairs`` with the smallest ``d2``, ties to the lower key. The window
+    sees only skinny (id, key, d2) rows: the vector payload stays out of
+    its exchange and rejoins by id afterwards."""
+    w = Window.partitionBy(id_col).orderBy(F.col("d2").asc(), F.col(key).asc())
+    return (
+        pairs.withColumn("d2", d2)
+        .select(id_col, key, "d2")
+        .withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= n)
+        .select(id_col, key)
     )
 
 
@@ -603,10 +629,11 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(cell, <id_col>, <vec_col>) — each vector assigned to its ``nprobe``
-    nearest centroids. Broadcast cross-join on the (small) centroid table;
-    the top-nprobe window sees only skinny (id, cell, d2) rows (the
-    ivf_candidates lesson: keep the 64-float payload out of the exchange).
-    O(Δn·n_cells) per delta — the corpus is never re-read.
+    nearest centroids. Broadcast cross-join on the (small) centroid table,
+    then a top-nprobe window over skinny (id, cell, d2) rows (keep the
+    64-float payload out of the exchange). O(Δn·n_cells) per delta — the
+    corpus is never re-read. Also the assignment step of
+    ``embed.ivf_candidates``.
 
     A two-level centers table (has a ``coarse`` column — see
     ``ivf2_fit_centroids``) routes through the two-stage assignment
@@ -614,23 +641,10 @@ def ivf_assign(
     index layout unchanged."""
     if "coarse" in centers.columns:
         return _ivf2_assign(df, centers, nprobe, id_col, vec_col)
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"), F.col("centroid"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("d2").asc(), F.col("cell").asc())
-    cells = (
-        df.select(id_col, vec_col)
-        .crossJoin(F.broadcast(centers))
-        .withColumn("d2", d2)
-        .select(id_col, "cell", "d2")
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= nprobe)
-        .select(id_col, "cell")
+    cells = _nearest(
+        df.select(id_col, vec_col).crossJoin(F.broadcast(centers)), "cell",
+        _sq_dist(F.col(vec_col).cast("array<double>"), F.col("centroid")),
+        nprobe, id_col,
     )
     return cells.join(df.select(id_col, vec_col), id_col).select(
         "cell", id_col, vec_col
@@ -675,9 +689,6 @@ def ivf_topk_delta(
         return _empty_topk(queries, id_col)
     probes = ivf_assign(queries, centers, nprobe=nprobe,
                         id_col=id_col, vec_col=vec_col)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
     topk = _cosine_topk_ties(
         k,
         _np_elem(queries.schema[vec_col].dataType),
@@ -706,12 +717,10 @@ def ivf_topk_delta(
         "cell", F.lit(1).alias("side"),
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
     ))
-    return (
+    return _top_k(
         tagged.groupBy("cell").applyInPandas(per_cell, schema=out_schema)
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
+        .dropDuplicates(["query_id", "neighbor_id"]),
+        k,
     )
 
 
@@ -760,26 +769,9 @@ def pq_fit_codebooks(
             )
         ).alias("sub", "sv")
     ).localCheckpoint(eager=False)
-
-    kk, mi, sd = k, max_iter, seed
-
-    def fit_book(pdf: pd.DataFrame) -> pd.DataFrame:
-        sub = int(pdf["sub"].iloc[0])
-        X = np.stack(pdf["sv"].to_numpy()).astype(float)
-        rng = np.random.RandomState(sd + sub)
-        centers = _np_kmeans(X, min(kk, len(X)), rng, max_iter=mi)
-        return pd.DataFrame({
-            "sub": sub,
-            "code": range(len(centers)),
-            "centroid": [list(map(float, c)) for c in centers],
-        })
-
-    schema = T.StructType([
-        T.StructField("sub", T.IntegerType()),
-        T.StructField("code", T.IntegerType()),
-        T.StructField("centroid", T.ArrayType(T.DoubleType())),
-    ])
-    return subs.groupBy("sub").applyInPandas(fit_book, schema)
+    return _group_kmeans(subs, "sub", "sv", k, max_iter, seed).select(
+        "sub", F.col("idx").alias("code"), "centroid"
+    )
 
 
 def _collect_codebooks(codebooks: DataFrame) -> np.ndarray:
@@ -838,6 +830,77 @@ def pq_encode(
     return src.mapInPandas(encode, out_schema)
 
 
+def _adc_topk(
+    queries: DataFrame,
+    codebooks: DataFrame,
+    cand: DataFrame,
+    k: int,
+    refine: DataFrame | None,
+    refine_factor: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ADC scan shared by ``pq_topk`` and ``ivfpq_topk``: scores the
+    (query_id, neighbor_id, codes) candidates ``cand`` against per-query
+    lookup tables and ranks them, optionally refining by exact cosine."""
+    qv = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
+    )
+    mrow = codebooks.agg(F.max("sub").alias("m"),
+                         F.max(F.size("centroid")).alias("dsub"),
+                         F.max("code").alias("kmax")).first()
+    m, dsub, kk = int(mrow["m"]) + 1, int(mrow["dsub"]), int(mrow["kmax"]) + 1
+    d2 = _sq_dist(
+        F.slice(F.col("qv"), F.col("sub") * dsub + 1, dsub), F.col("centroid")
+    )
+    # LUT rows per query: (query_id, sub, code, d2) → one array per query,
+    # indexed [sub*k' + code] (k' from the codebook, uniform by fit)
+    lut = (
+        qv.crossJoin(F.broadcast(codebooks))
+        .select("query_id", (F.col("sub") * kk + F.col("code")).alias("slot"),
+                d2.alias("d2"))
+        .groupBy("query_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("slot", "d2"))),
+                lambda s: s["d2"],
+            ).alias("lut")
+        )
+    )
+    adc = F.aggregate(
+        F.sequence(F.lit(0), F.lit(m - 1)),
+        F.lit(0.0),
+        lambda acc, s: acc
+        + F.element_at(
+            F.col("lut"),
+            s * kk + F.element_at(F.col("codes"), s + 1) + 1,
+        ),
+    )
+    scored = (
+        cand.join(F.broadcast(lut), "query_id")
+        .withColumn("adc", adc)
+        # rank-compatible surrogate for unit vectors: ||q−x||² = 2−2cos
+        .select("query_id", "neighbor_id", "adc", (-F.col("adc")).alias("cos"))
+    )
+    ranked = _top_k(
+        scored, k if refine is None else refine_factor * k, by=F.col("adc").asc()
+    )
+    if refine is None:
+        return ranked
+    rv = refine.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    )
+    exact = (
+        ranked.select("query_id", "neighbor_id")
+        .join(rv, "neighbor_id")
+        .join(qv, "query_id")
+        .withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv")))
+        .select("query_id", "neighbor_id", "cos")
+    )
+    return _top_k(exact, k)
+
+
 def pq_topk(
     queries: DataFrame,
     codebooks: DataFrame,
@@ -862,88 +925,13 @@ def pq_topk(
     (query_id, neighbor_id, cos, rank)."""
     if queries.isEmpty() or encoded.isEmpty():
         return _empty_topk(queries, id_col)
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    books = codebooks
-    mrow = books.agg(F.max("sub").alias("m"),
-                     F.max(F.size("centroid")).alias("dsub")).first()
-    m, dsub = int(mrow["m"]) + 1, int(mrow["dsub"])
-    d2 = F.aggregate(
-        F.zip_with(
-            F.slice(F.col("qv"), F.col("sub") * dsub + 1, dsub),
-            F.col("centroid"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0), lambda a, x: a + x,
-    )
-    # LUT rows per query: (query_id, sub, code, d2) → one array per query,
-    # indexed [sub*k' + code] (k' from the codebook, uniform by fit)
-    kk = books.agg(F.max("code")).first()[0] + 1
-    lut = (
-        qv.crossJoin(F.broadcast(books))
-        .select("query_id", (F.col("sub") * kk + F.col("code")).alias("slot"),
-                d2.alias("d2"))
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("slot", "d2"))),
-                lambda s: s["d2"],
-            ).alias("lut")
-        )
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("lut"),
-            s * kk + F.element_at(F.col("codes"), s + 1) + 1,
-        ),
-    )
     cand = (
         encoded.select(F.col(id_col).alias("neighbor_id"), "codes")
-        .crossJoin(F.broadcast(lut))
+        .crossJoin(F.broadcast(queries.select(F.col(id_col).alias("query_id"))))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("adc", adc)
-        .select("query_id", "neighbor_id", "adc")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    if refine is None:
-        return (
-            cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select(
-                "query_id", "neighbor_id",
-                (-F.col("adc")).alias("cos"),  # rank-compatible surrogate
-                F.col("rn").alias("rank"),
-            )
-        )
-    short = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= refine_factor * k)
-        .select("query_id", "neighbor_id")
-    )
-    rv = refine.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    exact = (
-        short.join(rv, "neighbor_id")
-        .join(qv, "query_id")
-        .withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv")))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
-    )
+    return _adc_topk(queries, codebooks, cand, k, refine, refine_factor,
+                     id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -971,7 +959,7 @@ def ivfpq_topk(
     probes = ivf_assign(
         queries, centers, nprobe=nprobe, id_col=id_col, vec_col=vec_col
     ).select(F.col(id_col).alias("query_id"), "cell")
-    cand_codes = (
+    cand = (
         probes.join(
             encoded.select("cell", F.col(id_col).alias("neighbor_id"), "codes"),
             "cell",
@@ -980,78 +968,5 @@ def ivfpq_topk(
         .select("query_id", "neighbor_id", "codes")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    mrow = codebooks.agg(F.max("sub").alias("m"),
-                         F.max(F.size("centroid")).alias("dsub"),
-                         F.max("code").alias("kmax")).first()
-    m, dsub, kk = int(mrow["m"]) + 1, int(mrow["dsub"]), int(mrow["kmax"]) + 1
-    d2 = F.aggregate(
-        F.zip_with(
-            F.slice(F.col("qv"), F.col("sub") * dsub + 1, dsub),
-            F.col("centroid"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0), lambda a, x: a + x,
-    )
-    lut = (
-        qv.crossJoin(F.broadcast(codebooks))
-        .select("query_id", (F.col("sub") * kk + F.col("code")).alias("slot"),
-                d2.alias("d2"))
-        .groupBy("query_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("slot", "d2"))),
-                lambda s: s["d2"],
-            ).alias("lut")
-        )
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("lut"),
-            s * kk + F.element_at(F.col("codes"), s + 1) + 1,
-        ),
-    )
-    scored = (
-        cand_codes.join(F.broadcast(lut), "query_id")
-        .withColumn("adc", adc)
-        .select("query_id", "neighbor_id", "adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    if refine is None:
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k)
-            .select("query_id", "neighbor_id",
-                    (-F.col("adc")).alias("cos"), F.col("rn").alias("rank"))
-        )
-    short = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= refine_factor * k)
-        .select("query_id", "neighbor_id")
-    )
-    rv = refine.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    exact = (
-        short.join(rv, "neighbor_id")
-        .join(qv, "query_id")
-        .withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv")))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
-    )
+    return _adc_topk(queries, codebooks, cand, k, refine, refine_factor,
+                     id_col, vec_col)

@@ -40,7 +40,6 @@ parallel across components, reference-exact within each.
 
 from __future__ import annotations
 
-import math
 import warnings
 from typing import Iterable
 
@@ -51,13 +50,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from nama_spark.operators.cluster import labels_for_nodes
-from nama_spark.operators.embed import (
-    DEFAULT_ALPHA,
-    bruteforce_candidates,
-    ivf_candidates,
-    lsh_candidates,
-)
+from nama_spark.operators.embed import DEFAULT_ALPHA, threshold_candidates
 from nama_spark.operators.matchdata import MatchData
+from nama_spark.operators.score import calibrated_score, score_to_cos
 from nama_spark.session import local_frame
 
 
@@ -214,21 +209,11 @@ def unite_similar_constrained(
     assert always_never_conflicts in ("raise", "warn", "ignore")
 
     spark = embeddings.sparkSession
-    cos_t = 1.0 + math.log(threshold) / alpha if threshold > 0 else -99.0
+    cos_t = score_to_cos(threshold, alpha)
     sep_cos = (
-        1.0 + math.log(group_threshold) / alpha
-        if group_threshold is not None and group_threshold > 0
-        else (None if group_threshold is None else -99.0)
+        None if group_threshold is None else score_to_cos(group_threshold, alpha)
     )
-
-    if candidate_mode == "bruteforce":
-        cand = bruteforce_candidates(embeddings, cos_t)
-    elif candidate_mode == "ivf":
-        cand = ivf_candidates(embeddings, cos_t, **lsh_kwargs)
-    elif candidate_mode == "lsh":
-        cand = lsh_candidates(embeddings, cos_t, **lsh_kwargs)
-    else:
-        raise ValueError(f"unknown candidate_mode: {candidate_mode!r}")
+    cand = threshold_candidates(embeddings, cos_t, candidate_mode, **lsh_kwargs)
 
     always_sets = [sorted(str(s) for s in grp) for grp in (always_match or [])]
     never_sets = [sorted(str(s) for s in grp) for grp in (never_match or [])]
@@ -393,9 +378,7 @@ def unite_similar_constrained(
     if not return_united:
         return md
 
-    score = F.least(
-        F.lit(1.0), F.exp(-F.lit(alpha) * (F.lit(1.0) - F.col("cos")))
-    )
+    score = calibrated_score(F.col("cos"), alpha)
     united_df = solved.where(F.col("kind") == "u").select(
         F.col("string").alias("s0"),
         F.col("group").alias("s1"),

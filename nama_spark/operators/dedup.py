@@ -669,22 +669,8 @@ def minhash_lsh_pairs_delta(
         )
     ).join(cand_ids, "doc_id", "left_semi")
     sh = word_shingles(texts, "text", "doc_id", k).localCheckpoint(eager=False)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("id0"), "shingle"), "id0")
-        .join(sh.select(F.col("doc_id").alias("id1"), "shingle"), ["id1", "shingle"])
-        .groupBy("id0", "id1")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
     return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("id0"), F.col("n_sh").alias("n0")),
-            "id0",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("id1"), F.col("n_sh").alias("n1")),
-            "id1",
-        )
+        _pair_overlap_joined(cand, sh, "shingle")
         .withColumn(
             "jaccard",
             F.col("n_inter") / (F.col("n0") + F.col("n1") - F.col("n_inter")),

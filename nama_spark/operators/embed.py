@@ -44,6 +44,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nama_spark.operators.score import (
+    calibrated_score,
+    score_to_cos,
+    similarity_loss,
+)
 from nama_spark.session import local_frame
 
 DEFAULT_DIM = 64
@@ -380,11 +385,50 @@ def score_pairs(
     e1 = embeddings.select(F.col("string").alias(s1), F.col("vec").alias("__v1"))
     out = pairs.join(e0, s0).join(e1, s1)
     cos = cosine_expr(F.col("__v0"), F.col("__v1"))
-    score = F.least(F.lit(1.0), F.exp(-F.lit(alpha) * (F.lit(1.0) - cos)))
+    score = calibrated_score(cos, alpha)
     return out.withColumn("cos", cos).withColumn("score", score).drop("__v0", "__v1")
 
 
 # ---------- candidate generation ----------
+
+def threshold_candidates(
+    embeddings: DataFrame, cos_threshold: float, candidate_mode: str, **kwargs
+) -> DataFrame:
+    """(s0, s1, cos) pairs with cos ≥ ``cos_threshold`` from the candidate
+    generator named by ``candidate_mode``: "bruteforce" (exact, O(n²)),
+    "ivf" or "lsh" (approximate; ``kwargs`` go to ``ivf_candidates`` /
+    ``lsh_candidates``). The one candidate-mode dispatch of the embedding
+    layer (the reference's single batched-matmul scan,
+    embeddings.py:301-307, behind unite_similar, its constrained form and
+    iter_scores); an unknown mode raises ValueError."""
+    if candidate_mode == "bruteforce":
+        if cos_threshold <= -1.0:
+            import warnings
+
+            warnings.warn(
+                "candidate_mode='bruteforce' with no cosine threshold scans "
+                "the FULL upper triangle (O(n²) self-join) — the reference's "
+                "review-everything semantics, for review-scale universes "
+                "only. Pass a threshold (iter_scores: min_score) to push a "
+                "cosine bound into the candidate join, or "
+                "candidate_mode='lsh' at scale."
+            )
+        return bruteforce_candidates(embeddings, cos_threshold)
+    if candidate_mode == "ivf":
+        return ivf_candidates(embeddings, cos_threshold, **kwargs)
+    if candidate_mode == "lsh":
+        return lsh_candidates(embeddings, cos_threshold, **kwargs)
+    raise ValueError(f"unknown candidate_mode: {candidate_mode!r}")
+
+
+def _no_pairs(embeddings: DataFrame) -> DataFrame:
+    """Zero-row (s0, s1, cos) frame for an empty embedding universe."""
+    return embeddings.select(
+        F.col("string").alias("s0"),
+        F.col("string").alias("s1"),
+        F.lit(0.0).alias("cos"),
+    ).where(F.lit(False))
+
 
 def bruteforce_candidates(
     embeddings: DataFrame, cos_threshold: float
@@ -429,11 +473,7 @@ def lsh_candidates(
     if embeddings.isEmpty():
         # LSH fit() throws on an empty dataset; an empty universe/delta is a
         # routine input at scale
-        return embeddings.select(
-            F.col("string").alias("s0"),
-            F.col("string").alias("s1"),
-            F.lit(0.0).alias("cos"),
-        ).where(F.lit(False))
+        return _no_pairs(embeddings)
 
     dist = math.sqrt(max(0.0, 2.0 - 2.0 * cos_threshold))
     feat = embeddings.select(
@@ -479,6 +519,8 @@ def _split_hot_cells(
     window — never a per-cell driver loop, never a wide shuffle. Sub-cell
     ids pack into the low 20 bits of the cell key, so the downstream
     equi-join is unchanged. Cold cells pass through untouched."""
+    from nama_spark.operators.ann import _group_kmeans, _sq_dist
+
     sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("__cn"))
     hot = sizes.where(F.col("__cn") > max_cell_rows).localCheckpoint(eager=False)
     if hot.isEmpty():
@@ -495,36 +537,10 @@ def _split_hot_cells(
             F.lit(float(sample_per_cell)) * F.col("__k") / F.col("__cn"),
         )
     ).select("cell", "vec", "__k")
-
-    mi, sd = max_iter, seed
-
-    def fit_sub(pdf: pd.DataFrame) -> pd.DataFrame:
-        from nama_spark.operators.ann import _np_kmeans
-
-        cell = int(pdf["cell"].iloc[0])
-        X = np.stack(pdf["vec"].to_numpy()).astype(float)
-        rng = np.random.RandomState(sd + cell)
-        centers = _np_kmeans(X, int(pdf["__k"].iloc[0]), rng, max_iter=mi)
-        return pd.DataFrame({
-            "cell": cell,
-            "sub": range(len(centers)),
-            "scentroid": [list(map(float, c)) for c in centers],
-        })
-
-    schema = T.StructType([
-        T.StructField("cell", T.LongType()),
-        T.StructField("sub", T.IntegerType()),
-        T.StructField("scentroid", T.ArrayType(T.DoubleType())),
-    ])
-    sub_centers = samp.groupBy("cell").applyInPandas(fit_sub, schema)
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("vec").cast("array<double>"), F.col("scentroid"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
+    sub_centers = _group_kmeans(samp, "cell", "vec", "__k", max_iter, seed).select(
+        "cell", F.col("idx").alias("sub"), F.col("centroid").alias("scentroid")
     )
+    d2 = _sq_dist(F.col("vec").cast("array<double>"), F.col("scentroid"))
     w = Window.partitionBy("cell", "string").orderBy(
         F.col("d2").asc(), F.col("sub").asc()
     )
@@ -561,7 +577,6 @@ def ivf_candidates(
     sample_per_cell: int = 50,
     max_iter: int = 10,
     seed: int = 42,
-    max_cells: int = 4096,
     two_level: bool | None = None,
     max_cell_rows: int | None = None,
 ) -> DataFrame:
@@ -585,15 +600,18 @@ def ivf_candidates(
     whose members share no probed cell is missed) and is measured, not
     assumed: see SCALE.md §embedding-joins and the ivf row in bench.py.
 
-    Centroid assignment is a broadcast cross-join (n·n_cells distance
-    exprs, JVM-side) + a per-string top-nprobe window; past ``max_cells``
-    (default 4096, where the flat cross-join stops paying) the TWO-LEVEL
-    coarse quantizer takes over automatically (``two_level=None``): coarse
-    k-means over √total cells, an independent fine k-means inside each
-    coarse cell (ann.ivf2_fit_centroids), and a two-stage assignment that
-    probes n_coarse + nprobe_coarse·fine_per_coarse centroids per vector —
-    occupancy stays at ~400 for any n instead of growing linearly past
-    ~1.6M vectors. ``two_level=True`` forces it (tests / tuning).
+    The index is the persisted-index IVF of ann.py: centroids from
+    ``ann.ivf_fit_centroids``, assignment by ``ann.ivf_assign`` (a broadcast
+    cross-join of n·n_cells distance exprs, JVM-side, + a per-string
+    top-nprobe window). Past ``ann._IVF_FLAT_MAX_CELLS`` auto-sized cells
+    (4096, where the flat cross-join stops paying) the TWO-LEVEL coarse
+    quantizer takes over automatically (``two_level=None``): coarse k-means
+    over √total cells, an independent fine k-means inside each coarse cell
+    (``ann.ivf2_fit_centroids``), and ``ann.ivf_assign``'s two-stage
+    assignment, which probes n_coarse + nprobe_coarse·fine_per_coarse
+    centroids per vector — occupancy stays at ~400 for any n instead of
+    growing linearly past ~1.6M vectors. ``two_level=True`` forces it
+    (tests / tuning).
 
     Skew note: k-means cells are not size-balanced — a corpus with one
     dominant mode can produce a hot cell whose per-cell join is O(m²).
@@ -608,76 +626,27 @@ def ivf_candidates(
     sub-cells of a split cell are missed like any cross-cell pair; recall
     is measured, not assumed (test_skew.py::test_hot_cell_secondary_split).
     """
-    if embeddings.isEmpty():
-        return embeddings.select(
-            F.col("string").alias("s0"),
-            F.col("string").alias("s1"),
-            F.lit(0.0).alias("cos"),
-        ).where(F.lit(False))
+    from nama_spark.operators import ann
 
     feat = embeddings.select("string", "vec").localCheckpoint(eager=False)
     n = feat.count()
-    want_cells = n_cells if n_cells is not None else max(8, min(n // 400, max_cells))
+    if n == 0:
+        return _no_pairs(feat)
     if two_level is None:
-        two_level = max(8, n // 400) > max_cells if n_cells is None else False
-
+        two_level = n_cells is None and n // 400 > ann._IVF_FLAT_MAX_CELLS
+    fit = dict(sample_per_cell=sample_per_cell, max_iter=max_iter,
+               vec_col="vec", seed=seed)
     if two_level:
-        import math as _math
-
-        from nama_spark.operators.ann import _ivf2_assign, ivf2_fit_centroids
-
-        total = n_cells if n_cells is not None else max(8, n // 400)
-        n_coarse = max(2, _math.ceil(_math.sqrt(total)))
-        centers_df = ivf2_fit_centroids(
-            feat, n_coarse=n_coarse,
-            fine_per_coarse=max(1, _math.ceil(total / n_coarse)),
-            sample_per_cell=sample_per_cell, max_iter=max_iter,
-            vec_col="vec", seed=seed,
+        # None sizes both levels from n; a requested n_cells splits √n_cells
+        shape = ann._ivf2_shape(n_cells) if n_cells is not None else (None, None)
+        centers = ann.ivf2_fit_centroids(
+            feat, n_coarse=shape[0], fine_per_coarse=shape[1], **fit
         ).localCheckpoint(eager=False)
-        assigned = _ivf2_assign(
-            feat, centers_df, nprobe, id_col="string", vec_col="vec"
-        )
     else:
-        from nama_spark.operators.ann import ivf_fit_centroids
-
-        n_cells = min(want_cells, n)
-        nprobe = min(nprobe, n_cells)
-        # shared fit (round 6): ivf_fit_centroids carries the bounded-sample
-        # driver numpy Lloyd fast path — at bench cell counts the MLlib fit
-        # was ~20 scheduled jobs of pure latency (measured 1.6-2.1 s vs
-        # ~50 ms) — and the distributed MLlib fit past the gate.
-        centers_df = ivf_fit_centroids(
-            feat, n_cells=n_cells, sample_per_cell=sample_per_cell,
-            max_iter=max_iter, vec_col="vec", seed=seed,
-        )
-        d2 = F.aggregate(
-            F.zip_with(
-                F.col("vec").cast("array<double>"), F.col("centroid"),
-                lambda x, y: (x - y) * (x - y),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        from pyspark.sql import Window
-
-        # top-nprobe cells per vector: drop the 64-float vec BEFORE the
-        # window — the n·n_cells rows that shuffle for row_number carry only
-        # (string, cell, d2), and the vector rejoins by string afterwards
-        # (n·nprobe rows). Measured at 30k vectors / 75 cells: 19.7 s → ~3 s.
-        w = Window.partitionBy("string").orderBy(F.col("d2").asc(), F.col("cell").asc())
-        cand_cells = (
-            feat.crossJoin(F.broadcast(centers_df))
-            .withColumn("d2", d2)
-            .select("string", "cell", "d2")
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= nprobe)
-            .select("string", "cell")
-        )
-        assigned = cand_cells.join(feat, "string").select("cell", "string", "vec")
-
-    assigned = assigned.select(
-        F.col("cell").cast("long").alias("cell"), "string", "vec"
-    )
+        centers = ann.ivf_fit_centroids(feat, n_cells=n_cells, **fit)
+    # (cell long, string, vec) either way: ivf_assign routes a two-level
+    # table through the two-stage assignment
+    assigned = ann.ivf_assign(feat, centers, nprobe, id_col="string", vec_col="vec")
     if max_cell_rows is not None:
         assigned = _split_hot_cells(
             assigned, max_cell_rows, sample_per_cell=sample_per_cell,
@@ -765,30 +734,8 @@ def iter_scores(
     triangle — the reference's own review-everything semantics, for
     review-scale universes only.
     """
-    from nama_spark.operators.score import (
-        calibrated_score,
-        score_to_cos,
-        similarity_loss,
-    )
-
     cos_t = score_to_cos(min_score, alpha) if min_score is not None else -99.0
-    if candidate_mode == "bruteforce":
-        if min_score is None:
-            import warnings
-
-            warnings.warn(
-                "iter_scores(candidate_mode='bruteforce') with no min_score "
-                "scans the FULL upper triangle (O(n²) self-join) — the "
-                "reference's review-everything semantics, for review-scale "
-                "universes only. Pass min_score to push a cosine threshold "
-                "into the candidate join, or candidate_mode='lsh' at scale."
-            )
-        cand = bruteforce_candidates(embeddings, cos_t)
-    elif candidate_mode == "ivf":
-        cand = ivf_candidates(embeddings, cos_t, **lsh_kwargs)
-    else:
-        cand = lsh_candidates(embeddings, cos_t, **lsh_kwargs)
-
+    cand = threshold_candidates(embeddings, cos_t, candidate_mode, **lsh_kwargs)
     g = matchdata.df.select("string", "group", "count")
     out = (
         cand.join(
@@ -858,13 +805,9 @@ def unite_similar(
     from nama_spark.operators.cluster import labels_for_nodes
     from nama_spark.operators.matchdata import MatchData
 
-    cos_t = 1.0 + math.log(threshold) / alpha if threshold > 0 else -99.0
-    if candidate_mode == "bruteforce":
-        cand = bruteforce_candidates(embeddings, cos_t)
-    elif candidate_mode == "ivf":
-        cand = ivf_candidates(embeddings, cos_t, **lsh_kwargs)
-    else:
-        cand = lsh_candidates(embeddings, cos_t, **lsh_kwargs)
+    cand = threshold_candidates(
+        embeddings, score_to_cos(threshold, alpha), candidate_mode, **lsh_kwargs
+    )
     edges = cand.select(F.col("s0").alias("src"), F.col("s1").alias("dst"))
     own = matchdata.df.select(
         F.col("string").alias("src"), F.col("group").alias("dst")
@@ -903,7 +846,7 @@ def unite_nearest(
     )
     cand = embeddings.select("string", "vec").crossJoin(F.broadcast(seed_vecs))
     cos = cosine_expr(F.col("vec"), F.col("svec"))
-    score = F.least(F.lit(1.0), F.exp(-F.lit(alpha) * (F.lit(1.0) - cos)))
+    score = calibrated_score(cos, alpha)
     w = Window.partitionBy("string").orderBy(F.col("cos").desc(), F.col("seed").asc())
     best = (
         cand.withColumn("cos", cos)

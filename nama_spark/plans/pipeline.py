@@ -123,7 +123,8 @@ class EmbeddingPass:
     n_cells: int | None = None
     nprobe: int = 2
     # ivf mode scale knobs (forwarded): two_level=None auto-engages the
-    # coarse quantizer past max_cells; max_cell_rows pre-splits hot cells
+    # coarse quantizer past the flat cell cap (ann._IVF_FLAT_MAX_CELLS);
+    # max_cell_rows pre-splits hot cells
     two_level: bool | None = None
     max_cell_rows: int | None = None
     normalize: str | None = "simplify_corp"
@@ -139,15 +140,12 @@ class EmbeddingPass:
     name: str = "embedding"
 
     def edges(self, md: MatchData, lineage: LineageLog) -> DataFrame:
-        import math as _math
-
         from nama_spark.operators.embed import (
-            bruteforce_candidates,
             embed_strings,
             embed_strings_md5,
-            ivf_candidates,
-            lsh_candidates,
+            threshold_candidates,
         )
+        from nama_spark.operators.score import score_to_cos
 
         if self.normalize:
             key = norm_key(F.col("string"), self.normalize)
@@ -173,24 +171,17 @@ class EmbeddingPass:
             emb = embed_strings_md5(universe, count_col=None, dim=self.dim)
         else:
             emb = embed_strings(universe, count_col=None, dim=self.dim, seed=self.seed)
-        cos_t = (
-            1.0 + _math.log(self.threshold) / self.alpha
-            if self.threshold > 0
-            else -99.0
+        mode_kwargs = {
+            "ivf": dict(n_cells=self.n_cells, nprobe=self.nprobe,
+                        two_level=self.two_level,
+                        max_cell_rows=self.max_cell_rows),
+            "lsh": dict(num_hash_tables=self.num_hash_tables,
+                        bucket_length=self.bucket_length),
+        }
+        cand = threshold_candidates(
+            emb, score_to_cos(self.threshold, self.alpha), self.candidate_mode,
+            **mode_kwargs.get(self.candidate_mode, {}),
         )
-        if self.candidate_mode == "bruteforce":
-            cand = bruteforce_candidates(emb, cos_t)
-        elif self.candidate_mode == "ivf":
-            cand = ivf_candidates(
-                emb, cos_t, n_cells=self.n_cells, nprobe=self.nprobe,
-                two_level=self.two_level, max_cell_rows=self.max_cell_rows,
-            )
-        else:
-            cand = lsh_candidates(
-                emb, cos_t,
-                num_hash_tables=self.num_hash_tables,
-                bucket_length=self.bucket_length,
-            )
         # pull normalized-form candidate edges back to raw strings
         k0 = keyed.select(F.col("string").alias("r0"), F.col("norm").alias("s0"))
         k1 = keyed.select(F.col("string").alias("r1"), F.col("norm").alias("s1"))

@@ -425,30 +425,72 @@ def test_fit_alpha_recovers_generating_alpha(spark):
     assert all(np.isfinite(v) for v in vals)
 
 
-def test_ivf_candidates_two_level_all_probe_equals_bruteforce(spark, emb):
+@pytest.mark.parametrize("two_level", [True, False])
+def test_ivf_candidates_two_level_all_probe_equals_bruteforce(spark, emb, two_level):
     """two_level=True routes through the coarse quantizer (ivf2 fit +
-    two-stage assign); with every cell probed both levels are exhaustive, so
-    the pair set EQUALS bruteforce — the exactness anchor survives two
-    levels. A partial probe is a subset (no false positives)."""
+    two-stage assign), two_level=False through the flat one
+    (ivf_fit_centroids + ivf_assign); with every cell probed the assignment
+    is exhaustive, so the pair set EQUALS bruteforce — the exactness anchor
+    holds for both layouts. A partial probe is a subset (no false
+    positives)."""
     from nama_spark.operators.embed import ivf_candidates
 
     t = 0.6
     bf = {(r["s0"], r["s1"]) for r in bruteforce_candidates(emb, t).collect()}
-    two = {
+    every = {
         (r["s0"], r["s1"])
         for r in ivf_candidates(
-            emb, t, n_cells=6, nprobe=6, two_level=True
+            emb, t, n_cells=6, nprobe=6, two_level=two_level
         ).collect()
     }
-    assert two == bf
+    assert every == bf
 
     part = {
         (r["s0"], r["s1"])
         for r in ivf_candidates(
-            emb, t, n_cells=6, nprobe=2, two_level=True
+            emb, t, n_cells=6, nprobe=2, two_level=two_level
         ).collect()
     }
     assert part.issubset(bf)
+
+
+def _constrained(md, emb, mode):
+    from nama_spark.operators.constrained import unite_similar_constrained
+
+    return unite_similar_constrained(md, emb, candidate_mode=mode)
+
+
+def _iter_scores(md, emb, mode):
+    from nama_spark.operators.embed import iter_scores
+
+    return iter_scores(md, emb, min_score=0.5, candidate_mode=mode)
+
+
+def _embedding_pass(md, emb, mode):
+    from nama_spark.plans.lineage import LineageLog
+    from nama_spark.plans.pipeline import EmbeddingPass
+
+    p = EmbeddingPass(candidate_mode=mode, dim=32, normalize=None)
+    return p.edges(md, LineageLog(md.df.sparkSession, None))
+
+
+@pytest.mark.parametrize(
+    "caller",
+    [
+        lambda md, emb, mode: unite_similar(md, emb, candidate_mode=mode),
+        _constrained,
+        _iter_scores,
+        _embedding_pass,
+    ],
+    ids=["unite_similar", "unite_similar_constrained", "iter_scores",
+         "EmbeddingPass"],
+)
+def test_unknown_candidate_mode_raises(spark, emb, caller):
+    """Every caller of the candidate-mode dispatch rejects a mode it does
+    not know (here a wrong-case "IVF") instead of quietly running LSH."""
+    md = MatchData.from_unmatched(emb.select("string"))
+    with pytest.raises(ValueError, match="unknown candidate_mode: 'IVF'"):
+        caller(md, emb, "IVF")
 
 
 # ---------- SemDeDup (embed.semdedup) ----------
@@ -525,3 +567,27 @@ def test_semdedup_kmeans_path(spark):
     # jittered twins that share a cell collapse: fewer survivors than rows
     n_kept = out.where("is_kept").count()
     assert n_kept < 120
+
+
+def test_vector_layer_has_one_distance_fold_and_one_mode_dispatch():
+    """Source guard: in the library, the squared-distance fold lives only in
+    ann._sq_dist and candidate_mode is compared only in
+    embed.threshold_candidates."""
+    import inspect
+    from pathlib import Path
+
+    import nama_spark
+    from nama_spark.operators import ann, embed
+
+    root = Path(nama_spark.__file__).parent
+    for needle, owner in [
+        ("(x - y) * (x - y)", ann._sq_dist),
+        ("candidate_mode ==", embed.threshold_candidates),
+    ]:
+        hits = [
+            f"{p.relative_to(root)}:{no}"
+            for p in sorted(root.rglob("*.py"))
+            for no, line in enumerate(p.read_text().splitlines(), 1)
+            if needle in line
+        ]
+        assert len(hits) == inspect.getsource(owner).count(needle) > 0, hits
