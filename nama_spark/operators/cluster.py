@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nama_spark.session import local_frame
@@ -307,14 +307,23 @@ def stable_entity_ids(
        mint ``mint_prefix + md5(component label)`` — deterministic and
        namespace-disjoint from inherited ids as long as ids are only ever
        created by this operator.
+    4. A mint equal to an id inherited in this run is re-minted as that
+       id plus ``.k``, k one above the largest ``.k`` suffix any inherited
+       id carries on it. This happens when a split loser's label minted
+       the id in an earlier run and a bigger fragment keeps it: {a,b,c}
+       labelled a held ``n:md5(a)``; after the split {b,c} keeps it and
+       {a} gets ``n:md5(a).1``. Mints that collide with nothing are
+       unchanged.
 
     Shape: two groupBy aggs + arg-min via min(struct(-n, id)) — no
     per-component windows, so a giant component never serializes into one
     task's sort. The vote table is |nodes with a previous id| rows, the
-    argmax tables are |components| / |entity ids| rows.
+    argmax tables are |components| / |entity ids| rows. Rule 4 is one
+    window over the |components| id rows, keyed by id base: a partition
+    holds one row unless ids share a base.
 
-    ``current`` is read three times (the vote join, the distinct
-    components and the final join), so callers pass a pinned frame
+    ``current`` is read three times (the vote join, the null votes of
+    rule 1 and the final join), so callers pass a pinned frame
     (cached or ``localCheckpoint``-ed); an unpinned plan re-runs its whole
     lineage once per read.
     """
@@ -326,26 +335,57 @@ def stable_entity_ids(
         .groupBy("component", "entity_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # rule 1: best previous id per component (max n, then min id)
-    best_id = votes.groupBy("component").agg(
-        F.min(F.struct((-F.col("n")).alias("neg"), F.col("entity_id"))).alias("b")
-    ).select("component", F.col("b.entity_id").alias("candidate"))
+    # rule 1: best previous id per component (max n, then min id). Every
+    # component of ``cur`` enters the same aggregation with a null vote, so
+    # components without a previous member get a null candidate
+    no_vote = cur.select(
+        "component",
+        F.lit(None).cast("long").alias("neg"),
+        F.lit(None).cast(prev.schema["entity_id"].dataType).alias("entity_id"),
+    )
+    best_id = (
+        votes.select("component", (-F.col("n")).alias("neg"), "entity_id")
+        .unionByName(no_vote)
+        .groupBy("component")
+        .agg(F.min(F.when(F.col("neg").isNotNull(),
+                          F.struct("neg", "entity_id"))).alias("b"))
+        .select("component", F.col("b.entity_id").alias("candidate"))
+    )
     # rule 2: winning component per previous id (max n, then min component)
     winner = votes.groupBy("entity_id").agg(
         F.min(F.struct((-F.col("n")).alias("neg"), F.col("component"))).alias("w")
     ).select(F.col("entity_id").alias("candidate"), F.col("w.component").alias("wc"))
 
+    kept = F.col("candidate").isNotNull() & (F.col("wc") == F.col("component"))
+    entity_id = (
+        F.when(kept, F.col("candidate"))
+        .otherwise(F.concat(F.lit(mint_prefix), F.md5(F.col("component"))))
+    )
+    # rule 4: an inherited id "<base>.<k>" files under <base> with suffix k,
+    # any other inherited id under itself with k = 0, a mint under itself
+    # with no k; a mint whose base holds a k = 0 id takes max k + 1
+    suffix = r"^(.*)\.([1-9][0-9]{0,17})$"
+    has_suffix = kept & F.col("candidate").rlike(suffix)
+    base = F.when(
+        has_suffix, F.regexp_extract("candidate", suffix, 1)
+    ).otherwise(entity_id)
+    k = F.when(
+        has_suffix, F.regexp_extract("candidate", suffix, 2).cast("long")
+    ).when(kept, F.lit(0))
+    by_base = Window.partitionBy("base")
+    taken = F.max(F.col("k") == 0).over(by_base)
     comp_ids = (
-        cur.select("component").distinct()
-        .join(best_id, "component", "left")
-        .join(winner, "candidate", "left")
+        best_id.join(winner, "candidate", "left")
+        .select("component", kept.alias("kept"), entity_id.alias("entity_id"),
+                base.alias("base"), k.alias("k"))
         .select(
             "component",
             F.when(
-                F.col("candidate").isNotNull() & (F.col("wc") == F.col("component")),
-                F.col("candidate"),
+                ~F.col("kept") & taken,
+                F.concat(F.col("base"), F.lit("."),
+                         (F.max("k").over(by_base) + 1).cast("string")),
             )
-            .otherwise(F.concat(F.lit(mint_prefix), F.md5(F.col("component"))))
+            .otherwise(F.col("entity_id"))
             .alias("entity_id"),
         )
     )

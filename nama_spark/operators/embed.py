@@ -462,10 +462,15 @@ def lsh_candidates(
     as score_to_cos at embeddings.py:147), and the join's own distance column
     converts back exactly: cos = 1 − d²/2. No second join, no recompute.
 
-    bucket_length is deliberately small (~0.25 for unit vectors, where the
-    1-d projections have std ≈ 1): oversized buckets degenerate the hash join
-    toward the O(n²) scan (measured: 0.7 → 375 s vs 0.25 → 20 s at 12k
-    vectors, both 100% recall at cos ≥ 0.8).
+    bucket_length is deliberately small: oversized buckets degenerate the
+    hash join toward the O(n²) scan (measured: 0.7 → 375 s vs 0.25 → 20 s at
+    12k vectors, both 100% recall at cos ≥ 0.8). It is still coarse. MLlib's
+    BRP hash vectors are unit-norm, so a unit vector's 1-d projection has
+    std 1/sqrt(dim) — 1/8 for the 64-d embeddings — and 0.25-wide buckets
+    leave about 4 occupied buckets per table. Measured on the perfbench
+    er_batch_delta universe: 835 vectors filled 32 buckets over the 8
+    tables and the join produced 2.69M rows (3.85·n²), which is the
+    superlinear cost in perfbench/README.md.
     """
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector

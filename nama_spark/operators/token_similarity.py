@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nama_spark.functions.tokenize import token_weights, tokens_table
 from nama_spark.operators.block import (
@@ -36,22 +37,33 @@ from nama_spark.operators.score import token_similarity_scores
 from nama_spark.session import local_frame
 
 
-# Fitted-token-table row count under which pair_scores ships the score
-# model ({string → token set, Σw, Σw²} + token→weight) broadcast into one
-# mapInPandas instead of the relational join-aggregate plans (rows ≈
-# strings × tokens-per-string; ~2M rows ≈ low hundreds of MB built).
+# Fitted-token-table row count under which pair_scores and
+# predict_incremental ship the score model ({string → token set, Σw, Σw²}
+# + token→weight) broadcast into one mapInPandas instead of the relational
+# join-aggregate plans (rows ≈ strings × tokens-per-string; ~2M rows ≈ low
+# hundreds of MB built). It also bounds fit_incremental's collect of the
+# carried token table.
 import os as _os
 
 _TOKENSIM_BROADCAST_TOKEN_ROWS = int(
     _os.environ.get("SPARK_GRAFT_TOKENSIM_BROADCAST_TOKEN_ROWS", "2000000")
 )
-# Universe size (distinct strings) under which fit() tokenizes driver-side
+# Universe size (distinct strings) under which fit() — and fit_incremental,
+# for its delta strings — tokenizes driver-side
 # (python twin of the tokenizer expressions, verified equal in
 # tests/test_tokensim_broadcast_path.py) instead of running the
 # distinct+explode+groupBy chain distributed — at a few thousand strings
 # the distributed fit is pure stage latency (measured ~4 s vs ~0.5 s).
 _TOKENSIM_DRIVER_FIT_STRINGS = int(
     _os.environ.get("SPARK_GRAFT_TOKENSIM_DRIVER_FIT_STRINGS", "100000")
+)
+
+_TOKEN_SCHEMA = T.StructType(
+    [
+        T.StructField("string", T.StringType()),
+        T.StructField("token", T.StringType()),
+        T.StructField("tf", T.LongType()),
+    ]
 )
 
 
@@ -137,7 +149,7 @@ class TokenSimilarity:
         # dict math + two Arrow-built local frames with identical rows.
         probe = self._strings.limit(_TOKENSIM_DRIVER_FIT_STRINGS + 1).collect()
         if len(probe) <= _TOKENSIM_DRIVER_FIT_STRINGS:
-            self._fit_driver([r["string"] for r in probe])
+            self._fit_driver(self._strings.sparkSession, [r["string"] for r in probe])
             return self
         self._tokens = tokens_table(self._strings, tokenizer=self.tokenizer).cache()
         self._weights = token_weights(
@@ -158,36 +170,36 @@ class TokenSimilarity:
         self._score_bc = None
         return self
 
-    def _fit_driver(self, strings: list) -> None:
+    def _fit_driver(self, spark, strings: list, carried: list = ()) -> list:
         """Build the (string, token, tf) and (token, f, d, weight) tables
         from a collected universe — same rows as tokens_table +
         token_weights (equality-tested), built with ``session.local_frame``
         (JVM-resident Arrow relations: no Python worker runs when they are
         scanned) and cached, so every distributed consumer (block join,
-        token_similarity_scores, incremental paths) works unchanged."""
+        token_similarity_scores, incremental paths) works unchanged.
+
+        ``carried`` are (string, token, tf) rows of an already-tokenized
+        universe (fit_incremental's carried table); they join the table as
+        they are and only ``strings`` are tokenized. Weights are computed
+        over the union, so they are the same as a fit of the whole
+        universe. Returns the rows tokenized here."""
         import math as _math
         from collections import Counter as _Counter
 
-        from pyspark.sql import types as T
-
-        spark = self._strings.sparkSession
-        tok_rows = []
+        # a null string has no tokens, as in tokens_table
+        new_rows = [
+            (s, t, c)
+            for s in strings
+            if s is not None
+            for t, c in _Counter(_py_tokenize(s, self.tokenizer)).items()
+        ]
+        tok_rows = list(carried) + new_rows
         freq: dict = {}
         nstr: dict = {}
-        for s in strings:
-            tf = _Counter(_py_tokenize(s, self.tokenizer))
-            for t, c in tf.items():
-                tok_rows.append((s, t, c))
-                freq[t] = freq.get(t, 0) + c
-                nstr[t] = nstr.get(t, 0) + 1
-        tok_schema = T.StructType(
-            [
-                T.StructField("string", T.StringType()),
-                T.StructField("token", T.StringType()),
-                T.StructField("tf", T.LongType()),
-            ]
-        )
-        self._tokens = local_frame(spark, tok_rows, tok_schema).cache()
+        for _s, t, c in tok_rows:
+            freq[t] = freq.get(t, 0) + c
+            nstr[t] = nstr.get(t, 0) + 1
+        self._tokens = local_frame(spark, tok_rows, _TOKEN_SCHEMA).cache()
         w_rows = []
         for t, f in freq.items():
             d = f if self.reference_doc_counts else nstr[t]
@@ -222,6 +234,7 @@ class TokenSimilarity:
         self._score_bc = spark.sparkContext.broadcast(
             (_score_model(strs, wd), wd)
         )
+        return new_rows
 
     def fit_incremental(
         self,
@@ -232,19 +245,42 @@ class TokenSimilarity:
         """Incremental fit from a CARRIED token table (the band-index
         pattern): ``prev_tokens`` is the persisted (string, token, tf) table
         of the existing universe; ``delta_strings`` are strings NOT in it.
-        Tokenizes only the Δn delta rows, unions them in, and recomputes
-        weights with one vocabulary-sized aggregation — the resulting
-        tokens/weights are IDENTICAL to fit() on the union universe (weights
-        are a pure function of the union token table), at O(Δn)
-        tokenization instead of re-exploding every accumulated string per
-        increment. Returns the delta token rows so the caller can persist
-        them (streaming/er.py appends one delta dir per micro-batch)."""
+        Tokenizes only the Δn delta rows and recomputes the weights of the
+        union — the resulting tokens/weights are IDENTICAL to fit() on the
+        union universe (weights are a pure function of the union token
+        table), at O(Δn) tokenization instead of re-exploding every
+        accumulated string per increment. Returns the delta token rows so
+        the caller can persist them (streaming/er.py appends one delta dir
+        per micro-batch).
+
+        Two paths, under fit()'s gates: when the carried table has at most
+        _TOKENSIM_BROADCAST_TOKEN_ROWS rows (the score model's own bound)
+        and the delta at most _TOKENSIM_DRIVER_FIT_STRINGS strings, both
+        are collected (each through a bounded ``limit(cap + 1)``) and
+        fit()'s driver fit builds the tables as local frames plus the
+        score-model broadcast. Above either cap the delta is tokenized
+        distributed and the weights come from one vocabulary-sized
+        aggregation over the union."""
         self.unpersist()
-        delta = tokens_table(
-            delta_strings.select(F.col(string_col).alias("string")),
-            tokenizer=self.tokenizer,
-        )
+        delta_strings = delta_strings.select(F.col(string_col).alias("string"))
         prev = prev_tokens.select("string", "token", "tf")
+        spark = prev.sparkSession
+        fresh = (
+            delta_strings.distinct()
+            .limit(_TOKENSIM_DRIVER_FIT_STRINGS + 1)
+            .collect()
+        )
+        if len(fresh) <= _TOKENSIM_DRIVER_FIT_STRINGS:
+            carried = prev.limit(_TOKENSIM_BROADCAST_TOKEN_ROWS + 1).collect()
+            if len(carried) <= _TOKENSIM_BROADCAST_TOKEN_ROWS:
+                delta_rows = self._fit_driver(
+                    spark,
+                    [r["string"] for r in fresh],
+                    carried=[tuple(r) for r in carried],
+                )
+                self._strings = self._tokens.select("string").distinct()
+                return local_frame(spark, delta_rows, _TOKEN_SCHEMA)
+        delta = tokens_table(delta_strings, tokenizer=self.tokenizer)
         self._tokens = prev.unionByName(delta).cache()
         self._weights = token_weights(
             self._tokens,
@@ -286,6 +322,11 @@ class TokenSimilarity:
         # (one full exchange of the candidate stream for zero skew benefit).
         # salt_pairs stays available for callers whose pair source is NOT
         # already pair-key-partitioned.
+        return self._scores(pairs)
+
+    def _scores(self, pairs: DataFrame) -> DataFrame:
+        """(s0, s1, score) for candidate ``pairs`` — the one scorer
+        dispatch of pair_scores and predict_incremental."""
         if (
             self._n_token_rows is not None
             and self._n_token_rows <= _TOKENSIM_BROADCAST_TOKEN_ROWS
@@ -315,7 +356,6 @@ class TokenSimilarity:
         token_similarity_scores; equality is covered by
         tests/test_tokensim_broadcast_path.py."""
         import pandas as pd
-        from pyspark.sql import types as T
 
         spark = pairs.sparkSession
         if self._score_bc is None:
@@ -468,6 +508,12 @@ class TokenSimilarity:
         pairs are deliberately not re-scored (document-level weights drift
         as the corpus grows — re-predict from scratch when that matters).
 
+        The refit and the scorer are the batch path's own: fit() or
+        fit_incremental (driver fit under their gates) and pair_scores'
+        dispatch (broadcast score model when the union token table is
+        within _TOKENSIM_BROADCAST_TOKEN_ROWS, else the relational
+        token_similarity_scores).
+
         Beyond the reference (nama has no incremental path; its unite is
         already incremental only because everything is in one dict)."""
         from nama_spark.operators.block import token_block_pairs_against
@@ -502,9 +548,7 @@ class TokenSimilarity:
         # token_block_pairs_against already ends in a pair-key .distinct();
         # no extra salt repartition needed (see pair_scores)
         pairs = token_block_pairs_against(self._tokens, nw, elig)
-        scores = token_similarity_scores(
-            pairs, self._tokens, self._weights, measure=self.measure
-        )
+        scores = self._scores(pairs)
         edges = scores.where(F.col("score") >= threshold).select("s0", "s1")
         # every edge touches a new string by construction (blocking was
         # against ``nw``), so the group-quotient unite applies: CC + relabel

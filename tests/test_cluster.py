@@ -1,6 +1,7 @@
 """Property tests: distributed large-star/small-star connected components vs
 networkx.connected_components on random edge sets (SURVEY.md §5 test plan)."""
 
+import hashlib
 import random
 
 import networkx as nx
@@ -247,6 +248,46 @@ def test_stable_ids_split_keeps_id_on_bigger_half(spark):
     assert got["a"] == got["b"] == got["c"] == "E1"
     assert got["d"] == got["e"] != "E1"
     assert got["d"].startswith("n:")
+
+
+def test_stable_ids_split_loser_never_remints_the_kept_id(spark):
+    """Run 1 mints n:md5(a) for {a,b,c}; run 2 splits it into {a} and
+    {b,c}. {b,c} keeps n:md5(a), so {a}'s plain mint — n:md5(a) again —
+    would put one id on two components: it takes the ``.1`` suffix."""
+    cur1 = spark.createDataFrame(
+        [("a", "a"), ("b", "a"), ("c", "a")], ["node", "component"]
+    )
+    empty = spark.createDataFrame([], "node string, entity_id string")
+    ids1 = stable_entity_ids(empty, cur1)
+    kept = "n:" + hashlib.md5(b"a").hexdigest()
+    assert set(_ids_map(ids1).values()) == {kept}
+
+    cur2 = spark.createDataFrame(
+        [("a", "a"), ("b", "b"), ("c", "b")], ["node", "component"]
+    )
+    got = _ids_map(stable_entity_ids(ids1, cur2))
+    assert got == {"a": kept + ".1", "b": kept, "c": kept}
+    again = _ids_map(stable_entity_ids(ids1.repartition(3), cur2.repartition(5)))
+    assert again == got
+
+    # a later split of the same label: every suffix already kept is
+    # skipped, and a mint that collides with nothing stays plain
+    prev3 = spark.createDataFrame(
+        [("a", kept + ".1"), ("d", kept + ".1"), ("e", kept + ".1"),
+         ("b", kept), ("c", kept), ("f", "E9")],
+        ["node", "entity_id"],
+    )
+    cur3 = spark.createDataFrame(
+        [("a", "a"), ("b", "b"), ("c", "b"), ("d", "d"), ("e", "d"),
+         ("f", "f"), ("g", "g")],
+        ["node", "component"],
+    )
+    got3 = _ids_map(stable_entity_ids(prev3, cur3))
+    assert got3 == {
+        "a": kept + ".2", "b": kept, "c": kept, "d": kept + ".1",
+        "e": kept + ".1", "f": "E9",
+        "g": "n:" + hashlib.md5(b"g").hexdigest(),
+    }
 
 
 def test_stable_ids_partition_invariance(spark):

@@ -1,7 +1,8 @@
 """Driver-built frames are JVM-resident: ``session.local_frame`` is the one
 way the engine turns driver rows into a DataFrame, and nothing behind the
-driver fast paths (small-graph CC, incremental unite, driver token fit,
-driver k-means) re-runs Python workers when it is evaluated."""
+driver fast paths (small-graph CC, incremental unite, driver token fit
+and its incremental form, driver k-means) re-runs Python workers when it
+is evaluated."""
 
 import datetime as dt
 import pathlib
@@ -84,6 +85,19 @@ def test_driver_token_fit_tables_have_no_python_rdd(spark):
     assert ts._tokens.count() > 0 and ts._weights.count() > 0
     assert not _python_rdd(ts._tokens)
     assert not _python_rdd(ts._weights)
+
+
+def test_incremental_token_fit_tables_have_no_python_rdd(spark):
+    from nama_spark.functions.tokenize import tokens_table
+    from nama_spark.operators.token_similarity import TokenSimilarity
+
+    ts = TokenSimilarity()
+    prev = tokens_table(_strings(spark, ["acme widget", "beta"]))
+    delta = ts.fit_incremental(prev, _strings(spark, ["acme widgets"]))
+    assert ts._score_bc is not None  # the driver fit ran
+    for df in (delta, ts._tokens, ts._weights):
+        assert df.count() > 0
+        assert not _python_rdd(df)
 
 
 def test_driver_kmeans_centroids_have_no_python_rdd(spark):

@@ -1056,11 +1056,13 @@ def test_run_corpus_pipeline_bpe_stage(spark, tmp_path):
     ).count() == 0
 
 
-def test_run_delta_er_job(spark, tmp_path):
+def test_run_delta_er_job(spark, tmp_path, monkeypatch):
     """jobs/run_delta_er.py: bootstrap on day-0 names, fold a day-1 delta of
     typo'd twins into the persisted state — twins must land in their
     original's group, entity ids must survive, state versions must advance,
-    and old groups must never split."""
+    and old groups must never split. Three folds write the same state with
+    the token-similarity gates forced to the distributed fit and the
+    relational scorer."""
     import sys
 
     sys.path.insert(0, "/root/repo/jobs")
@@ -1141,6 +1143,42 @@ def test_run_delta_er_job(spark, tmp_path):
         elected = elect_labels(c).select("string", "count", "group")
         assert sorted(c.select("string", "count", "group").collect()) == \
             sorted(elected.collect())
+
+    # two more folds, then bootstrap + the same three folds with both gates
+    # forced below any input: every version's clusters and ids are the same
+    days = [p0, p1]
+    for n, rows in (
+        (2, [(f"acme widget co {i}",) for i in range(10, 20)]
+            + [(f"zzz unrelatd {i}",) for i in range(3)]),
+        (3, [(f"acme widgt company {i}",) for i in range(20, 30)]
+            + [("acme widget company 0",)]),
+    ):
+        days.append(str(tmp_path / f"d{n}.parquet"))
+        spark.createDataFrame(rows, ["repo"]).write.parquet(days[-1])
+    for p in days[2:]:
+        assert run_delta_er.main([
+            "--delta-input", p, "--string-col", "repo",
+            "--state", state, "--threshold", "0.7",
+        ]) == 0
+
+    from nama_spark.operators import token_similarity as TS
+
+    monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", -1)
+    monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_FIT_STRINGS", -1)
+    forced = str(tmp_path / "state_forced")
+    for i, p in enumerate(days):
+        assert run_delta_er.main(
+            (["--init"] if i == 0 else [])
+            + ["--delta-input", p, "--string-col", "repo",
+               "--state", forced, "--threshold", "0.7"]
+        ) == 0
+    for v in range(1, 5):
+        for table in ("clusters", "entity_ids"):
+            got, want = (
+                sorted(spark.read.parquet(f"{st}/v{v:06d}/{table}").collect())
+                for st in (forced, state)
+            )
+            assert got == want, (v, table)
 
 
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):

@@ -1,11 +1,13 @@
 """Round-6 pair_scores internals: the broadcast-model fast path must
 reproduce the relational scorer pair-for-pair on both measures, including
-the inner-join drop of token-less strings."""
+the inner-join drop of token-less strings. The incremental fit and predict
+must give the same tables and partition on both sides of both gates."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from nama_spark.operators import token_similarity as TS
+from nama_spark.operators.matchdata import MatchData
 from nama_spark.operators.token_similarity import TokenSimilarity
 
 
@@ -77,3 +79,88 @@ def test_driver_fit_matches_distributed_fit(spark, names, monkeypatch):
     for t in dw:
         assert dw[t][:2] == sw[t][:2]
         assert dw[t][2] == pytest.approx(sw[t][2], rel=1e-15)
+
+
+# ---------- the incremental path on both sides of both gates ----------
+
+
+def _set_gates(monkeypatch, gate):
+    monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", gate)
+    monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_FIT_STRINGS", gate)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _weights(ts):
+    return {r["token"]: (r["f"], r["d"], r["weight"]) for r in ts._weights.collect()}
+
+
+def _assert_same_weights(a, b):
+    assert set(a) == set(b) and a
+    for t in a:
+        assert a[t][:2] == b[t][:2], t
+        assert a[t][2] == pytest.approx(b[t][2], rel=1e-15), t
+
+
+@pytest.fixture(scope="module")
+def split(spark, names):
+    """(old universe, delta) — the delta repeats one old string, which
+    predict_incremental must not tokenize a second time."""
+    rows = [r["string"] for r in names.collect()]
+    old = spark.createDataFrame([(s,) for s in rows[::2]], ["string"])
+    delta = spark.createDataFrame(
+        [(s,) for s in rows[1::2] + [rows[0]]], ["string"]
+    )
+    return old, delta
+
+
+@pytest.mark.parametrize("gate", [10**9, -1], ids=["driver", "distributed"])
+def test_fit_incremental_equals_fit_of_union(spark, split, gate, monkeypatch):
+    from nama_spark.functions.tokenize import tokens_table
+
+    _set_gates(monkeypatch, gate)
+    old, delta = split
+    # a null string tokenizes to nothing on either path
+    genuinely_new = delta.join(old, "string", "left_anti").unionByName(
+        spark.createDataFrame([(None,)], "string string")
+    )
+    inc = TokenSimilarity()
+    new_rows = inc.fit_incremental(tokens_table(old), genuinely_new)
+    full = TokenSimilarity().fit(old.unionByName(genuinely_new))
+    assert (inc._score_bc is not None) == (gate > 0)
+    assert _rows(inc._tokens) == _rows(full._tokens)
+    assert inc._n_token_rows == full._n_token_rows
+    _assert_same_weights(_weights(inc), _weights(full))
+    assert _rows(new_rows) == _rows(tokens_table(genuinely_new))
+
+
+@pytest.mark.parametrize("measure", ["jaccard", "cosine"])
+def test_predict_incremental_same_on_both_sides_of_the_gates(
+    spark, split, measure, monkeypatch
+):
+    from nama_spark.functions.tokenize import tokens_table
+
+    old, delta = split
+    prior = MatchData.from_unmatched(old)
+
+    def fold(gate):
+        _set_gates(monkeypatch, gate)
+        ts = TokenSimilarity(measure=measure)
+        md = ts.predict_incremental(
+            prior, delta, threshold=0.5, prev_tokens=tokens_table(old)
+        )
+        assert (ts._score_bc is not None) == (gate > 0)
+        return (_rows(md.df), _rows(ts.last_delta_tokens), _rows(ts._tokens),
+                _weights(ts))
+
+    fast = fold(10**9)
+    slow = fold(-1)
+    assert fast[:3] == slow[:3]
+    _assert_same_weights(fast[3], slow[3])
+    groups = {}
+    for s, _count, g in fast[0]:
+        groups.setdefault(g, []).append(s)
+    new = {r["string"] for r in delta.join(old, "string", "left_anti").collect()}
+    assert any(len(m) > 1 and new & set(m) for m in groups.values()), groups

@@ -86,33 +86,37 @@ def plan_exact_dedup(spark, sf_dir):
 
 def plan_pipeline_er_unite(spark, sf_dir):
     """The fused-unite tail of pipeline_er: CC label join + label
-    re-election, captured PRE-checkpoint so the relabel plan shape is
-    visible (the pipeline's own md.df pin would truncate it to a
+    re-election. Runs ``MatchPipeline.run`` itself and keeps the frame its
+    final ``md.unite`` returns, captured PRE-pin so the relabel plan shape
+    is visible (the pipeline's own md.df pin would truncate it to a
     Scan ExistingRDD)."""
-    from pyspark.sql import functions as F
-
     from fixtures.make_fixtures import fixture_dataframes, make_fixture
     from nama_spark.operators.matchdata import MatchData
-    from nama_spark.plans.lineage import LineageLog
-    from nama_spark.plans.pipeline import ExactKeyPass, TokenSimPass
+    from nama_spark.plans.pipeline import (
+        ExactKeyPass,
+        MatchPipeline,
+        TokenSimPass,
+    )
 
     fx = make_fixture(seed=42, n_entities=300, max_files=3)
     records, _, _ = fixture_dataframes(spark, fx)
-    lineage = LineageLog(spark, None)
-    names = records.groupBy(F.col("repo").alias("string")).agg(
-        F.count(F.lit(1)).alias("count")
-    )
-    md = MatchData(
-        names.withColumn("group", F.col("string")).localCheckpoint(eager=False),
-        _relabel=False,
-    )
-    md.df.count()
-    all_edges = None
-    for p in [ExactKeyPass(), TokenSimPass(threshold=0.7)]:
-        e = p.edges(md, lineage).localCheckpoint(eager=False)
-        e.count()
-        all_edges = e if all_edges is None else all_edges.union(e)
-    return md.unite(all_edges, small_graph_threshold=100_000).df
+    united = []
+    unite = MatchData.unite
+
+    def keep(self, *args, **kwargs):
+        united.append(unite(self, *args, **kwargs))
+        return united[-1]
+
+    MatchData.unite = keep
+    try:
+        MatchPipeline(passes=[ExactKeyPass(), TokenSimPass(threshold=0.7)]).run(
+            records, string_col="repo"
+        )
+    finally:
+        MatchData.unite = unite
+    # a fresh frame over the same plan: the run's own pin executed the
+    # returned one, whose explain would show the final AQE plan instead
+    return united[-1].df.select("*")
 
 
 def plan_ann_ivf_delta(spark, sf_dir):
