@@ -417,6 +417,9 @@ def main(argv=None):
     if docs.rdd.getNumPartitions() < n_parts:
         docs = docs.repartition(n_parts)
     t = F.col(args.text_col)
+    # Pinned BEFORE the filters: PushDownPredicates copies a filtered
+    # profile column's expression into the Filter, so a pin after them ran
+    # the quality and lang profiles twice per document.
     docs = docs.withColumns(
         {
             "quality": quality_score(t),
@@ -425,7 +428,7 @@ def main(argv=None):
             "n_words": word_token_count(t),
             "fp": fingerprint(t),
         }
-    )
+    ).localCheckpoint(eager=False)
     if args.min_quality > 0:
         docs = docs.where(F.col("quality") >= args.min_quality)
     # 3b. Gopher repetition gate — within-doc n-gram char-mass caps
@@ -440,7 +443,6 @@ def main(argv=None):
     langs = [x for x in args.langs.split(",") if x]
     if langs:
         docs = docs.where(F.col("lang").isin(langs))
-    docs = docs.localCheckpoint(eager=False)
     # Fusion gate (round 6): when NO later stage filters or mutates the
     # frame, the after_filters count and the total-token sum are observed
     # during the shard write itself (one CollectMetrics node on the write's

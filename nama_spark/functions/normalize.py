@@ -90,14 +90,12 @@ def simplify_corp(c: Column | str) -> Column:
 def remove_stopwords(c: Column | str, stopwords: list[str] | None = None) -> Column:
     """Drop whitespace-separated words whose lowercase form is a stopword;
     rejoin with single spaces.  (docs/nama/utils.html remove_stopwords)"""
-    # single array Literal, not CreateArray(179 lit children): the
-    # child-per-word tree measured 0.5 s of py4j build + 1.2 s of
-    # Catalyst compile PER EXPRESSION at 179 stopwords (round 6, guide
-    # §5 driver overhead); same array value either way
-    stopset = F.lit(list(stopwords or ENGLISH_STOPWORDS))
+    # isin inside the lambda is rewritten to an InSet hash lookup, not a
+    # linear array_contains scan over the stopword list
+    stopset = list(stopwords or ENGLISH_STOPWORDS)
     words_arr = F.filter(
         F.split(F.trim(_col(c)), r"\s+"),
-        lambda w: (w != F.lit("")) & ~F.array_contains(stopset, F.lower(w)),
+        lambda w: (w != F.lit("")) & ~F.lower(w).isin(stopset),
     )
     return F.array_join(words_arr, " ")
 

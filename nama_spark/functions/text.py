@@ -42,14 +42,49 @@ def word_token_count(c: Column | str) -> Column:
     )
 
 
+def _fold_words(c: Column | str, counts: dict, finish, null_value) -> Column:
+    """One tokenization pass: fold the words of ``c`` into the int
+    counters ``counts`` (name → per-word int Column of the word), then map
+    the counter struct through ``finish``; NULL text gives ``null_value``.
+
+    Every profile column goes through here because Spark does not
+    eliminate common subexpressions that contain lambda variables: each
+    separate reference to ``_words(c)`` (or to an aggregate over it)
+    splits, lowercases and filters the whole document again."""
+    zero = F.struct(*[F.lit(0).alias(k) for k in counts])
+    return F.coalesce(
+        F.aggregate(
+            _words(_col(c)),
+            zero,
+            lambda acc, w: F.struct(
+                *[(acc[k] + f(w)).alias(k) for k, f in counts.items()]
+            ),
+            finish,
+        ),
+        F.lit(null_value),
+    )
+
+
+def _is_in(words: list[str]):
+    # isin inside the lambda is rewritten to an InSet hash lookup (past
+    # spark.sql.optimizer.inSetConversionThreshold literals), not a linear
+    # array_contains scan
+    return lambda w: w.isin(list(words)).cast("int")
+
+
+def _word_mean(c: Column | str, per_word) -> Column:
+    """Mean of the int Column ``per_word(w)`` over the words of ``c``; 0.0
+    for NULL or wordless text."""
+    return _fold_words(
+        c,
+        {"n": lambda w: F.lit(1), "total": per_word},
+        lambda a: F.when(a["n"] > 0, a["total"] / a["n"]).otherwise(F.lit(0.0)),
+        0.0,
+    )
+
+
 def stopword_ratio(c: Column | str, stopwords: list[str] | None = None) -> Column:
-    # single array Literal — see normalize.remove_stopwords (round 6):
-    # CreateArray(179 lit children) cost ~1.7 s build+compile per use
-    sw = F.lit(list(stopwords or ENGLISH_STOPWORDS))
-    ws = _words(_col(c))
-    n = F.size(ws)
-    n_stop = F.size(F.filter(ws, lambda w: F.array_contains(sw, w)))
-    return F.when(n > 0, n_stop / n).otherwise(F.lit(0.0))
+    return _word_mean(c, _is_in(stopwords or ENGLISH_STOPWORDS))
 
 
 def punct_ratio(c: Column | str) -> Column:
@@ -60,11 +95,7 @@ def punct_ratio(c: Column | str) -> Column:
 
 
 def mean_word_length(c: Column | str) -> Column:
-    ws = _words(_col(c))
-    return F.when(
-        F.size(ws) > 0,
-        F.aggregate(ws, F.lit(0), lambda a, w: a + F.length(w)) / F.size(ws),
-    ).otherwise(F.lit(0.0))
+    return _word_mean(c, F.length)
 
 
 def quality_score(c: Column | str) -> Column:
@@ -72,36 +103,43 @@ def quality_score(c: Column | str) -> Column:
     signals (Gopher/C4-style rule-of-thumb filters, expressed as one expr):
     0.4·len_ok + 0.3·stopword_ok + 0.3·punct_ok."""
     col = _col(c)
-    n_tok = token_count(col)
-    len_ok = F.when((n_tok >= 10) & (n_tok <= 10000), 1.0).otherwise(
-        F.when(n_tok > 0, 0.5).otherwise(0.0)
-    )
-    sw = stopword_ratio(col)
-    sw_ok = F.when((sw >= 0.05) & (sw <= 0.7), 1.0).otherwise(0.0)
     p = punct_ratio(col)
     p_ok = F.when(p <= 0.2, 1.0).otherwise(F.when(p <= 0.4, 0.5).otherwise(0.0))
-    score = F.round(0.4 * len_ok + 0.3 * sw_ok + 0.3 * p_ok, 6)
-    return F.when(n_tok > 0, score).otherwise(F.lit(0.0))
+
+    def finish(a):
+        n_tok = a["n"]
+        # score is only evaluated for n_tok > 0
+        len_ok = F.when((n_tok >= 10) & (n_tok <= 10000), 1.0).otherwise(0.5)
+        sw = a["n_stop"] / n_tok
+        sw_ok = F.when((sw >= 0.05) & (sw <= 0.7), 1.0).otherwise(0.0)
+        score = F.round(0.4 * len_ok + 0.3 * sw_ok + 0.3 * p_ok, 6)
+        return F.when(n_tok > 0, score).otherwise(F.lit(0.0))
+
+    return _fold_words(
+        col, {"n": lambda w: F.lit(1), "n_stop": _is_in(ENGLISH_STOPWORDS)},
+        finish, 0.0,
+    )
 
 
 def lang_id(c: Column | str) -> Column:
     """Marker-stopword language ID: argmax language by marker hit-count over
-    whitespace tokens; 'und' (undetermined) when nothing matches."""
-    ws = _words(_col(c))
-    scores = []
-    for lang, markers in _LANG_MARKERS.items():
-        marker_arr = F.lit(list(markers))
-        # single-arg lambda (a second arg would be treated as the index);
-        # F.filter evaluates it eagerly, so the closure is safe in this loop
-        n = F.size(F.filter(ws, lambda w: F.array_contains(marker_arr, w)))
-        scores.append((lang, n))
-    best = F.lit("und")
-    best_n = F.lit(0)
-    for lang, n in scores:
-        cond = n > best_n
-        best = F.when(cond, F.lit(lang)).otherwise(best)
-        best_n = F.when(cond, n).otherwise(best_n)
-    return best
+    whitespace tokens, the first of ``_LANG_MARKERS`` on a tie; 'und'
+    (undetermined) when nothing matches. One pass counts every language;
+    the expression grows linearly with the number of languages."""
+    langs = list(_LANG_MARKERS)
+
+    def finish(a):
+        counts = F.array(*[a[lang] for lang in langs])
+        top = F.array_max(counts)
+        first_top = F.array_position(counts, top).cast("int")
+        return F.when(top == 0, F.lit("und")).otherwise(
+            F.element_at(F.array(*[F.lit(lang) for lang in langs]), first_top)
+        )
+
+    return _fold_words(
+        c, {lang: _is_in(_LANG_MARKERS[lang]) for lang in langs},
+        finish, "und",
+    )
 
 
 def fingerprint(c: Column | str) -> Column:

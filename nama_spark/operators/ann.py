@@ -685,8 +685,6 @@ def ivf_topk_delta(
 
     queries = float_vectors(queries)
     assigned = float_vectors(assigned)
-    if queries.isEmpty():
-        return _empty_topk(queries, id_col)
     probes = ivf_assign(queries, centers, nprobe=nprobe,
                         id_col=id_col, vec_col=vec_col)
     topk = _cosine_topk_ties(

@@ -1,12 +1,17 @@
 """Training-data-pipeline operators: dedup family, ANN, text analysis,
 multimodal plumbing, event-time ops — on the driver-provided testdata."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from nama_spark.functions import text as text_fns
+from nama_spark.functions.normalize import ENGLISH_STOPWORDS
 from nama_spark.functions.text import (
     fingerprint,
     lang_id,
+    mean_word_length,
     quality_score,
     stopword_ratio,
     token_count,
@@ -255,6 +260,93 @@ def test_text_functions(spark):
     # fingerprint invariant under case/whitespace
     fp2 = df.select(fingerprint(F.upper("text")).alias("fp")).collect()
     assert rows["en-ish"]["fp"] == fp2[0]["fp"]
+
+
+# pure-Python references for the word-list profile columns: whitespace
+# words (Java \s) of the lowercased text, empty words dropped
+def _ref_words(s):
+    return [w for w in re.split(r"[ \t\n\x0b\f\r]+", s.lower()) if w]
+
+
+def _ref_stopword_ratio(s):
+    ws = _ref_words(s) if s is not None else []
+    return sum(w in ENGLISH_STOPWORDS for w in ws) / len(ws) if ws else 0.0
+
+
+def _ref_mean_word_length(s):
+    ws = _ref_words(s) if s is not None else []
+    return sum(map(len, ws)) / len(ws) if ws else 0.0
+
+
+def _ref_quality(s):
+    ws = _ref_words(s) if s is not None else []
+    if not ws:
+        return 0.0
+    len_ok = 1.0 if 10 <= len(ws) <= 10000 else 0.5
+    sw = _ref_stopword_ratio(s)
+    sw_ok = 1.0 if 0.05 <= sw <= 0.7 else 0.0
+    p = (len(s) - len(re.sub(r"[^\w\s]", "", s, flags=re.ASCII))) / len(s)
+    p_ok = 1.0 if p <= 0.2 else 0.5 if p <= 0.4 else 0.0
+    return round(0.4 * len_ok + 0.3 * sw_ok + 0.3 * p_ok, 6)
+
+
+def _ref_lang(s):
+    ws = _ref_words(s) if s is not None else []
+    counts = [sum(w in m for w in ws) for m in text_fns._LANG_MARKERS.values()]
+    if max(counts) == 0:
+        return "und"
+    return list(text_fns._LANG_MARKERS)[counts.index(max(counts))]
+
+
+def test_text_profile_matches_python_reference(spark):
+    texts = [
+        None, "", "   ", "\t\n",
+        "THE Cat AND The Dog",            # upper-case markers
+        "la que",                         # fr/es tie -> fr (first listed)
+        "the der",                        # en/de tie -> en
+        "der die und the",                # de wins outright
+        "y el los la",                    # es beats fr on the shared 'la'
+        "el le",                          # fr/es tie on separate markers
+        "  the  quick\tbrown fox, jumps over the lazy dog! and it is. ",
+        "!!! ??? ... ,,, the",            # punctuation-heavy
+        "Der Hund und die Katze ist nicht ein Tier mit dem Hut auf dem Kopf.",
+        "word " * 12,
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, text string")
+    rows = df.select(
+        "i",
+        lang_id("text").alias("lang"),
+        quality_score("text").alias("q"),
+        stopword_ratio("text").alias("sw"),
+        mean_word_length("text").alias("mwl"),
+    ).orderBy("i").collect()
+    for r in rows:
+        t = texts[r["i"]]
+        assert (r["lang"], r["q"], r["sw"], r["mwl"]) == (
+            _ref_lang(t), _ref_quality(t), _ref_stopword_ratio(t),
+            _ref_mean_word_length(t),
+        ), repr(t)
+
+
+def test_text_profile_expressions_tokenize_once(spark, monkeypatch):
+    """Spark does not eliminate common subexpressions that contain lambda
+    variables, so every split( in a profile expression is one more full
+    tokenization per document; lang_id's expression grows linearly with
+    the number of languages."""
+    for fn in (lang_id, quality_score, stopword_ratio, mean_word_length):
+        assert str(fn("text")).count("split(") == 1, fn.__name__
+
+    def lang_id_len(n_langs):
+        markers = {f"l{i:02d}": [f"w{i:02d}{j}" for j in range(10)]
+                   for i in range(n_langs)}
+        monkeypatch.setattr(text_fns, "_LANG_MARKERS", markers)
+        return len(str(lang_id("text")))
+
+    n4, n8, n16 = lang_id_len(4), lang_id_len(8), lang_id_len(16)
+    per_lang_4_to_8 = (n8 - n4) / 4
+    per_lang_8_to_16 = (n16 - n8) / 8
+    assert per_lang_8_to_16 <= 1.05 * per_lang_4_to_8, (n4, n8, n16)
 
 
 def test_multimodal_plumbing(spark, docs):

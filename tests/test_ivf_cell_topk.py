@@ -12,6 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nama_spark.operators.ann import (
+    _empty_topk,
     cosine_sim_expr,
     ivf_assign,
     ivf_fit_centroids,
@@ -102,7 +103,11 @@ def test_cell_topk_empty_queries(spark):
     centers = ivf_fit_centroids(emb, n_cells=4).localCheckpoint()
     assigned = ivf_assign(emb, centers).localCheckpoint()
     empty = emb.where(F.lit(False))
-    assert ivf_topk_delta(empty, centers, assigned, k=5, nprobe=2).count() == 0
+    got = ivf_topk_delta(empty, centers, assigned, k=5, nprobe=2)
+    assert got.count() == 0
+    # no short-circuit job: the per-cell kernel returns an empty frame for
+    # a cell without queries, with _empty_topk's column names and types
+    assert got.dtypes == _empty_topk(empty, "vec_id").dtypes
 
 
 def _bruteforce_join_path(corpus, queries, k):
