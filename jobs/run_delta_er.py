@@ -18,16 +18,33 @@ so a daily increment costs O(Δ·block), never O(corpus):
         --delta-input day1.parquet --string-col repo \
         --state /lake/er_state --threshold 0.7
 
-Per batch: TokenSimilarity.fit_incremental tokenizes ONLY genuinely-new
-strings against the carried token table; token_block_pairs_against
-enumerates new-touching candidates only; unite_incremental merges through
-the group quotient (old×old pairs are never re-scored, old groups never
-split — uniting is monotone). cluster.stable_entity_ids then carries
-entity ids across the re-clustering so downstream keys survive label
-churn. State is rewritten atomically into a versioned subdir and
-`state/CURRENT` is flipped last, so a killed run never corrupts the
-previous day's state (the checkpoint/resume posture of run_pipeline, at
-the state level).
+Each fold takes one of two paths, chosen from the sizes of its inputs:
+
+- *Driver fold.* When the prior clusters, the entity-id rows and the delta
+  rows each hold at most ``_TOKENSIM_DRIVER_FIT_STRINGS`` rows and the
+  carried token table at most ``_TOKENSIM_BROADCAST_TOKEN_ROWS`` rows (the
+  batch path's own gates in operators/token_similarity.py), each is read by
+  one bounded ``limit(cap + 1)`` Arrow collect, and
+  ``operators.delta_fold.fold`` runs the whole fold in Python on that one
+  snapshot: no Spark job runs between the state read and the state write,
+  which writes the three tables from local frames. A 40-name delta into a
+  ~900-name state costs 8 Spark jobs instead of 53.
+- *Distributed fold.* Above either gate, the relational operators run:
+  TokenSimilarity.predict_incremental (fit_incremental tokenizes only
+  genuinely new strings against the carried token table;
+  token_block_pairs_against enumerates new-touching candidates only;
+  unite_incremental merges through the group quotient) and then
+  cluster.stable_entity_ids.
+
+Both paths write the same rows (tests/test_sources.py folds the same days
+with the gates forced each way) and record which one ran as ``"fold"`` in
+the printed summary. Old×old pairs are never re-scored and old groups never
+split — uniting is monotone. Stable entity ids carry across the
+re-clustering so downstream keys survive label churn. The state tables are
+read with their known schemas. State is rewritten atomically into a
+versioned subdir and `state/CURRENT` is flipped last, so a killed run never
+corrupts the previous day's state (the checkpoint/resume posture of
+run_pipeline, at the state level).
 
 No reference counterpart: nama's unite() is incremental only because
 everything lives in one in-memory dict (match_data.py:203-242); this is
@@ -70,6 +87,23 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
+_CLUSTERS = "string string, count bigint NOT NULL, `group` string"
+_ENTITY_IDS = "node string, entity_id string"
+
+
+def _driver_rows(reads):
+    """Rows of each ``(frame, cap)`` as lists of tuples, each read by one
+    bounded ``limit(cap + 1)`` Arrow collect; None as soon as a frame holds
+    more than its cap."""
+    out = []
+    for df, cap in reads:
+        table = df.limit(cap + 1).toArrow()
+        if table.num_rows > cap:
+            return None
+        out.append(list(zip(*(c.to_pylist() for c in table.columns))))
+    return out
+
+
 def _current_version(state: str) -> str | None:
     cur = os.path.join(state, "CURRENT")
     if not os.path.exists(cur):
@@ -102,9 +136,10 @@ def main(argv=None):
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from nama_spark.operators import delta_fold
+    from nama_spark.operators import token_similarity as TS
     from nama_spark.operators.cluster import stable_entity_ids
     from nama_spark.operators.matchdata import MatchData
-    from nama_spark.operators.token_similarity import TokenSimilarity
     from nama_spark.session import local_frame
     from nama_spark.sources.readers import read_records
 
@@ -113,7 +148,7 @@ def main(argv=None):
 
     t0 = time.time()
     delta = read_records(spark, args.delta_input, catalog=args.catalog)
-    ts = TokenSimilarity(
+    ts = TS.TokenSimilarity(
         tokenizer=args.tokenizer,
         weighting=args.weighting,
         measure=args.measure,
@@ -121,13 +156,14 @@ def main(argv=None):
     )
 
     version = _current_version(args.state)
+    fold_path = rows = sizes = None
     if args.init:
         if version is not None:
             raise SystemExit(f"--init but {args.state}/CURRENT exists")
         md = MatchData.from_unmatched(delta, string_col=args.string_col)
         ts.fit(md.df, string_col="string")
         united = ts.predict(md, threshold=args.threshold)
-        prev_ids = local_frame(spark, [], "node string, entity_id string")
+        prev_ids = local_frame(spark, [], _ENTITY_IDS)
         tokens_out = ts._tokens
         n_delta = md.df.count()
         next_version = "v000001"
@@ -137,38 +173,68 @@ def main(argv=None):
                 f"no {args.state}/CURRENT — bootstrap with --init first"
             )
         base = os.path.join(args.state, version)
-        # the job only ever writes elected labels, so re-electing on read
-        # would repeat a universe-wide window per reference to prior.df
-        prior = MatchData(
-            spark.read.parquet(os.path.join(base, "clusters")),
-            _relabel=False,
+        # the state's schemas are known: reading with them skips a
+        # footer-inference job per table
+        prior_df, prev_ids, prev_tokens = (
+            spark.read.schema(schema).parquet(os.path.join(base, table))
+            for table, schema in (("clusters", _CLUSTERS),
+                                  ("entity_ids", _ENTITY_IDS),
+                                  ("tokens", TS._TOKEN_SCHEMA))
         )
-        prev_ids = spark.read.parquet(os.path.join(base, "entity_ids"))
-        prev_tokens = spark.read.parquet(os.path.join(base, "tokens"))
-        united = ts.predict_incremental(
-            prior,
-            delta,
-            threshold=args.threshold,
-            string_col=args.string_col,
-            prev_tokens=prev_tokens,
-        )
-        # carried token table + this batch's delta rows = next batch's carry
-        tokens_out = (
-            prev_tokens.unionByName(ts.last_delta_tokens)
-            if ts.last_delta_tokens is not None
-            else prev_tokens
-        )
-        n_delta = delta.select(args.string_col).distinct().count()
         next_version = f"v{int(version[1:]) + 1:06d}"
-
-    # pin the united partition once: the clusters write, the three reads
-    # inside stable_entity_ids, the golden-record branch and the summary
-    # all consume it, and each would otherwise re-run the whole fold
-    clusters = united.df.localCheckpoint(eager=False)
-    assignment = clusters.select(
-        F.col("string").alias("node"), F.col("group").alias("component")
-    )
-    ids = stable_entity_ids(prev_ids, assignment)
+        rows = _driver_rows([
+            (prior_df, TS._TOKENSIM_DRIVER_FIT_STRINGS),
+            (prev_ids, TS._TOKENSIM_DRIVER_FIT_STRINGS),
+            (delta.select(F.col(args.string_col).cast("string")),
+             TS._TOKENSIM_DRIVER_FIT_STRINGS),
+            (prev_tokens, TS._TOKENSIM_BROADCAST_TOKEN_ROWS),
+        ])
+        fold_path = "distributed" if rows is None else "driver"
+    if rows is not None:
+        prior_rows, id_rows, delta_rows, token_rows = rows
+        strings = [r[0] for r in delta_rows]
+        out = delta_fold.fold(prior_rows, id_rows, token_rows, strings, ts,
+                              args.threshold)
+        # one file per table: the rows are driver-sized by the gates
+        clusters, ids, tokens_out = (
+            local_frame(spark, data, schema).coalesce(1)
+            for data, schema in (
+                (out.clusters, _CLUSTERS),
+                (out.entity_ids, _ENTITY_IDS),
+                (token_rows + out.new_tokens, TS._TOKEN_SCHEMA),
+            )
+        )
+        n_delta = len(set(strings))
+        sizes = (len(out.clusters), len({g for _s, _c, g in out.clusters}))
+    else:
+        if fold_path == "distributed":
+            # the job only ever writes elected labels, so re-electing on
+            # read would repeat a universe-wide window per reference to
+            # prior.df
+            united = ts.predict_incremental(
+                MatchData(prior_df, _relabel=False),
+                delta,
+                threshold=args.threshold,
+                string_col=args.string_col,
+                prev_tokens=prev_tokens,
+            )
+            # carried token table + this batch's delta rows = next
+            # batch's carry
+            tokens_out = (
+                prev_tokens.unionByName(ts.last_delta_tokens)
+                if ts.last_delta_tokens is not None
+                else prev_tokens
+            )
+            n_delta = delta.select(args.string_col).distinct().count()
+        # pin the united partition once: the clusters write, the three
+        # reads inside stable_entity_ids, the golden-record branch and the
+        # summary all consume it, and each would otherwise re-run the
+        # whole fold
+        clusters = united.df.localCheckpoint(eager=False)
+        assignment = clusters.select(
+            F.col("string").alias("node"), F.col("group").alias("component")
+        )
+        ids = stable_entity_ids(prev_ids, assignment)
 
     # optional golden-record maintenance: delta-fuse only churn-touched
     # clusters (fusion.golden_records_delta); a batch's changed set is the
@@ -226,17 +292,20 @@ def main(argv=None):
     _write_state(args.state, next_version, clusters, ids, tokens_out,
                  golden=golden_out)
 
-    sizes = clusters.agg(
-        F.count(F.lit(1)).alias("strings"),
-        F.countDistinct("group").alias("groups"),
-    ).first()
+    if sizes is None:
+        row = clusters.agg(
+            F.count(F.lit(1)), F.countDistinct("group")
+        ).first()
+        sizes = (row[0], row[1])
     summary = {
         "version": next_version,
         "delta_strings": n_delta,
-        "strings": sizes["strings"],
-        "groups": sizes["groups"],
+        "strings": sizes[0],
+        "groups": sizes[1],
         "wall_sec": round(time.time() - t0, 2),
     }
+    if fold_path is not None:
+        summary["fold"] = fold_path
     if n_golden is not None:
         summary["golden_rows"] = n_golden
         if n_refused is not None:

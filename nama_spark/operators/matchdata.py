@@ -296,36 +296,38 @@ class MatchData:
         # are cosmetic; the constructor re-elects).
         return MatchData(out)
 
-    def unite_incremental(
-        self, edges: DataFrame, prev: "MatchData", **cc_kwargs
-    ) -> "MatchData":
-        """``unite(edges)`` specialized for the incremental contract: every
-        edge touches at least one string OUTSIDE ``prev``'s universe (self =
-        prev + the new singletons, as built by ``add_strings``).
+    def unite_incremental(self, edges: DataFrame, **cc_kwargs) -> "MatchData":
+        """``unite(edges)`` for an edge batch that touches few groups — the
+        incremental contract: self = the previous partition plus the new
+        singletons (as built by ``add_strings``), and every edge touches a
+        new or re-delivered string.
 
         Runs connected components on the GROUP-QUOTIENT graph — edge
-        endpoints contracted to their previous group label (new strings map
-        to themselves) — then relabels only the touched rows and re-elects
-        labels only inside merged components. Untouched groups are fixed
-        points of the closure, so the result equals ``unite(edges)``
-        row-for-row (label election is deterministic per group), but the CC
-        and the relabel window are O(Δ-touched), not O(universe): the
-        per-micro-batch cost the streaming ER path needs
-        (equality-tested in tests/test_matchdata.py)."""
+        endpoints contracted to their group label in ``self`` (strings
+        outside the universe map to themselves) — then relabels only the
+        touched rows and re-elects labels only inside merged components.
+        Untouched groups are fixed points of the closure, so the result
+        equals ``unite(edges)`` row-for-row (label election is deterministic
+        per group), but the CC and the relabel window are O(Δ-touched), not
+        O(universe): the per-micro-batch cost the streaming ER path needs
+        (equality-tested in tests/test_matchdata.py). Endpoints map through
+        self's labels, not the previous partition's: add_strings has
+        already re-elected them, and a re-delivered string whose count bump
+        moved its group's label would otherwise miss the component map."""
         from nama_spark.operators.cluster import connected_components
 
         c0, c1 = edges.columns[:2]
-        prev_map = prev.df.select("string", "group")
+        gmap = self.df.select("string", "group")
         qe = (
             edges.select(F.col(c0).alias("__s0"), F.col(c1).alias("__s1"))
             .join(
-                prev_map.select(
+                gmap.select(
                     F.col("string").alias("__s0"), F.col("group").alias("__g0")
                 ),
                 "__s0", "left",
             )
             .join(
-                prev_map.select(
+                gmap.select(
                     F.col("string").alias("__s1"), F.col("group").alias("__g1")
                 ),
                 "__s1", "left",

@@ -20,6 +20,10 @@ Spark plan:
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,6 +70,15 @@ _TOKEN_SCHEMA = T.StructType(
     ]
 )
 
+_WEIGHT_SCHEMA = T.StructType(
+    [
+        T.StructField("token", T.StringType()),
+        T.StructField("f", T.LongType()),
+        T.StructField("d", T.LongType()),
+        T.StructField("weight", T.DoubleType()),
+    ]
+)
+
 
 def _score_model(strs: dict, wd: dict) -> dict:
     """{string: (sorted token tuple, token set, Σw, Σw²)} — sums iterate
@@ -82,6 +95,91 @@ def _score_model(strs: dict, wd: dict) -> dict:
             w2_sum += w * w
         model[s] = (ordered, set(ordered), w_sum, w2_sum)
     return model
+
+
+class _DriverFit(NamedTuple):
+    new_tokens: list  # (string, token, tf) rows tokenized by this fit
+    tokens: list      # carried + new rows: the universe's token table
+    weights: list     # (token, f, d, weight) rows
+    model: tuple      # (_score_model(...), token → weight)
+
+
+def _fit_model(
+    strings, carried, tokenizer: str, weighting: str | None,
+    reference_doc_counts: bool = True,
+) -> _DriverFit:
+    """The driver fit as a pure function: the rows of tokens_table +
+    token_weights over ``carried`` plus the tokenized ``strings``, and the
+    broadcast scorer's model over them. ``carried`` are (string, token, tf)
+    rows of an already-tokenized universe (fit_incremental's carried
+    table); they join the table as they are and only ``strings`` are
+    tokenized. Weights are computed over the union, so they are the same as
+    a fit of the whole universe."""
+    # a null string has no tokens, as in tokens_table
+    new_rows = [
+        (s, t, c)
+        for s in strings
+        if s is not None
+        for t, c in Counter(_py_tokenize(s, tokenizer)).items()
+    ]
+    tok_rows = list(carried) + new_rows
+    freq: dict = {}
+    nstr: dict = {}
+    strs: dict = {}
+    for s, t, c in tok_rows:
+        freq[t] = freq.get(t, 0) + c
+        nstr[t] = nstr.get(t, 0) + 1
+        strs.setdefault(s, set()).add(t)
+    w_rows = []
+    for t, f in freq.items():
+        d = f if reference_doc_counts else nstr[t]
+        if weighting == "tf":
+            w = float(f)
+        elif weighting == "idf":
+            w = 1.0 / math.log(1.0 + d)
+        elif weighting == "tf-idf":
+            w = f / math.log(1.0 + d)
+        elif weighting is None or weighting == "none":
+            w = 1.0
+        else:
+            raise ValueError(f"unknown weighting: {weighting}")
+        w_rows.append((t, f, d, w))
+    wd = {t: w for (t, _f, _d, w) in w_rows}
+    return _DriverFit(new_rows, tok_rows, w_rows, (_score_model(strs, wd), wd))
+
+
+def _pair_scorer(measure: str):
+    """``score(ma, mb, wd)`` for two _score_model entries — the broadcast
+    scorer's per-pair measure (same definitions as token_similarity_scores).
+    Iterates the smaller side's SORTED tuple and probes the bigger side's
+    set, so the sum order is deterministic. Returned as a nested function
+    so cloudpickle ships it by value: workers never need nama_spark
+    importable."""
+    if measure not in ("jaccard", "cosine"):
+        raise ValueError(f"unknown measure: {measure}")
+    cosine = measure == "cosine"
+    sqrt = math.sqrt
+
+    def score(ma, mb, wd) -> float:
+        ta, sa, wsa, w2a = ma
+        tb, sb, wsb, w2b = mb
+        small, big = (ta, sb) if len(ta) <= len(tb) else (tb, sa)
+        if cosine:
+            inter2 = 0.0
+            for t in small:
+                if t in big:
+                    w = wd[t]
+                    inter2 += w * w
+            denom = sqrt(w2a) * sqrt(w2b)
+            return inter2 / denom if inter2 > 0 and denom > 0 else 0.0
+        inter = 0.0
+        for t in small:
+            if t in big:
+                inter += wd[t]
+        union = wsa + wsb - inter
+        return inter / union if inter > 0 and union > 0 else 0.0
+
+    return score
 
 
 def _py_tokenize(s: str, kind: str) -> list:
@@ -178,63 +276,21 @@ class TokenSimilarity:
         scanned) and cached, so every distributed consumer (block join,
         token_similarity_scores, incremental paths) works unchanged.
 
-        ``carried`` are (string, token, tf) rows of an already-tokenized
-        universe (fit_incremental's carried table); they join the table as
-        they are and only ``strings`` are tokenized. Weights are computed
-        over the union, so they are the same as a fit of the whole
-        universe. Returns the rows tokenized here."""
-        import math as _math
-        from collections import Counter as _Counter
-
-        # a null string has no tokens, as in tokens_table
-        new_rows = [
-            (s, t, c)
-            for s in strings
-            if s is not None
-            for t, c in _Counter(_py_tokenize(s, self.tokenizer)).items()
-        ]
-        tok_rows = list(carried) + new_rows
-        freq: dict = {}
-        nstr: dict = {}
-        for _s, t, c in tok_rows:
-            freq[t] = freq.get(t, 0) + c
-            nstr[t] = nstr.get(t, 0) + 1
-        self._tokens = local_frame(spark, tok_rows, _TOKEN_SCHEMA).cache()
-        w_rows = []
-        for t, f in freq.items():
-            d = f if self.reference_doc_counts else nstr[t]
-            if self.weighting == "tf":
-                w = float(f)
-            elif self.weighting == "idf":
-                w = 1.0 / _math.log(1.0 + d)
-            elif self.weighting == "tf-idf":
-                w = f / _math.log(1.0 + d)
-            elif self.weighting is None or self.weighting == "none":
-                w = 1.0
-            else:
-                raise ValueError(f"unknown weighting: {self.weighting}")
-            w_rows.append((t, f, d, w))
-        w_schema = T.StructType(
-            [
-                T.StructField("token", T.StringType()),
-                T.StructField("f", T.LongType()),
-                T.StructField("d", T.LongType()),
-                T.StructField("weight", T.DoubleType()),
-            ]
+        ``carried`` and the return value are _fit_model's. The score model
+        _fit_model builds is broadcast now instead of re-collecting the two
+        tables on the first pair_scores call."""
+        fitted = _fit_model(
+            strings, carried, self.tokenizer, self.weighting,
+            self.reference_doc_counts,
         )
-        self._weights = local_frame(spark, w_rows, w_schema).cache()
+        self._tokens = local_frame(spark, fitted.tokens, _TOKEN_SCHEMA).cache()
+        self._weights = local_frame(
+            spark, fitted.weights, _WEIGHT_SCHEMA
+        ).cache()
         self._weights.count()
         self._n_token_rows = self._tokens.count()
-        # the score model is already in hand — broadcast it now instead of
-        # re-collecting the two tables on the first pair_scores call
-        wd = {t: w for (t, _f, _d, w) in w_rows}
-        strs: dict = {}
-        for s, t, _c in tok_rows:
-            strs.setdefault(s, set()).add(t)
-        self._score_bc = spark.sparkContext.broadcast(
-            (_score_model(strs, wd), wd)
-        )
-        return new_rows
+        self._score_bc = spark.sparkContext.broadcast(fitted.model)
+        return fitted.new_tokens
 
     def fit_incremental(
         self,
@@ -369,9 +425,7 @@ class TokenSimilarity:
                 (_score_model(strs, weights), weights)
             )
         bc = self._score_bc
-        cosine = self.measure == "cosine"
-        if not cosine and self.measure != "jaccard":
-            raise ValueError(f"unknown measure: {self.measure}")
+        score = _pair_scorer(self.measure)
 
         out_schema = T.StructType(
             [
@@ -390,37 +444,9 @@ class TokenSimilarity:
                     mb = strs.get(b)
                     if ma is None or mb is None:
                         continue  # inner-join drop, same as the JVM path
-                    ta, sa, wsa, w2a = ma
-                    tb, sb, wsb, w2b = mb
-                    # iterate the smaller side's SORTED tuple, probe the
-                    # bigger side's set — deterministic sum order
-                    small, big = (ta, sb) if len(ta) <= len(tb) else (tb, sa)
-                    if cosine:
-                        inter2 = 0.0
-                        for t in small:
-                            if t in big:
-                                w = wd[t]
-                                inter2 += w * w
-                        import math as _m
-
-                        denom = _m.sqrt(w2a) * _m.sqrt(w2b)
-                        score = (
-                            inter2 / denom
-                            if inter2 > 0 and denom > 0
-                            else 0.0
-                        )
-                    else:
-                        inter = 0.0
-                        for t in small:
-                            if t in big:
-                                inter += wd[t]
-                        union = wsa + wsb - inter
-                        score = (
-                            inter / union if inter > 0 and union > 0 else 0.0
-                        )
                     r0.append(a)
                     r1.append(b)
-                    rs.append(score)
+                    rs.append(score(ma, mb, wd))
                 yield pd.DataFrame({"s0": r0, "s1": r1, "score": rs})
 
         return pairs.select("s0", "s1").mapInPandas(
@@ -554,7 +580,7 @@ class TokenSimilarity:
         # against ``nw``), so the group-quotient unite applies: CC + relabel
         # cost O(Δ-touched), not O(universe) — the difference between a
         # micro-batch that costs Δ and one that re-walks the corpus
-        return md2.unite_incremental(edges, matchdata)
+        return md2.unite_incremental(edges)
 
     # ---------- threshold sweep ----------
 

@@ -69,7 +69,7 @@ def test_unite_incremental_result_has_no_python_rdd(spark, no_broadcast):
     edges = spark.sql(
         "SELECT * FROM VALUES ('acme corp', 'acme inc') AS t(string0, string1)"
     )
-    out = cur.unite_incremental(edges, prev)
+    out = cur.unite_incremental(edges)
     assert {r["string"]: r["group"] for r in out.df.collect()} == {
         "acme": "acme", "acme inc": "acme", "acme corp": "acme",
         "beta": "beta", "gamma": "gamma",

@@ -1,6 +1,8 @@
 """Ingestion: CSV round-trip with all-string/empty-not-null semantics
 (match_data.py:860-861 parity), format detection, matchdata writer."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1056,13 +1058,13 @@ def test_run_corpus_pipeline_bpe_stage(spark, tmp_path):
     ).count() == 0
 
 
-def test_run_delta_er_job(spark, tmp_path, monkeypatch):
+def test_run_delta_er_job(spark, tmp_path, monkeypatch, capsys):
     """jobs/run_delta_er.py: bootstrap on day-0 names, fold a day-1 delta of
     typo'd twins into the persisted state — twins must land in their
     original's group, entity ids must survive, state versions must advance,
-    and old groups must never split. Three folds write the same state with
-    the token-similarity gates forced to the distributed fit and the
-    relational scorer."""
+    and old groups must never split. The folds take the driver path; with
+    the token-similarity gates forced below any input they take the
+    distributed fold and write the same state."""
     import sys
 
     sys.path.insert(0, "/root/repo/jobs")
@@ -1160,6 +1162,9 @@ def test_run_delta_er_job(spark, tmp_path, monkeypatch):
             "--delta-input", p, "--string-col", "repo",
             "--state", state, "--threshold", "0.7",
         ]) == 0
+    summaries = [json.loads(line) for line in
+                 capsys.readouterr().out.strip().splitlines()]
+    assert [sm.get("fold") for sm in summaries] == [None] + ["driver"] * 3
 
     from nama_spark.operators import token_similarity as TS
 
@@ -1172,8 +1177,16 @@ def test_run_delta_er_job(spark, tmp_path, monkeypatch):
             + ["--delta-input", p, "--string-col", "repo",
                "--state", forced, "--threshold", "0.7"]
         ) == 0
+    forced_summaries = [json.loads(line) for line in
+                        capsys.readouterr().out.strip().splitlines()]
+    assert [sm.pop("fold", None) for sm in forced_summaries] == \
+        [None] + ["distributed"] * 3
+    for sm in summaries + forced_summaries:
+        sm.pop("fold", None)
+        sm.pop("wall_sec")
+    assert forced_summaries == summaries
     for v in range(1, 5):
-        for table in ("clusters", "entity_ids"):
+        for table in ("clusters", "entity_ids", "tokens"):
             got, want = (
                 sorted(spark.read.parquet(f"{st}/v{v:06d}/{table}").collect())
                 for st in (forced, state)

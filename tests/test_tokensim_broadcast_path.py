@@ -164,3 +164,31 @@ def test_predict_incremental_same_on_both_sides_of_the_gates(
         groups.setdefault(g, []).append(s)
     new = {r["string"] for r in delta.join(old, "string", "left_anti").collect()}
     assert any(len(m) > 1 and new & set(m) for m in groups.values()), groups
+
+
+@pytest.mark.parametrize("threshold", [0.3, 0.4])
+def test_predict_incremental_keeps_merge_when_a_redelivery_relabels(
+    spark, threshold
+):
+    """A re-delivered known string whose count bump moves its group's label
+    (acme → acme inc) must still pull its new near-twin into the group."""
+    from nama_spark.functions.tokenize import tokens_table
+
+    prior_rows = [("acme", 2, "acme"), ("acme inc", 2, "acme")]
+    prior = MatchData(spark.createDataFrame(
+        prior_rows, ["string", "count", "group"]), _relabel=False)
+    delta = ["acme inc", "acme incorporated"]
+    ts = TokenSimilarity()
+    got = ts.predict_incremental(
+        prior, spark.createDataFrame([(s,) for s in delta], ["string"]),
+        threshold=threshold,
+        prev_tokens=tokens_table(prior.df),
+    )
+    want = [("acme", 2, "acme inc"), ("acme inc", 3, "acme inc"),
+            ("acme incorporated", 1, "acme inc")]
+    assert _rows(got.df) == want
+    from nama_spark.operators import delta_fold
+
+    carried = [tuple(r) for r in tokens_table(prior.df).collect()]
+    fold = delta_fold.fold(prior_rows, [], carried, delta, ts, threshold)
+    assert sorted(fold.clusters) == want
