@@ -20,15 +20,21 @@ so a daily increment costs O(Δ·block), never O(corpus):
 
 Each fold takes one of two paths, chosen from the sizes of its inputs:
 
-- *Driver fold.* When the prior clusters, the entity-id rows and the delta
-  rows each hold at most ``_TOKENSIM_DRIVER_FIT_STRINGS`` rows and the
-  carried token table at most ``_TOKENSIM_BROADCAST_TOKEN_ROWS`` rows (the
-  batch path's own gates in operators/token_similarity.py), each is read by
-  one bounded ``limit(cap + 1)`` Arrow collect, and
-  ``operators.delta_fold.fold`` runs the whole fold in Python on that one
-  snapshot: no Spark job runs between the state read and the state write,
-  which writes the three tables from local frames. A 40-name delta into a
-  ~900-name state costs 8 Spark jobs instead of 53.
+- *Driver fold.* When the prior clusters and the entity-id rows each hold
+  at most ``_TOKENSIM_DRIVER_FIT_STRINGS`` rows and the carried token table
+  at most ``_TOKENSIM_BROADCAST_TOKEN_ROWS`` rows (the batch path's own
+  gates in operators/token_similarity.py, counted from the state's parquet
+  footers, so a state over a gate moves no row to the driver), and the
+  delta holds at most ``_TOKENSIM_DRIVER_FIT_STRINGS`` rows (one bounded
+  ``limit(cap + 1)`` Arrow read), the state is read by one Arrow collect
+  per table and ``operators.delta_fold.fold`` runs the whole fold in Python
+  on that one snapshot: no Spark job runs between the state read and the
+  state write. Clusters and entity ids are written from local frames; the
+  token table is the prior version's file plus the new strings' rows. A
+  40-name delta into a ~900-name state costs 8 Spark jobs instead of 53.
+  The gates also hold as this choice's crossover: folding 40 names into
+  states of up to 37k names (1.94M token rows), the driver fold took less
+  CPU and wall time than the distributed one (docs/SCALE.md).
 - *Distributed fold.* Above either gate, the relational operators run:
   TokenSimilarity.predict_incremental (fit_incremental tokenizes only
   genuinely new strings against the carried token table;
@@ -91,17 +97,22 @@ _CLUSTERS = "string string, count bigint NOT NULL, `group` string"
 _ENTITY_IDS = "node string, entity_id string"
 
 
-def _driver_rows(reads):
-    """Rows of each ``(frame, cap)`` as lists of tuples, each read by one
-    bounded ``limit(cap + 1)`` Arrow collect; None as soon as a frame holds
-    more than its cap."""
-    out = []
-    for df, cap in reads:
-        table = df.limit(cap + 1).toArrow()
-        if table.num_rows > cap:
-            return None
-        out.append(list(zip(*(c.to_pylist() for c in table.columns))))
-    return out
+def _fits(path: str, cap: int) -> bool:
+    """Whether the parquet table at ``path`` holds at most ``cap`` rows,
+    counted from its file footers: no Spark job runs and no row moves."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, format="parquet").count_rows() <= cap
+
+
+def _rows(df, cap: int | None = None) -> list | None:
+    """Rows of ``df`` as tuples, read by one Arrow collect (bounded by
+    ``limit(cap + 1)`` when ``cap`` is given); None when it holds more than
+    ``cap`` rows."""
+    table = (df if cap is None else df.limit(cap + 1)).toArrow()
+    if cap is not None and table.num_rows > cap:
+        return None
+    return list(zip(*(c.to_pylist() for c in table.columns)))
 
 
 def _current_version(state: str) -> str | None:
@@ -173,35 +184,49 @@ def main(argv=None):
                 f"no {args.state}/CURRENT — bootstrap with --init first"
             )
         base = os.path.join(args.state, version)
+        tables = [
+            (os.path.join(base, table), schema, cap)
+            for table, schema, cap in (
+                ("clusters", _CLUSTERS, TS._TOKENSIM_DRIVER_FIT_STRINGS),
+                ("entity_ids", _ENTITY_IDS, TS._TOKENSIM_DRIVER_FIT_STRINGS),
+                ("tokens", TS._TOKEN_SCHEMA, TS._TOKENSIM_BROADCAST_TOKEN_ROWS),
+            )
+        ]
         # the state's schemas are known: reading with them skips a
         # footer-inference job per table
         prior_df, prev_ids, prev_tokens = (
-            spark.read.schema(schema).parquet(os.path.join(base, table))
-            for table, schema in (("clusters", _CLUSTERS),
-                                  ("entity_ids", _ENTITY_IDS),
-                                  ("tokens", TS._TOKEN_SCHEMA))
+            spark.read.schema(schema).parquet(path)
+            for path, schema, _cap in tables
         )
         next_version = f"v{int(version[1:]) + 1:06d}"
-        rows = _driver_rows([
-            (prior_df, TS._TOKENSIM_DRIVER_FIT_STRINGS),
-            (prev_ids, TS._TOKENSIM_DRIVER_FIT_STRINGS),
-            (delta.select(F.col(args.string_col).cast("string")),
-             TS._TOKENSIM_DRIVER_FIT_STRINGS),
-            (prev_tokens, TS._TOKENSIM_BROADCAST_TOKEN_ROWS),
-        ])
+        # the state gates are checked on the footers' row counts, so a
+        # state over either gate moves no row to the driver; only the
+        # delta's gate costs a bounded read
+        if all(_fits(path, cap) for path, _s, cap in tables):
+            delta_rows = _rows(
+                delta.select(F.col(args.string_col).cast("string")),
+                TS._TOKENSIM_DRIVER_FIT_STRINGS,
+            )
+            if delta_rows is not None:
+                rows = [_rows(df) for df in (prior_df, prev_ids, prev_tokens)]
+                rows += [delta_rows]
         fold_path = "distributed" if rows is None else "driver"
     if rows is not None:
-        prior_rows, id_rows, delta_rows, token_rows = rows
+        prior_rows, id_rows, token_rows, delta_rows = rows
         strings = [r[0] for r in delta_rows]
         out = delta_fold.fold(prior_rows, id_rows, token_rows, strings, ts,
                               args.threshold)
-        # one file per table: the rows are driver-sized by the gates
+        # one file per table: the rows are driver-sized by the gates. The
+        # carried token rows are re-read from the prior version's file by
+        # the write itself rather than shipped back from the driver.
         clusters, ids, tokens_out = (
-            local_frame(spark, data, schema).coalesce(1)
-            for data, schema in (
-                (out.clusters, _CLUSTERS),
-                (out.entity_ids, _ENTITY_IDS),
-                (token_rows + out.new_tokens, TS._TOKEN_SCHEMA),
+            df.coalesce(1)
+            for df in (
+                local_frame(spark, out.clusters, _CLUSTERS),
+                local_frame(spark, out.entity_ids, _ENTITY_IDS),
+                prev_tokens.unionByName(
+                    local_frame(spark, out.new_tokens, TS._TOKEN_SCHEMA)
+                ),
             )
         )
         n_delta = len(set(strings))

@@ -98,7 +98,8 @@ def token_block_pairs_against(
     tokens BEFORE the join, so arrival of Δn new names costs O(Δn·block)
     instead of re-enumerating the full all×all candidate set. new×new pairs
     are included; old×old pairs never materialize. Output is canonical
-    (s0 < s1) and deduped, same contract as token_block_pairs."""
+    (s0 < s1) and deduped, same contract as token_block_pairs. The driver
+    fold's twin is ``delta_fold.block_pairs``."""
     nw = new_strings.select(F.col(string_col).alias("string")).distinct()
     t = tokens.join(eligible, "token", "left_semi")
     tn = t.join(nw, "string", "left_semi")

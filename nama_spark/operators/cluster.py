@@ -283,6 +283,11 @@ def connected_components_delta(
     return out_old.unionByName(out_new)
 
 
+# an inherited entity id "<base>.<k>": group 1 the base, group 2 the suffix
+# k (rule 4 of stable_entity_ids; delta_fold matches with the same pattern)
+ENTITY_ID_SUFFIX = r"^(.*)\.([1-9][0-9]{0,17})$"
+
+
 def stable_entity_ids(
     previous: DataFrame,
     current: DataFrame,
@@ -326,6 +331,10 @@ def stable_entity_ids(
     rule 1 and the final join), so callers pass a pinned frame
     (cached or ``localCheckpoint``-ed); an unpinned plan re-runs its whole
     lineage once per read.
+
+    ``delta_fold.stable_entity_ids`` applies the same rules to driver rows;
+    a rule changed here changes there too (tests/test_delta_fold.py twins
+    them).
     """
     prev = previous.select("node", "entity_id")
     cur = current.select("node", "component")
@@ -364,13 +373,12 @@ def stable_entity_ids(
     # rule 4: an inherited id "<base>.<k>" files under <base> with suffix k,
     # any other inherited id under itself with k = 0, a mint under itself
     # with no k; a mint whose base holds a k = 0 id takes max k + 1
-    suffix = r"^(.*)\.([1-9][0-9]{0,17})$"
-    has_suffix = kept & F.col("candidate").rlike(suffix)
+    has_suffix = kept & F.col("candidate").rlike(ENTITY_ID_SUFFIX)
     base = F.when(
-        has_suffix, F.regexp_extract("candidate", suffix, 1)
+        has_suffix, F.regexp_extract("candidate", ENTITY_ID_SUFFIX, 1)
     ).otherwise(entity_id)
     k = F.when(
-        has_suffix, F.regexp_extract("candidate", suffix, 2).cast("long")
+        has_suffix, F.regexp_extract("candidate", ENTITY_ID_SUFFIX, 2).cast("long")
     ).when(kept, F.lit(0))
     by_base = Window.partitionBy("base")
     taken = F.max(F.col("k") == 0).over(by_base)

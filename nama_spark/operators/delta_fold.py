@@ -29,7 +29,7 @@ import re
 from collections import Counter
 from typing import NamedTuple
 
-from nama_spark.operators.cluster import _union_find_local
+from nama_spark.operators.cluster import ENTITY_ID_SUFFIX, _union_find_local
 from nama_spark.operators.token_similarity import _fit_model, _pair_scorer
 
 
@@ -102,7 +102,7 @@ def unite_incremental(rows: list, edges) -> list:
     return untouched + touched
 
 
-_SUFFIX = re.compile(r"^(.*)\.([1-9][0-9]{0,17})$")
+_SUFFIX = re.compile(ENTITY_ID_SUFFIX)
 
 
 def stable_entity_ids(

@@ -36,7 +36,8 @@ def _label_window():
 
 def elect_labels(df: DataFrame) -> DataFrame:
     """Re-elect canonical group labels: max count, ties → min string
-    (match_data.py:163). One window over the group key.
+    (match_data.py:163). One window over the group key. The driver fold's
+    twin, ``delta_fold.elect_labels``, keeps the same tie order.
 
     Round 6 note: an arg-min aggregate + self-join variant (map-side
     combinable, AQE-skew-splittable) was built, measured equal at bench
@@ -178,7 +179,8 @@ class MatchData:
     def add_strings(self, other: DataFrame, string_col: str = "string",
                     count_col: str | None = None) -> "MatchData":
         """Insert strings as singletons, accumulating counts
-        (match_data.py:93-130). Existing group assignments are preserved."""
+        (match_data.py:93-130). Existing group assignments are preserved.
+        The driver fold's twin is ``delta_fold.add_strings``."""
         count = (
             F.col(count_col) if count_col and count_col in other.columns else F.lit(1)
         )
@@ -313,7 +315,9 @@ class MatchData:
         (equality-tested in tests/test_matchdata.py). Endpoints map through
         self's labels, not the previous partition's: add_strings has
         already re-elected them, and a re-delivered string whose count bump
-        moved its group's label would otherwise miss the component map."""
+        moved its group's label would otherwise miss the component map.
+        ``delta_fold.unite_incremental`` is the driver fold's twin of this
+        rule; a change here changes there too."""
         from nama_spark.operators.cluster import connected_components
 
         c0, c1 = edges.columns[:2]

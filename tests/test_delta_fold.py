@@ -11,7 +11,7 @@ from nama_spark.functions.tokenize import tokens_table
 from nama_spark.operators import delta_fold as DF
 from nama_spark.operators import token_similarity as TS
 from nama_spark.operators.block import eligible_tokens, token_block_pairs_against
-from nama_spark.operators.cluster import stable_entity_ids
+from nama_spark.operators.cluster import ENTITY_ID_SUFFIX, stable_entity_ids
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.session import local_frame
 
@@ -187,26 +187,40 @@ def test_fold_matches_relational_fold(spark, measure, monkeypatch):
         {g for _s, _c, g in prior}) + len(set(delta) - set(old))
 
 
+def _library_lines_with(needle: str) -> list:
+    from pathlib import Path
+
+    import nama_spark
+
+    root = Path(nama_spark.__file__).parent
+    return [
+        f"{p.relative_to(root)}:{no}"
+        for p in sorted(root.rglob("*.py"))
+        for no, line in enumerate(p.read_text().splitlines(), 1)
+        if needle in line
+    ]
+
+
 def test_weight_formula_and_pair_measures_have_one_copy():
     """Source guard: in the library, the idf/tf-idf weight formula lives
     only in token_similarity._fit_model and the Jaccard/cosine per-pair
     arithmetic only in token_similarity._pair_scorer — the broadcast scorer
     and the driver fold call them instead of copying them."""
     import inspect
-    from pathlib import Path
 
-    import nama_spark
-
-    root = Path(nama_spark.__file__).parent
     for needle, owner in [
         ("math.log(1.0 + d)", TS._fit_model),
         ("wsa + wsb - inter", TS._pair_scorer),
         ("sqrt(w2a)", TS._pair_scorer),
     ]:
-        hits = [
-            f"{p.relative_to(root)}:{no}"
-            for p in sorted(root.rglob("*.py"))
-            for no, line in enumerate(p.read_text().splitlines(), 1)
-            if needle in line
-        ]
+        hits = _library_lines_with(needle)
         assert len(hits) == inspect.getsource(owner).count(needle) > 0, hits
+
+
+def test_entity_id_suffix_pattern_has_one_copy():
+    """Source guard: rule 4's ``<base>.<k>`` pattern is written once, as
+    cluster.ENTITY_ID_SUFFIX, which both stable_entity_ids implementations
+    match with."""
+    hits = _library_lines_with("[1-9][0-9]{0,17}")
+    assert [h.split(":")[0] for h in hits] == ["operators/cluster.py"], hits
+    assert DF._SUFFIX.pattern == ENTITY_ID_SUFFIX

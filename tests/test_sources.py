@@ -1194,6 +1194,49 @@ def test_run_delta_er_job(spark, tmp_path, monkeypatch, capsys):
             assert got == want, (v, table)
 
 
+def test_run_delta_er_state_over_a_gate_moves_no_rows(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A state over the token-row gate takes the distributed fold without
+    collecting any table to the driver first: the state gates are checked
+    on the parquet footers' row counts."""
+    import sys
+
+    sys.path.insert(0, "/root/repo/jobs")
+    try:
+        import run_delta_er
+    finally:
+        sys.path.pop(0)
+
+    p0, p1 = str(tmp_path / "d0.parquet"), str(tmp_path / "d1.parquet")
+    spark.createDataFrame(
+        [(f"acme widget company {i}",) for i in range(8)], ["repo"]
+    ).write.parquet(p0)
+    spark.createDataFrame(
+        [(f"acme widget compny {i}",) for i in range(3)], ["repo"]
+    ).write.parquet(p1)
+    state = str(tmp_path / "state")
+    argv = ["--string-col", "repo", "--state", state, "--threshold", "0.7"]
+    assert run_delta_er.main(["--init", "--delta-input", p0] + argv) == 0
+
+    from nama_spark.operators import token_similarity as TS
+
+    monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", 1)
+
+    def no_driver_read(*_a, **_k):
+        raise AssertionError("a table was collected above the gate")
+
+    monkeypatch.setattr(run_delta_er, "_rows", no_driver_read)
+    assert run_delta_er.main(["--delta-input", p1] + argv) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["fold"] == "distributed"
+    groups = {r["string"]: r["group"] for r in
+              spark.read.parquet(state + "/v000002/clusters").collect()}
+    for i in range(3):
+        assert groups[f"acme widget compny {i}"] == \
+            groups[f"acme widget company {i}"]
+
+
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):
     """jobs/run_linkage.py --mode one_to_one: the peeling selection links
     every left to a distinct right and records the peel round."""
