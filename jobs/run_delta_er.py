@@ -106,13 +106,11 @@ def _fits(path: str, cap: int) -> bool:
 
 
 def _rows(df, cap: int | None = None) -> list | None:
-    """Rows of ``df`` as tuples, read by one Arrow collect (bounded by
-    ``limit(cap + 1)`` when ``cap`` is given); None when it holds more than
-    ``cap`` rows."""
-    table = (df if cap is None else df.limit(cap + 1)).toArrow()
-    if cap is not None and table.num_rows > cap:
-        return None
-    return list(zip(*(c.to_pylist() for c in table.columns)))
+    """session.collect_rows: the job's one driver read of a table, a seam
+    the tests replace to prove that no table is collected."""
+    from nama_spark.session import collect_rows
+
+    return collect_rows(df, cap)
 
 
 def _current_version(state: str) -> str | None:

@@ -25,6 +25,8 @@ Scale notes:
 
 from __future__ import annotations
 
+from itertools import combinations
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -73,7 +75,8 @@ def token_block_pairs(
 
     The self-join is on the token key; with the block cap in place no key
     explodes, and AQE's skew-join split handles residual imbalance. Output is
-    deduped across blocks.
+    deduped across blocks. The driver twin is driver_token_blocks +
+    driver_block_pairs.
     """
     t = tokens.join(eligible, "token", "left_semi")
     a = t.select(F.col("token"), F.col("string").alias("s0"))
@@ -99,7 +102,7 @@ def token_block_pairs_against(
     instead of re-enumerating the full all×all candidate set. new×new pairs
     are included; old×old pairs never materialize. Output is canonical
     (s0 < s1) and deduped, same contract as token_block_pairs. The driver
-    fold's twin is ``delta_fold.block_pairs``."""
+    twin is driver_block_pairs with ``against``."""
     nw = new_strings.select(F.col(string_col).alias("string")).distinct()
     t = tokens.join(eligible, "token", "left_semi")
     tn = t.join(nw, "string", "left_semi")
@@ -115,9 +118,42 @@ def token_block_pairs_against(
     )
 
 
+def driver_token_blocks(tokens, weights, max_block_size: int) -> list:
+    """The member strings of each token with 2 ≤ d ≤ ``max_block_size``,
+    from driver rows: (string, token, tf) ``tokens`` and (token, f, d,
+    weight) ``weights`` — the key groups of token_block_pairs' self-join."""
+    eligible = {t for t, _f, d, _w in weights if 2 <= d <= max_block_size}
+    blocks: dict = {}
+    for s, t, _tf in tokens:
+        if t in eligible:
+            blocks.setdefault(t, []).append(s)
+    return list(blocks.values())
+
+
+def driver_block_pairs(blocks, against=None) -> set:
+    """Canonical (s0 < s1) pairs of strings sharing one of ``blocks``
+    (driver_token_blocks): all of them, as token_block_pairs, or only those
+    holding one of the ``against`` strings, as token_block_pairs_against."""
+    pairs: set = set()
+    if against is None:
+        for members in blocks:
+            # a string holds a token once, so a block's members are distinct
+            pairs.update(combinations(sorted(members), 2))
+        return pairs
+    new = set(against)
+    for members in blocks:
+        for sn in members:
+            if sn in new:
+                for so in members:
+                    if so != sn:
+                        pairs.add((sn, so) if sn < so else (so, sn))
+    return pairs
+
+
 def anti_join_same_group(pairs: DataFrame, matchdata_df: DataFrame) -> DataFrame:
     """Drop pairs already co-grouped in the current partition — between-pass
-    optimization (SURVEY.md §4 'already-same-group skip')."""
+    optimization (SURVEY.md §4 'already-same-group skip'). The pairs keep
+    their columns (scored pairs keep their score)."""
     g = matchdata_df.select("string", "group")
     joined = (
         pairs.join(g.withColumnRenamed("string", "s0").withColumnRenamed("group", "g0"), "s0", "left")
@@ -125,7 +161,7 @@ def anti_join_same_group(pairs: DataFrame, matchdata_df: DataFrame) -> DataFrame
     )
     return joined.where(
         F.col("g0").isNull() | F.col("g1").isNull() | (F.col("g0") != F.col("g1"))
-    ).select("s0", "s1")
+    ).select(*pairs.columns)
 
 
 def salt_pairs(pairs: DataFrame, num_partitions: int | None = None) -> DataFrame:

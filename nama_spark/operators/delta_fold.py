@@ -8,15 +8,17 @@ the relational operator it stands in for:
    known strings or enter as singletons, then labels are re-elected (max
    count, ties go to the min string).
 2. the incremental fit — TokenSimilarity.fit_incremental: the driver fit's
-   own ``token_similarity._fit_model`` over the carried token table plus
-   the genuinely new strings.
-3. ``block_pairs`` — block.token_block_pairs_against: every distinct delta
-   string against the union, over tokens with 2 ≤ d ≤ max_block_size.
-4. scoring — the broadcast scorer's ``token_similarity._pair_scorer``.
-5. ``unite_incremental`` — MatchData.unite_incremental: union-find
+   own ``token_similarity._fit_model`` (``TokenSimilarity._fit_rows``) over
+   the carried token table plus the genuinely new strings.
+3. blocking and scoring — token_similarity._block_scores, the batch
+   path's driver step, against the delta: every distinct delta string
+   against the union over tokens with 2 ≤ d ≤ max_block_size
+   (block.token_block_pairs_against), scored by the broadcast scorer's
+   ``_pair_scorer``.
+4. ``unite_incremental`` — MatchData.unite_incremental: union-find
    (``cluster._union_find_local``) on the group quotient, then touched-only
    re-election.
-6. ``stable_entity_ids`` — cluster.stable_entity_ids, rules 1-4.
+5. ``stable_entity_ids`` — cluster.stable_entity_ids, rules 1-4.
 
 Each piece is twin-tested against its relational operator in
 tests/test_delta_fold.py.
@@ -30,7 +32,7 @@ from collections import Counter
 from typing import NamedTuple
 
 from nama_spark.operators.cluster import ENTITY_ID_SUFFIX, _union_find_local
-from nama_spark.operators.token_similarity import _fit_model, _pair_scorer
+from nama_spark.operators.token_similarity import _block_scores
 
 
 class Fold(NamedTuple):
@@ -63,27 +65,6 @@ def add_strings(prior: list, delta: list) -> list:
         else:
             e[0] += 1
     return elect_labels([(s, c, g) for s, (c, g) in acc.items()])
-
-
-def block_pairs(
-    tokens: list, weights: list, new_strings, max_block_size: int
-) -> set:
-    """Canonical (s0 < s1) pairs that share a token with
-    2 ≤ d ≤ ``max_block_size`` and hold at least one of ``new_strings``."""
-    eligible = {t for t, _f, d, _w in weights if 2 <= d <= max_block_size}
-    blocks: dict = {}
-    for s, t, _tf in tokens:
-        if t in eligible:
-            blocks.setdefault(t, []).append(s)
-    new = set(new_strings)
-    pairs = set()
-    for members in blocks.values():
-        for sn in members:
-            if sn in new:
-                for so in members:
-                    if so != sn:
-                        pairs.add((sn, so) if sn < so else (so, sn))
-    return pairs
 
 
 def unite_incremental(rows: list, edges) -> list:
@@ -167,19 +148,14 @@ def fold(
     ``cluster.stable_entity_ids``."""
     united = add_strings(prior, delta)
     known = {s for s, _c, _g in prior}
-    fitted = _fit_model(
+    fitted = ts._fit_rows(
         [s for s in dict.fromkeys(delta) if s is not None and s not in known],
-        prev_tokens, ts.tokenizer, ts.weighting, ts.reference_doc_counts,
+        prev_tokens,
     )
-    model, wd = fitted.model
-    score = _pair_scorer(ts.measure)
-    edges = [
-        (a, b)
-        for a, b in block_pairs(
-            fitted.tokens, fitted.weights, delta, ts.max_block_size
-        )
-        if score(model[a], model[b], wd) >= threshold
-    ]
+    _bound, scores = _block_scores(
+        fitted, ts.max_block_size, ts.measure, against=delta
+    )
+    edges = [(a, b) for a, b, score in scores if score >= threshold]
     clusters = unite_incremental(united, edges)
     ids = stable_entity_ids(prev_ids, [(s, g) for s, _c, g in clusters])
     return Fold(clusters, ids, fitted.new_tokens)

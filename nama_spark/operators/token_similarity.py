@@ -9,13 +9,20 @@ exactly the connected components of the ≥-threshold edges — order-independen
 so the distributed CC pass is semantics-preserving (SURVEY.md §2.8).
 
 Spark plan:
-    strings → tokens (explode, 1 shuffle)
+    strings → one bounded Arrow probe (limit(cap + 1))
+    driver fit (≤ _TOKENSIM_DRIVER_FIT_STRINGS strings): tokens + weights
+            as Python rows; when Σ over eligible tokens of C(block size, 2)
+            ≤ _TOKENSIM_DRIVER_PAIRS, blocking and jaccard/cosine scoring
+            run on those rows too, and the scores ship as one local frame —
+            no Spark job between the probe and the scores
+    otherwise:
+            → tokens (explode, 1 shuffle; or the driver fit's local frame)
             → weights (token agg)
             → eligible-token self-join → canonical candidate pairs
             → jaccard/cosine: broadcast-model mapInPandas when the fitted
               token table is small, else the relational map-payload scorer
-            → filter score ≥ threshold → edges
-            → large-star/small-star CC → MatchData
+    → filter score ≥ threshold → edges
+    → large-star/small-star CC → MatchData
 """
 
 from __future__ import annotations
@@ -31,6 +38,8 @@ from pyspark.sql import types as T
 from nama_spark.functions.tokenize import token_weights, tokens_table
 from nama_spark.operators.block import (
     anti_join_same_group,
+    driver_block_pairs,
+    driver_token_blocks,
     eligible_tokens,
     token_block_pairs,
 )
@@ -38,7 +47,7 @@ from nama_spark.operators.cluster import labels_for_nodes
 from nama_spark.operators.evaluate import score_predicted
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.operators.score import token_similarity_scores
-from nama_spark.session import local_frame
+from nama_spark.session import collect_rows, local_frame
 
 
 # Fitted-token-table row count under which pair_scores and
@@ -61,12 +70,21 @@ _TOKENSIM_BROADCAST_TOKEN_ROWS = int(
 _TOKENSIM_DRIVER_FIT_STRINGS = int(
     _os.environ.get("SPARK_GRAFT_TOKENSIM_DRIVER_FIT_STRINGS", "100000")
 )
+# Pair bound under which a driver fit also blocks and scores on the driver
+# (pair_scores, and TokenSimPass up to its edges) instead of running the
+# block join and the scorer as Spark jobs. The bound is Σ over eligible
+# tokens of C(block size, 2), read from the fitted token rows before any
+# pair is enumerated; it over-counts the distinct pairs (a pair sharing k
+# tokens counts k times). Set at the measured local[4] wall-clock
+# crossover of the two paths (docs/SCALE.md).
+_TOKENSIM_DRIVER_PAIRS = 600_000
 
 _TOKEN_SCHEMA = T.StructType(
     [
         T.StructField("string", T.StringType()),
         T.StructField("token", T.StringType()),
-        T.StructField("tf", T.LongType()),
+        # NOT NULL, as tokens_table's count writes it
+        T.StructField("tf", T.LongType(), False),
     ]
 )
 
@@ -182,6 +200,32 @@ def _pair_scorer(measure: str):
     return score
 
 
+_SCORE_SCHEMA = "s0 string, s1 string, score double"
+
+
+def _block_scores(
+    fitted: _DriverFit, max_block_size: int, measure: str,
+    against=None, max_pairs: int | None = None,
+) -> tuple:
+    """Token blocking and scoring on a driver fit's rows: (bound, scores).
+    ``bound`` is Σ over eligible tokens of C(block size, 2), read before
+    any pair is enumerated; ``scores`` are the (s0, s1, score) rows of the
+    canonical candidate pairs (all of them, or those holding one of the
+    ``against`` strings; block.driver_block_pairs), or None when the bound
+    exceeds ``max_pairs``. The one driver block → score step of
+    pair_scores, TokenSimPass and the delta fold."""
+    blocks = driver_token_blocks(fitted.tokens, fitted.weights, max_block_size)
+    bound = sum(n * (n - 1) // 2 for n in map(len, blocks))
+    if max_pairs is not None and bound > max_pairs:
+        return bound, None
+    model, wd = fitted.model
+    score = _pair_scorer(measure)
+    return bound, [
+        (a, b, score(model[a], model[b], wd))
+        for a, b in driver_block_pairs(blocks, against)
+    ]
+
+
 def _py_tokenize(s: str, kind: str) -> list:
     """Python twin of functions.tokenize's Column tokenizers (same
     code-point semantics as Spark's UTF8String substr/length)."""
@@ -226,6 +270,10 @@ class TokenSimilarity:
         self._weights: DataFrame | None = None
         self._strings: DataFrame | None = None
         self._n_token_rows: int | None = None
+        # the driver fit's rows and score model (None after a distributed
+        # fit), and the pair bound _block_scores last read from them
+        self._fitted: _DriverFit | None = None
+        self.pair_bound: int | None = None
         self._score_bc = None  # broadcast score model (fast path, see below)
 
     # ---------- fit ----------
@@ -240,14 +288,16 @@ class TokenSimilarity:
         self._strings = strings_df.select(
             F.col(string_col).alias("string")
         ).distinct()
-        # Driver fast fit (round 6): the limit(cap+1).collect probe costs
-        # one bounded action; under the gate the whole tokenize+weight
-        # chain (6 exchanges + 2 cache materializations of pure stage
-        # latency at a few-thousand-string universe) collapses to python
-        # dict math + two Arrow-built local frames with identical rows.
-        probe = self._strings.limit(_TOKENSIM_DRIVER_FIT_STRINGS + 1).collect()
-        if len(probe) <= _TOKENSIM_DRIVER_FIT_STRINGS:
-            self._fit_driver(self._strings.sparkSession, [r["string"] for r in probe])
+        # Driver fast fit (round 6): the bounded Arrow probe costs one
+        # action; under the gate the whole tokenize+weight chain (6
+        # exchanges + 2 cache materializations of pure stage latency at a
+        # few-thousand-string universe) collapses to python dict math over
+        # identical rows.
+        probe = collect_rows(self._strings, _TOKENSIM_DRIVER_FIT_STRINGS)
+        if probe is not None:
+            self._fit_driver(
+                self._strings.sparkSession, self._fit_rows([r[0] for r in probe])
+            )
             return self
         self._tokens = tokens_table(self._strings, tokenizer=self.tokenizer).cache()
         self._weights = token_weights(
@@ -265,32 +315,28 @@ class TokenSimilarity:
         # becomes a no-op cache hit).
         self._weights.count()
         self._n_token_rows = self._tokens.count()
-        self._score_bc = None
         return self
 
-    def _fit_driver(self, spark, strings: list, carried: list = ()) -> list:
-        """Build the (string, token, tf) and (token, f, d, weight) tables
-        from a collected universe — same rows as tokens_table +
-        token_weights (equality-tested), built with ``session.local_frame``
-        (JVM-resident Arrow relations: no Python worker runs when they are
-        scanned) and cached, so every distributed consumer (block join,
-        token_similarity_scores, incremental paths) works unchanged.
-
-        ``carried`` and the return value are _fit_model's. The score model
-        _fit_model builds is broadcast now instead of re-collecting the two
-        tables on the first pair_scores call."""
-        fitted = _fit_model(
+    def _fit_rows(self, strings: list, carried=()) -> _DriverFit:
+        """_fit_model under this matcher's tokenizer and weighting."""
+        return _fit_model(
             strings, carried, self.tokenizer, self.weighting,
             self.reference_doc_counts,
         )
-        self._tokens = local_frame(spark, fitted.tokens, _TOKEN_SCHEMA).cache()
-        self._weights = local_frame(
-            spark, fitted.weights, _WEIGHT_SCHEMA
-        ).cache()
-        self._weights.count()
-        self._n_token_rows = self._tokens.count()
-        self._score_bc = spark.sparkContext.broadcast(fitted.model)
-        return fitted.new_tokens
+
+    def _fit_driver(self, spark, fitted: _DriverFit) -> None:
+        """Adopt a driver fit: keep its rows for the driver scorer and
+        expose them as the (string, token, tf) and (token, f, d, weight)
+        tables — same rows as tokens_table + token_weights (equality-tested)
+        — built with ``session.local_frame``, so every distributed consumer
+        (block join, token_similarity_scores, incremental paths) works
+        unchanged. The frames are JVM-resident Arrow relations: scanning
+        them runs no Python worker and no job, so they are neither cached
+        nor counted."""
+        self._fitted = fitted
+        self._tokens = local_frame(spark, fitted.tokens, _TOKEN_SCHEMA)
+        self._weights = local_frame(spark, fitted.weights, _WEIGHT_SCHEMA)
+        self._n_token_rows = len(fitted.tokens)
 
     def fit_incremental(
         self,
@@ -312,30 +358,22 @@ class TokenSimilarity:
         Two paths, under fit()'s gates: when the carried table has at most
         _TOKENSIM_BROADCAST_TOKEN_ROWS rows (the score model's own bound)
         and the delta at most _TOKENSIM_DRIVER_FIT_STRINGS strings, both
-        are collected (each through a bounded ``limit(cap + 1)``) and
-        fit()'s driver fit builds the tables as local frames plus the
-        score-model broadcast. Above either cap the delta is tokenized
-        distributed and the weights come from one vocabulary-sized
-        aggregation over the union."""
+        are collected (each through a bounded ``limit(cap + 1)`` Arrow
+        read) and fit()'s driver fit builds the tables as local frames.
+        Above either cap the delta is tokenized distributed and the weights
+        come from one vocabulary-sized aggregation over the union."""
         self.unpersist()
         delta_strings = delta_strings.select(F.col(string_col).alias("string"))
         prev = prev_tokens.select("string", "token", "tf")
         spark = prev.sparkSession
-        fresh = (
-            delta_strings.distinct()
-            .limit(_TOKENSIM_DRIVER_FIT_STRINGS + 1)
-            .collect()
-        )
-        if len(fresh) <= _TOKENSIM_DRIVER_FIT_STRINGS:
-            carried = prev.limit(_TOKENSIM_BROADCAST_TOKEN_ROWS + 1).collect()
-            if len(carried) <= _TOKENSIM_BROADCAST_TOKEN_ROWS:
-                delta_rows = self._fit_driver(
-                    spark,
-                    [r["string"] for r in fresh],
-                    carried=[tuple(r) for r in carried],
-                )
+        fresh = collect_rows(delta_strings.distinct(), _TOKENSIM_DRIVER_FIT_STRINGS)
+        if fresh is not None:
+            carried = collect_rows(prev, _TOKENSIM_BROADCAST_TOKEN_ROWS)
+            if carried is not None:
+                fitted = self._fit_rows([r[0] for r in fresh], carried)
+                self._fit_driver(spark, fitted)
                 self._strings = self._tokens.select("string").distinct()
-                return local_frame(spark, delta_rows, _TOKEN_SCHEMA)
+                return local_frame(spark, fitted.new_tokens, _TOKEN_SCHEMA)
         delta = tokens_table(delta_strings, tokenizer=self.tokenizer)
         self._tokens = prev.unionByName(delta).cache()
         self._weights = token_weights(
@@ -346,7 +384,6 @@ class TokenSimilarity:
         # eager for the same multi-branch-consumer reason as fit()
         self._weights.count()
         self._n_token_rows = self._tokens.count()
-        self._score_bc = None
         self._strings = self._tokens.select("string").distinct()
         return delta
 
@@ -363,9 +400,28 @@ class TokenSimilarity:
 
     def pair_scores(self, skip_same_group: MatchData | None = None) -> DataFrame:
         """(s0, s1, score) for every candidate pair (cacheable for threshold
-        sweeps). Two scorers: the broadcast model below when the fitted
-        token table is within _TOKENSIM_BROADCAST_TOKEN_ROWS, else the
-        relational token_similarity_scores."""
+        sweeps). After a driver fit whose pair bound is within
+        _TOKENSIM_DRIVER_PAIRS, the pairs are blocked and scored on the
+        driver (_block_scores) and returned as one local frame; otherwise
+        the Spark block join feeds _scores. ``pair_bound`` records the
+        bound the choice read."""
+        self._require_fit()
+        if self._fitted is not None:
+            self.pair_bound, rows = _block_scores(
+                self._fitted, self.max_block_size, self.measure,
+                max_pairs=_TOKENSIM_DRIVER_PAIRS,
+            )
+            if rows is not None:
+                scores = local_frame(self._tokens.sparkSession, rows, _SCORE_SCHEMA)
+                if skip_same_group is not None:
+                    scores = anti_join_same_group(scores, skip_same_group.df)
+                return scores
+        return self._spark_pair_scores(skip_same_group)
+
+    def _spark_pair_scores(
+        self, skip_same_group: MatchData | None = None
+    ) -> DataFrame:
+        """pair_scores' Spark path: the block join, then _scores."""
         # Pin the candidate stream once (lazily): the block-join+distinct
         # subtree runs on the first action and later actions reuse it.
         pairs = self.candidate_pairs().localCheckpoint(eager=False)
@@ -415,25 +471,19 @@ class TokenSimilarity:
 
         spark = pairs.sparkSession
         if self._score_bc is None:
-            weights = {
-                r["token"]: r["weight"] for r in self._weights.collect()
-            }
-            strs: dict = {}
-            for r in self._tokens.collect():
-                strs.setdefault(r["string"], set()).add(r["token"])
-            self._score_bc = spark.sparkContext.broadcast(
-                (_score_model(strs, weights), weights)
-            )
+            if self._fitted is not None:
+                model = self._fitted.model
+            else:
+                weights = {
+                    r["token"]: r["weight"] for r in self._weights.collect()
+                }
+                strs: dict = {}
+                for r in self._tokens.collect():
+                    strs.setdefault(r["string"], set()).add(r["token"])
+                model = (_score_model(strs, weights), weights)
+            self._score_bc = spark.sparkContext.broadcast(model)
         bc = self._score_bc
         score = _pair_scorer(self.measure)
-
-        out_schema = T.StructType(
-            [
-                T.StructField("s0", T.StringType()),
-                T.StructField("s1", T.StringType()),
-                T.StructField("score", T.DoubleType()),
-            ]
-        )
 
         def score_batches(batches):
             strs, wd = bc.value
@@ -450,7 +500,7 @@ class TokenSimilarity:
                 yield pd.DataFrame({"s0": r0, "s1": r1, "score": rs})
 
         return pairs.select("s0", "s1").mapInPandas(
-            score_batches, schema=out_schema
+            score_batches, schema=_SCORE_SCHEMA
         )
 
     # ---------- predict ----------
@@ -462,6 +512,8 @@ class TokenSimilarity:
         for df in (self._tokens, self._weights):
             if df is not None:
                 df.unpersist()
+        self._fitted = None
+        self.pair_bound = None
         if self._score_bc is not None:
             self._score_bc.unpersist()
             self._score_bc = None

@@ -29,9 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nama_spark.functions.normalize import norm_key
+from nama_spark.operators import token_similarity as TS
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.operators.token_similarity import TokenSimilarity
 from nama_spark.plans.lineage import LineageLog
+from nama_spark.session import collect_rows, local_frame
 
 
 @dataclass
@@ -59,7 +61,25 @@ class TokenSimPass:
     ``normalize`` maps raw strings through a normalization key first; edges
     found between normalized forms are pulled back to the raw strings sharing
     that form (the exact pass has already united those, so the pullback adds
-    no spurious pairs)."""
+    no spurious pairs).
+
+    Two paths, chosen from sizes the pass reads anyway:
+
+    - *Driver.* When the keyed (string, norm) rows number at most
+      ``_TOKENSIM_DRIVER_FIT_STRINGS``, one bounded ``limit(cap + 1)`` Arrow
+      collect reads them and the normalized universe is fitted on the
+      driver. If that fit's pair bound (Σ over eligible tokens of
+      C(block size, 2)) is at most ``_TOKENSIM_DRIVER_PAIRS``, blocking,
+      scoring, the threshold and the pullback (a dict from norm to raw
+      strings) run in Python as well, and only the (src, dst) edges ship,
+      as one local frame: no Spark job runs between the collect and the
+      edges.
+    - *Spark.* Otherwise TokenSimilarity's fit and Spark pair scores run
+      (reusing the driver fit when there is one) and the pullback is two
+      joins, as before the driver path existed.
+
+    Lineage records the pair bound when a driver fit read it, the pair gate
+    and the path taken (``driver_path`` 1 or 0)."""
 
     threshold: float = 0.6
     tokenizer: str = "nmgrams23"
@@ -70,26 +90,61 @@ class TokenSimPass:
     name: str = "token_sim"
 
     def edges(self, md: MatchData, lineage: LineageLog) -> DataFrame:
+        spark = md.df.sparkSession
         if self.normalize:
             key = norm_key(F.col("string"), self.normalize)
-            # pinned: consumed by the universe AND both pullback joins —
-            # three re-evaluations of the regex chain otherwise (round 6)
             keyed = md.df.select("string", key.alias("norm")).where(
                 F.col("norm").isNotNull() & (F.col("norm") != "")
-            ).localCheckpoint(eager=False)
-            universe = keyed.select(F.col("norm").alias("string")).distinct()
+            )
         else:
             keyed = md.df.select("string", F.col("string").alias("norm"))
-            universe = md.df.select("string")
         ts = TokenSimilarity(
             tokenizer=self.tokenizer,
             weighting=self.weighting,
             measure=self.measure,
             max_block_size=self.max_block_size,
-        ).fit(universe)
-        scores = ts.pair_scores()
-        edges = scores.where(F.col("score") >= self.threshold)
+        )
         lineage.add(self.name, "threshold", self.threshold)
+        lineage.add(self.name, "pair_gate", TS._TOKENSIM_DRIVER_PAIRS)
+        rows = collect_rows(keyed, TS._TOKENSIM_DRIVER_FIT_STRINGS)
+        if rows is not None:
+            by_norm: dict = {}
+            for raw, norm in rows:
+                by_norm.setdefault(norm, []).append(raw)
+            fitted = ts._fit_rows(list(by_norm))
+            bound, scores = TS._block_scores(
+                fitted, self.max_block_size, self.measure,
+                max_pairs=TS._TOKENSIM_DRIVER_PAIRS,
+            )
+            lineage.add(self.name, "pair_bound", bound)
+            lineage.add(self.name, "driver_path", float(scores is not None))
+            if scores is not None:
+                edges = [
+                    (r0, r1)
+                    for n0, n1, score in scores
+                    if score >= self.threshold
+                    for r0 in by_norm[n0]
+                    for r1 in by_norm[n1]
+                ]
+                return local_frame(spark, edges, "src string, dst string")
+        if self.normalize:
+            # pinned: consumed by both pullback joins and, without a driver
+            # fit, the universe — one re-evaluation of the regex chain per
+            # consumer otherwise (round 6)
+            keyed = keyed.localCheckpoint(eager=False)
+        if rows is None:
+            universe = (
+                keyed.select(F.col("norm").alias("string")).distinct()
+                if self.normalize else md.df.select("string")
+            )
+            scores = ts.fit(universe).pair_scores()
+            if ts.pair_bound is not None:
+                lineage.add(self.name, "pair_bound", ts.pair_bound)
+            lineage.add(self.name, "driver_path", 0.0)
+        else:
+            ts._fit_driver(spark, fitted)
+            scores = ts._spark_pair_scores()
+        edges = scores.where(F.col("score") >= self.threshold)
         if self.normalize:
             k0 = keyed.select(F.col("string").alias("r0"), F.col("norm").alias("s0"))
             k1 = keyed.select(F.col("string").alias("r1"), F.col("norm").alias("s1"))

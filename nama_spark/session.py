@@ -100,3 +100,13 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def collect_rows(df: DataFrame, cap: int | None = None) -> list | None:
+    """Rows of ``df`` as tuples, read by one Arrow collect (no ``Row``
+    objects are built), bounded by ``limit(cap + 1)`` when ``cap`` is given;
+    None when it holds more than ``cap`` rows."""
+    table = (df if cap is None else df.limit(cap + 1)).toArrow()
+    if cap is not None and table.num_rows > cap:
+        return None
+    return list(zip(*(c.to_pylist() for c in table.columns)))

@@ -10,7 +10,12 @@ import pytest
 from nama_spark.functions.tokenize import tokens_table
 from nama_spark.operators import delta_fold as DF
 from nama_spark.operators import token_similarity as TS
-from nama_spark.operators.block import eligible_tokens, token_block_pairs_against
+from nama_spark.operators.block import (
+    driver_block_pairs,
+    driver_token_blocks,
+    eligible_tokens,
+    token_block_pairs_against,
+)
 from nama_spark.operators.cluster import ENTITY_ID_SUFFIX, stable_entity_ids
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.session import local_frame
@@ -73,7 +78,9 @@ def test_block_pairs_match_token_block_pairs_against(spark, case):
     fresh = [s for s in dict.fromkeys(delta) if s is not None and s not in prior]
     fit = TS._fit_model(fresh, TS._fit_model(prior, [], tokenizer, "tf-idf").tokens,
                         tokenizer, "tf-idf")
-    got = DF.block_pairs(fit.tokens, fit.weights, delta, cap)
+    got = driver_block_pairs(
+        driver_token_blocks(fit.tokens, fit.weights, cap), delta
+    )
     want = token_block_pairs_against(
         local_frame(spark, fit.tokens, TS._TOKEN_SCHEMA),
         local_frame(spark, [(s,) for s in delta], "string string"),
@@ -99,7 +106,7 @@ def test_pair_scorer_matches_relational_scores(
     fit = TS._fit_model(NAMES, [], "nmgrams23", weighting)
     model, wd = fit.model
     score = TS._pair_scorer(measure)
-    pairs = DF.block_pairs(fit.tokens, fit.weights, NAMES, 100)
+    pairs = driver_block_pairs(driver_token_blocks(fit.tokens, fit.weights, 100))
     got = {(a, b): score(model[a], model[b], wd) for a, b in pairs}
     assert got.keys() == want.keys() and got
     for k in got:
@@ -203,15 +210,22 @@ def _library_lines_with(needle: str) -> list:
 
 def test_weight_formula_and_pair_measures_have_one_copy():
     """Source guard: in the library, the idf/tf-idf weight formula lives
-    only in token_similarity._fit_model and the Jaccard/cosine per-pair
-    arithmetic only in token_similarity._pair_scorer — the broadcast scorer
-    and the driver fold call them instead of copying them."""
+    only in token_similarity._fit_model, the Jaccard/cosine per-pair
+    arithmetic only in token_similarity._pair_scorer, and the driver pair
+    enumeration only in block.driver_block_pairs — the broadcast scorer,
+    pair_scores, TokenSimPass and the driver fold call them instead of
+    copying them."""
     import inspect
+
+    from nama_spark.operators import block
 
     for needle, owner in [
         ("math.log(1.0 + d)", TS._fit_model),
         ("wsa + wsb - inter", TS._pair_scorer),
         ("sqrt(w2a)", TS._pair_scorer),
+        ("combinations(sorted(", block.driver_block_pairs),
+        ("if sn < so else", block.driver_block_pairs),
+        ("2 <= d <= max_block_size", block.driver_token_blocks),
     ]:
         hits = _library_lines_with(needle)
         assert len(hits) == inspect.getsource(owner).count(needle) > 0, hits

@@ -1,6 +1,7 @@
 """Ingestion: CSV round-trip with all-string/empty-not-null semantics
 (match_data.py:860-861 parity), format detection, matchdata writer."""
 
+import glob
 import json
 
 import pytest
@@ -1185,6 +1186,15 @@ def test_run_delta_er_job(spark, tmp_path, monkeypatch, capsys):
         sm.pop("fold", None)
         sm.pop("wall_sec")
     assert forced_summaries == summaries
+
+    import pyarrow.parquet as pq
+
+    def file_schemas(path):
+        # from the parquet footers: Spark's reader makes every column
+        # nullable, so only the files show a NOT NULL column
+        return {pq.read_schema(f).to_string(show_schema_metadata=False)
+                for f in glob.glob(f"{path}/*.parquet")}
+
     for v in range(1, 5):
         for table in ("clusters", "entity_ids", "tokens"):
             got, want = (
@@ -1192,6 +1202,9 @@ def test_run_delta_er_job(spark, tmp_path, monkeypatch, capsys):
                 for st in (forced, state)
             )
             assert got == want, (v, table)
+            got, want = (file_schemas(f"{st}/v{v:06d}/{table}")
+                         for st in (forced, state))
+            assert got == want and len(got) == 1, (v, table, got, want)
 
 
 def test_run_delta_er_state_over_a_gate_moves_no_rows(

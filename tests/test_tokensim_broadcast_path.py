@@ -129,7 +129,7 @@ def test_fit_incremental_equals_fit_of_union(spark, split, gate, monkeypatch):
     inc = TokenSimilarity()
     new_rows = inc.fit_incremental(tokens_table(old), genuinely_new)
     full = TokenSimilarity().fit(old.unionByName(genuinely_new))
-    assert (inc._score_bc is not None) == (gate > 0)
+    assert (inc._fitted is not None) == (gate > 0)
     assert _rows(inc._tokens) == _rows(full._tokens)
     assert inc._n_token_rows == full._n_token_rows
     _assert_same_weights(_weights(inc), _weights(full))
@@ -192,3 +192,110 @@ def test_predict_incremental_keeps_merge_when_a_redelivery_relabels(
     carried = [tuple(r) for r in tokens_table(prior.df).collect()]
     fold = delta_fold.fold(prior_rows, [], carried, delta, ts, threshold)
     assert sorted(fold.clusters) == want
+
+
+# ---------- the driver pair gate (_TOKENSIM_DRIVER_PAIRS) both ways ----------
+
+
+# tie-heavy (word reorderings and shared-token families score alike),
+# duplicated strings, and null, empty and token-less strings under both
+# tokenizers ("-" and " " have no words and no n-grams of 2+ letters
+# beyond the separator itself)
+_DIRTY = (
+    [f"{a} {b}" for a in ["acme", "globex", "acme corp"]
+     for b in ["labs", "labz", "systems"]]
+    + ["labs acme", "labz acme", "systems acme", "ab cd", "cd ab", "ab ab cd"]
+    + ["acme labs", "ab cd", "labs acme"]          # duplicates
+    + [None, "", "x", "-", " "]
+)
+
+
+@pytest.fixture(scope="module")
+def dirty(spark):
+    return spark.createDataFrame([(s,) for s in _DIRTY], "string string")
+
+
+def _scored(ts, skip=None):
+    return {(r["s0"], r["s1"]): r["score"]
+            for r in ts.pair_scores(skip_same_group=skip).collect()}
+
+
+@pytest.mark.parametrize("tokenizer", ["nmgrams23", "words"])
+@pytest.mark.parametrize("weighting", ["tf", "idf", "tf-idf", "none"])
+@pytest.mark.parametrize("measure", ["jaccard", "cosine"])
+def test_driver_scores_match_both_spark_scorers(
+    spark, dirty, tokenizer, weighting, measure, monkeypatch
+):
+    """Driver block + score against the Spark block join: bitwise equal to
+    the broadcast scorer (same _pair_scorer on the same model), approx
+    equal to the relational one; with and without skip_same_group."""
+    skip = MatchData.from_groups(
+        dirty.where(F.col("string").isNotNull()).withColumn(
+            "group", F.substring_index("string", " ", 1)
+        )
+    )
+
+    def scores(pair_gate, token_gate=10**9):
+        monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_PAIRS", pair_gate)
+        monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", token_gate)
+        ts = TokenSimilarity(tokenizer=tokenizer, weighting=weighting,
+                             measure=measure).fit(dirty)
+        return _scored(ts), _scored(ts, skip), ts.pair_bound
+
+    driver, driver_skip, bound = scores(10**9)
+    broadcast, broadcast_skip, bound_b = scores(-1)
+    relational, relational_skip, _ = scores(-1, token_gate=-1)
+    assert driver and bound == bound_b and bound >= len(driver)
+    assert driver == broadcast
+    assert driver_skip == broadcast_skip
+    assert 0 < len(driver_skip) < len(driver)
+    for want, got in ((relational, driver), (relational_skip, driver_skip)):
+        assert got.keys() == want.keys()
+        for k in got:
+            assert got[k] == pytest.approx(want[k], rel=1e-12, abs=1e-15), k
+
+
+def _pipeline_records(spark):
+    raw = [s for s in _DIRTY if s is not None] + [
+        "Acme Labs, Inc.", "ACME LABS LLC", "acme labs inc", "Globex Labs Ltd",
+        "globex labz", "The Globex Systems",
+    ]
+    # duplicated records give the names counts above one
+    return spark.createDataFrame([(s,) for s in raw + raw[:7]], "repo string")
+
+
+@pytest.mark.parametrize("normalize", ["simplify_corp", None])
+def test_pipeline_partition_and_lineage_on_both_sides_of_the_pair_gate(
+    spark, normalize, monkeypatch
+):
+    """MatchPipeline([ExactKeyPass(), TokenSimPass(0.7)]) gives the same
+    partition whether TokenSimPass builds its edges on the driver, scores
+    on Spark after a driver fit, or fits on Spark; lineage records the
+    pair bound, the gate and the path taken."""
+    from nama_spark.plans.pipeline import ExactKeyPass, MatchPipeline, TokenSimPass
+
+    records = _pipeline_records(spark)
+
+    def run(pair_gate, fit_gate=10**9):
+        monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_PAIRS", pair_gate)
+        monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_FIT_STRINGS", fit_gate)
+        md, lineage = MatchPipeline(
+            [ExactKeyPass(), TokenSimPass(0.7, normalize=normalize)]
+        ).run(records, "repo")
+        rows = {r["metric"]: r["value"] for r in lineage.rows
+                if r["stage"] == "token_sim"}
+        return _rows(md.df), rows
+
+    driver, lin_driver = run(10**9)
+    spark_scored, lin_spark = run(-1)
+    spark_fit, lin_fit = run(-1, fit_gate=-1)
+    assert driver == spark_scored == spark_fit
+    assert len({g for _s, _c, g in driver}) < len(driver)
+    assert lin_driver["driver_path"] == 1.0
+    assert lin_driver["pair_gate"] == 10**9
+    assert lin_driver["pair_bound"] > 0
+    assert lin_spark["driver_path"] == 0.0
+    assert lin_spark["pair_gate"] == -1
+    assert lin_spark["pair_bound"] == lin_driver["pair_bound"]
+    assert lin_fit["driver_path"] == 0.0
+    assert "pair_bound" not in lin_fit
