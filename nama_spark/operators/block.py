@@ -152,8 +152,7 @@ def driver_block_pairs(blocks, against=None) -> set:
 
 def anti_join_same_group(pairs: DataFrame, matchdata_df: DataFrame) -> DataFrame:
     """Drop pairs already co-grouped in the current partition — between-pass
-    optimization (SURVEY.md §4 'already-same-group skip'). The pairs keep
-    their columns (scored pairs keep their score)."""
+    optimization (SURVEY.md §4 'already-same-group skip')."""
     g = matchdata_df.select("string", "group")
     joined = (
         pairs.join(g.withColumnRenamed("string", "s0").withColumnRenamed("group", "g0"), "s0", "left")
@@ -161,7 +160,7 @@ def anti_join_same_group(pairs: DataFrame, matchdata_df: DataFrame) -> DataFrame
     )
     return joined.where(
         F.col("g0").isNull() | F.col("g1").isNull() | (F.col("g0") != F.col("g1"))
-    ).select(*pairs.columns)
+    ).select("s0", "s1")
 
 
 def salt_pairs(pairs: DataFrame, num_partitions: int | None = None) -> DataFrame:

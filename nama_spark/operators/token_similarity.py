@@ -10,19 +10,17 @@ so the distributed CC pass is semantics-preserving (SURVEY.md §2.8).
 
 Spark plan:
     strings → one bounded Arrow probe (limit(cap + 1))
-    driver fit (≤ _TOKENSIM_DRIVER_FIT_STRINGS strings): tokens + weights
-            as Python rows; when Σ over eligible tokens of C(block size, 2)
-            ≤ _TOKENSIM_DRIVER_PAIRS, blocking and jaccard/cosine scoring
-            run on those rows too, and the scores ship as one local frame —
-            no Spark job between the probe and the scores
-    otherwise:
-            → tokens (explode, 1 shuffle; or the driver fit's local frame)
-            → weights (token agg)
+            → driver fit (≤ _TOKENSIM_DRIVER_FIT_STRINGS strings): tokens +
+              weights as Python rows, exposed as local frames
+              or tokens (explode, 1 shuffle) → weights (token agg)
             → eligible-token self-join → canonical candidate pairs
             → jaccard/cosine: broadcast-model mapInPandas when the fitted
               token table is small, else the relational map-payload scorer
-    → filter score ≥ threshold → edges
-    → large-star/small-star CC → MatchData
+            → filter score ≥ threshold → edges
+            → large-star/small-star CC → MatchData
+    After a driver fit, driver_pair_scores blocks and scores the same pairs
+    in Python instead (no Spark job) while the pair bound is within
+    _TOKENSIM_DRIVER_PAIRS; TokenSimPass takes that path up to its edges.
 """
 
 from __future__ import annotations
@@ -70,14 +68,15 @@ _TOKENSIM_BROADCAST_TOKEN_ROWS = int(
 _TOKENSIM_DRIVER_FIT_STRINGS = int(
     _os.environ.get("SPARK_GRAFT_TOKENSIM_DRIVER_FIT_STRINGS", "100000")
 )
-# Pair bound under which a driver fit also blocks and scores on the driver
-# (pair_scores, and TokenSimPass up to its edges) instead of running the
-# block join and the scorer as Spark jobs. The bound is Σ over eligible
-# tokens of C(block size, 2), read from the fitted token rows before any
-# pair is enumerated; it over-counts the distinct pairs (a pair sharing k
-# tokens counts k times). Set at the measured local[4] wall-clock
-# crossover of the two paths (docs/SCALE.md).
-_TOKENSIM_DRIVER_PAIRS = 600_000
+# Pair bound under which driver_pair_scores blocks and scores a driver
+# fit's pairs in Python (TokenSimPass takes it up to its edges) instead of
+# leaving them to pair_scores' block join and scorer. The bound is Σ over
+# eligible tokens of C(block size, 2), read from the fitted token rows
+# before any pair is enumerated; it over-counts the distinct pairs (a pair
+# sharing k tokens counts k times). Set at TokenSimPass's measured
+# local[4] wall-clock crossover (docs/SCALE.md): the driver was level or
+# ahead at every measured bound up to 3.5M and 28% behind at 5.3M.
+_TOKENSIM_DRIVER_PAIRS = 3_500_000
 
 _TOKEN_SCHEMA = T.StructType(
     [
@@ -213,7 +212,7 @@ def _block_scores(
     canonical candidate pairs (all of them, or those holding one of the
     ``against`` strings; block.driver_block_pairs), or None when the bound
     exceeds ``max_pairs``. The one driver block → score step of
-    pair_scores, TokenSimPass and the delta fold."""
+    TokenSimilarity.driver_pair_scores and the delta fold."""
     blocks = driver_token_blocks(fitted.tokens, fitted.weights, max_block_size)
     bound = sum(n * (n - 1) // 2 for n in map(len, blocks))
     if max_pairs is not None and bound > max_pairs:
@@ -271,19 +270,26 @@ class TokenSimilarity:
         self._strings: DataFrame | None = None
         self._n_token_rows: int | None = None
         # the driver fit's rows and score model (None after a distributed
-        # fit), and the pair bound _block_scores last read from them
+        # fit), and the pair bound driver_pair_scores last read from them
         self._fitted: _DriverFit | None = None
         self.pair_bound: int | None = None
         self._score_bc = None  # broadcast score model (fast path, see below)
 
     # ---------- fit ----------
 
-    def fit(self, strings_df: DataFrame, string_col: str = "string") -> "TokenSimilarity":
+    def fit(
+        self, strings_df: DataFrame, string_col: str = "string",
+        strings: list | None = None,
+    ) -> "TokenSimilarity":
         """Tokenize + weight the string universe; cache both (reused across
         thresholds — the reference's embed-once/predict-many pattern,
         baseline.py:53-57). Refitting releases the previous fit's caches
         first — repeated incremental updates on one model must not
-        accumulate executor storage blocks."""
+        accumulate executor storage blocks.
+
+        ``strings``, when the caller has already read them to the driver,
+        are the distinct strings of ``strings_df``; fit() then skips its
+        probe."""
         self.unpersist()
         self._strings = strings_df.select(
             F.col(string_col).alias("string")
@@ -293,11 +299,11 @@ class TokenSimilarity:
         # exchanges + 2 cache materializations of pure stage latency at a
         # few-thousand-string universe) collapses to python dict math over
         # identical rows.
-        probe = collect_rows(self._strings, _TOKENSIM_DRIVER_FIT_STRINGS)
-        if probe is not None:
-            self._fit_driver(
-                self._strings.sparkSession, self._fit_rows([r[0] for r in probe])
-            )
+        if strings is None:
+            probe = collect_rows(self._strings, _TOKENSIM_DRIVER_FIT_STRINGS)
+            strings = None if probe is None else [r[0] for r in probe]
+        if strings is not None and len(strings) <= _TOKENSIM_DRIVER_FIT_STRINGS:
+            self._fit_driver(self._strings.sparkSession, self._fit_rows(strings))
             return self
         self._tokens = tokens_table(self._strings, tokenizer=self.tokenizer).cache()
         self._weights = token_weights(
@@ -325,18 +331,23 @@ class TokenSimilarity:
         )
 
     def _fit_driver(self, spark, fitted: _DriverFit) -> None:
-        """Adopt a driver fit: keep its rows for the driver scorer and
+        """Adopt a driver fit: keep its rows for driver_pair_scores and
         expose them as the (string, token, tf) and (token, f, d, weight)
         tables — same rows as tokens_table + token_weights (equality-tested)
         — built with ``session.local_frame``, so every distributed consumer
         (block join, token_similarity_scores, incremental paths) works
-        unchanged. The frames are JVM-resident Arrow relations: scanning
-        them runs no Python worker and no job, so they are neither cached
-        nor counted."""
+        unchanged. The frames are JVM-resident Arrow relations (no Python
+        worker runs when they are scanned), cached but not counted: a
+        driver_pair_scores caller never scans them, and a Spark scorer's
+        repeated scans read the cache instead of re-shipping the rows in
+        every task. The score model _fit_model builds is broadcast now
+        instead of re-collecting the two tables on the first pair_scores
+        call."""
         self._fitted = fitted
-        self._tokens = local_frame(spark, fitted.tokens, _TOKEN_SCHEMA)
-        self._weights = local_frame(spark, fitted.weights, _WEIGHT_SCHEMA)
+        self._tokens = local_frame(spark, fitted.tokens, _TOKEN_SCHEMA).cache()
+        self._weights = local_frame(spark, fitted.weights, _WEIGHT_SCHEMA).cache()
         self._n_token_rows = len(fitted.tokens)
+        self._score_bc = spark.sparkContext.broadcast(fitted.model)
 
     def fit_incremental(
         self,
@@ -359,8 +370,8 @@ class TokenSimilarity:
         _TOKENSIM_BROADCAST_TOKEN_ROWS rows (the score model's own bound)
         and the delta at most _TOKENSIM_DRIVER_FIT_STRINGS strings, both
         are collected (each through a bounded ``limit(cap + 1)`` Arrow
-        read) and fit()'s driver fit builds the tables as local frames.
-        Above either cap the delta is tokenized distributed and the weights
+        read) and fit()'s driver fit builds the tables as local frames plus
+        the score-model broadcast. Above either cap the delta is tokenized distributed and the weights
         come from one vocabulary-sized aggregation over the union."""
         self.unpersist()
         delta_strings = delta_strings.select(F.col(string_col).alias("string"))
@@ -398,30 +409,26 @@ class TokenSimilarity:
         elig = eligible_tokens(self._weights, 2, self.max_block_size)
         return token_block_pairs(self._tokens, elig, self.max_block_size)
 
+    def driver_pair_scores(self) -> list | None:
+        """(s0, s1, score) rows of every candidate pair, blocked and scored
+        in Python on the driver fit's rows (_block_scores), or None after a
+        distributed fit or when the fit's pair bound exceeds
+        _TOKENSIM_DRIVER_PAIRS. ``pair_bound`` records the bound read. The
+        rows are pair_scores' (bitwise those of its broadcast scorer)."""
+        self._require_fit()
+        if self._fitted is None:
+            return None
+        self.pair_bound, rows = _block_scores(
+            self._fitted, self.max_block_size, self.measure,
+            max_pairs=_TOKENSIM_DRIVER_PAIRS,
+        )
+        return rows
+
     def pair_scores(self, skip_same_group: MatchData | None = None) -> DataFrame:
         """(s0, s1, score) for every candidate pair (cacheable for threshold
-        sweeps). After a driver fit whose pair bound is within
-        _TOKENSIM_DRIVER_PAIRS, the pairs are blocked and scored on the
-        driver (_block_scores) and returned as one local frame; otherwise
-        the Spark block join feeds _scores. ``pair_bound`` records the
-        bound the choice read."""
-        self._require_fit()
-        if self._fitted is not None:
-            self.pair_bound, rows = _block_scores(
-                self._fitted, self.max_block_size, self.measure,
-                max_pairs=_TOKENSIM_DRIVER_PAIRS,
-            )
-            if rows is not None:
-                scores = local_frame(self._tokens.sparkSession, rows, _SCORE_SCHEMA)
-                if skip_same_group is not None:
-                    scores = anti_join_same_group(scores, skip_same_group.df)
-                return scores
-        return self._spark_pair_scores(skip_same_group)
-
-    def _spark_pair_scores(
-        self, skip_same_group: MatchData | None = None
-    ) -> DataFrame:
-        """pair_scores' Spark path: the block join, then _scores."""
+        sweeps). Two scorers: the broadcast model below when the fitted
+        token table is within _TOKENSIM_BROADCAST_TOKEN_ROWS, else the
+        relational token_similarity_scores."""
         # Pin the candidate stream once (lazily): the block-join+distinct
         # subtree runs on the first action and later actions reuse it.
         pairs = self.candidate_pairs().localCheckpoint(eager=False)
@@ -471,17 +478,15 @@ class TokenSimilarity:
 
         spark = pairs.sparkSession
         if self._score_bc is None:
-            if self._fitted is not None:
-                model = self._fitted.model
-            else:
-                weights = {
-                    r["token"]: r["weight"] for r in self._weights.collect()
-                }
-                strs: dict = {}
-                for r in self._tokens.collect():
-                    strs.setdefault(r["string"], set()).add(r["token"])
-                model = (_score_model(strs, weights), weights)
-            self._score_bc = spark.sparkContext.broadcast(model)
+            weights = {
+                r["token"]: r["weight"] for r in self._weights.collect()
+            }
+            strs: dict = {}
+            for r in self._tokens.collect():
+                strs.setdefault(r["string"], set()).add(r["token"])
+            self._score_bc = spark.sparkContext.broadcast(
+                (_score_model(strs, weights), weights)
+            )
         bc = self._score_bc
         score = _pair_scorer(self.measure)
 

@@ -63,23 +63,24 @@ class TokenSimPass:
     that form (the exact pass has already united those, so the pullback adds
     no spurious pairs).
 
-    Two paths, chosen from sizes the pass reads anyway:
+    When the keyed (string, norm) rows number at most
+    ``_TOKENSIM_DRIVER_FIT_STRINGS``, one bounded ``limit(cap + 1)`` Arrow
+    collect reads them; they become a local frame, and their distinct norms
+    go to ``TokenSimilarity.fit`` (the driver fit, no probe). Then:
 
-    - *Driver.* When the keyed (string, norm) rows number at most
-      ``_TOKENSIM_DRIVER_FIT_STRINGS``, one bounded ``limit(cap + 1)`` Arrow
-      collect reads them and the normalized universe is fitted on the
-      driver. If that fit's pair bound (Σ over eligible tokens of
-      C(block size, 2)) is at most ``_TOKENSIM_DRIVER_PAIRS``, blocking,
-      scoring, the threshold and the pullback (a dict from norm to raw
-      strings) run in Python as well, and only the (src, dst) edges ship,
-      as one local frame: no Spark job runs between the collect and the
-      edges.
-    - *Spark.* Otherwise TokenSimilarity's fit and Spark pair scores run
-      (reusing the driver fit when there is one) and the pullback is two
-      joins, as before the driver path existed.
+    - *Driver.* If the driver fit's pair bound (Σ over eligible tokens of
+      C(block size, 2)) is at most ``_TOKENSIM_DRIVER_PAIRS``,
+      ``driver_pair_scores`` blocks and scores in Python, and the threshold
+      and the pullback (a dict from norm to raw strings) run there too:
+      only the (src, dst) edges ship, as one local frame, and no Spark job
+      runs between the collect and the edges. (A universe that fits the
+      driver fit while its keyed rows do not is fitted by fit()'s own
+      probe; its driver scores ship as a local frame to the join pullback.)
+    - *Spark.* Otherwise ``pair_scores`` runs the block join and scorer and
+      the pullback is two joins, as before the driver path existed.
 
-    Lineage records the pair bound when a driver fit read it, the pair gate
-    and the path taken (``driver_path`` 1 or 0)."""
+    Lineage records the pair gate, the pair bound when a driver fit read
+    it, and the path taken (``driver_path`` 1 or 0)."""
 
     threshold: float = 0.6
     tokenizer: str = "nmgrams23"
@@ -104,46 +105,40 @@ class TokenSimPass:
             measure=self.measure,
             max_block_size=self.max_block_size,
         )
-        lineage.add(self.name, "threshold", self.threshold)
-        lineage.add(self.name, "pair_gate", TS._TOKENSIM_DRIVER_PAIRS)
         rows = collect_rows(keyed, TS._TOKENSIM_DRIVER_FIT_STRINGS)
+        by_norm = None
         if rows is not None:
-            by_norm: dict = {}
+            by_norm = {}
             for raw, norm in rows:
                 by_norm.setdefault(norm, []).append(raw)
-            fitted = ts._fit_rows(list(by_norm))
-            bound, scores = TS._block_scores(
-                fitted, self.max_block_size, self.measure,
-                max_pairs=TS._TOKENSIM_DRIVER_PAIRS,
-            )
-            lineage.add(self.name, "pair_bound", bound)
-            lineage.add(self.name, "driver_path", float(scores is not None))
-            if scores is not None:
-                edges = [
-                    (r0, r1)
-                    for n0, n1, score in scores
-                    if score >= self.threshold
-                    for r0 in by_norm[n0]
-                    for r1 in by_norm[n1]
-                ]
-                return local_frame(spark, edges, "src string, dst string")
-        if self.normalize:
-            # pinned: consumed by both pullback joins and, without a driver
-            # fit, the universe — one re-evaluation of the regex chain per
-            # consumer otherwise (round 6)
+            keyed = local_frame(spark, rows, "string string, norm string")
+        elif self.normalize:
+            # pinned: consumed by the universe AND both pullback joins —
+            # three re-evaluations of the regex chain otherwise (round 6)
             keyed = keyed.localCheckpoint(eager=False)
-        if rows is None:
-            universe = (
-                keyed.select(F.col("norm").alias("string")).distinct()
-                if self.normalize else md.df.select("string")
-            )
-            scores = ts.fit(universe).pair_scores()
-            if ts.pair_bound is not None:
-                lineage.add(self.name, "pair_bound", ts.pair_bound)
-            lineage.add(self.name, "driver_path", 0.0)
-        else:
-            ts._fit_driver(spark, fitted)
-            scores = ts._spark_pair_scores()
+        ts.fit(
+            keyed.select(F.col("norm").alias("string")),
+            strings=None if by_norm is None else list(by_norm),
+        )
+        scored = ts.driver_pair_scores()
+        lineage.add(self.name, "threshold", self.threshold)
+        lineage.add(self.name, "pair_gate", TS._TOKENSIM_DRIVER_PAIRS)
+        if ts.pair_bound is not None:
+            lineage.add(self.name, "pair_bound", ts.pair_bound)
+        lineage.add(self.name, "driver_path", float(scored is not None))
+        if scored is not None and by_norm is not None:
+            edges = [
+                (r0, r1)
+                for n0, n1, score in scored
+                if score >= self.threshold
+                for r0 in by_norm[n0]
+                for r1 in by_norm[n1]
+            ]
+            return local_frame(spark, edges, "src string, dst string")
+        scores = (
+            ts.pair_scores() if scored is None
+            else local_frame(spark, scored, TS._SCORE_SCHEMA)
+        )
         edges = scores.where(F.col("score") >= self.threshold)
         if self.normalize:
             k0 = keyed.select(F.col("string").alias("r0"), F.col("norm").alias("s0"))

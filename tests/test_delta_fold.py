@@ -213,8 +213,8 @@ def test_weight_formula_and_pair_measures_have_one_copy():
     only in token_similarity._fit_model, the Jaccard/cosine per-pair
     arithmetic only in token_similarity._pair_scorer, and the driver pair
     enumeration only in block.driver_block_pairs — the broadcast scorer,
-    pair_scores, TokenSimPass and the driver fold call them instead of
-    copying them."""
+    driver_pair_scores and the driver fold call them instead of copying
+    them."""
     import inspect
 
     from nama_spark.operators import block

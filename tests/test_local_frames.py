@@ -81,7 +81,7 @@ def test_driver_token_fit_tables_have_no_python_rdd(spark):
     from nama_spark.operators.token_similarity import TokenSimilarity
 
     ts = TokenSimilarity().fit(_strings(spark, ["acme widget", "acme widgets", "beta"]))
-    assert ts._fitted is not None  # the driver fit ran
+    assert ts._score_bc is not None  # the driver fit ran
     assert ts._tokens.count() > 0 and ts._weights.count() > 0
     assert not _python_rdd(ts._tokens)
     assert not _python_rdd(ts._weights)
@@ -94,7 +94,7 @@ def test_incremental_token_fit_tables_have_no_python_rdd(spark):
     ts = TokenSimilarity()
     prev = tokens_table(_strings(spark, ["acme widget", "beta"]))
     delta = ts.fit_incremental(prev, _strings(spark, ["acme widgets"]))
-    assert ts._fitted is not None  # the driver fit ran
+    assert ts._score_bc is not None  # the driver fit ran
     for df in (delta, ts._tokens, ts._weights):
         assert df.count() > 0
         assert not _python_rdd(df)

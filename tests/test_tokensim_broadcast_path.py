@@ -129,7 +129,7 @@ def test_fit_incremental_equals_fit_of_union(spark, split, gate, monkeypatch):
     inc = TokenSimilarity()
     new_rows = inc.fit_incremental(tokens_table(old), genuinely_new)
     full = TokenSimilarity().fit(old.unionByName(genuinely_new))
-    assert (inc._fitted is not None) == (gate > 0)
+    assert (inc._score_bc is not None) == (gate > 0)
     assert _rows(inc._tokens) == _rows(full._tokens)
     assert inc._n_token_rows == full._n_token_rows
     _assert_same_weights(_weights(inc), _weights(full))
@@ -226,30 +226,34 @@ def _scored(ts, skip=None):
 def test_driver_scores_match_both_spark_scorers(
     spark, dirty, tokenizer, weighting, measure, monkeypatch
 ):
-    """Driver block + score against the Spark block join: bitwise equal to
+    """driver_pair_scores against pair_scores' block join: bitwise equal to
     the broadcast scorer (same _pair_scorer on the same model), approx
-    equal to the relational one; with and without skip_same_group."""
+    equal to the relational one; the skip_same_group scores are the driver
+    scores less the co-grouped pairs. Above the pair gate there are no
+    driver scores, and the bound read is the same."""
+    groups = {s: s.split(" ")[0] for s in _DIRTY if s is not None}
     skip = MatchData.from_groups(
         dirty.where(F.col("string").isNotNull()).withColumn(
             "group", F.substring_index("string", " ", 1)
         )
     )
+    monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_PAIRS", 10**9)
+    ts = TokenSimilarity(tokenizer=tokenizer, weighting=weighting,
+                         measure=measure).fit(dirty)
+    driver = {(a, b): score for a, b, score in ts.driver_pair_scores()}
+    bound = ts.pair_bound
+    driver_skip = {k: v for k, v in driver.items()
+                   if groups[k[0]] != groups[k[1]]}
+    monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_PAIRS", bound - 1)
+    assert ts.driver_pair_scores() is None and ts.pair_bound == bound
+    assert driver and bound >= len(driver)
+    assert 0 < len(driver_skip) < len(driver)
 
-    def scores(pair_gate, token_gate=10**9):
-        monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_PAIRS", pair_gate)
-        monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", token_gate)
-        ts = TokenSimilarity(tokenizer=tokenizer, weighting=weighting,
-                             measure=measure).fit(dirty)
-        return _scored(ts), _scored(ts, skip), ts.pair_bound
-
-    driver, driver_skip, bound = scores(10**9)
-    broadcast, broadcast_skip, bound_b = scores(-1)
-    relational, relational_skip, _ = scores(-1, token_gate=-1)
-    assert driver and bound == bound_b and bound >= len(driver)
+    broadcast, broadcast_skip = _scored(ts), _scored(ts, skip)
     assert driver == broadcast
     assert driver_skip == broadcast_skip
-    assert 0 < len(driver_skip) < len(driver)
-    for want, got in ((relational, driver), (relational_skip, driver_skip)):
+    monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", -1)
+    for want, got in ((_scored(ts), driver), (_scored(ts, skip), driver_skip)):
         assert got.keys() == want.keys()
         for k in got:
             assert got[k] == pytest.approx(want[k], rel=1e-12, abs=1e-15), k
@@ -270,8 +274,10 @@ def test_pipeline_partition_and_lineage_on_both_sides_of_the_pair_gate(
 ):
     """MatchPipeline([ExactKeyPass(), TokenSimPass(0.7)]) gives the same
     partition whether TokenSimPass builds its edges on the driver, scores
-    on Spark after a driver fit, or fits on Spark; lineage records the
-    pair bound, the gate and the path taken."""
+    on Spark after a driver fit, or fits on Spark, and, with more raw
+    strings than normalized forms and the fit gate between the two counts,
+    when the driver fit and scores come without the keyed rows; lineage
+    records the pair bound, the gate and the path that ran."""
     from nama_spark.plans.pipeline import ExactKeyPass, MatchPipeline, TokenSimPass
 
     records = _pipeline_records(spark)
@@ -299,3 +305,16 @@ def test_pipeline_partition_and_lineage_on_both_sides_of_the_pair_gate(
     assert lin_spark["pair_bound"] == lin_driver["pair_bound"]
     assert lin_fit["driver_path"] == 0.0
     assert "pair_bound" not in lin_fit
+    if normalize is None:
+        return
+    from nama_spark.functions.normalize import norm_key
+
+    keyed = records.select(F.col("repo").alias("string")).distinct().select(
+        norm_key(F.col("string"), normalize).alias("norm")
+    ).where(F.col("norm").isNotNull() & (F.col("norm") != ""))
+    n_keyed, n_norm = keyed.count(), keyed.distinct().count()
+    assert n_norm < n_keyed
+    unkeyed, lin_unkeyed = run(10**9, fit_gate=n_norm)
+    assert unkeyed == driver
+    assert lin_unkeyed["driver_path"] == 1.0
+    assert lin_unkeyed["pair_bound"] == lin_driver["pair_bound"]

@@ -20,25 +20,15 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def plan_candidate_scoring(spark, sf_dir):
-    """bench.py's candidate_scoring plan (block join + scorer) at 300
-    entities. At that size pair_scores blocks and scores on the driver and
-    its plan is one LocalRelation, so the driver pair gate
-    (token_similarity._TOKENSIM_DRIVER_PAIRS) is forced to −1 for the
-    capture: the plan shown is the Spark path that runs above the gate."""
     from fixtures.make_fixtures import fixture_dataframes, make_fixture
     from nama_spark.functions.normalize import simplify_corp
-    from nama_spark.operators import token_similarity as TS
+    from nama_spark.operators.token_similarity import TokenSimilarity
 
     fx = make_fixture(seed=7, n_entities=300, max_files=3)
     records, _, _ = fixture_dataframes(spark, fx)
     names = records.select(simplify_corp(F.col("repo")).alias("string")).distinct()
-    ts = TS.TokenSimilarity(max_block_size=100).fit(names)
-    gate = TS._TOKENSIM_DRIVER_PAIRS
-    TS._TOKENSIM_DRIVER_PAIRS = -1
-    try:
-        return ts.pair_scores()
-    finally:
-        TS._TOKENSIM_DRIVER_PAIRS = gate
+    ts = TokenSimilarity(max_block_size=100).fit(names)
+    return ts.pair_scores()
 
 
 def plan_winnow_near_pairs(spark, sf_dir):
