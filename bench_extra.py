@@ -71,7 +71,7 @@ def region_pipeline_er(spark, sf_dir):
     records = records.cache()
     records.count()
     t = T(spark)
-    # --- mirror MatchPipeline._run_fused phase by phase ---
+    # --- mirror MatchPipeline.run phase by phase ---
     lineage = LineageLog(spark, None)
     names = records.groupBy(F.col("repo").alias("string")).agg(
         F.count(F.lit(1)).alias("count")

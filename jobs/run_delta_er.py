@@ -29,13 +29,16 @@ Each fold takes one of two paths, chosen from the sizes of its inputs:
   ``limit(cap + 1)`` Arrow read), the state is read by one Arrow collect
   per table and ``operators.delta_fold.fold`` runs the whole fold in Python
   on that one snapshot: no Spark job runs between the state read and the
-  state write. Clusters and entity ids are written from local frames; the
-  token table is the prior version's file plus the new strings' rows. A
-  40-name delta into a ~900-name state costs 8 Spark jobs instead of 53.
-  The gates also hold as this choice's crossover: folding 40 names into
-  states of up to 37k names (1.94M token rows), the driver fold took less
-  CPU and wall time than the distributed one (docs/SCALE.md).
-- *Distributed fold.* Above either gate, the relational operators run:
+  state write. The fold enumerates pairs only while those touching the
+  delta number at most ``_TOKENSIM_DRIVER_PAIRS``; past it, the
+  distributed fold runs instead. Clusters and entity ids are written from
+  local frames; the token table is the prior version's file plus the new
+  strings' rows. A 40-name delta into a ~900-name state costs 8 Spark
+  jobs instead of 53. The gates also hold as this choice's crossover:
+  folding 40 names into states of up to 37k names (1.94M token rows), the
+  driver fold took less CPU and wall time than the distributed one
+  (docs/SCALE.md).
+- *Distributed fold.* Above any gate, the relational operators run:
   TokenSimilarity.predict_incremental (fit_incremental tokenizes only
   genuinely new strings against the carried token table;
   token_block_pairs_against enumerates new-touching candidates only;
@@ -165,7 +168,7 @@ def main(argv=None):
     )
 
     version = _current_version(args.state)
-    fold_path = rows = sizes = None
+    fold_path = out = sizes = None
     if args.init:
         if version is not None:
             raise SystemExit(f"--init but {args.state}/CURRENT exists")
@@ -206,14 +209,16 @@ def main(argv=None):
                 TS._TOKENSIM_DRIVER_FIT_STRINGS,
             )
             if delta_rows is not None:
-                rows = [_rows(df) for df in (prior_df, prev_ids, prev_tokens)]
-                rows += [delta_rows]
-        fold_path = "distributed" if rows is None else "driver"
-    if rows is not None:
-        prior_rows, id_rows, token_rows, delta_rows = rows
-        strings = [r[0] for r in delta_rows]
-        out = delta_fold.fold(prior_rows, id_rows, token_rows, strings, ts,
-                              args.threshold)
+                prior_rows, id_rows, token_rows = (
+                    _rows(df) for df in (prior_df, prev_ids, prev_tokens)
+                )
+                strings = [r[0] for r in delta_rows]
+                # None when the delta's blocks hold more pairs than the
+                # driver enumerates: the relational fold takes them
+                out = delta_fold.fold(prior_rows, id_rows, token_rows,
+                                      strings, ts, args.threshold)
+        fold_path = "distributed" if out is None else "driver"
+    if out is not None:
         # one file per table: the rows are driver-sized by the gates. The
         # carried token rows are re-read from the prior version's file by
         # the write itself rather than shipped back from the driver.

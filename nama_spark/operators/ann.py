@@ -12,7 +12,6 @@
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -200,13 +199,12 @@ def cosine_topk_bruteforce(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """(query_id, neighbor_id, cos) — exact top-k cosine neighbors, excluding
     self-matches. Deterministic tie-break on neighbor id.
 
-    With ``broadcast_queries`` (the small-query-batch contract) and
-    float/double vectors, this runs one eager driver action first:
+    With float/double vectors (the small-query-batch contract), this runs
+    one eager driver action first:
     ``queries.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()``. A query side
     within the cap ships once as a broadcast and the scan runs as ONE
     mapInPandas over the corpus (round 6, guide §4.2): every corpus batch
@@ -215,8 +213,8 @@ def cosine_topk_bruteforce(
     lossless truncation) reach the global rank window, so the
     |q|·|corpus| crossJoin rows never materialize. Scoring is bit-exact
     vs cosine_sim_expr (tests/test_ivf_cell_topk.py). A bigger query
-    side, other element types, or ``broadcast_queries=False`` take the
-    crossJoin + cosine_sim_expr path (broadcast-hinted when asked)."""
+    side or other element types take the broadcast-hinted crossJoin +
+    cosine_sim_expr path."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -224,7 +222,7 @@ def cosine_topk_bruteforce(
     q_elem = _np_elem(q.schema["qv"].dataType)
     c_elem = _np_elem(c.schema["cv"].dataType)
     qrows = None
-    if broadcast_queries and q_elem is not None and c_elem is not None:
+    if q_elem is not None and c_elem is not None:
         qrows = q.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()
         if not qrows:
             return _empty_topk(corpus, id_col)
@@ -248,9 +246,9 @@ def cosine_topk_bruteforce(
             T.StructField("cos", T.DoubleType()),
         ])
         return _top_k(c.mapInPandas(scan, schema=out_schema), k)
-    if broadcast_queries:
-        q = F.broadcast(q)
-    joined = c.crossJoin(q).where(F.col("query_id") != F.col("neighbor_id"))
+    joined = c.crossJoin(F.broadcast(q)).where(
+        F.col("query_id") != F.col("neighbor_id")
+    )
     return _top_k(
         joined.withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv"))), k
     )
@@ -398,16 +396,11 @@ def ivf_fit_centroids(
 _IVF_FLAT_MAX_CELLS = 4096
 
 # Fit-sample row count under which k-means runs as a driver-side numpy
-# Lloyd instead of MLlib (bounded collect: rows × dim × 8 B ≈ 25 MB at the
-# default). Override via env for bigger/smaller driver heaps.
-_KMEANS_DRIVER_ROWS = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_ROWS", "50000")
-)
+# Lloyd instead of MLlib (bounded collect: rows × dim × 8 B ≈ 25 MB).
+_KMEANS_DRIVER_ROWS = 50_000
 # _np_kmeans' k-means++ seeding is O(n·k²·d) — the driver path is only a
 # win for small cell counts; larger k stays on the distributed MLlib fit.
-_KMEANS_DRIVER_MAX_K = int(
-    os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_MAX_K", "64")
-)
+_KMEANS_DRIVER_MAX_K = 64
 
 
 def _np_kmeans(X: np.ndarray, k: int, rng: np.random.RandomState,

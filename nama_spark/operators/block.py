@@ -30,7 +30,6 @@ from itertools import combinations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nama_spark.functions.tokenize import token_weights, tokens_table
 from nama_spark.session import local_frame
 
 
@@ -246,24 +245,6 @@ def prefix_filtered_pairs(
     cand = salt_pairs(cand)
     scored = token_similarity_scores(cand, tokens, weights, measure=measure)
     return scored.where(F.col("score") >= threshold)
-
-
-def build_token_blocking(
-    strings_df: DataFrame,
-    tokenizer: str = "nmgrams23",
-    weighting: str = "tf-idf",
-    min_block_size: int = 2,
-    max_block_size: int = 100,
-    reference_doc_counts: bool = True,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One-stop B2 builder → (tokens, weights, candidate_pairs)."""
-    tokens = tokens_table(strings_df, tokenizer=tokenizer)
-    weights = token_weights(
-        tokens, weighting=weighting, reference_doc_counts=reference_doc_counts
-    )
-    elig = eligible_tokens(weights, min_block_size, max_block_size)
-    pairs = token_block_pairs(tokens, elig, max_block_size)
-    return tokens, weights, pairs
 
 
 def global_rank(

@@ -150,133 +150,53 @@ def _overlap_prefilter(
     )
 
 
-# Verify-stage broadcast gate: candidate-doc item tables at or under this
-# row count (~40 B/row → tens of MB built) broadcast so the intersection
-# fan-out never shuffles; larger sets use the shuffled joins. Override via
-# SPARK_GRAFT_VERIFY_BROADCAST_ROWS for clusters with bigger/smaller
-# executor memory.
-import os as _os
-
-_VERIFY_BROADCAST_ROWS = int(
-    _os.environ.get("SPARK_GRAFT_VERIFY_BROADCAST_ROWS", "2000000")
-)
-# Candidate-pair count at which the collected-set verify path starts to
-# beat the shuffled joins (its collect+broadcast is a fixed cost).
-_VERIFY_SET_PATH_MIN_PAIRS = int(
-    _os.environ.get("SPARK_GRAFT_VERIFY_SET_PATH_MIN_PAIRS", "100000")
-)
+# Read by no verify path: kept under its name because perfbench's corpus
+# workload prints it beside the verify gates.
+_VERIFY_BROADCAST_ROWS = 2_000_000
+# Candidate-pair count from which _pair_overlap_pre's hot-mask verify pays
+# its fixed costs; smaller candidate sets take _pair_overlap's semi-joined
+# verify.
+_VERIFY_SET_PATH_MIN_PAIRS = 100_000
 
 
 def _pair_overlap(cand: DataFrame, items: DataFrame, item_col: str) -> DataFrame:
     """(id0, id1, n_inter, n0, n1) for candidate pairs over an exploded
-    (doc_id, <item_col>) set table — the shared verify stage of the
-    shingle/fingerprint near-dup operators.
+    (doc_id, <item_col>) set table — the exact shuffled-join verify behind
+    ``_pair_overlap_pre``'s small-candidate and over-budget cases.
 
-    Round-6 shape (guide §2.3/§2.4): the pair list is pinned once and its
-    doc ids SEMI-JOIN the item table before anything else, so the
-    intersection joins and the size aggregate shuffle O(candidate-doc
-    items), not the whole corpus — the candidate-driven discipline
-    minhash_lsh_pairs_delta already used (measured on winnow_near_pairs at
-    sf0.1: the two full ~4M-row fingerprint shuffles of the old verify
-    stage drop to the ~500 candidate docs' rows). Exactness is unchanged:
-    intersection and set sizes only ever read rows of docs that appear in
-    a candidate pair.
+    Round-6 shape (guide §2.3/§2.4): the pair list is pinned once and, when
+    it holds fewer than ``_VERIFY_SET_PATH_MIN_PAIRS`` pairs, its doc ids
+    SEMI-JOIN the item table before anything else, so the intersection
+    joins and the size aggregate shuffle O(candidate-doc items), not the
+    whole corpus — the candidate-driven discipline minhash_lsh_pairs_delta
+    already used (measured on winnow_near_pairs at sf0.1: the two full
+    ~4M-row fingerprint shuffles of the old verify stage drop to the ~500
+    candidate docs' rows). Exactness is unchanged: intersection and set
+    sizes only ever read rows of docs that appear in a candidate pair.
 
-    When the candidate-doc item table fits a broadcast
-    (``_VERIFY_BROADCAST_ROWS``), both intersection joins build from the
-    broadcast side and the whole verify runs MAP-SIDE over the candidate
-    stream — the O(cand × items-per-doc) fan-out is pipelined through two
-    broadcast-hash probes straight into the partial aggregation, and the
-    fan-out never hits an exchange (measured on winnow_near_pairs at
-    sf0.1: the ~150M-row (pair, item) shuffle this removes was the whole
-    query's dominant stage, 27 s → 7 s end to end). Past the gate the
-    plan falls back to the shuffled joins — same results, cluster-scale
-    safe (the adaptive small-side discipline of cluster.py's union-find
-    fast path)."""
+    A larger candidate set touches most docs, so the semi-join would cost a
+    full pass for ~no reduction (measured at DOC_MULT=10 minhash: +3.4 s of
+    pure adaptive machinery): the joins read the caller's item table, which
+    ``_pair_overlap_pre`` has already pinned."""
     cand = cand.localCheckpoint(eager=False)
-    n_cand = cand.count()
-    if n_cand < _VERIFY_SET_PATH_MIN_PAIRS:
-        # Small candidate set (e.g. ngram_jaccard's few hundred survivors
-        # after the ub-prefilter): restrict the item table to candidate
-        # docs (cheap semi-join, big win when candidates are few) and run
-        # the plain shuffled joins — the native-set path's fixed
-        # collect+broadcast cost is not worth it here (measured 4.5-6.3 s
-        # vs 8.5-10.5 s on the sf0.1 ngram workload).
-        ids = (
-            cand.select(F.col("id0").alias("doc_id"))
-            .union(cand.select(F.col("id1").alias("doc_id")))
-            .distinct()
-        )
-        it = items.join(ids, "doc_id", "left_semi").localCheckpoint(
-            eager=False
-        )
-        return _pair_overlap_joined(cand, it, item_col)
-    # Large candidate set: most docs appear in some pair, so the semi-join
-    # restriction would cost a full pass for ~no reduction (measured at
-    # DOC_MULT=10 minhash: +3.4 s of pure adaptive machinery) — work on
-    # the full item table directly.
-    it = items.localCheckpoint(eager=False)
-    if it.count() <= _VERIFY_BROADCAST_ROWS:
-        # Vectorized-native path (guide §4.2): the candidate docs' item
-        # sets are collected once (bounded by the gate), broadcast, and
-        # each task intersects python sets in C over Arrow batches of the
-        # pair stream — the per-pair cost is ~µs and, crucially, the
-        # O(cand × items-per-doc) fan-out never materializes as operator
-        # rows at all. The JVM alternatives measured on winnow_near_pairs
-        # at sf0.1 (1.38M candidates × ~110 items): shuffled row fan-out
-        # 188M operator rows / 692 CPU-s; array_intersect expressions
-        # ~40 µs/pair (hash-set build per row) — both dominated the query.
-        # The pair stream is re-spread first because AQE's bytes-based
-        # coalescing is blind to per-row verify cost.
-        spark = cand.sparkSession
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        cand = cand.repartition(n_parts, F.col("id0"), F.col("id1"))
-        doc_sets: dict = {}
-        for r in it.collect():
-            doc_sets.setdefault(r["doc_id"], set()).add(r[item_col])
-        bc = spark.sparkContext.broadcast(doc_sets)
-        out_schema = T.StructType(
-            [cand.schema["id0"], cand.schema["id1"]]
-            + [
-                T.StructField(c, T.LongType())
-                for c in ("n_inter", "n0", "n1")
-            ]
-        )
-
-        def intersect_batches(batches):
-            s = bc.value
-            for pdf in batches:
-                pairs = list(zip(pdf["id0"], pdf["id1"]))
-                sets0 = [s[a] for a, _ in pairs]
-                sets1 = [s[b] for _, b in pairs]
-                yield pd.DataFrame(
-                    {
-                        "id0": pdf["id0"],
-                        "id1": pdf["id1"],
-                        "n_inter": [
-                            len(a & b) for a, b in zip(sets0, sets1)
-                        ],
-                        "n0": [len(a) for a in sets0],
-                        "n1": [len(b) for b in sets1],
-                    }
-                )
-
-        return cand.mapInPandas(intersect_batches, schema=out_schema)
+    if cand.count() >= _VERIFY_SET_PATH_MIN_PAIRS:
+        return _pair_overlap_joined(cand, items, item_col)
+    ids = (
+        cand.select(F.col("id0").alias("doc_id"))
+        .union(cand.select(F.col("id1").alias("doc_id")))
+        .distinct()
+    )
+    it = items.join(ids, "doc_id", "left_semi").localCheckpoint(eager=False)
     return _pair_overlap_joined(cand, it, item_col)
 
 
 # Byte budget for the broadcast hot-item bitmask matrix (docs-with-hot-items
-# × ceil(distinct-hot/64) 8-byte words). Past it the verify falls back to the
-# full set-intersection path. Override via SPARK_GRAFT_VERIFY_HOT_MASK_BYTES.
-_VERIFY_HOT_MASK_MAX_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_VERIFY_HOT_MASK_BYTES", str(256 * 2**20))
-)
+# × ceil(distinct-hot/64) 8-byte words). Past it the verify falls back to
+# the shuffled-join verify (_pair_overlap).
+_VERIFY_HOT_MASK_MAX_BYTES = 256 * 2**20
 # Driver-collect budget for the (doc_id, bit) int pairs the mask build reads
-# (16 B/row through Arrow — far lighter than the full set-dict collect, so
-# the gate sits well above _VERIFY_BROADCAST_ROWS).
-_VERIFY_HOT_COLLECT_ROWS = int(
-    _os.environ.get("SPARK_GRAFT_VERIFY_HOT_COLLECT_ROWS", str(16_000_000))
-)
+# (16 B/row through Arrow).
+_VERIFY_HOT_COLLECT_ROWS = 16_000_000
 _POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
 
@@ -300,8 +220,9 @@ def _pair_overlap_pre(
 
     Small candidate sets (under ``_VERIFY_SET_PATH_MIN_PAIRS``) keep the
     pre-round-6 semi-join + shuffled verify (the fixed costs here are not
-    worth it — same reasoning as ``_pair_overlap``); an over-budget mask
-    matrix falls back to ``_pair_overlap`` unchanged."""
+    worth it); more than ``_VERIFY_HOT_COLLECT_ROWS`` hot rows or an
+    over-budget mask matrix fall back to the shuffled verify over the
+    pinned item table (``_pair_overlap``)."""
     cand = pre.select("id0", "id1", "n_elig", "n0", "n1").localCheckpoint(
         eager=False
     )

@@ -14,7 +14,10 @@ the relational operator it stands in for:
    path's driver step, against the delta: every distinct delta string
    against the union over tokens with 2 ≤ d ≤ max_block_size
    (block.token_block_pairs_against), scored by the broadcast scorer's
-   ``_pair_scorer``.
+   ``_pair_scorer``, while the pairs touching the delta number at most
+   ``_TOKENSIM_DRIVER_PAIRS`` (counted per block before any pair is
+   enumerated); past it the fold returns None and the caller takes the
+   relational fold.
 4. ``unite_incremental`` — MatchData.unite_incremental: union-find
    (``cluster._union_find_local``) on the group quotient, then touched-only
    re-election.
@@ -32,7 +35,7 @@ from collections import Counter
 from typing import NamedTuple
 
 from nama_spark.operators.cluster import ENTITY_ID_SUFFIX, _union_find_local
-from nama_spark.operators.token_similarity import _block_scores
+from nama_spark.operators import token_similarity as TS
 
 
 class Fold(NamedTuple):
@@ -138,23 +141,27 @@ def fold(
     delta: list,
     ts,
     threshold: float,
-) -> Fold:
+) -> Fold | None:
     """Fold the ``delta`` strings into the persisted state: ``prior``
     (string, count, group) rows with elected labels, ``prev_ids``
     (node, entity_id) and ``prev_tokens`` (string, token, tf) rows. ``ts``
     is the TokenSimilarity whose tokenizer, weighting, measure and block
     cap apply; edges are pairs scoring at least ``threshold``. The same
     result as ``ts.predict_incremental`` with ``prev_tokens`` followed by
-    ``cluster.stable_entity_ids``."""
+    ``cluster.stable_entity_ids``, or None when the pair bound of the
+    blocks the delta touches exceeds ``_TOKENSIM_DRIVER_PAIRS``."""
     united = add_strings(prior, delta)
     known = {s for s, _c, _g in prior}
     fitted = ts._fit_rows(
         [s for s in dict.fromkeys(delta) if s is not None and s not in known],
         prev_tokens,
     )
-    _bound, scores = _block_scores(
-        fitted, ts.max_block_size, ts.measure, against=delta
+    _bound, scores = TS._block_scores(
+        fitted, ts.max_block_size, ts.measure, against=delta,
+        max_pairs=TS._TOKENSIM_DRIVER_PAIRS,
     )
+    if scores is None:
+        return None
     edges = [(a, b) for a, b, score in scores if score >= threshold]
     clusters = unite_incremental(united, edges)
     ids = stable_entity_ids(prev_ids, [(s, g) for s, _c, g in clusters])

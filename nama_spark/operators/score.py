@@ -30,7 +30,6 @@ folding used for threshold pushdown (embeddings.py:147).
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -44,9 +43,7 @@ from nama_spark.session import local_frame
 # Corpus size (distinct strings) under which soft_tfidf_scores collects
 # the corpus, builds the df table driver-side and runs the whole pair
 # stage in one mapInPandas instead of the ~20-exchange relational plan.
-_SOFT_TFIDF_DRIVER_CORPUS_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SOFT_TFIDF_DRIVER_CORPUS_ROWS", "200000")
-)
+_SOFT_TFIDF_DRIVER_CORPUS_ROWS = 200_000
 
 
 # ---------- relational token-set scorer ----------

@@ -54,20 +54,14 @@ from nama_spark.session import collect_rows, local_frame
 # join-aggregate plans (rows ≈ strings × tokens-per-string; ~2M rows ≈ low
 # hundreds of MB built). It also bounds fit_incremental's collect of the
 # carried token table.
-import os as _os
-
-_TOKENSIM_BROADCAST_TOKEN_ROWS = int(
-    _os.environ.get("SPARK_GRAFT_TOKENSIM_BROADCAST_TOKEN_ROWS", "2000000")
-)
+_TOKENSIM_BROADCAST_TOKEN_ROWS = 2_000_000
 # Universe size (distinct strings) under which fit() — and fit_incremental,
 # for its delta strings — tokenizes driver-side
 # (python twin of the tokenizer expressions, verified equal in
 # tests/test_tokensim_broadcast_path.py) instead of running the
 # distinct+explode+groupBy chain distributed — at a few thousand strings
 # the distributed fit is pure stage latency (measured ~4 s vs ~0.5 s).
-_TOKENSIM_DRIVER_FIT_STRINGS = int(
-    _os.environ.get("SPARK_GRAFT_TOKENSIM_DRIVER_FIT_STRINGS", "100000")
-)
+_TOKENSIM_DRIVER_FIT_STRINGS = 100_000
 # Pair bound under which driver_pair_scores blocks and scores a driver
 # fit's pairs in Python (TokenSimPass takes it up to its edges) instead of
 # leaving them to pair_scores' block join and scorer. The bound is Σ over
@@ -207,14 +201,21 @@ def _block_scores(
     against=None, max_pairs: int | None = None,
 ) -> tuple:
     """Token blocking and scoring on a driver fit's rows: (bound, scores).
-    ``bound`` is Σ over eligible tokens of C(block size, 2), read before
+    ``bound`` is Σ over eligible tokens of the block's pairs that touch an
+    ``against`` string, C(n, 2) − C(n − k, 2) for a block of n strings
+    holding k of them (every string when ``against`` is None), read before
     any pair is enumerated; ``scores`` are the (s0, s1, score) rows of the
     canonical candidate pairs (all of them, or those holding one of the
     ``against`` strings; block.driver_block_pairs), or None when the bound
     exceeds ``max_pairs``. The one driver block → score step of
     TokenSimilarity.driver_pair_scores and the delta fold."""
     blocks = driver_token_blocks(fitted.tokens, fitted.weights, max_block_size)
-    bound = sum(n * (n - 1) // 2 for n in map(len, blocks))
+    new = None if against is None else set(against)
+    bound = 0
+    for members in blocks:
+        n = len(members)
+        rest = 0 if new is None else sum(s not in new for s in members)
+        bound += n * (n - 1) // 2 - rest * (rest - 1) // 2
     if max_pairs is not None and bound > max_pairs:
         return bound, None
     model, wd = fitted.model
@@ -340,14 +341,16 @@ class TokenSimilarity:
         worker runs when they are scanned), cached but not counted: a
         driver_pair_scores caller never scans them, and a Spark scorer's
         repeated scans read the cache instead of re-shipping the rows in
-        every task. The score model _fit_model builds is broadcast now
-        instead of re-collecting the two tables on the first pair_scores
-        call."""
+        every task. When _scores will read it (the token rows are within
+        _TOKENSIM_BROADCAST_TOKEN_ROWS), the score model _fit_model builds
+        is broadcast now instead of re-collecting the two tables on the
+        first pair_scores call; a larger fit ships no model."""
         self._fitted = fitted
         self._tokens = local_frame(spark, fitted.tokens, _TOKEN_SCHEMA).cache()
         self._weights = local_frame(spark, fitted.weights, _WEIGHT_SCHEMA).cache()
         self._n_token_rows = len(fitted.tokens)
-        self._score_bc = spark.sparkContext.broadcast(fitted.model)
+        if self._n_token_rows <= _TOKENSIM_BROADCAST_TOKEN_ROWS:
+            self._score_bc = spark.sparkContext.broadcast(fitted.model)
 
     def fit_incremental(
         self,
@@ -370,9 +373,10 @@ class TokenSimilarity:
         _TOKENSIM_BROADCAST_TOKEN_ROWS rows (the score model's own bound)
         and the delta at most _TOKENSIM_DRIVER_FIT_STRINGS strings, both
         are collected (each through a bounded ``limit(cap + 1)`` Arrow
-        read) and fit()'s driver fit builds the tables as local frames plus
-        the score-model broadcast. Above either cap the delta is tokenized distributed and the weights
-        come from one vocabulary-sized aggregation over the union."""
+        read) and fit()'s driver fit builds the tables as local frames (and
+        the score-model broadcast while the union is within the token
+        gate). Above either cap the delta is tokenized distributed and the
+        weights come from one vocabulary-sized aggregation over the union."""
         self.unpersist()
         delta_strings = delta_strings.select(F.col(string_col).alias("string"))
         prev = prev_tokens.select("string", "token", "tf")

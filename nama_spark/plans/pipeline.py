@@ -12,9 +12,11 @@ Scale design (the part the reference cannot do):
   name universe with multiplicities — exactly nama's counts model
   (match_data.py:21) — so every pairwise stage runs at name cardinality, not
   file cardinality; only `sha2(content,256)` ever travels for the invariant.
-- each pass writes its partition to ``<checkpoint_dir>/<NN_pass>/`` parquet;
-  on resume, completed passes load instead of recompute (per-pass _SUCCESS
-  marker is parquet's own).
+- each pass writes its edge set to ``<checkpoint_dir>/<NN_pass>_edges/``
+  parquet and one connected-components run over their union writes the
+  partition to ``<checkpoint_dir>/zz_clusters/``; on resume, completed
+  passes load instead of recompute (per-pass _SUCCESS marker is parquet's
+  own).
 - per-pass lineage rows (rows in/out, groups, wall, per-partition row stats)
   land in ``<checkpoint_dir>/lineage.parquet``.
 """
@@ -49,9 +51,6 @@ class ExactKeyPass:
         return exact_key_edges(
             md.df, norm_key(F.col("string"), self.key)
         ).select("src", "dst")
-
-    def apply(self, md: MatchData, lineage: LineageLog) -> MatchData:
-        return md.unite(self.edges(md, lineage))
 
 
 @dataclass
@@ -152,9 +151,6 @@ class TokenSimPass:
             edges = edges.select(F.col("s0").alias("src"), F.col("s1").alias("dst"))
         return edges
 
-    def apply(self, md: MatchData, lineage: LineageLog) -> MatchData:
-        return md.unite(self.edges(md, lineage))
-
 
 @dataclass
 class EmbeddingPass:
@@ -240,27 +236,20 @@ class EmbeddingPass:
             .select(F.col("r0").alias("src"), F.col("r1").alias("dst"))
         )
 
-    def apply(self, md: MatchData, lineage: LineageLog) -> MatchData:
-        return md.unite(self.edges(md, lineage))
-
 
 @dataclass
 class MatchPipeline:
     """Ordered multi-pass plan with checkpoint/resume and lineage.
 
-    Two execution modes:
-    - ``fuse_cc=True`` (default): every pass emits its edge set (each pass's
-      candidates are a function of the string universe, not of the running
-      partition), edges checkpoint per pass, and ONE connected-components run
-      closes the union. Transitive closure is monotone, so the result is
-      identical to sequential uniting — with P−1 fewer CC rounds.
-    - ``fuse_cc=False``: sequential ``pass.apply`` per pass, checkpointing
-      the partition after each (the reference's unite-after-unite shape).
+    Every pass emits its edge set (each pass's candidates are a function of
+    the string universe, not of the running partition), edges checkpoint
+    per pass, and ONE connected-components run closes the union. Transitive
+    closure is monotone, so the result is the one sequential uniting after
+    each pass would give, with P−1 fewer CC rounds.
     """
 
     passes: list = field(default_factory=lambda: [ExactKeyPass(), TokenSimPass()])
     checkpoint_dir: str | None = None
-    fuse_cc: bool = True
     # edge count under which CC runs driver-side union-find instead of the
     # iterative shuffle rounds (cluster.py small_graph_threshold)
     cc_driver_edge_cap: int = 100_000
@@ -290,39 +279,6 @@ class MatchPipeline:
         )
         lineage.add("ingest", "distinct_strings", md.df.count())
 
-        if self.fuse_cc:
-            return self._run_fused(spark, md, lineage, resume)
-
-        for i, p in enumerate(self.passes):
-            stage_dir = (
-                os.path.join(self.checkpoint_dir, f"{i:02d}_{p.name}")
-                if self.checkpoint_dir
-                else None
-            )
-            if resume and stage_dir and _checkpoint_exists(spark, stage_dir):
-                md = MatchData(spark.read.parquet(stage_dir), _relabel=False)
-                lineage.add(p.name, "resumed_from_checkpoint", 1.0, checkpoint=stage_dir)
-                continue
-            t0 = time.time()
-            md = p.apply(md, lineage)
-            if stage_dir:
-                md.df.write.mode("overwrite").parquet(stage_dir)
-                md = MatchData(spark.read.parquet(stage_dir), _relabel=False)
-            else:
-                # pin the partition: it feeds the groups count, the partition
-                # stats AND the next pass — unpinned, each consumer re-runs
-                # the whole pass chain from the source. Lazy: the groups
-                # count below materializes the pin in the same job (round 6)
-                md = MatchData(md.df.localCheckpoint(eager=False), _relabel=False)
-            wall = time.time() - t0
-            n_groups = md.df.select("group").distinct().count()
-            lineage.add(p.name, "wall_sec", wall, checkpoint=stage_dir)
-            lineage.add(p.name, "groups", n_groups, checkpoint=stage_dir)
-            lineage.add_partition_stats(md.df, p.name)
-            lineage.flush()
-        return md, lineage
-
-    def _run_fused(self, spark, md: MatchData, lineage: LineageLog, resume: bool):
         all_edges = None
         all_resumed = True
         for i, p in enumerate(self.passes):

@@ -1,7 +1,9 @@
 """Round-6 verify-stage internals: the block → ub-prefilter → exact-verify
-split (_overlap_prefilter + _pair_overlap) must reproduce the naive
+split (_overlap_prefilter + _pair_overlap_pre) must reproduce the naive
 blocked-pairs semantics exactly, on BOTH verify implementations (the
-shuffled row joins and the collected-set mapInPandas path)."""
+shuffled row joins of _pair_overlap and the hot-item bitmask
+mapInPandas), and the over-budget mask case must fall back to the
+shuffled joins."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -64,14 +66,14 @@ def _docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-@pytest.mark.parametrize("force_set_path", [False, True])
+@pytest.mark.parametrize("hot_mask", [False, True])
 def test_ngram_jaccard_matches_naive_on_both_paths(
-    spark, monkeypatch, force_set_path
+    spark, monkeypatch, hot_mask
 ):
     docs = _docs(spark)
     k, threshold, max_df = 3, 0.3, 5
     monkeypatch.setattr(
-        D, "_VERIFY_SET_PATH_MIN_PAIRS", 0 if force_set_path else 10**9
+        D, "_VERIFY_SET_PATH_MIN_PAIRS", 0 if hot_mask else 10**9
     )
     got = {
         (r["id0"], r["id1"]): r["jaccard"]
@@ -85,13 +87,13 @@ def test_ngram_jaccard_matches_naive_on_both_paths(
         assert got[p] == pytest.approx(want[p], abs=1e-12)
 
 
-@pytest.mark.parametrize("force_set_path", [False, True])
+@pytest.mark.parametrize("hot_mask", [False, True])
 def test_containment_matches_old_semantics_on_both_paths(
-    spark, monkeypatch, force_set_path
+    spark, monkeypatch, hot_mask
 ):
     docs = _docs(spark)
     monkeypatch.setattr(
-        D, "_VERIFY_SET_PATH_MIN_PAIRS", 0 if force_set_path else 10**9
+        D, "_VERIFY_SET_PATH_MIN_PAIRS", 0 if hot_mask else 10**9
     )
     out = D.containment_pairs(docs, k=3, threshold=0.5, max_df=5).collect()
     # schema stays (id0, id1, n0, n1, containment) with long counts
@@ -125,12 +127,28 @@ def test_winnow_hot_mask_path_equals_joined_path(spark, monkeypatch):
     assert set(got) == set(want) and len(got) > 0
     for p in got:
         assert got[p] == pytest.approx(want[p], abs=1e-12)
-    # over-budget mask matrix must fall back to the set path, same results
+    # an over-budget mask matrix falls back to the shuffled-join verify
+    # over the whole (pinned) item table, with the same pairs and jaccard
     monkeypatch.setattr(D, "_VERIFY_HOT_MASK_MAX_BYTES", 1)
+    overlap_items, joined_items = [], []
+    overlap, joined = D._pair_overlap, D._pair_overlap_joined
+
+    def spy_overlap(cand, items, item_col):
+        overlap_items.append(items)
+        return overlap(cand, items, item_col)
+
+    def spy_joined(cand, it, item_col):
+        joined_items.append(it)
+        return joined(cand, it, item_col)
+
+    monkeypatch.setattr(D, "_pair_overlap", spy_overlap)
+    monkeypatch.setattr(D, "_pair_overlap_joined", spy_joined)
     fallback = {
         (r["id0"], r["id1"]): r["jaccard"]
         for r in D.winnow_near_pairs(docs, **kw).collect()
     }
+    assert len(overlap_items) == 1
+    assert len(joined_items) == 1 and joined_items[0] is overlap_items[0]
     assert fallback == got
 
 

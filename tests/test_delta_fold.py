@@ -90,6 +90,29 @@ def test_block_pairs_match_token_block_pairs_against(spark, case):
     assert sorted(got) == _rows(want) and got
 
 
+@pytest.mark.parametrize("case", sorted(BLOCK_CASES))
+def test_block_scores_bound_counts_pairs_touching_against(case):
+    """_block_scores' pair bound counts, per block, the member pairs that
+    hold an ``against`` string (every pair without ``against``), and gates
+    the enumeration at ``max_pairs``."""
+    from itertools import combinations
+
+    tokenizer, cap, prior, delta = BLOCK_CASES[case]
+    strings = dict.fromkeys(s for s in prior + delta if s is not None)
+    fit = TS._fit_model(strings, [], tokenizer, "tf-idf")
+    blocks = driver_token_blocks(fit.tokens, fit.weights, cap)
+    pairs = [p for m in blocks for p in combinations(m, 2)]
+    against = delta[:2]
+    touching = sum(1 for a, b in pairs if a in against or b in against)
+    assert 0 < touching < len(pairs)
+    bound, scores = TS._block_scores(fit, cap, "jaccard", against=against,
+                                     max_pairs=touching)
+    assert bound == touching and scores
+    assert TS._block_scores(fit, cap, "jaccard", against=against,
+                            max_pairs=touching - 1) == (touching, None)
+    assert TS._block_scores(fit, cap, "jaccard")[0] == len(pairs)
+
+
 # ---------- scoring ----------
 
 

@@ -1250,6 +1250,63 @@ def test_run_delta_er_state_over_a_gate_moves_no_rows(
             groups[f"acme widget company {i}"]
 
 
+def test_run_delta_er_fold_over_the_pair_gate_runs_distributed(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """A delta whose blocks hold more pairs than _TOKENSIM_DRIVER_PAIRS
+    takes the relational fold, which writes the rows the driver fold
+    writes."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    try:
+        import run_delta_er
+    finally:
+        sys.path.pop(0)
+
+    from nama_spark.operators import token_similarity as TS
+
+    p0, p1 = str(tmp_path / "d0.parquet"), str(tmp_path / "d1.parquet")
+    spark.createDataFrame(
+        [(f"acme widget company {i}",) for i in range(12)], ["repo"]
+    ).write.parquet(p0)
+    spark.createDataFrame(
+        [(f"acme widget compny {i}",) for i in range(4)] + [("zzz new",)],
+        ["repo"],
+    ).write.parquet(p1)
+    folds = {}
+    for gate in (TS._TOKENSIM_DRIVER_PAIRS, 0):
+        monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_PAIRS", gate)
+        state = str(tmp_path / f"state_{gate}")
+        argv = ["--string-col", "repo", "--state", state, "--threshold", "0.7"]
+        assert run_delta_er.main(["--init", "--delta-input", p0] + argv) == 0
+        assert run_delta_er.main(["--delta-input", p1] + argv) == 0
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        folds[summary["fold"]] = [
+            sorted(spark.read.parquet(f"{state}/v000002/{t}").collect())
+            for t in ("clusters", "entity_ids", "tokens")
+        ]
+    assert sorted(folds) == ["distributed", "driver"]
+    assert folds["distributed"] == folds["driver"]
+
+
+def test_no_environment_reads_outside_session():
+    """Source guard: the library's size gates are plain constants; only
+    session.py reads the environment (its deployment settings)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "nama_spark"
+    offenders = [
+        f"{p.relative_to(root)}:{no}"
+        for p in sorted(root.rglob("*.py"))
+        if p.name != "session.py" or p.parent != root
+        for no, line in enumerate(p.read_text().splitlines(), 1)
+        if "environ" in line or "getenv" in line
+    ]
+    assert not offenders, offenders
+
+
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):
     """jobs/run_linkage.py --mode one_to_one: the peeling selection links
     every left to a distinct right and records the peel round."""

@@ -44,6 +44,24 @@ def test_broadcast_path_matches_relational(spark, names, measure, monkeypatch):
         assert fast[k] == pytest.approx(slow[k], abs=1e-12), k
 
 
+def test_driver_fit_over_the_token_gate_broadcasts_no_model(
+    spark, names, monkeypatch
+):
+    """A driver fit whose token rows exceed _TOKENSIM_BROADCAST_TOKEN_ROWS
+    ships no score model, and pair_scores runs the relational scorer."""
+    from nama_spark.operators.score import token_similarity_scores
+
+    monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", 1)
+    ts = TokenSimilarity(max_block_size=100).fit(names)
+    assert ts._fitted is not None and ts._n_token_rows > 1
+    assert ts._score_bc is None
+    got = sorted(tuple(r) for r in ts.pair_scores().collect())
+    want = token_similarity_scores(ts.candidate_pairs(), ts._tokens,
+                                   ts._weights, measure=ts.measure)
+    assert got == sorted(tuple(r) for r in want.collect()) and got
+    assert ts._score_bc is None
+
+
 @pytest.mark.parametrize("kind", ["nmgrams23", "bigrams", "trigrams", "words"])
 def test_python_tokenizer_twin_matches_jvm(spark, kind):
     from nama_spark.functions.tokenize import tokens_table
