@@ -159,27 +159,30 @@ _VERIFY_BROADCAST_ROWS = 2_000_000
 _VERIFY_SET_PATH_MIN_PAIRS = 100_000
 
 
-def _pair_overlap(cand: DataFrame, items: DataFrame, item_col: str) -> DataFrame:
+def _pair_overlap(
+    cand: DataFrame, items: DataFrame, item_col: str, n_cand: int
+) -> DataFrame:
     """(id0, id1, n_inter, n0, n1) for candidate pairs over an exploded
     (doc_id, <item_col>) set table — the exact shuffled-join verify behind
     ``_pair_overlap_pre``'s small-candidate and over-budget cases.
 
-    Round-6 shape (guide §2.3/§2.4): the pair list is pinned once and, when
-    it holds fewer than ``_VERIFY_SET_PATH_MIN_PAIRS`` pairs, its doc ids
-    SEMI-JOIN the item table before anything else, so the intersection
-    joins and the size aggregate shuffle O(candidate-doc items), not the
-    whole corpus — the candidate-driven discipline minhash_lsh_pairs_delta
-    already used (measured on winnow_near_pairs at sf0.1: the two full
-    ~4M-row fingerprint shuffles of the old verify stage drop to the ~500
-    candidate docs' rows). Exactness is unchanged: intersection and set
-    sizes only ever read rows of docs that appear in a candidate pair.
+    ``cand`` is the caller's pinned pair list and ``n_cand`` its count, so
+    this verify runs no count of its own. Round-6 shape (guide §2.3/§2.4):
+    when the list holds fewer than ``_VERIFY_SET_PATH_MIN_PAIRS`` pairs,
+    its doc ids SEMI-JOIN the item table before anything else, so the
+    intersection joins and the size aggregate shuffle O(candidate-doc
+    items), not the whole corpus — the candidate-driven discipline
+    minhash_lsh_pairs_delta already used (measured on winnow_near_pairs at
+    sf0.1: the two full ~4M-row fingerprint shuffles of the old verify
+    stage drop to the ~500 candidate docs' rows). Exactness is unchanged:
+    intersection and set sizes only ever read rows of docs that appear in a
+    candidate pair.
 
     A larger candidate set touches most docs, so the semi-join would cost a
     full pass for ~no reduction (measured at DOC_MULT=10 minhash: +3.4 s of
     pure adaptive machinery): the joins read the caller's item table, which
     ``_pair_overlap_pre`` has already pinned."""
-    cand = cand.localCheckpoint(eager=False)
-    if cand.count() >= _VERIFY_SET_PATH_MIN_PAIRS:
+    if n_cand >= _VERIFY_SET_PATH_MIN_PAIRS:
         return _pair_overlap_joined(cand, items, item_col)
     ids = (
         cand.select(F.col("id0").alias("doc_id"))
@@ -228,7 +231,7 @@ def _pair_overlap_pre(
     )
     n_cand = cand.count()
     if n_cand < _VERIFY_SET_PATH_MIN_PAIRS:
-        return _pair_overlap(cand.select("id0", "id1"), items, item_col)
+        return _pair_overlap(cand.select("id0", "id1"), items, item_col, n_cand)
 
     it = items.localCheckpoint(eager=False)
     spark = cand.sparkSession
@@ -252,7 +255,7 @@ def _pair_overlap_pre(
         # no hot items anywhere: the prefilter counts ARE the verify
         return passthrough
     if n_hot_rows > _VERIFY_HOT_COLLECT_ROWS:
-        return _pair_overlap(cand.select("id0", "id1"), it, item_col)
+        return _pair_overlap(cand.select("id0", "id1"), it, item_col, n_cand)
 
     # hot vocabulary is small by construction (each hot item repeats
     # > max_df times: distinct hot ≤ rows/max_df) — collect it, assign bit
@@ -262,7 +265,7 @@ def _pair_overlap_pre(
     n_bits = len(hot_vocab)
     n_words = (n_bits + 63) // 64
     if (n_hot_docs + 1) * n_words * 8 > _VERIFY_HOT_MASK_MAX_BYTES:
-        return _pair_overlap(cand.select("id0", "id1"), it, item_col)
+        return _pair_overlap(cand.select("id0", "id1"), it, item_col, n_cand)
     bit_tab = local_frame(
         spark,
         [(v, i) for i, v in enumerate(hot_vocab)],

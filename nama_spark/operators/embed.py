@@ -13,8 +13,11 @@ similarity — and is fully deterministic (seeded), so tests are reproducible.
 
 Spark realization: one ``mapInPandas`` pass (Arrow batches; the projection
 matrix is built once per python worker and cached — no per-row Python at the
-Spark layer). Everything downstream (cosine, thresholding, clustering) is
-relational or MLlib.
+Spark layer). Downstream, cosine, thresholding and clustering are relational
+or MLlib, with one exception: the pipeline's EmbeddingPass, on a universe
+within ``_EMBED_DRIVER_PAIRS`` pairs, embeds on the driver with the same
+per-string function (``embed_driver``) and runs the exact scan
+``brp_pairs`` under the BRP join's own predicate, so no Spark job runs.
 
 Capabilities mapped (cites against /root/reference):
 - ``embed``                → SimilarityModel.embed, similarity_model.py:64-112
@@ -27,6 +30,9 @@ Capabilities mapped (cites against /root/reference):
   (embeddings.py:301-307) with MLlib BucketedRandomProjectionLSH; for unit
   vectors cos ≥ t ⇔ euclidean ≤ sqrt(2−2t), so the threshold pushes down
   into the LSH join distance.
+- ``brp_pairs``            → the batched matmul scan itself
+  (embeddings.py:144-174, 301-307), blocked on the driver, thresholded
+  with lsh_candidates' predicate.
 - save/load                → embeddings.py:45-68, 628-644 (parquet + JSON
   sidecar instead of zip+npy).
 """
@@ -59,13 +65,22 @@ _PROJ_CACHE: dict = {}
 
 
 def _projection(seed: int, n_buckets: int, dim: int) -> np.ndarray:
-    """Seeded Gaussian projection matrix, cached per python worker."""
+    """Seeded Gaussian projection matrix, cached per process.
+
+    Drawn in row chunks from one ``RandomState`` and divided chunk by chunk,
+    so no float64 copy of the whole matrix is ever held (33.5 MB at the
+    default 65536 × 64). The legacy Gaussian stream continues across calls,
+    so the matrix is bitwise the one-shot draw."""
     key = (seed, n_buckets, dim)
     if key not in _PROJ_CACHE:
         rng = np.random.RandomState(seed)
-        _PROJ_CACHE[key] = rng.normal(0.0, 1.0, size=(n_buckets, dim)).astype(
-            np.float32
-        ) / math.sqrt(dim)
+        proj = np.empty((n_buckets, dim), dtype=np.float32)
+        for r0 in range(0, n_buckets, 4096):
+            rows = min(4096, n_buckets - r0)
+            proj[r0 : r0 + rows] = rng.normal(0.0, 1.0, size=(rows, dim)).astype(
+                np.float32
+            ) / math.sqrt(dim)
+        _PROJ_CACHE[key] = proj
     return _PROJ_CACHE[key]
 
 
@@ -80,6 +95,47 @@ def _char_ngram_counts(s: str, n_lo: int, n_hi: int, n_buckets: int) -> dict[int
         for i in range(len(padded) - n + 1):
             b = zlib.crc32(padded[i : i + n].encode("utf-8")) % n_buckets
             out[b] = out.get(b, 0) + 1
+    return out
+
+
+def _embed_one(
+    s: str, proj: np.ndarray, n_lo: int, n_hi: int, add_upper: bool, prompt: str
+) -> np.ndarray:
+    """One string's L2-normalized float32 embedding: hashed char n-gram
+    counts, sublinear tf, projected through ``proj``. The one per-string
+    embedding, shared by ``embed_strings``' workers and ``embed_driver``."""
+    n_buckets, dim = proj.shape
+    text = prompt + s + ("\x1f" + s.upper() if add_upper else "")
+    counts = _char_ngram_counts(text, n_lo, n_hi, n_buckets)
+    if not counts:
+        return np.zeros(dim, dtype=np.float32)
+    idx = np.fromiter(counts.keys(), dtype=np.int64, count=len(counts))
+    val = np.fromiter(counts.values(), dtype=np.float32, count=len(counts))
+    # sublinear tf damping keeps hot grams from dominating
+    val = np.sqrt(val)
+    v = val @ proj[idx]
+    norm = float(np.linalg.norm(v))
+    return (v / norm if norm > 0 else v).astype(np.float32)
+
+
+def embed_driver(
+    strings: list[str],
+    dim: int = DEFAULT_DIM,
+    seed: int = 42,
+    ngram_range: tuple[int, int] = (2, 3),
+    n_buckets: int = DEFAULT_BUCKETS,
+    add_upper: bool = True,
+    prompt: str = "",
+) -> np.ndarray:
+    """(len(strings), dim) float32 matrix of ``embed_strings``' vectors for
+    a driver-side string list, row i for strings[i]: the same per-string
+    function on the same projection, so bitwise equal to its ``vec``
+    column."""
+    proj = _projection(seed, n_buckets, dim)
+    n_lo, n_hi = ngram_range
+    out = np.empty((len(strings), dim), dtype=np.float32)
+    for i, s in enumerate(strings):
+        out[i] = _embed_one(s, proj, n_lo, n_hi, add_upper, prompt)
     return out
 
 
@@ -120,23 +176,10 @@ def embed_strings(
     def embed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         proj = _projection(seed, n_buckets, dim)
         for pdf in batches:
-            vecs = []
-            for s in pdf["string"].astype(str):
-                text = prompt + s + ("\x1f" + s.upper() if add_upper else "")
-                counts = _char_ngram_counts(text, n_lo, n_hi, n_buckets)
-                if counts:
-                    idx = np.fromiter(counts.keys(), dtype=np.int64, count=len(counts))
-                    val = np.fromiter(
-                        counts.values(), dtype=np.float32, count=len(counts)
-                    )
-                    # sublinear tf damping keeps hot grams from dominating
-                    val = np.sqrt(val)
-                    v = val @ proj[idx]
-                    norm = float(np.linalg.norm(v))
-                    v = (v / norm if norm > 0 else v).astype(np.float32)
-                else:
-                    v = np.zeros(dim, dtype=np.float32)
-                vecs.append(v.tolist())
+            vecs = [
+                _embed_one(s, proj, n_lo, n_hi, add_upper, prompt).tolist()
+                for s in pdf["string"].astype(str)
+            ]
             yield pd.DataFrame(
                 {"string": pdf["string"], "count": pdf["count"], "vec": vecs}
             )
@@ -448,6 +491,18 @@ def bruteforce_candidates(
     )
 
 
+def _euclid_bound(cos_threshold: float) -> float:
+    """Euclidean distance of unit vectors at cosine ``cos_threshold``:
+    cos ≥ t ⇔ ‖a−b‖ ≤ sqrt(2−2t)."""
+    return math.sqrt(max(0.0, 2.0 - 2.0 * cos_threshold))
+
+
+def _euclid_cos(euclid):
+    """Cosine of unit vectors at euclidean distance ``euclid`` (a Column or
+    a numpy array): 1 − e·e/2, the conversion both BRP paths apply."""
+    return 1.0 - euclid * euclid / 2.0
+
+
 def lsh_candidates(
     embeddings: DataFrame,
     cos_threshold: float,
@@ -461,6 +516,10 @@ def lsh_candidates(
     the LSH join's euclidean distance threshold (threshold pushdown, same idea
     as score_to_cos at embeddings.py:147), and the join's own distance column
     converts back exactly: cos = 1 − d²/2. No second join, no recompute.
+    ``brp_pairs`` is the exact driver scan under this same predicate; the
+    pipeline's EmbeddingPass runs it instead of this join on universes
+    within ``_EMBED_DRIVER_PAIRS`` pairs, and unite_similar, its
+    constrained form and iter_scores still come here.
 
     bucket_length is deliberately small: oversized buckets degenerate the
     hash join toward the O(n²) scan (measured: 0.7 → 375 s vs 0.25 → 20 s at
@@ -469,8 +528,8 @@ def lsh_candidates(
     std 1/sqrt(dim) — 1/8 for the 64-d embeddings — and 0.25-wide buckets
     leave about 4 occupied buckets per table. Measured on the perfbench
     er_batch_delta universe: 835 vectors filled 32 buckets over the 8
-    tables and the join produced 2.69M rows (3.85·n²), which is the
-    superlinear cost in perfbench/README.md.
+    tables and the join produced 2.69M rows (3.85·n²), more than the n²/2
+    pairs of the exact scan.
     """
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
@@ -480,7 +539,7 @@ def lsh_candidates(
         # routine input at scale
         return _no_pairs(embeddings)
 
-    dist = math.sqrt(max(0.0, 2.0 - 2.0 * cos_threshold))
+    dist = _euclid_bound(cos_threshold)
     feat = embeddings.select(
         "string", array_to_vector(F.col("vec").cast("array<double>")).alias("features")
     )
@@ -502,10 +561,60 @@ def lsh_candidates(
         joined.select(
             F.col("datasetA.string").alias("s0"),
             F.col("datasetB.string").alias("s1"),
-            (F.lit(1.0) - F.col("euclid") * F.col("euclid") / F.lit(2.0)).alias("cos"),
+            _euclid_cos(F.col("euclid")).alias("cos"),
         )
         .where((F.col("s0") < F.col("s1")) & (F.col("cos") >= cos_threshold))
     )
+
+
+# Largest C(n, 2) over n distinct embedded strings for which EmbeddingPass
+# embeds and scans on the driver instead of running the MLlib BRP join. The
+# driver was ahead at every size measured on local[4] (docs/SCALE.md B3:
+# 9-42x in wall, the same edges), so the gate is the largest size measured.
+# It also bounds the pair list the driver holds when every pair passes.
+_EMBED_DRIVER_PAIRS = 150_000_000
+
+
+def brp_pairs(vecs: np.ndarray, cos_threshold: float) -> list[tuple[int, int]]:
+    """Index pairs (i, j), i < j, of the rows of ``vecs`` that pass
+    ``lsh_candidates``' predicate: euclidean distance e < sqrt(2−2t), as
+    MLlib's ``approxSimilarityJoin`` filters (strict), and 1 − e·e/2 ≥ t.
+
+    e is computed as BRP's ``keyDistance`` does: the squared differences
+    summed in dimension order in float64 over the float32 components, then
+    sqrt. So this exact scan keeps every pair the BRP join keeps, and more
+    only where the join's buckets miss a pair.
+
+    A blocked float64 matmul prefilters (‖a‖² + ‖b‖² − 2a·b ≤ e_max² plus a
+    margin of 1e-9 per unit of the largest ‖a‖²; the formula's rounding
+    error is below 1e-13 of it, so no kept pair is dropped), each block
+    about 32 MB; the exact distance runs on the survivors only."""
+    dist = _euclid_bound(cos_threshold)
+    x = vecs.astype(np.float64)
+    n, dim = x.shape
+    sq = np.einsum("ij,ij->i", x, x)
+    bound = dist * dist + 1e-9 * (1.0 + (sq.max() if n else 0.0))
+    rows = max(1, (1 << 22) // max(n, 1))
+    out: list[tuple[int, int]] = []
+    for i0 in range(0, n - 1, rows):
+        i1 = min(n - 1, i0 + rows)
+        # rows i0..i1-1 against columns i0+1..n-1
+        d2 = x[i0:i1] @ x[i0 + 1 :].T
+        d2 *= -2.0
+        d2 += sq[i0:i1, None]
+        d2 += sq[None, i0 + 1 :]
+        ii, jj = np.nonzero(d2 <= bound)
+        ii += i0
+        jj += i0 + 1
+        ii, jj = ii[jj > ii], jj[jj > ii]
+        acc = np.zeros(len(ii))
+        for k in range(dim):
+            d = x[ii, k] - x[jj, k]
+            acc += d * d
+        e = np.sqrt(acc)
+        keep = (e < dist) & (_euclid_cos(e) >= cos_threshold)
+        out.extend(zip(ii[keep].tolist(), jj[keep].tolist()))
+    return out
 
 
 def _split_hot_cells(

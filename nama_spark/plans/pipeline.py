@@ -154,7 +154,24 @@ class TokenSimPass:
 
 @dataclass
 class EmbeddingPass:
-    """B3 — LSH-candidate embedding-cosine pass (embeddings.py fast path)."""
+    """B3 — LSH-candidate embedding-cosine pass (embeddings.py fast path).
+
+    With ``candidate_mode="lsh"``, ``model="rp"`` and no ``vectors_path``,
+    one bounded Arrow collect (``_TOKENSIM_DRIVER_FIT_STRINGS`` rows) reads
+    the keyed (string, norm) rows. When the distinct norms' pair count
+    C(n, 2) is at most ``embed._EMBED_DRIVER_PAIRS``, the pass embeds them on
+    the driver (``embed.embed_driver``, bitwise ``embed_strings``' vectors),
+    keeps the pairs ``embed.brp_pairs`` finds under the BRP join's own
+    predicate (a superset of the join's pairs: the join can only miss a
+    pair), and pulls them back to raw strings through a dict; only the
+    (src, dst) edges ship, as one local frame, and no Spark job runs
+    between the collect and the edges. Otherwise, and in every other mode,
+    the pass embeds on Spark and runs ``embed.threshold_candidates`` with
+    a two-join pullback.
+
+    Lineage records the pair gate, the pair bound when the collect read
+    it, and the path taken (``driver_path`` 1 or 0), under TokenSimPass's
+    keys."""
 
     threshold: float = 0.5          # calibrated probability threshold
     alpha: float = 20.0
@@ -186,25 +203,52 @@ class EmbeddingPass:
     name: str = "embedding"
 
     def edges(self, md: MatchData, lineage: LineageLog) -> DataFrame:
-        from nama_spark.operators.embed import (
-            embed_strings,
-            embed_strings_md5,
-            threshold_candidates,
-        )
+        from nama_spark.operators import embed as E
         from nama_spark.operators.score import score_to_cos
 
+        spark = md.df.sparkSession
+        cos_t = score_to_cos(self.threshold, self.alpha)
         if self.normalize:
             key = norm_key(F.col("string"), self.normalize)
-            # pinned for the same three-consumer reason as TokenSimPass
             keyed = md.df.select("string", key.alias("norm")).where(
                 F.col("norm").isNotNull() & (F.col("norm") != "")
-            ).localCheckpoint(eager=False)
-            universe = keyed.select(F.col("norm").alias("string")).distinct()
+            )
         else:
             keyed = md.df.select("string", F.col("string").alias("norm"))
+        lineage.add(self.name, "pair_gate", E._EMBED_DRIVER_PAIRS)
+        rows = None
+        if (self.candidate_mode == "lsh" and self.model == "rp"
+                and not self.vectors_path):
+            rows = collect_rows(keyed, TS._TOKENSIM_DRIVER_FIT_STRINGS)
+        if rows is not None:
+            # NULL norms never meet the Spark pullback join either
+            by_norm = {}
+            for raw, norm in rows:
+                if norm is not None:
+                    by_norm.setdefault(norm, []).append(raw)
+            norms = sorted(by_norm)
+            pair_bound = len(norms) * (len(norms) - 1) // 2
+            lineage.add(self.name, "pair_bound", pair_bound)
+            if pair_bound <= E._EMBED_DRIVER_PAIRS:
+                lineage.add(self.name, "driver_path", 1.0)
+                vecs = E.embed_driver(norms, dim=self.dim, seed=self.seed)
+                # norms are sorted, so i < j is lsh_candidates' s0 < s1
+                edges = [
+                    (r0, r1)
+                    for i, j in E.brp_pairs(vecs, cos_t)
+                    for r0 in by_norm[norms[i]]
+                    for r1 in by_norm[norms[j]]
+                ]
+                return local_frame(spark, edges, "src string, dst string")
+        lineage.add(self.name, "driver_path", 0.0)
+
+        if self.normalize:
+            # pinned for the same three-consumer reason as TokenSimPass
+            keyed = keyed.localCheckpoint(eager=False)
+            universe = keyed.select(F.col("norm").alias("string")).distinct()
+        else:
             universe = md.df.select("string")
         if self.vectors_path:
-            spark = md.df.sparkSession
             emb = spark.read.parquet(self.vectors_path).select("string", "vec")
             emb = emb.join(universe, "string", "left_semi")
             n_universe = universe.count()
@@ -214,9 +258,9 @@ class EmbeddingPass:
                 lineage.add(self.name, "strings_missing_vectors",
                             n_universe - n_vec)
         elif self.model == "md5":
-            emb = embed_strings_md5(universe, count_col=None, dim=self.dim)
+            emb = E.embed_strings_md5(universe, count_col=None, dim=self.dim)
         else:
-            emb = embed_strings(universe, count_col=None, dim=self.dim, seed=self.seed)
+            emb = E.embed_strings(universe, count_col=None, dim=self.dim, seed=self.seed)
         mode_kwargs = {
             "ivf": dict(n_cells=self.n_cells, nprobe=self.nprobe,
                         two_level=self.two_level,
@@ -224,8 +268,8 @@ class EmbeddingPass:
             "lsh": dict(num_hash_tables=self.num_hash_tables,
                         bucket_length=self.bucket_length),
         }
-        cand = threshold_candidates(
-            emb, score_to_cos(self.threshold, self.alpha), self.candidate_mode,
+        cand = E.threshold_candidates(
+            emb, cos_t, self.candidate_mode,
             **mode_kwargs.get(self.candidate_mode, {}),
         )
         # pull normalized-form candidate edges back to raw strings

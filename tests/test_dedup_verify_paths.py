@@ -5,6 +5,8 @@ shuffled row joins of _pair_overlap and the hot-item bitmask
 mapInPandas), and the over-budget mask case must fall back to the
 shuffled joins."""
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -133,9 +135,9 @@ def test_winnow_hot_mask_path_equals_joined_path(spark, monkeypatch):
     overlap_items, joined_items = [], []
     overlap, joined = D._pair_overlap, D._pair_overlap_joined
 
-    def spy_overlap(cand, items, item_col):
+    def spy_overlap(cand, items, item_col, n_cand):
         overlap_items.append(items)
-        return overlap(cand, items, item_col)
+        return overlap(cand, items, item_col, n_cand)
 
     def spy_joined(cand, it, item_col):
         joined_items.append(it)
@@ -150,6 +152,29 @@ def test_winnow_hot_mask_path_equals_joined_path(spark, monkeypatch):
     assert len(overlap_items) == 1
     assert len(joined_items) == 1 and joined_items[0] is overlap_items[0]
     assert fallback == got
+
+
+@pytest.mark.parametrize("op", ["ngram_jaccard_pairs", "containment_pairs"])
+def test_small_candidate_verify_counts_the_pairs_once(spark, monkeypatch, op):
+    """Under _VERIFY_SET_PATH_MIN_PAIRS the verify counts its pinned
+    candidate pairs once, in _pair_overlap_pre; _pair_overlap reuses that
+    count instead of pinning and counting the same pairs again."""
+    docs = _docs(spark)
+    monkeypatch.setattr(D, "_VERIFY_SET_PATH_MIN_PAIRS", 10**9)
+    counters = []
+    frame_type = type(docs)
+    count = frame_type.count
+
+    def spy_count(df):
+        caller = sys._getframe(1).f_code.co_name
+        if caller.startswith("_pair_overlap"):
+            counters.append(caller)
+        return count(df)
+
+    monkeypatch.setattr(frame_type, "count", spy_count)
+    out = getattr(D, op)(docs, k=3, threshold=0.3, max_df=5).collect()
+    assert out
+    assert counters == ["_pair_overlap_pre"]
 
 
 def test_hot_mask_passthrough_when_no_hot_items(spark, monkeypatch):

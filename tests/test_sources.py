@@ -1307,6 +1307,33 @@ def test_no_environment_reads_outside_session():
     assert not offenders, offenders
 
 
+def test_embedding_and_brp_cosine_each_live_once():
+    """Source guard: the per-string random-projection embedding and the BRP
+    join's 1 − e·e/2 cosine each appear once in the library, and both the
+    Spark and the driver paths call that one copy."""
+    import inspect
+    import pathlib
+
+    from nama_spark.operators import embed as E
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "nama_spark"
+    for needle in ("val @ proj[idx]", "euclid * euclid / 2.0"):
+        hits = [
+            f"{p.relative_to(root)}:{no}"
+            for p in sorted(root.rglob("*.py"))
+            for no, line in enumerate(p.read_text().splitlines(), 1)
+            if needle in line
+        ]
+        assert len(hits) == 1, (needle, hits)
+    for fn, shared in [
+        (E.embed_strings, "_embed_one("),
+        (E.embed_driver, "_embed_one("),
+        (E.lsh_candidates, "_euclid_cos("),
+        (E.brp_pairs, "_euclid_cos("),
+    ]:
+        assert shared in inspect.getsource(fn), (fn.__name__, shared)
+
+
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):
     """jobs/run_linkage.py --mode one_to_one: the peeling selection links
     every left to a distinct right and records the peel round."""
