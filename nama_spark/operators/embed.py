@@ -15,9 +15,10 @@ Spark realization: one ``mapInPandas`` pass (Arrow batches; the projection
 matrix is built once per python worker and cached — no per-row Python at the
 Spark layer). Downstream, cosine, thresholding and clustering are relational
 or MLlib, with one exception: the pipeline's EmbeddingPass, on a universe
-within ``_EMBED_DRIVER_PAIRS`` pairs, embeds on the driver with the same
+its one bounded collect reads, embeds on the driver with the same
 per-string function (``embed_driver``) and runs the exact scan
-``brp_pairs`` under the BRP join's own predicate, so no Spark job runs.
+``brp_pairs`` under the BRP join's own predicate, so no Spark job runs
+while the kept edges stay within ``_EMBED_DRIVER_PAIRS``.
 
 Capabilities mapped (cites against /root/reference):
 - ``embed``                → SimilarityModel.embed, similarity_model.py:64-112
@@ -119,23 +120,17 @@ def _embed_one(
 
 
 def embed_driver(
-    strings: list[str],
-    dim: int = DEFAULT_DIM,
-    seed: int = 42,
-    ngram_range: tuple[int, int] = (2, 3),
-    n_buckets: int = DEFAULT_BUCKETS,
-    add_upper: bool = True,
-    prompt: str = "",
+    strings: list[str], dim: int = DEFAULT_DIM, seed: int = 42
 ) -> np.ndarray:
-    """(len(strings), dim) float32 matrix of ``embed_strings``' vectors for
-    a driver-side string list, row i for strings[i]: the same per-string
+    """(len(strings), dim) float32 matrix of ``embed_strings``' vectors (at
+    its default n-gram range, buckets, case augmentation and prompt) for a
+    driver-side string list, row i for strings[i]: the same per-string
     function on the same projection, so bitwise equal to its ``vec``
     column."""
-    proj = _projection(seed, n_buckets, dim)
-    n_lo, n_hi = ngram_range
+    proj = _projection(seed, DEFAULT_BUCKETS, dim)
     out = np.empty((len(strings), dim), dtype=np.float32)
     for i, s in enumerate(strings):
-        out[i] = _embed_one(s, proj, n_lo, n_hi, add_upper, prompt)
+        out[i] = _embed_one(s, proj, 2, 3, True, "")
     return out
 
 
@@ -464,6 +459,15 @@ def threshold_candidates(
     raise ValueError(f"unknown candidate_mode: {candidate_mode!r}")
 
 
+def driver_scan(candidate_mode: str):
+    """The exact driver-side scan that stands in for ``threshold_candidates``'
+    generator ``candidate_mode`` on a universe held on the driver, or None
+    when the mode has none. Only "lsh" has one, ``brp_pairs``: the BRP
+    join's own predicate over every pair, so its pairs are a superset of
+    the join's."""
+    return {"lsh": brp_pairs}.get(candidate_mode)
+
+
 def _no_pairs(embeddings: DataFrame) -> DataFrame:
     """Zero-row (s0, s1, cos) frame for an empty embedding universe."""
     return embeddings.select(
@@ -517,9 +521,10 @@ def lsh_candidates(
     as score_to_cos at embeddings.py:147), and the join's own distance column
     converts back exactly: cos = 1 − d²/2. No second join, no recompute.
     ``brp_pairs`` is the exact driver scan under this same predicate; the
-    pipeline's EmbeddingPass runs it instead of this join on universes
-    within ``_EMBED_DRIVER_PAIRS`` pairs, and unite_similar, its
-    constrained form and iter_scores still come here.
+    pipeline's EmbeddingPass runs it instead of this join on universes its
+    collect reads while the kept edges stay within ``_EMBED_DRIVER_PAIRS``,
+    and unite_similar, its constrained form and iter_scores still come
+    here.
 
     bucket_length is deliberately small: oversized buckets degenerate the
     hash join toward the O(n²) scan (measured: 0.7 → 375 s vs 0.25 → 20 s at
@@ -567,18 +572,25 @@ def lsh_candidates(
     )
 
 
-# Largest C(n, 2) over n distinct embedded strings for which EmbeddingPass
-# embeds and scans on the driver instead of running the MLlib BRP join. The
-# driver was ahead at every size measured on local[4] (docs/SCALE.md B3:
-# 9-42x in wall, the same edges), so the gate is the largest size measured.
-# It also bounds the pair list the driver holds when every pair passes.
-_EMBED_DRIVER_PAIRS = 150_000_000
+# Most (src, dst) edges EmbeddingPass keeps on the driver: past it
+# brp_pairs gives up and the pass runs the Spark embed and the BRP join,
+# which keep the pairs on the executors. Every pair passes at a threshold
+# of 0 or less, so without it the driver would hold C(n, 2) of them. The
+# driver path's Python peak grows by 300-315 bytes per kept edge (the pair
+# list, the raw-string pullback and the local frame's Arrow copy; measured
+# in docs/SCALE.md B3), so this bound, TokenSimPass's driver pair bound,
+# holds it near 1 GB. The scan's time needs no bound: the driver was ahead
+# of the BRP join at every universe the collect reads.
+_EMBED_DRIVER_PAIRS = 3_500_000
 
 
-def brp_pairs(vecs: np.ndarray, cos_threshold: float) -> list[tuple[int, int]]:
+def brp_pairs(
+    vecs: np.ndarray, cos_threshold: float, max_pairs: int
+) -> list[tuple[int, int]] | None:
     """Index pairs (i, j), i < j, of the rows of ``vecs`` that pass
     ``lsh_candidates``' predicate: euclidean distance e < sqrt(2−2t), as
-    MLlib's ``approxSimilarityJoin`` filters (strict), and 1 − e·e/2 ≥ t.
+    MLlib's ``approxSimilarityJoin`` filters (strict), and 1 − e·e/2 ≥ t;
+    None once more than ``max_pairs`` pass.
 
     e is computed as BRP's ``keyDistance`` does: the squared differences
     summed in dimension order in float64 over the float32 components, then
@@ -613,6 +625,8 @@ def brp_pairs(vecs: np.ndarray, cos_threshold: float) -> list[tuple[int, int]]:
             acc += d * d
         e = np.sqrt(acc)
         keep = (e < dist) & (_euclid_cos(e) >= cos_threshold)
+        if len(out) + int(keep.sum()) > max_pairs:
+            return None
         out.extend(zip(ii[keep].tolist(), jj[keep].tolist()))
     return out
 

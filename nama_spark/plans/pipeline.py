@@ -156,22 +156,26 @@ class TokenSimPass:
 class EmbeddingPass:
     """B3 — LSH-candidate embedding-cosine pass (embeddings.py fast path).
 
-    With ``candidate_mode="lsh"``, ``model="rp"`` and no ``vectors_path``,
-    one bounded Arrow collect (``_TOKENSIM_DRIVER_FIT_STRINGS`` rows) reads
-    the keyed (string, norm) rows. When the distinct norms' pair count
-    C(n, 2) is at most ``embed._EMBED_DRIVER_PAIRS``, the pass embeds them on
-    the driver (``embed.embed_driver``, bitwise ``embed_strings``' vectors),
-    keeps the pairs ``embed.brp_pairs`` finds under the BRP join's own
-    predicate (a superset of the join's pairs: the join can only miss a
-    pair), and pulls them back to raw strings through a dict; only the
-    (src, dst) edges ship, as one local frame, and no Spark job runs
-    between the collect and the edges. Otherwise, and in every other mode,
+    With ``model="rp"``, no ``vectors_path`` and a ``candidate_mode`` that
+    has an exact driver scan (``embed.driver_scan``: "lsh"), one bounded
+    Arrow collect (``_TOKENSIM_DRIVER_FIT_STRINGS`` rows) reads the keyed
+    (string, norm) rows. The pass embeds the distinct norms on the driver
+    (``embed.embed_driver``, bitwise ``embed_strings``' vectors), keeps the
+    pairs ``embed.brp_pairs`` finds under the BRP join's own predicate (a
+    superset of the join's pairs: the join can only miss a pair), and
+    pulls them back to raw strings through a dict; only the (src, dst)
+    edges ship, as one local frame, and no Spark job runs between the
+    collect and the edges. If those edges would pass
+    ``embed._EMBED_DRIVER_PAIRS`` (a low threshold keeps every pair), the
+    collected rows become a local frame and the pass runs the Spark path
+    on it. Otherwise — over the collect bound, and in every other mode —
     the pass embeds on Spark and runs ``embed.threshold_candidates`` with
     a two-join pullback.
 
-    Lineage records the pair gate, the pair bound when the collect read
-    it, and the path taken (``driver_path`` 1 or 0), under TokenSimPass's
-    keys."""
+    Lineage records, under TokenSimPass's keys, the edge gate when the
+    driver scan applies, C(n, 2) over the distinct norms when the collect
+    read them (``pair_bound``: the pairs the scan visits), and the path
+    taken (``driver_path`` 1 or 0)."""
 
     threshold: float = 0.5          # calibrated probability threshold
     alpha: float = 20.0
@@ -215,10 +219,12 @@ class EmbeddingPass:
             )
         else:
             keyed = md.df.select("string", F.col("string").alias("norm"))
-        lineage.add(self.name, "pair_gate", E._EMBED_DRIVER_PAIRS)
+        scan = None
+        if self.model == "rp" and not self.vectors_path:
+            scan = E.driver_scan(self.candidate_mode)
         rows = None
-        if (self.candidate_mode == "lsh" and self.model == "rp"
-                and not self.vectors_path):
+        if scan is not None:
+            lineage.add(self.name, "pair_gate", E._EMBED_DRIVER_PAIRS)
             rows = collect_rows(keyed, TS._TOKENSIM_DRIVER_FIT_STRINGS)
         if rows is not None:
             # NULL norms never meet the Spark pullback join either
@@ -227,24 +233,31 @@ class EmbeddingPass:
                 if norm is not None:
                     by_norm.setdefault(norm, []).append(raw)
             norms = sorted(by_norm)
-            pair_bound = len(norms) * (len(norms) - 1) // 2
-            lineage.add(self.name, "pair_bound", pair_bound)
-            if pair_bound <= E._EMBED_DRIVER_PAIRS:
+            lineage.add(self.name, "pair_bound", len(norms) * (len(norms) - 1) // 2)
+            pairs = scan(
+                E.embed_driver(norms, dim=self.dim, seed=self.seed),
+                cos_t, E._EMBED_DRIVER_PAIRS,
+            )
+            sizes = [len(by_norm[s]) for s in norms]
+            if pairs is not None and sum(
+                sizes[i] * sizes[j] for i, j in pairs
+            ) <= E._EMBED_DRIVER_PAIRS:
                 lineage.add(self.name, "driver_path", 1.0)
-                vecs = E.embed_driver(norms, dim=self.dim, seed=self.seed)
                 # norms are sorted, so i < j is lsh_candidates' s0 < s1
                 edges = [
                     (r0, r1)
-                    for i, j in E.brp_pairs(vecs, cos_t)
+                    for i, j in pairs
                     for r0 in by_norm[norms[i]]
                     for r1 in by_norm[norms[j]]
                 ]
                 return local_frame(spark, edges, "src string, dst string")
+            keyed = local_frame(spark, rows, "string string, norm string")
+        elif self.normalize:
+            # pinned for the same three-consumer reason as TokenSimPass
+            keyed = keyed.localCheckpoint(eager=False)
         lineage.add(self.name, "driver_path", 0.0)
 
         if self.normalize:
-            # pinned for the same three-consumer reason as TokenSimPass
-            keyed = keyed.localCheckpoint(eager=False)
             universe = keyed.select(F.col("norm").alias("string")).distinct()
         else:
             universe = md.df.select("string")

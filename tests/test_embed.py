@@ -571,21 +571,18 @@ def test_semdedup_kmeans_path(spark):
 
 def test_vector_layer_has_one_distance_fold_and_one_mode_dispatch():
     """Source guard: in the library, the squared-distance fold lives only in
-    ann._sq_dist and candidate_mode is dispatched only in
-    embed.threshold_candidates. EmbeddingPass.edges compares it once more,
-    to take its driver snapshot, which exists for "lsh" only; any other
-    mode, an unknown one included, still goes to threshold_candidates."""
+    ann._sq_dist and candidate_mode is compared only in
+    embed.threshold_candidates."""
     import inspect
     from pathlib import Path
 
     import nama_spark
     from nama_spark.operators import ann, embed
-    from nama_spark.plans.pipeline import EmbeddingPass
 
     root = Path(nama_spark.__file__).parent
-    for needle, owners in [
-        ("(x - y) * (x - y)", [ann._sq_dist]),
-        ("candidate_mode ==", [embed.threshold_candidates, EmbeddingPass.edges]),
+    for needle, owner in [
+        ("(x - y) * (x - y)", ann._sq_dist),
+        ("candidate_mode ==", embed.threshold_candidates),
     ]:
         hits = [
             f"{p.relative_to(root)}:{no}"
@@ -593,8 +590,4 @@ def test_vector_layer_has_one_distance_fold_and_one_mode_dispatch():
             for no, line in enumerate(p.read_text().splitlines(), 1)
             if needle in line
         ]
-        counts = [inspect.getsource(o).count(needle) for o in owners]
-        assert len(hits) == sum(counts) and counts[0] > 0, hits
-    assert inspect.getsource(EmbeddingPass.edges).count(
-        'self.candidate_mode == "lsh"'
-    ) == 1
+        assert len(hits) == inspect.getsource(owner).count(needle) > 0, hits

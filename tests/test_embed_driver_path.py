@@ -1,9 +1,11 @@
 """EmbeddingPass's driver snapshot: the driver embedding is bitwise the
 Spark one, the driver scan keeps exactly the pairs MLlib's BRP join keeps
 when every vector shares a bucket, and the pipeline gives the same
-partition on both sides of ``embed._EMBED_DRIVER_PAIRS``."""
+partition on both sides of ``embed._EMBED_DRIVER_PAIRS``, which bounds the
+edges the driver keeps."""
 
 import math
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -95,7 +97,9 @@ def test_driver_kernel_matches_mllib_brp_at_the_distance_boundary(spark):
         ("distance one ulp below the bound", float(np.nextafter(e, 9.0))),
     ]:
         t = _threshold_for_bound(bound)
-        driver = {(strings[i], strings[j]) for i, j in E.brp_pairs(vecs, t)}
+        driver = {
+            (strings[i], strings[j]) for i, j in E.brp_pairs(vecs, t, 10**9)
+        }
         mllib = {
             (r["s0"], r["s1"])
             for r in E.lsh_candidates(emb, t, bucket_length=1e9).collect()
@@ -136,8 +140,9 @@ def test_pipeline_partition_and_lineage_on_both_sides_of_the_embed_gate(
 ):
     """MatchPipeline([ExactKeyPass(), TokenSimPass(0.7), EmbeddingPass()])
     gives the same partition whether EmbeddingPass embeds and scans on the
-    driver or runs the Spark embed and the BRP join; lineage records the
-    gate, the pair bound C(n_norms, 2) on both sides and the path taken."""
+    driver or runs the Spark embed and the BRP join (an edge gate of -1
+    turns every driver scan back); lineage records the gate, the pair bound
+    C(n_norms, 2) on both sides and the path taken."""
     from nama_spark.functions.normalize import norm_key
     from nama_spark.plans.pipeline import (
         EmbeddingPass,
@@ -195,3 +200,75 @@ def test_pipeline_partition_and_lineage_on_both_sides_of_the_embed_gate(
         assert n == 1 and len({g for _s, _c, g in driver}) == 1
     if universe == "normalizes_to_nothing" and normalize:
         assert n == 0
+
+
+def test_brp_pairs_gives_up_past_max_pairs():
+    """At a cosine threshold every pair passes, brp_pairs returns all C(n, 2)
+    pairs up to max_pairs and None past it, in one block or several."""
+    rng = np.random.RandomState(3)
+    vecs = rng.normal(size=(40, 8)).astype(np.float32)
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    every = [(i, j) for i in range(40) for j in range(i + 1, 40)]
+    assert sorted(E.brp_pairs(vecs, -99.0, len(every))) == every
+    assert E.brp_pairs(vecs, -99.0, len(every) - 1) is None
+    assert E.brp_pairs(vecs[:1], -99.0, 0) == []
+
+
+def test_driver_scan_is_lsh_only():
+    assert E.driver_scan("lsh") is E.brp_pairs
+    for mode in ("bruteforce", "ivf", "nope"):
+        assert E.driver_scan(mode) is None
+
+
+@pytest.mark.parametrize("normalize", ["simplify_corp", None])
+def test_low_threshold_past_the_edge_gate_runs_the_spark_path(
+    spark, monkeypatch, normalize
+):
+    """At threshold 0 every pair passes the predicate (score_to_cos gives
+    -99), so the driver would hold every raw pair. With the edge gate one
+    below that count the pass falls back to the Spark embed and BRP join on
+    the collected rows, and its edges are a subset of the driver's."""
+    from nama_spark.operators.matchdata import MatchData
+    from nama_spark.plans.lineage import LineageLog
+    from nama_spark.plans.pipeline import EmbeddingPass
+
+    raw = [s for s in _UNIVERSES["dirty"] if s is not None]
+    md = MatchData.from_unmatched(
+        spark.createDataFrame([(s,) for s in raw], "string string")
+    )
+    names = [r["string"] for r in md.df.select("string").collect()]
+    if normalize:
+        from nama_spark.functions.normalize import norm_key
+
+        keyed = [
+            tuple(r)
+            for r in md.df.select(
+                "string", norm_key(F.col("string"), normalize).alias("n")
+            ).collect()
+            if r["n"]
+        ]
+        every = len(keyed) * (len(keyed) - 1) // 2 - sum(
+            c * (c - 1) // 2
+            for c in Counter(n for _s, n in keyed).values()
+        )
+    else:
+        every = len(names) * (len(names) - 1) // 2
+
+    def edges(gate):
+        monkeypatch.setattr(E, "_EMBED_DRIVER_PAIRS", gate)
+        lineage = LineageLog(spark)
+        out = {
+            tuple(r)
+            for r in EmbeddingPass(threshold=0.0, normalize=normalize)
+            .edges(md, lineage).collect()
+        }
+        return out, {r["metric"]: r["value"] for r in lineage.rows}
+
+    driver, lin_driver = edges(10**9)
+    assert len(driver) == every > 0
+    assert lin_driver["driver_path"] == 1.0
+    spark_side, lin_spark = edges(every - 1)
+    assert lin_spark["driver_path"] == 0.0
+    assert lin_spark["pair_gate"] == every - 1
+    assert lin_spark["pair_bound"] == lin_driver["pair_bound"]
+    assert spark_side <= driver
