@@ -35,9 +35,14 @@ from nama_spark.session import local_frame
 
 def exact_key_edges(strings_df: DataFrame, key_col, string_col: str = "string") -> DataFrame:
     """B1: (src, dst) edges linking every string to the first string of its
-    normalization-key group. Linear, one shuffle on the key."""
-    from pyspark.sql import Window
+    normalization-key group. Linear, one shuffle on the key.
 
+    NULL and empty keys are "no key": the string stays a singleton. This
+    is a deliberate deviation from the reference, which unites ALL strings
+    sharing a key value (match_data.py:284-287); at data scale uniting
+    every suffix-only name whose normalization key is '' would fabricate
+    one mega-cluster out of unrelated records. ``MatchData.unite(Column)``
+    and ``ExactKeyPass`` both take their edges from here."""
     keyed = strings_df.select(
         F.col(string_col).alias("string"), key_col.alias("key")
     ).where(F.col("key").isNotNull() & (F.col("key") != ""))

@@ -14,11 +14,11 @@ similarity — and is fully deterministic (seeded), so tests are reproducible.
 Spark realization: one ``mapInPandas`` pass (Arrow batches; the projection
 matrix is built once per python worker and cached — no per-row Python at the
 Spark layer). Downstream, cosine, thresholding and clustering are relational
-or MLlib, with one exception: the pipeline's EmbeddingPass, on a universe
-its one bounded collect reads, embeds on the driver with the same
-per-string function (``embed_driver``) and runs the exact scan
-``brp_pairs`` under the BRP join's own predicate, so no Spark job runs
-while the kept edges stay within ``_EMBED_DRIVER_PAIRS``.
+or MLlib, with one exception: the pipeline's EmbeddingPass, on a keyed
+universe the pipeline's one bounded collect read, embeds on the driver
+with the same per-string function (``embed_driver``) and runs the exact
+scan ``brp_pairs`` under the BRP join's own predicate, so no Spark job
+runs while the kept edges stay within ``_EMBED_DRIVER_PAIRS``.
 
 Capabilities mapped (cites against /root/reference):
 - ``embed``                → SimilarityModel.embed, similarity_model.py:64-112

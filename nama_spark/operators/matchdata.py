@@ -23,6 +23,7 @@ from typing import Callable, Iterable, Mapping
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nama_spark.operators.block import exact_key_edges
 from nama_spark.operators.cluster import labels_for_nodes
 from nama_spark.session import local_frame
 
@@ -234,21 +235,8 @@ class MatchData:
         if callable(arg) and not isinstance(arg, Column):
             arg = arg(F.col("string"))
         if isinstance(arg, Column):
-            # Empty-string keys are treated as "no key" (string stays a
-            # singleton), matching exact_key_edges (block.py). Deliberate
-            # deviation from the reference, which unites ALL strings sharing
-            # a key value (match_data.py:284-287) — at data scale uniting
-            # every suffix-only name whose normalization key is '' would
-            # fabricate one mega-cluster out of unrelated records.
-            keyed = df.select("string", arg.alias("__key")).where(
-                F.col("__key").isNotNull() & (F.col("__key") != "")
-            )
-            w = Window.partitionBy("__key").orderBy("string")
-            edges = (
-                keyed.withColumn("__anchor", F.first("string").over(w))
-                .where(F.col("string") != F.col("__anchor"))
-                .select(F.col("string").alias("src"), F.col("__anchor").alias("dst"))
-            )
+            # NULL and empty keys leave a string a singleton (block.py)
+            edges = exact_key_edges(df, arg).select("src", "dst")
         elif isinstance(arg, MatchData):
             edges = arg.df.select(
                 F.col("string").alias("src"), F.col("group").alias("dst")

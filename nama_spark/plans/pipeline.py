@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import os
 import time
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,10 +33,77 @@ from pyspark.sql import functions as F
 
 from nama_spark.functions.normalize import norm_key
 from nama_spark.operators import token_similarity as TS
+from nama_spark.operators.block import exact_key_edges
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.operators.token_similarity import TokenSimilarity
 from nama_spark.plans.lineage import LineageLog
 from nama_spark.session import collect_rows, local_frame
+
+# MatchData → {(normalization key, collect bound): _Keyed}; weak, so an
+# entry lives exactly as long as its MatchData
+_KEYED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+class _Keyed:
+    """The keyed (string, norm) universe of one MatchData under one
+    normalization key, built once and read by every pass of a run.
+
+    ``df`` holds each string's ``norm_key`` under ``key``, NULL and empty
+    norms dropped; with ``key=None`` each non-NULL string is its own norm. One
+    bounded ``limit(cap + 1)`` Arrow collect (``session.collect_rows``, cap
+    ``_TOKENSIM_DRIVER_FIT_STRINGS``) reads those rows. When they fit,
+    ``df`` is them as a one-partition local frame and ``by_norm`` maps each
+    norm to its raw strings. Over the cap ``by_norm`` is None and ``df`` is
+    the keyed frame, lazily pinned when a key is set: the exact-key window,
+    a pass's universe and the pullback joins would each re-run the regex
+    chain otherwise. Norm pairs go back to raw strings through ``edges``
+    (the dict; one local frame in one partition, so only (src, dst) ships)
+    or ``pullback`` (two joins on Spark; none when ``key`` is None)."""
+
+    def __init__(self, md: MatchData, key: str | None, cap: int):
+        self.spark = md.df.sparkSession
+        self.key = key
+        norm = norm_key(F.col("string"), key) if key else F.col("string")
+        df = md.df.select("string", norm.alias("norm")).where(F.col("norm").isNotNull())
+        if key:
+            df = df.where(F.col("norm") != "")
+        rows = collect_rows(df, cap)
+        self.by_norm = None
+        if rows is not None:
+            self.by_norm = {}
+            for raw, norm in rows:
+                self.by_norm.setdefault(norm, []).append(raw)
+            df = local_frame(self.spark, rows, "string string, norm string").coalesce(1)
+        elif key:
+            df = df.localCheckpoint(eager=False)
+        self.df = df
+
+    @classmethod
+    def of(cls, md: MatchData, key: str | None) -> "_Keyed":
+        # the bound as it reads now: a caller may move it between two passes
+        memo_key = (key, TS._TOKENSIM_DRIVER_FIT_STRINGS)
+        memo = _KEYED.setdefault(md, {})
+        if memo_key not in memo:
+            memo[memo_key] = cls(md, *memo_key)
+        return memo[memo_key]
+
+    def edges(self, norm_pairs) -> DataFrame:
+        rows = [
+            (r0, r1)
+            for n0, n1 in norm_pairs
+            for r0 in self.by_norm[n0]
+            for r1 in self.by_norm[n1]
+        ]
+        return local_frame(self.spark, rows, "src string, dst string").coalesce(1)
+
+    def pullback(self, cand: DataFrame) -> DataFrame:
+        if not self.key:
+            return cand.select(F.col("s0").alias("src"), F.col("s1").alias("dst"))
+        k0 = self.df.select(F.col("string").alias("r0"), F.col("norm").alias("s0"))
+        k1 = self.df.select(F.col("string").alias("r1"), F.col("norm").alias("s1"))
+        return cand.join(k0, "s0").join(k1, "s1").select(
+            F.col("r0").alias("src"), F.col("r1").alias("dst")
+        )
 
 
 @dataclass
@@ -46,11 +114,8 @@ class ExactKeyPass:
     name: str = "exact_key"
 
     def edges(self, md: MatchData, lineage: LineageLog) -> DataFrame:
-        from nama_spark.operators.block import exact_key_edges
-
-        return exact_key_edges(
-            md.df, norm_key(F.col("string"), self.key)
-        ).select("src", "dst")
+        u = _Keyed.of(md, self.key)
+        return exact_key_edges(u.df, F.col("norm")).select("src", "dst")
 
 
 @dataclass
@@ -60,21 +125,17 @@ class TokenSimPass:
     ``normalize`` maps raw strings through a normalization key first; edges
     found between normalized forms are pulled back to the raw strings sharing
     that form (the exact pass has already united those, so the pullback adds
-    no spurious pairs).
-
-    When the keyed (string, norm) rows number at most
-    ``_TOKENSIM_DRIVER_FIT_STRINGS``, one bounded ``limit(cap + 1)`` Arrow
-    collect reads them; they become a local frame, and their distinct norms
-    go to ``TokenSimilarity.fit`` (the driver fit, no probe). Then:
+    no spurious pairs). When the keyed universe (``_Keyed``) fits its
+    collect, its distinct norms go to ``TokenSimilarity.fit`` (the driver
+    fit, no probe). Then:
 
     - *Driver.* If the driver fit's pair bound (Σ over eligible tokens of
       C(block size, 2)) is at most ``_TOKENSIM_DRIVER_PAIRS``,
       ``driver_pair_scores`` blocks and scores in Python, and the threshold
-      and the pullback (a dict from norm to raw strings) run there too:
-      only the (src, dst) edges ship, as one local frame, and no Spark job
-      runs between the collect and the edges. (A universe that fits the
-      driver fit while its keyed rows do not is fitted by fit()'s own
-      probe; its driver scores ship as a local frame to the join pullback.)
+      and the pullback run there too, so no Spark job runs between the
+      collect and the edges. (A universe that fits the driver fit while
+      its keyed rows do not is fitted by fit()'s own probe; its driver
+      scores ship as a local frame to the join pullback.)
     - *Spark.* Otherwise ``pair_scores`` runs the block join and scorer and
       the pullback is two joins, as before the driver path existed.
 
@@ -90,34 +151,16 @@ class TokenSimPass:
     name: str = "token_sim"
 
     def edges(self, md: MatchData, lineage: LineageLog) -> DataFrame:
-        spark = md.df.sparkSession
-        if self.normalize:
-            key = norm_key(F.col("string"), self.normalize)
-            keyed = md.df.select("string", key.alias("norm")).where(
-                F.col("norm").isNotNull() & (F.col("norm") != "")
-            )
-        else:
-            keyed = md.df.select("string", F.col("string").alias("norm"))
+        u = _Keyed.of(md, self.normalize)
         ts = TokenSimilarity(
             tokenizer=self.tokenizer,
             weighting=self.weighting,
             measure=self.measure,
             max_block_size=self.max_block_size,
         )
-        rows = collect_rows(keyed, TS._TOKENSIM_DRIVER_FIT_STRINGS)
-        by_norm = None
-        if rows is not None:
-            by_norm = {}
-            for raw, norm in rows:
-                by_norm.setdefault(norm, []).append(raw)
-            keyed = local_frame(spark, rows, "string string, norm string")
-        elif self.normalize:
-            # pinned: consumed by the universe AND both pullback joins —
-            # three re-evaluations of the regex chain otherwise (round 6)
-            keyed = keyed.localCheckpoint(eager=False)
         ts.fit(
-            keyed.select(F.col("norm").alias("string")),
-            strings=None if by_norm is None else list(by_norm),
+            u.df.select(F.col("norm").alias("string")),
+            strings=None if u.by_norm is None else list(u.by_norm),
         )
         scored = ts.driver_pair_scores()
         lineage.add(self.name, "threshold", self.threshold)
@@ -125,52 +168,33 @@ class TokenSimPass:
         if ts.pair_bound is not None:
             lineage.add(self.name, "pair_bound", ts.pair_bound)
         lineage.add(self.name, "driver_path", float(scored is not None))
-        if scored is not None and by_norm is not None:
-            edges = [
-                (r0, r1)
-                for n0, n1, score in scored
-                if score >= self.threshold
-                for r0 in by_norm[n0]
-                for r1 in by_norm[n1]
-            ]
-            return local_frame(spark, edges, "src string, dst string")
+        if scored is not None and u.by_norm is not None:
+            return u.edges(
+                (n0, n1) for n0, n1, score in scored if score >= self.threshold
+            )
         scores = (
             ts.pair_scores() if scored is None
-            else local_frame(spark, scored, TS._SCORE_SCHEMA)
+            else local_frame(u.spark, scored, TS._SCORE_SCHEMA)
         )
-        edges = scores.where(F.col("score") >= self.threshold)
-        if self.normalize:
-            k0 = keyed.select(F.col("string").alias("r0"), F.col("norm").alias("s0"))
-            k1 = keyed.select(F.col("string").alias("r1"), F.col("norm").alias("s1"))
-            edges = (
-                edges.join(k0, "s0").join(k1, "s1").select(
-                    F.col("r0").alias("src"), F.col("r1").alias("dst")
-                )
-            )
-        else:
-            edges = edges.select(F.col("s0").alias("src"), F.col("s1").alias("dst"))
-        return edges
+        return u.pullback(scores.where(F.col("score") >= self.threshold))
 
 
 @dataclass
 class EmbeddingPass:
     """B3 — LSH-candidate embedding-cosine pass (embeddings.py fast path).
 
-    With ``model="rp"``, no ``vectors_path`` and a ``candidate_mode`` that
-    has an exact driver scan (``embed.driver_scan``: "lsh"), one bounded
-    Arrow collect (``_TOKENSIM_DRIVER_FIT_STRINGS`` rows) reads the keyed
-    (string, norm) rows. The pass embeds the distinct norms on the driver
-    (``embed.embed_driver``, bitwise ``embed_strings``' vectors), keeps the
-    pairs ``embed.brp_pairs`` finds under the BRP join's own predicate (a
-    superset of the join's pairs: the join can only miss a pair), and
-    pulls them back to raw strings through a dict; only the (src, dst)
-    edges ship, as one local frame, and no Spark job runs between the
+    With ``model="rp"``, no ``vectors_path``, a ``candidate_mode`` that has
+    an exact driver scan (``embed.driver_scan``: "lsh") and a keyed
+    universe (``_Keyed``) that fits its collect, the pass embeds the
+    distinct norms on the driver (``embed.embed_driver``, bitwise
+    ``embed_strings``' vectors) and keeps the pairs ``embed.brp_pairs``
+    finds under the BRP join's own predicate (a superset of the join's
+    pairs: the join can only miss a pair); no Spark job runs between the
     collect and the edges. If those edges would pass
     ``embed._EMBED_DRIVER_PAIRS`` (a low threshold keeps every pair), the
-    collected rows become a local frame and the pass runs the Spark path
-    on it. Otherwise — over the collect bound, and in every other mode —
-    the pass embeds on Spark and runs ``embed.threshold_candidates`` with
-    a two-join pullback.
+    pass runs the Spark path on the collected rows. Otherwise — over the
+    collect bound, and in every other mode — the pass embeds on Spark and
+    runs ``embed.threshold_candidates`` with the join pullback.
 
     Lineage records, under TokenSimPass's keys, the edge gate when the
     driver scan applies, C(n, 2) over the distinct norms when the collect
@@ -182,18 +206,11 @@ class EmbeddingPass:
     dim: int = 64
     seed: int = 42
     candidate_mode: str = "lsh"     # "lsh" | "ivf" | "bruteforce"
-    num_hash_tables: int = 8
-    bucket_length: float = 0.25
     # ivf mode: auto n_cells (~n/400) when None; the density-robust scale
     # path — see ivf_candidates (the BRP-LSH join cost grows with bucket
     # occupancy; measured 57× at 10× vectors, IVF 4.6×)
     n_cells: int | None = None
     nprobe: int = 2
-    # ivf mode scale knobs (forwarded): two_level=None auto-engages the
-    # coarse quantizer past the flat cell cap (ann._IVF_FLAT_MAX_CELLS);
-    # max_cell_rows pre-splits hot cells
-    two_level: bool | None = None
-    max_cell_rows: int | None = None
     normalize: str | None = "simplify_corp"
     # "rp" = seeded Gaussian random projection (embed_strings);
     # "md5" = engine-portable md5 feature hashing (embed_strings_md5 —
@@ -210,88 +227,48 @@ class EmbeddingPass:
         from nama_spark.operators import embed as E
         from nama_spark.operators.score import score_to_cos
 
-        spark = md.df.sparkSession
+        u = _Keyed.of(md, self.normalize)
         cos_t = score_to_cos(self.threshold, self.alpha)
-        if self.normalize:
-            key = norm_key(F.col("string"), self.normalize)
-            keyed = md.df.select("string", key.alias("norm")).where(
-                F.col("norm").isNotNull() & (F.col("norm") != "")
-            )
-        else:
-            keyed = md.df.select("string", F.col("string").alias("norm"))
         scan = None
         if self.model == "rp" and not self.vectors_path:
             scan = E.driver_scan(self.candidate_mode)
-        rows = None
         if scan is not None:
             lineage.add(self.name, "pair_gate", E._EMBED_DRIVER_PAIRS)
-            rows = collect_rows(keyed, TS._TOKENSIM_DRIVER_FIT_STRINGS)
-        if rows is not None:
-            # NULL norms never meet the Spark pullback join either
-            by_norm = {}
-            for raw, norm in rows:
-                if norm is not None:
-                    by_norm.setdefault(norm, []).append(raw)
-            norms = sorted(by_norm)
+        if scan is not None and u.by_norm is not None:
+            norms = sorted(u.by_norm)
             lineage.add(self.name, "pair_bound", len(norms) * (len(norms) - 1) // 2)
             pairs = scan(
                 E.embed_driver(norms, dim=self.dim, seed=self.seed),
                 cos_t, E._EMBED_DRIVER_PAIRS,
             )
-            sizes = [len(by_norm[s]) for s in norms]
+            sizes = [len(u.by_norm[s]) for s in norms]
             if pairs is not None and sum(
                 sizes[i] * sizes[j] for i, j in pairs
             ) <= E._EMBED_DRIVER_PAIRS:
                 lineage.add(self.name, "driver_path", 1.0)
                 # norms are sorted, so i < j is lsh_candidates' s0 < s1
-                edges = [
-                    (r0, r1)
-                    for i, j in pairs
-                    for r0 in by_norm[norms[i]]
-                    for r1 in by_norm[norms[j]]
-                ]
-                return local_frame(spark, edges, "src string, dst string")
-            keyed = local_frame(spark, rows, "string string, norm string")
-        elif self.normalize:
-            # pinned for the same three-consumer reason as TokenSimPass
-            keyed = keyed.localCheckpoint(eager=False)
+                return u.edges((norms[i], norms[j]) for i, j in pairs)
         lineage.add(self.name, "driver_path", 0.0)
 
-        if self.normalize:
-            universe = keyed.select(F.col("norm").alias("string")).distinct()
-        else:
-            universe = md.df.select("string")
+        universe = u.df.select(F.col("norm").alias("string")).distinct()
         if self.vectors_path:
-            emb = spark.read.parquet(self.vectors_path).select("string", "vec")
+            emb = u.spark.read.parquet(self.vectors_path).select("string", "vec")
             emb = emb.join(universe, "string", "left_semi")
             n_universe = universe.count()
             n_vec = emb.count()
             lineage.add(self.name, "strings_with_vectors", n_vec)
             if n_vec < n_universe:
-                lineage.add(self.name, "strings_missing_vectors",
-                            n_universe - n_vec)
+                lineage.add(self.name, "strings_missing_vectors", n_universe - n_vec)
         elif self.model == "md5":
             emb = E.embed_strings_md5(universe, count_col=None, dim=self.dim)
         else:
             emb = E.embed_strings(universe, count_col=None, dim=self.dim, seed=self.seed)
-        mode_kwargs = {
-            "ivf": dict(n_cells=self.n_cells, nprobe=self.nprobe,
-                        two_level=self.two_level,
-                        max_cell_rows=self.max_cell_rows),
-            "lsh": dict(num_hash_tables=self.num_hash_tables,
-                        bucket_length=self.bucket_length),
-        }
+        # only ivf takes options: the mode dispatch is threshold_candidates'
+        mode_kwargs = {"ivf": dict(n_cells=self.n_cells, nprobe=self.nprobe)}
         cand = E.threshold_candidates(
-            emb, cos_t, self.candidate_mode,
-            **mode_kwargs.get(self.candidate_mode, {}),
+            emb, cos_t, self.candidate_mode, **mode_kwargs.get(self.candidate_mode, {})
         )
-        # pull normalized-form candidate edges back to raw strings
-        k0 = keyed.select(F.col("string").alias("r0"), F.col("norm").alias("s0"))
-        k1 = keyed.select(F.col("string").alias("r1"), F.col("norm").alias("s1"))
-        return (
-            cand.join(k0, "s0").join(k1, "s1")
-            .select(F.col("r0").alias("src"), F.col("r1").alias("dst"))
-        )
+        return u.pullback(cand)
 
 
 @dataclass
@@ -321,10 +298,9 @@ class MatchPipeline:
         lineage = LineageLog(spark, self.checkpoint_dir)
 
         # file-scale → name-scale: one aggregation, counts = multiplicities.
-        # Pinned (round 6): every pass, the partition stats and the final
-        # unite re-reads md.df — unpinned, each consumer re-runs the
-        # file-scale groupBy (guide §5 localCheckpoint for reused
-        # intermediates); the ingest count below materializes the pin.
+        # Pinned: the keyed universe, the partition stats and the final
+        # unite each re-read md.df and would re-run the file-scale groupBy;
+        # the ingest count below materializes the pin.
         names = records.groupBy(F.col(string_col).alias("string")).agg(
             F.count(F.lit(1)).alias("count")
         )
@@ -339,11 +315,9 @@ class MatchPipeline:
         all_edges = None
         all_resumed = True
         for i, p in enumerate(self.passes):
-            stage_dir = (
-                os.path.join(self.checkpoint_dir, f"{i:02d}_{p.name}_edges")
-                if self.checkpoint_dir
-                else None
-            )
+            stage_dir = None
+            if self.checkpoint_dir:
+                stage_dir = os.path.join(self.checkpoint_dir, f"{i:02d}_{p.name}_edges")
             if resume and stage_dir and _checkpoint_exists(spark, stage_dir):
                 edges = spark.read.parquet(stage_dir)
                 lineage.add(p.name, "resumed_from_checkpoint", 1.0, checkpoint=stage_dir)
@@ -355,22 +329,18 @@ class MatchPipeline:
                     edges.write.mode("overwrite").parquet(stage_dir)
                     edges = spark.read.parquet(stage_dir)
                 else:
-                    # no durable checkpoint → pin the edge set once; it is
-                    # consumed twice more (partition stats collect + the
-                    # fused-CC union) and would otherwise recompute the
-                    # whole pass per consumer. Lazy pin: the partition-stats
-                    # collect right below materializes it — one job, not an
-                    # eager-checkpoint job followed by a stats job (round 6)
+                    # no durable checkpoint → pin the edge set once for its
+                    # two consumers (partition stats, the fused-CC union);
+                    # lazy, so the partition-stats collect below
+                    # materializes it in the same job
                     edges = edges.localCheckpoint(eager=False)
                 lineage.add(p.name, "wall_sec", time.time() - t0, checkpoint=stage_dir)
                 lineage.add_partition_stats(edges, p.name)
             all_edges = edges if all_edges is None else all_edges.union(edges)
 
-        final_dir = (
-            os.path.join(self.checkpoint_dir, "zz_clusters")
-            if self.checkpoint_dir
-            else None
-        )
+        final_dir = None
+        if self.checkpoint_dir:
+            final_dir = os.path.join(self.checkpoint_dir, "zz_clusters")
         if (
             resume
             and all_resumed
@@ -392,9 +362,8 @@ class MatchPipeline:
             md = MatchData(spark.read.parquet(final_dir), _relabel=False)
         else:
             # pin the clustered partition for the groups count, partition
-            # stats and whatever the caller does next (label-election window
-            # + join would otherwise re-run per action). Lazy: the groups
-            # count below materializes the pin in the same job (round 6)
+            # stats and the caller (the label window + join would re-run per
+            # action); lazy: the groups count below materializes it
             md = MatchData(md.df.localCheckpoint(eager=False), _relabel=False)
         lineage.add("fused_cc", "wall_sec", time.time() - t0, checkpoint=final_dir)
         lineage.add("fused_cc", "groups", md.df.select("group").distinct().count())

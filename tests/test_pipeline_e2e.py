@@ -208,3 +208,57 @@ def test_embedding_pass_precomputed_vectors(spark, tmp_path):
     }
     assert metrics[("embedding", "strings_with_vectors")] == 30.0
     assert ("embedding", "strings_missing_vectors") in metrics
+
+
+_DIRTY = [
+    "Acme Labs, Inc.", "ACME LABS LLC", "acme labs inc", "Acme Lab",
+    "Globex Systems Ltd", "globex systemz", "The Globex Systems",
+    "Initech Holdings", "initech holding co", "Umbrella Corp",
+    "Umbrella Corporation International", "Umbrella Corporation Internatonal",
+    None, "", " ", " , ",
+]
+
+
+@pytest.mark.parametrize("normalize", ["simplify_corp", None])
+def test_passes_share_one_keyed_collect(spark, monkeypatch, normalize):
+    """ExactKeyPass, TokenSimPass and EmbeddingPass read one keyed universe
+    per normalization key: one bounded collect when all three share the key,
+    two when TokenSimPass keys on the raw strings. The partition is the same
+    with the collect bound forced below the universe (every pass on its
+    Spark path over the pinned keyed frame) and above it."""
+    from nama_spark.operators import token_similarity as TS
+    from nama_spark.plans import pipeline as P
+
+    calls, collect_rows = [], P.collect_rows
+
+    def counted(df, cap=None):
+        calls.append(cap)
+        return collect_rows(df, cap)
+
+    monkeypatch.setattr(P, "collect_rows", counted)
+    # duplicated records give the names counts above one
+    records = spark.createDataFrame(
+        [(s,) for s in _DIRTY + _DIRTY[:3]], "repo string"
+    )
+
+    def run(cap):
+        monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_FIT_STRINGS", cap)
+        calls.clear()
+        md, _ = MatchPipeline(
+            [
+                ExactKeyPass(),
+                TokenSimPass(0.7, normalize=normalize),
+                P.EmbeddingPass(),
+            ]
+        ).run(records, "repo")
+        rows = sorted(
+            (r["string"], r["group"]) for r in md.df.collect()
+            if r["string"] is not None
+        )
+        return rows, len(calls)
+
+    driver, n_driver = run(10**9)
+    spark_side, n_spark = run(-1)
+    assert driver == spark_side
+    assert len({g for _s, g in driver}) < len(driver)
+    assert n_driver == n_spark == (1 if normalize else 2)

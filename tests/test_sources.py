@@ -1334,6 +1334,36 @@ def test_embedding_and_brp_cosine_each_live_once():
         assert shared in inspect.getsource(fn), (fn.__name__, shared)
 
 
+def test_pipeline_keys_once_and_the_key_window_lives_once():
+    """Source guard: plans/pipeline.py evaluates the normalization key, runs
+    the bounded collect and writes the join pullback once each (its shared
+    keyed universe), and the key → anchor window lives only in
+    block.exact_key_edges, which MatchData.unite and ExactKeyPass call."""
+    import inspect
+    import pathlib
+    import re
+
+    from nama_spark.operators import block
+    from nama_spark.operators.matchdata import MatchData
+    from nama_spark.plans.pipeline import ExactKeyPass
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "nama_spark"
+    src = (root / "plans" / "pipeline.py").read_text()
+    for needle in ("collect_rows(", "norm_key(", '.join(k0, "s0")'):
+        assert src.count(needle) == 1, needle
+    key_window = re.compile(r"""Window\.partitionBy\(\s*["']_*key["']""")
+    hits = [
+        f"{p.relative_to(root)}:{no}"
+        for p in sorted(root.rglob("*.py"))
+        for no, line in enumerate(p.read_text().splitlines(), 1)
+        if key_window.search(line)
+    ]
+    assert len(hits) == 1, hits
+    assert key_window.search(inspect.getsource(block.exact_key_edges))
+    for fn in (MatchData.unite, ExactKeyPass.edges):
+        assert "exact_key_edges(" in inspect.getsource(fn), fn.__qualname__
+
+
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):
     """jobs/run_linkage.py --mode one_to_one: the peeling selection links
     every left to a distinct right and records the peel round."""
