@@ -121,7 +121,7 @@ def build_pairs(spark, args, docs):
 
         emb = read_records(spark, args.embeddings, catalog=args.catalog)
 
-        # bucketed candidates via the ANN LSH path, thresholded on exact cos
+        # each row's exact top-50 neighbours (lsh_topk), thresholded on cos
         cand = lsh_topk(emb, emb, k=50)
         return (
             cand.where(

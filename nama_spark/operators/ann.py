@@ -1,10 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
 - ``cosine_topk_bruteforce``: exact top-k neighbors per query — the
-  correctness baseline. Self-join + window; broadcast the query side when it
-  is small. O(|queries|·|corpus|): for scale use the bucketed variants.
-- ``lsh_topk``: BucketedRandomProjectionLSH-bucketed approximate top-k (the
-  scale path — candidates come from an equi-join on hash buckets).
+  correctness baseline. A numpy scan of the corpus against the broadcast
+  query side when it is small, else a crossJoin + window.
+  O(|queries|·|corpus|): for scale use the cell-probing variants.
+- ``lsh_topk``: the same exact top-k over the corpus rows within a
+  euclidean ``max_distance`` of the query.
 - ``ivf_topk``: IVF-style coarse quantization: k-means centroids (MLlib),
   probe the nprobe nearest cells per query, exact re-rank inside the cells.
 """
@@ -63,7 +64,7 @@ def _top_k(df: DataFrame, k: int, by=None) -> DataFrame:
 
 def _empty_topk(df: DataFrame, id_col: str) -> DataFrame:
     """Zero-row (query_id, neighbor_id, cos, rank) frame with the id type
-    taken from the input — MLlib fit() (LSH planes, k-means) throws on an
+    taken from the input — MLlib fit() (k-means) throws on an
     empty dataset, and an empty corpus/delta is routine at scale, so the
     fit-based variants short-circuit to this."""
     return (
@@ -88,7 +89,8 @@ def _np_elem(dt):
     return None
 
 
-def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str):
+def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
+                      max_distance: float | None = None):
     """The one numpy cosine top-k kernel: returns ``topk(qid, Q, nid, C)``
     → DataFrame(query_id, neighbor_id, cos) holding, per query, every
     non-self row whose cos is at or above its k-th best — ties (and NaNs,
@@ -103,7 +105,9 @@ def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str):
     the wider of the two dtypes (like zip_with(x*y) after Spark's type
     coercion), every fold is dimension-sequential float64, and
     cos = dot / (norm·norm). A NULL or ragged vector raises ValueError
-    naming ``vec_col`` and the first offending id.
+    naming ``vec_col`` and the first offending id. With ``max_distance``,
+    only rows at euclidean distance < max_distance (folded as ``_sq_dist``
+    does) compete.
 
     Returned as a nested function so cloudpickle ships it by value: workers
     never need nama_spark importable."""
@@ -168,13 +172,19 @@ def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str):
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = dot / np.multiply.outer(qn[s:s + step], cn)
             key = np.where(np.isnan(cos), np.inf, cos)
-            self_mask = qid[s:s + step, None] == nid[None, :]
-            key = np.where(self_mask, -np.inf, key)
+            out_mask = qid[s:s + step, None] == nid[None, :]
+            if max_distance is not None:
+                Q64, C64 = Qs.astype(np.float64), C.astype(np.float64)
+                d2 = np.zeros((len(Qs), n), dtype=np.float64)
+                for j in range(Q.shape[1]):
+                    d2 += np.subtract.outer(Q64[:, j], C64[:, j]) ** 2
+                out_mask |= ~(np.sqrt(d2) < max_distance)
+            key = np.where(out_mask, -np.inf, key)
             if n > kk:
                 thr = np.partition(key, n - kk, axis=1)[:, n - kk]
             else:
                 thr = np.full(len(Qs), -np.inf)
-            keep = (key >= thr[:, None]) & ~self_mask
+            keep = (key >= thr[:, None]) & ~out_mask
             for i in range(len(Qs)):
                 sel = np.flatnonzero(keep[i])
                 out_q.append(np.repeat(qid[s + i], len(sel)))
@@ -207,7 +217,7 @@ def cosine_topk_bruteforce(
     one eager driver action first:
     ``queries.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()``. A query side
     within the cap ships once as a broadcast and the scan runs as ONE
-    mapInPandas over the corpus (round 6, guide §4.2): every corpus batch
+    mapInPandas over the corpus, one partition per core: every corpus batch
     scores against it with the _cosine_topk_ties kernel, and only
     per-batch per-query top-k rows (ties at the k-th cos included —
     lossless truncation) reach the global rank window, so the
@@ -215,6 +225,12 @@ def cosine_topk_bruteforce(
     vs cosine_sim_expr (tests/test_ivf_cell_topk.py). A bigger query
     side or other element types take the broadcast-hinted crossJoin +
     cosine_sim_expr path."""
+    return _exact_topk(corpus, queries, k, id_col, vec_col, None)
+
+
+def _exact_topk(corpus, queries, k, id_col, vec_col, max_distance):
+    """``cosine_topk_bruteforce`` over the corpus rows at euclidean
+    distance < ``max_distance`` (None: every row) from each query."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -231,7 +247,7 @@ def cosine_topk_bruteforce(
             np.array([r["query_id"] for r in qrows]),
             [r["qv"] for r in qrows],
         ))
-        topk = _cosine_topk_ties(k, q_elem, c_elem, vec_col)
+        topk = _cosine_topk_ties(k, q_elem, c_elem, vec_col, max_distance)
 
         def scan(batches):
             qid, qvecs = bc.value
@@ -245,10 +261,18 @@ def cosine_topk_bruteforce(
             T.StructField("neighbor_id", c.schema["neighbor_id"].dataType),
             T.StructField("cos", T.DoubleType()),
         ])
-        return _top_k(c.mapInPandas(scan, schema=out_schema), k)
+        # the scan streams Arrow batches: one partition per core costs no
+        # memory and skips a Python task per extra partition (bench.py
+        # ann_topk, 64 partitions of 2,000 vectors: 4.5 → 0.6 s, local[4])
+        par = corpus.sparkSession.sparkContext.defaultParallelism
+        return _top_k(c.coalesce(par).mapInPandas(scan, schema=out_schema), k)
     joined = c.crossJoin(F.broadcast(q)).where(
         F.col("query_id") != F.col("neighbor_id")
     )
+    if max_distance is not None:
+        d2 = _sq_dist(F.col("qv").cast("array<double>"),
+                      F.col("cv").cast("array<double>"))
+        joined = joined.where(F.sqrt(d2) < max_distance)
     return _top_k(
         joined.withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv"))), k
     )
@@ -265,38 +289,11 @@ def lsh_topk(
     max_distance: float = 10.0,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate top-k via LSH candidate join + exact cosine re-rank."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    if corpus.isEmpty() or queries.isEmpty():
-        return _empty_topk(corpus, id_col)
-
-    feat_c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    feat_q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes",
-        numHashTables=num_hash_tables, bucketLength=bucket_length, seed=seed,
-    )
-    model = lsh.fit(feat_c)
-    joined = model.approxSimilarityJoin(feat_q, feat_c, max_distance, distCol="euclid")
-    pairs = joined.select(
-        F.col("datasetA.query_id").alias("query_id"),
-        F.col("datasetA.qv").alias("qv"),
-        F.col("datasetB.neighbor_id").alias("neighbor_id"),
-        F.col("datasetB.cv").alias("cv"),
-    ).where(F.col("query_id") != F.col("neighbor_id"))
-    return _top_k(
-        pairs.withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv"))), k
-    )
+    """Exact top-k (``cosine_topk_bruteforce``) over the corpus rows at
+    euclidean distance < ``max_distance`` from the query: every row MLlib's
+    bucketed BRP join could return. ``num_hash_tables``, ``bucket_length``
+    and ``seed`` were that join's; they no longer shape the result."""
+    return _exact_topk(corpus, queries, k, id_col, vec_col, max_distance)
 
 
 def ivf_topk(

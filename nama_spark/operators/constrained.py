@@ -183,11 +183,11 @@ def unite_similar_constrained(
     """Constrained unite_similar (embeddings.py:177-458): reference-exact
     greedy GIVEN the candidate graph.
 
-    ``candidate_mode`` defaults to "lsh" — approximate candidates that can
-    only MISS ≥-threshold edges (the result refines the exhaustive one), so
-    the O(n²) bruteforce self-join never runs by default at scale. Pass
+    ``candidate_mode`` defaults to "lsh" — the exact tiled matmul scan
+    (cos = 1 − e·e/2 from the euclidean distance), so the relational
+    bruteforce self-join never runs by default at scale. Pass
     candidate_mode="bruteforce" on small universes to reproduce the
-    reference's exhaustive-scan semantics exactly. With no constraints use
+    reference's dot-product cosines exactly. With no constraints use
     operators.embed.unite_similar — it avoids the per-component pandas step
     entirely.
 

@@ -14,11 +14,10 @@ similarity — and is fully deterministic (seeded), so tests are reproducible.
 Spark realization: one ``mapInPandas`` pass (Arrow batches; the projection
 matrix is built once per python worker and cached — no per-row Python at the
 Spark layer). Downstream, cosine, thresholding and clustering are relational
-or MLlib, with one exception: the pipeline's EmbeddingPass, on a keyed
-universe the pipeline's one bounded collect read, embeds on the driver
-with the same per-string function (``embed_driver``) and runs the exact
-scan ``brp_pairs`` under the BRP join's own predicate, so no Spark job
-runs while the kept edges stay within ``_EMBED_DRIVER_PAIRS``.
+or numpy per Spark group. The pipeline's EmbeddingPass, on a keyed universe
+the pipeline's one bounded collect read, embeds on the driver with the same
+per-string function (``embed_driver``) and runs ``brp_pairs``, so no Spark
+job runs while the kept edges stay within ``_EMBED_DRIVER_PAIRS``.
 
 Capabilities mapped (cites against /root/reference):
 - ``embed``                → SimilarityModel.embed, similarity_model.py:64-112
@@ -27,13 +26,11 @@ Capabilities mapped (cites against /root/reference):
   (result = connected components of the ≥-threshold graph)
 - ``unite_nearest``        → Embeddings.unite_nearest / voronoi,
   embeddings.py:461-514
-- ``lsh_candidates``       → replaces the O(n²) batched matmul scan
-  (embeddings.py:301-307) with MLlib BucketedRandomProjectionLSH; for unit
-  vectors cos ≥ t ⇔ euclidean ≤ sqrt(2−2t), so the threshold pushes down
-  into the LSH join distance.
-- ``brp_pairs``            → the batched matmul scan itself
-  (embeddings.py:144-174, 301-307), blocked on the driver, thresholded
-  with lsh_candidates' predicate.
+- ``brp_pairs`` / ``lsh_candidates`` → the batched matmul scan
+  (embeddings.py:144-174, 301-307), on the driver / tiled over the
+  executors; both run ``_brp_block``, the one exact block step. For unit
+  vectors cos ≥ t ⇔ euclidean ≤ sqrt(2−2t), so the threshold becomes a
+  distance bound and cos is recovered from the distance.
 - save/load                → embeddings.py:45-68, 628-644 (parquet + JSON
   sidecar instead of zip+npy).
 """
@@ -433,12 +430,13 @@ def threshold_candidates(
     embeddings: DataFrame, cos_threshold: float, candidate_mode: str, **kwargs
 ) -> DataFrame:
     """(s0, s1, cos) pairs with cos ≥ ``cos_threshold`` from the candidate
-    generator named by ``candidate_mode``: "bruteforce" (exact, O(n²)),
-    "ivf" or "lsh" (approximate; ``kwargs`` go to ``ivf_candidates`` /
-    ``lsh_candidates``). The one candidate-mode dispatch of the embedding
-    layer (the reference's single batched-matmul scan,
-    embeddings.py:301-307, behind unite_similar, its constrained form and
-    iter_scores); an unknown mode raises ValueError."""
+    generator named by ``candidate_mode``: "bruteforce" (exact, a
+    relational O(n²) self-join), "lsh" (exact, the tiled scan of
+    ``lsh_candidates``) or "ivf" (approximate; ``kwargs`` go to
+    ``ivf_candidates`` / ``lsh_candidates``). The one candidate-mode
+    dispatch of the embedding layer (the reference's single batched-matmul
+    scan, embeddings.py:301-307, behind unite_similar, its constrained form
+    and iter_scores); an unknown mode raises ValueError."""
     if candidate_mode == "bruteforce":
         if cos_threshold <= -1.0:
             import warnings
@@ -460,11 +458,10 @@ def threshold_candidates(
 
 
 def driver_scan(candidate_mode: str):
-    """The exact driver-side scan that stands in for ``threshold_candidates``'
+    """The driver-side scan that stands in for ``threshold_candidates``'
     generator ``candidate_mode`` on a universe held on the driver, or None
-    when the mode has none. Only "lsh" has one, ``brp_pairs``: the BRP
-    join's own predicate over every pair, so its pairs are a superset of
-    the join's."""
+    when the mode has none. Only "lsh" has one, ``brp_pairs``: the same
+    block step as ``lsh_candidates``, so the same pairs."""
     return {"lsh": brp_pairs}.get(candidate_mode)
 
 
@@ -481,9 +478,9 @@ def bruteforce_candidates(
     embeddings: DataFrame, cos_threshold: float
 ) -> DataFrame:
     """All pairs with cos ≥ threshold via an upper-triangular self-join —
-    correctness baseline for small universes and tests. O(n²): do not use at
-    scale (that is what the reference's batched matmul does,
-    embeddings.py:301-307; LSH replaces it)."""
+    correctness baseline for small universes and tests. O(n²) pairs through
+    the JVM's higher-order cosine: at scale use ``lsh_candidates``, the
+    reference's batched matmul (embeddings.py:301-307) in numpy tiles."""
     a = embeddings.select(F.col("string").alias("s0"), F.col("vec").alias("v0"))
     b = embeddings.select(F.col("string").alias("s1"), F.col("vec").alias("v1"))
     pairs = a.join(b, F.col("s0") < F.col("s1"))
@@ -502,9 +499,61 @@ def _euclid_bound(cos_threshold: float) -> float:
 
 
 def _euclid_cos(euclid):
-    """Cosine of unit vectors at euclidean distance ``euclid`` (a Column or
-    a numpy array): 1 − e·e/2, the conversion both BRP paths apply."""
+    """Cosine of unit vectors at euclidean distance ``euclid`` (a numpy
+    array): 1 − e·e/2, the conversion ``_brp_block`` applies."""
     return 1.0 - euclid * euclid / 2.0
+
+
+# float64 cells one scan block holds (32 MB): brp_pairs' row blocks and
+# the side of lsh_candidates' square tiles are sized from it
+_BLOCK_CELLS = 1 << 22
+
+
+def _brp_block(a: np.ndarray, b: np.ndarray, cos_threshold: float, upper: bool):
+    """The one exact scan step: (i, j, e) arrays of the rows i of ``a`` and
+    j of ``b`` (float64 blocks) whose euclidean distance e passes
+    e < sqrt(2−2t), strict, and 1 − e·e/2 ≥ t. With ``upper`` the two
+    blocks start at the same row, and only j > i is kept.
+
+    e is MLlib BRP's ``keyDistance``: squared float64 differences summed in
+    dimension order, then sqrt; the predicate is that join's, which could
+    only miss pairs. A float64 matmul prefilters (‖a‖² + ‖b‖² − 2a·b ≤
+    e_max² plus 1e-9 per unit of the largest squared norm, above the
+    formula's rounding error, so no kept pair is dropped); the exact
+    distance runs on the survivors only."""
+    dist = _euclid_bound(cos_threshold)
+    sqa = np.einsum("ij,ij->i", a, a)
+    sqb = np.einsum("ij,ij->i", b, b)
+    # fmax skips NaN norms: a NaN row passes no test, and must not void the
+    # margin for the rest of its block
+    margin = 1e-9 * (1.0 + np.fmax.reduce(np.r_[sqa, sqb], initial=0.0))
+    d2 = a @ b.T
+    d2 *= -2.0
+    d2 += sqa[:, None]
+    d2 += sqb[None, :]
+    ii, jj = np.nonzero(d2 <= dist * dist + margin)
+    if upper:
+        ii, jj = ii[jj > ii], jj[jj > ii]
+    acc = np.zeros(len(ii))
+    for k in range(a.shape[1]):
+        d = a[ii, k] - b[jj, k]
+        acc += d * d
+    e = np.sqrt(acc)
+    keep = (e < dist) & (_euclid_cos(e) >= cos_threshold)
+    return ii[keep], jj[keep], e[keep]
+
+
+def _raise_dirty_vectors(feat: DataFrame) -> None:
+    """ValueError naming the first string with a NULL ``vec``, else the
+    first whose length is off the most common one."""
+    bad = feat.where(F.col("vec").isNull()).orderBy("string").first()
+    if bad is not None:
+        raise ValueError(f"vec: NULL vector at string {bad['string']!r}")
+    w = feat.groupBy(F.size("vec").alias("w")).count().orderBy(
+        F.desc("count"), "w").first()["w"]
+    bad = feat.where(F.size("vec") != w).orderBy("string").first()
+    raise ValueError(f"vec: ragged vector at string {bad['string']!r} "
+                     f"(length {len(bad['vec'])}, expected {w})")
 
 
 def lsh_candidates(
@@ -514,73 +563,61 @@ def lsh_candidates(
     bucket_length: float = 0.25,
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate ≥-threshold pairs via MLlib BucketedRandomProjectionLSH.
+    """(s0, s1, cos), s0 < s1, for every pair passing ``_brp_block``'s
+    predicate — for unit vectors every pair with cos ≥ t, cos = 1 − e·e/2
+    (threshold pushdown, as score_to_cos at embeddings.py:147):
+    ``brp_pairs``' scan tiled over the executors, so its pairs, bitwise.
 
-    Unit vectors: cos ≥ t ⇔ ‖a−b‖ ≤ sqrt(2−2t) — the cosine threshold becomes
-    the LSH join's euclidean distance threshold (threshold pushdown, same idea
-    as score_to_cos at embeddings.py:147), and the join's own distance column
-    converts back exactly: cos = 1 − d²/2. No second join, no recompute.
-    ``brp_pairs`` is the exact driver scan under this same predicate; the
-    pipeline's EmbeddingPass runs it instead of this join on universes its
-    collect reads while the kept edges stay within ``_EMBED_DRIVER_PAIRS``,
-    and unite_similar, its constrained form and iter_scores still come
-    here.
+    One aggregate counts the n rows (a NULL or ragged vector raises a
+    ValueError naming its string). Rows hash into nb = ceil(n / B) blocks,
+    B² ≤ ``_BLOCK_CELLS``; each row goes to its block's nb (lo, hi) tiles,
+    and one ``applyInPandas`` runs ``_brp_block`` per tile. No vector
+    reaches the driver. ``num_hash_tables``, ``bucket_length`` and
+    ``seed`` were MLlib's BRP join's, which this scan replaced (same pairs
+    or more, faster at every size measured: docs/SCALE.md B3); they are
+    accepted and no longer shape the result."""
+    feat = embeddings.select("string", "vec").localCheckpoint(eager=False)
+    n, n_vec, dim, widest = feat.agg(
+        F.count(F.lit(1)), F.count("vec"),
+        F.min(F.size("vec")), F.max(F.size("vec")),
+    ).first()
+    if n == 0:
+        return _no_pairs(feat)
+    if n_vec < n or dim != widest:
+        _raise_dirty_vectors(feat)
+    nb = -(-n // math.isqrt(_BLOCK_CELLS))
+    t = float(cos_threshold)
 
-    bucket_length is deliberately small: oversized buckets degenerate the
-    hash join toward the O(n²) scan (measured: 0.7 → 375 s vs 0.25 → 20 s at
-    12k vectors, both 100% recall at cos ≥ 0.8). It is still coarse. MLlib's
-    BRP hash vectors are unit-norm, so a unit vector's 1-d projection has
-    std 1/sqrt(dim) — 1/8 for the 64-d embeddings — and 0.25-wide buckets
-    leave about 4 occupied buckets per table. Measured on the perfbench
-    er_batch_delta universe: 835 vectors filled 32 buckets over the 8
-    tables and the join produced 2.69M rows (3.85·n²), more than the n²/2
-    pairs of the exact scan.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
+    def tile(pdf: pd.DataFrame) -> pd.DataFrame:
+        diag = pdf["lo"].iat[0] == pdf["hi"].iat[0]
+        sides = [pdf[~pdf["side"]]] if diag else [pdf[~pdf["side"]], pdf[pdf["side"]]]
+        x = [np.array(p["vec"].tolist(), np.float64).reshape(len(p), dim) for p in sides]
+        ii, jj, e = _brp_block(x[0], x[-1], t, upper=diag)
+        s0 = sides[0]["string"].to_numpy()[ii]
+        s1 = sides[-1]["string"].to_numpy()[jj]
+        keep = s0 != s1
+        return pd.DataFrame({"s0": np.minimum(s0, s1)[keep],
+                             "s1": np.maximum(s0, s1)[keep], "cos": _euclid_cos(e)[keep]})
 
-    if embeddings.isEmpty():
-        # LSH fit() throws on an empty dataset; an empty universe/delta is a
-        # routine input at scale
-        return _no_pairs(embeddings)
-
-    dist = _euclid_bound(cos_threshold)
-    feat = embeddings.select(
-        "string", array_to_vector(F.col("vec").cast("array<double>")).alias("features")
+    block = F.pmod(F.xxhash64("string"), F.lit(nb))
+    tiles = feat.select(
+        "string", "vec", block.alias("b"),
+        F.explode(F.sequence(F.lit(0), F.lit(nb - 1))).alias("o"),
+    ).select(
+        F.least("b", "o").alias("lo"), F.greatest("b", "o").alias("hi"),
+        (F.col("b") > F.col("o")).alias("side"), "string", "vec",
     )
-    # The self-join references `feat` on both sides (plus fit): without
-    # materialization the upstream embed (a mapInPandas) is recomputed per
-    # reference — measured 467 s vs 41 s at 12k vectors. localCheckpoint
-    # truncates the plan once and lets the join reuse the blocks.
-    feat = feat.localCheckpoint(eager=False)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        numHashTables=num_hash_tables,
-        bucketLength=bucket_length,
-        seed=seed,
-    )
-    model = lsh.fit(feat)
-    joined = model.approxSimilarityJoin(feat, feat, dist, distCol="euclid")
-    return (
-        joined.select(
-            F.col("datasetA.string").alias("s0"),
-            F.col("datasetB.string").alias("s1"),
-            _euclid_cos(F.col("euclid")).alias("cos"),
-        )
-        .where((F.col("s0") < F.col("s1")) & (F.col("cos") >= cos_threshold))
+    return tiles.groupBy("lo", "hi").applyInPandas(
+        tile, "s0 string, s1 string, cos double"
     )
 
 
 # Most (src, dst) edges EmbeddingPass keeps on the driver: past it
-# brp_pairs gives up and the pass runs the Spark embed and the BRP join,
-# which keep the pairs on the executors. Every pair passes at a threshold
-# of 0 or less, so without it the driver would hold C(n, 2) of them. The
-# driver path's Python peak grows by 300-315 bytes per kept edge (the pair
-# list, the raw-string pullback and the local frame's Arrow copy; measured
-# in docs/SCALE.md B3), so this bound, TokenSimPass's driver pair bound,
-# holds it near 1 GB. The scan's time needs no bound: the driver was ahead
-# of the BRP join at every universe the collect reads.
+# brp_pairs gives up and the pass runs the Spark embed and lsh_candidates,
+# which keep the pairs on the executors (at a threshold of 0 or less every
+# one of C(n, 2) pairs passes). The driver path's Python peak grows by
+# 300-315 bytes per kept edge (docs/SCALE.md B3), so this bound,
+# TokenSimPass's driver pair bound, holds it near 1 GB.
 _EMBED_DRIVER_PAIRS = 3_500_000
 
 
@@ -588,46 +625,18 @@ def brp_pairs(
     vecs: np.ndarray, cos_threshold: float, max_pairs: int
 ) -> list[tuple[int, int]] | None:
     """Index pairs (i, j), i < j, of the rows of ``vecs`` that pass
-    ``lsh_candidates``' predicate: euclidean distance e < sqrt(2−2t), as
-    MLlib's ``approxSimilarityJoin`` filters (strict), and 1 − e·e/2 ≥ t;
-    None once more than ``max_pairs`` pass.
-
-    e is computed as BRP's ``keyDistance`` does: the squared differences
-    summed in dimension order in float64 over the float32 components, then
-    sqrt. So this exact scan keeps every pair the BRP join keeps, and more
-    only where the join's buckets miss a pair.
-
-    A blocked float64 matmul prefilters (‖a‖² + ‖b‖² − 2a·b ≤ e_max² plus a
-    margin of 1e-9 per unit of the largest ‖a‖²; the formula's rounding
-    error is below 1e-13 of it, so no kept pair is dropped), each block
-    about 32 MB; the exact distance runs on the survivors only."""
-    dist = _euclid_bound(cos_threshold)
+    ``_brp_block``'s predicate (the pairs ``lsh_candidates`` returns for
+    the same vectors); None once more than ``max_pairs`` pass. Runs on the
+    driver, in row blocks against all later rows, each about 32 MB
+    (``_BLOCK_CELLS``)."""
     x = vecs.astype(np.float64)
-    n, dim = x.shape
-    sq = np.einsum("ij,ij->i", x, x)
-    bound = dist * dist + 1e-9 * (1.0 + (sq.max() if n else 0.0))
-    rows = max(1, (1 << 22) // max(n, 1))
+    rows = max(1, _BLOCK_CELLS // max(len(x), 1))
     out: list[tuple[int, int]] = []
-    for i0 in range(0, n - 1, rows):
-        i1 = min(n - 1, i0 + rows)
-        # rows i0..i1-1 against columns i0+1..n-1
-        d2 = x[i0:i1] @ x[i0 + 1 :].T
-        d2 *= -2.0
-        d2 += sq[i0:i1, None]
-        d2 += sq[None, i0 + 1 :]
-        ii, jj = np.nonzero(d2 <= bound)
-        ii += i0
-        jj += i0 + 1
-        ii, jj = ii[jj > ii], jj[jj > ii]
-        acc = np.zeros(len(ii))
-        for k in range(dim):
-            d = x[ii, k] - x[jj, k]
-            acc += d * d
-        e = np.sqrt(acc)
-        keep = (e < dist) & (_euclid_cos(e) >= cos_threshold)
-        if len(out) + int(keep.sum()) > max_pairs:
+    for i0 in range(0, len(x), rows):
+        ii, jj, _e = _brp_block(x[i0 : i0 + rows], x[i0:], cos_threshold, True)
+        if len(out) + len(ii) > max_pairs:
             return None
-        out.extend(zip(ii[keep].tolist(), jj[keep].tolist()))
+        out.extend(zip((ii + i0).tolist(), (jj + i0).tolist()))
     return out
 
 
@@ -711,13 +720,9 @@ def ivf_candidates(
     """Approximate ≥-threshold pairs via IVF cells — the density-robust
     scale path for the embedding threshold join.
 
-    Why not BRP-LSH at scale: MLlib's single-probe approxSimilarityJoin
-    cost tracks per-bucket occupancy, which grows linearly with corpus
-    density at fixed bucket_length (join work ~ n²·bucket_length for the
-    1-d projections). Measured on the bench fixture: a 10× corpus at
-    bucket_length 0.25 went 4.7 s → 267 s (57× for 10× data); shrinking
-    buckets restores linearity but collapses recall, because a near pair
-    must share an EXACT bucket in some table (no multi-probe in MLlib).
+    Why not ``lsh_candidates`` at scale: it is exact, so it compares all
+    C(n, 2) pairs (MLlib's bucketed BRP join before it grew as fast: 57×
+    the time for a 10× bench corpus, 4.7 → 267 s).
 
     IVF instead partitions the SPACE: k-means cells fit on a sample
     (``sample_per_cell``·n_cells rows), every vector joins its ``nprobe``
@@ -780,18 +785,14 @@ def ivf_candidates(
             assigned, max_cell_rows, sample_per_cell=sample_per_cell,
             max_iter=max_iter, seed=seed,
         )
-    # Per-cell pair stage (round 6, guide §4.2): one applyInPandas over the
-    # cell groups computes all within-cell cosines as TILED numpy float64
-    # matmuls (BLAS) and emits only the ≥-threshold survivors — the old
-    # within-cell self-join evaluated the zip_with/aggregate cosine once
-    # per candidate pair in the JVM's interpreted higher-order-function
-    # path (~10 µs/pair; measured 7-9 s for the 2.2M pairs of the sf0.1
-    # embed workload vs <1 s here). Tiling bounds memory at B² doubles per
-    # score block; per-cell memory is bounded by design (the ~400-row
-    # occupancy target — pre-split genuinely hot cells via max_cell_rows).
-    # Rows are sorted by string inside each cell so the emitted (s0 < s1)
-    # orientation matches the old join's string comparison; a pair met in
-    # two probed cells still collapses in the cross-cell dedupe.
+    # Per-cell pair stage: one applyInPandas over the cell groups computes
+    # the within-cell cosines as tiled numpy float64 matmuls and emits the
+    # ≥-threshold survivors (a within-cell self-join paid the JVM's ~10
+    # µs/pair higher-order cosine: 7-9 s for the sf0.1 embed workload's
+    # 2.2M pairs vs <1 s here). Score blocks stay within _BLOCK_CELLS; cells
+    # stay near the ~400-row occupancy target (max_cell_rows pre-splits hot
+    # ones). Rows sort by string inside each cell, so pairs come out s0 < s1;
+    # a pair met in two probed cells collapses in the cross-cell dedupe.
     t = float(cos_threshold)
     out_schema = T.StructType(
         [
@@ -812,7 +813,7 @@ def ivf_candidates(
         o0: list = []
         o1: list = []
         oc: list = []
-        B = 2048
+        B = math.isqrt(_BLOCK_CELLS)
         for i0 in range(0, m, B):
             Xi = X[i0:i0 + B]
             for j0 in range(i0, m, B):

@@ -140,7 +140,9 @@ class TokenSimPass:
       the pullback is two joins, as before the driver path existed.
 
     Lineage records the pair gate, the pair bound when a driver fit read
-    it, and the path taken (``driver_path`` 1 or 0)."""
+    it, and the path taken (``driver_path`` 1 or 0). The driver path
+    releases the fit's cached frames and broadcast before it returns; the
+    Spark path's edges read them, so it leaves them cached."""
 
     threshold: float = 0.6
     tokenizer: str = "nmgrams23"
@@ -168,14 +170,16 @@ class TokenSimPass:
         if ts.pair_bound is not None:
             lineage.add(self.name, "pair_bound", ts.pair_bound)
         lineage.add(self.name, "driver_path", float(scored is not None))
-        if scored is not None and u.by_norm is not None:
-            return u.edges(
-                (n0, n1) for n0, n1, score in scored if score >= self.threshold
-            )
-        scores = (
-            ts.pair_scores() if scored is None
-            else local_frame(u.spark, scored, TS._SCORE_SCHEMA)
-        )
+        if scored is None:
+            # the Spark path's scores read the fit's caches, so they stay
+            scores = ts.pair_scores()
+        else:
+            ts.unpersist()
+            if u.by_norm is not None:
+                return u.edges(
+                    (n0, n1) for n0, n1, score in scored if score >= self.threshold
+                )
+            scores = local_frame(u.spark, scored, TS._SCORE_SCHEMA)
         return u.pullback(scores.where(F.col("score") >= self.threshold))
 
 
@@ -188,9 +192,8 @@ class EmbeddingPass:
     universe (``_Keyed``) that fits its collect, the pass embeds the
     distinct norms on the driver (``embed.embed_driver``, bitwise
     ``embed_strings``' vectors) and keeps the pairs ``embed.brp_pairs``
-    finds under the BRP join's own predicate (a superset of the join's
-    pairs: the join can only miss a pair); no Spark job runs between the
-    collect and the edges. If those edges would pass
+    finds (``embed.lsh_candidates``' pairs: both run one block step); no
+    Spark job runs between the collect and the edges. If those edges would pass
     ``embed._EMBED_DRIVER_PAIRS`` (a low threshold keeps every pair), the
     pass runs the Spark path on the collected rows. Otherwise — over the
     collect bound, and in every other mode — the pass embeds on Spark and
@@ -206,9 +209,9 @@ class EmbeddingPass:
     dim: int = 64
     seed: int = 42
     candidate_mode: str = "lsh"     # "lsh" | "ivf" | "bruteforce"
-    # ivf mode: auto n_cells (~n/400) when None; the density-robust scale
-    # path — see ivf_candidates (the BRP-LSH join cost grows with bucket
-    # occupancy; measured 57× at 10× vectors, IVF 4.6×)
+    # ivf mode: auto n_cells (~n/400) when None; the sub-quadratic scale
+    # path — see ivf_candidates (the exact "lsh" scan compares all C(n, 2)
+    # pairs)
     n_cells: int | None = None
     nprobe: int = 2
     normalize: str | None = "simplify_corp"

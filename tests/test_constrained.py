@@ -16,7 +16,7 @@ vectors (the reference's greedy semantics, embeddings.py:177-458):
 
 Oracle-exactness tests pass candidate_mode="bruteforce" so the candidate set
 is the full ≥-threshold graph the oracle enumerates; the default lsh mode
-gets its own smoke test (approximate candidates — outcome is a refinement).
+gets its own smoke test (distance-derived cosines — outcome is a refinement).
 """
 
 import math
@@ -185,8 +185,10 @@ def test_unconstrained_matches_oracle(spark, data):
 
 
 def test_lsh_default_is_refinement(spark, data):
-    """Default candidate_mode is lsh (no O(n²) default): approximate
-    candidates can only MISS edges, so the result refines the bruteforce
+    """Default candidate_mode is lsh (the exact tiled scan, not the
+    relational self-join): its cosines come from the euclidean distance,
+    so at the threshold it may differ from the bruteforce dot product by
+    rounding; on this fixture the result refines the bruteforce
     partition."""
     import inspect
 

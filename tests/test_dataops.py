@@ -98,7 +98,7 @@ def test_ann_bruteforce_vs_lsh_and_ivf(spark):
     bf_map = {}
     for r in bf.collect():
         bf_map.setdefault(r["query_id"], []).append(r["neighbor_id"])
-    # LSH with generous params should recover most exact neighbors
+    # lsh_topk is the exact top-k within max_distance (50 prunes nothing)
     lsh = lsh_topk(emb, queries, k=5, num_hash_tables=12, bucket_length=3.0,
                    max_distance=50.0)
     lsh_map = {}
@@ -107,8 +107,8 @@ def test_ann_bruteforce_vs_lsh_and_ivf(spark):
     overlap = sum(
         len(set(bf_map[q]) & set(lsh_map.get(q, []))) for q in bf_map
     ) / (len(bf_map) * 5)
-    # recall must be exactly 1.0 at these parameters (fixed seed): the driver
-    # oracle for ann_lsh_topk compares the LSH result against the exact top-k
+    # recall must be exactly 1.0: the driver oracle for ann_lsh_topk
+    # compares its result against the exact top-k
     assert overlap == 1.0, overlap
     ivf = ivf_topk(emb, queries, k=5, n_cells=8, nprobe=4)
     ivf_map = {}

@@ -277,7 +277,8 @@ def test_empty_documents_through_text_ops(spark):
 def test_dirty_vectors_raise_clear_error_through_ann(spark, bad_id, bad_vec, message):
     """A NULL or ragged corpus vector fails the numpy re-rank with a
     ValueError naming the column and the row, in both the bruteforce scan
-    and the IVF per-cell top-k."""
+    and the IVF per-cell top-k, and the tiled threshold scan of
+    embed.lsh_candidates names the string."""
     from nama_spark.operators.ann import (
         cosine_topk_bruteforce,
         ivf_assign,
@@ -297,6 +298,15 @@ def test_dirty_vectors_raise_clear_error_through_ann(spark, bad_id, bad_vec, mes
     assigned = ivf_assign(dirty, centers)
     with pytest.raises(Exception, match=message):
         ivf_topk_delta(queries, centers, assigned, k=3, nprobe=2).collect()
+    from nama_spark.operators.embed import lsh_candidates
+
+    strings = dirty.select(
+        F.concat(F.lit("s"), F.col("vec_id").cast("string")).alias("string"),
+        F.col("embedding").alias("vec"),
+    )
+    kind = message.split(": ")[1].split(" vector")[0]
+    with pytest.raises(ValueError, match=f"vec: {kind} vector at string 's{bad_id}'"):
+        lsh_candidates(strings, 0.5)
 
 
 def test_query_corpus_dim_mismatch_raises(spark):

@@ -1,8 +1,10 @@
-"""EmbeddingPass's driver snapshot: the driver embedding is bitwise the
-Spark one, the driver scan keeps exactly the pairs MLlib's BRP join keeps
-when every vector shares a bucket, and the pipeline gives the same
-partition on both sides of ``embed._EMBED_DRIVER_PAIRS``, which bounds the
-edges the driver keeps."""
+"""EmbeddingPass's driver snapshot and the one exact scan: the driver
+embedding is bitwise the Spark one; the driver scan keeps exactly the
+pairs MLlib's BRP join keeps when every vector shares a bucket; the tiled
+``lsh_candidates`` gives the driver scan's pairs and bitwise its cos at any
+tile size; ``lsh_topk`` is the exact top-k within its distance bound; and
+the pipeline gives the same partition on both sides of
+``embed._EMBED_DRIVER_PAIRS``, which bounds the edges the driver keeps."""
 
 import math
 from collections import Counter
@@ -67,13 +69,42 @@ def _threshold_for_bound(target):
     raise AssertionError(f"no threshold gives bound {target!r}")
 
 
+def _mllib_brp_pairs(emb, cos_threshold, bucket_length):
+    """Reference only: the (s0, s1) pairs of MLlib's BRP self-join under
+    the predicate the library's scan implements (strict distance bound,
+    then 1 − e·e/2 ≥ t)."""
+    from pyspark.ml.feature import BucketedRandomProjectionLSH
+    from pyspark.ml.functions import array_to_vector
+
+    feat = emb.select(
+        "string", array_to_vector(F.col("vec").cast("array<double>")).alias("features")
+    )
+    model = BucketedRandomProjectionLSH(
+        inputCol="features", outputCol="hashes", numHashTables=8,
+        bucketLength=bucket_length, seed=42,
+    ).fit(feat)
+    joined = model.approxSimilarityJoin(
+        feat, feat, E._euclid_bound(cos_threshold), distCol="euclid"
+    )
+    return {
+        (r["s0"], r["s1"])
+        for r in joined.select(
+            F.col("datasetA.string").alias("s0"),
+            F.col("datasetB.string").alias("s1"),
+            (1.0 - F.col("euclid") * F.col("euclid") / 2.0).alias("cos"),
+        ).where((F.col("s0") < F.col("s1")) & (F.col("cos") >= cos_threshold))
+        .collect()
+    }
+
+
 def test_driver_kernel_matches_mllib_brp_at_the_distance_boundary(spark):
     """Hand-built float32 vectors; the last component is one shared large
     value, so it adds exactly 0 to every distance while every projection
     shares its sign, and with a huge bucket_length all vectors fall in one
     bucket per table: the BRP join then sees every pair, and its pairs must
     equal the driver scan's with the bound exactly at a pair distance, one
-    ulp above it and one ulp below it."""
+    ulp above it and one ulp below it. The tiled ``lsh_candidates`` keeps
+    the same pairs, so a superset of the join's."""
     vecs = np.array(
         [
             [0.6, 0.8, 0.0, 1000.0],
@@ -100,11 +131,10 @@ def test_driver_kernel_matches_mllib_brp_at_the_distance_boundary(spark):
         driver = {
             (strings[i], strings[j]) for i, j in E.brp_pairs(vecs, t, 10**9)
         }
-        mllib = {
-            (r["s0"], r["s1"])
-            for r in E.lsh_candidates(emb, t, bucket_length=1e9).collect()
-        }
+        mllib = _mllib_brp_pairs(emb, t, bucket_length=1e9)
+        tiled = {(r["s0"], r["s1"]) for r in E.lsh_candidates(emb, t).collect()}
         assert driver == mllib, name
+        assert tiled == driver, name
         got[name] = driver
     # strict e < dist: the pair at the bound is out, one ulp inside is in
     assert ("s0", "s1") not in got["at"]
@@ -140,7 +170,7 @@ def test_pipeline_partition_and_lineage_on_both_sides_of_the_embed_gate(
 ):
     """MatchPipeline([ExactKeyPass(), TokenSimPass(0.7), EmbeddingPass()])
     gives the same partition whether EmbeddingPass embeds and scans on the
-    driver or runs the Spark embed and the BRP join (an edge gate of -1
+    driver or runs the Spark embed and the tiled scan (an edge gate of -1
     turns every driver scan back); lineage records the gate, the pair bound
     C(n_norms, 2) on both sides and the path taken."""
     from nama_spark.functions.normalize import norm_key
@@ -226,8 +256,8 @@ def test_low_threshold_past_the_edge_gate_runs_the_spark_path(
 ):
     """At threshold 0 every pair passes the predicate (score_to_cos gives
     -99), so the driver would hold every raw pair. With the edge gate one
-    below that count the pass falls back to the Spark embed and BRP join on
-    the collected rows, and its edges are a subset of the driver's."""
+    below that count the pass falls back to the Spark embed and the tiled
+    scan on the collected rows, which keeps the same edges."""
     from nama_spark.operators.matchdata import MatchData
     from nama_spark.plans.lineage import LineageLog
     from nama_spark.plans.pipeline import EmbeddingPass
@@ -271,4 +301,101 @@ def test_low_threshold_past_the_edge_gate_runs_the_spark_path(
     assert lin_spark["driver_path"] == 0.0
     assert lin_spark["pair_gate"] == every - 1
     assert lin_spark["pair_bound"] == lin_driver["pair_bound"]
-    assert spark_side <= driver
+    assert spark_side == driver
+
+
+def _tile_universes():
+    """(strings, float32 vectors, cos thresholds) universes for the tiled
+    scan: real embedded names, random unit vectors with exact duplicates
+    and one NaN vector (in no pair, and no bar to its block's pairs), and
+    unnormalized vectors at a threshold every pair passes."""
+    names = [s for s in _UNIVERSES["dirty"] if s]
+    rng = np.random.RandomState(5)
+    rand = rng.normal(size=(14, 6)).astype(np.float32)
+    rand /= np.linalg.norm(rand, axis=1, keepdims=True)
+    rand[7] = rand[2]
+    rand[11] = rand[2]
+    rand[4, 1] = np.nan
+    wide = rng.normal(scale=3.0, size=(9, 5)).astype(np.float32)
+    return {
+        "names": (names, E.embed_driver(names), (0.5, 0.8)),
+        "unit_with_duplicates": ([f"u{i:02d}" for i in range(14)], rand, (0.3, 0.9)),
+        "every_pair": ([f"w{i}" for i in range(9)][::-1], wide, (-99.0,)),
+    }
+
+
+@pytest.mark.parametrize("tile", [1, 2, 10**6], ids=["B1", "B2", "B_over_n"])
+@pytest.mark.parametrize("universe", ["names", "unit_with_duplicates", "every_pair"])
+def test_tiled_scan_is_the_driver_scan(spark, monkeypatch, universe, tile):
+    """lsh_candidates over the executors returns brp_pairs' (s0, s1) pairs
+    and, bitwise, cos = 1 − e·e/2 of BRP's distance, with tiles of one row
+    (only diagonal tiles hold pairs of one block), of two rows (many
+    tiles) and of more rows than the universe (one tile)."""
+    strings, vecs, thresholds = _tile_universes()[universe]
+    monkeypatch.setattr(E, "_BLOCK_CELLS", tile * tile)
+    emb = spark.createDataFrame(
+        [(s, v.tolist()) for s, v in zip(strings, vecs)],
+        "string string, vec array<float>",
+    )
+    for t in thresholds:
+        want = {}
+        for i, j in E.brp_pairs(vecs, t, 10**9):
+            pair = tuple(sorted((strings[i], strings[j])))
+            want[pair] = E._euclid_cos(_brp_distance(vecs[i], vecs[j])).hex()
+        got = [(r["s0"], r["s1"], r["cos"].hex())
+               for r in E.lsh_candidates(emb, t).collect()]
+        assert len(got) == len(want) > 0, t
+        assert {(s0, s1): c for s0, s1, c in got} == want, t
+        assert all(s0 < s1 for s0, s1, _c in got)
+
+
+def test_lsh_topk_is_the_exact_topk_within_max_distance(spark, monkeypatch):
+    """lsh_topk against a numpy reference: per query, the corpus rows
+    (self excluded) at euclidean distance < max_distance, ranked by cosine
+    then neighbor id. Row 4 is query 0's direction at a large norm (cos 1,
+    distance 9), so the bound prunes it; rows 1-3 tie exactly at query 0's
+    k-th cosine. The broadcast scan and the crossJoin path agree."""
+    from nama_spark.operators import ann
+
+    vecs = np.array([
+        [1.0, 0.0, 0.0, 0.0],
+        [0.6, 0.8, 0.0, 0.0],
+        [0.6, 0.0, 0.8, 0.0],
+        [0.6, 0.0, 0.0, 0.8],
+        [10.0, 0.0, 0.0, 0.0],
+        [0.0, 1.0, 0.0, 0.0],
+        [-1.0, 0.0, 0.0, 0.0],
+        [0.9, 0.1, 0.1, 0.0],
+    ])
+    corpus = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.where(F.col("vec_id").isin(0, 5))
+    k, max_distance = 2, 1.5
+
+    def reference(q):
+        rows = []
+        for i, c in enumerate(vecs):
+            if i == q or math.sqrt(sum((a - b) ** 2 for a, b in zip(vecs[q], c))) >= max_distance:
+                continue
+            cos = float(vecs[q] @ c / (np.linalg.norm(vecs[q]) * np.linalg.norm(c)))
+            rows.append((-cos, i))
+        return [(i, -negcos) for negcos, i in sorted(rows)[:k]]
+
+    def run():
+        got = {}
+        for r in ann.lsh_topk(corpus, queries, k=k, max_distance=max_distance).collect():
+            got.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"], r["cos"]))
+        return {q: [(n, c) for _r, n, c in sorted(v)] for q, v in got.items()}
+
+    scan = run()
+    monkeypatch.setattr(ann, "_BRUTEFORCE_QUERY_ROWS", 0)
+    assert run() == scan
+    for q in (0, 5):
+        want = reference(q)
+        assert [n for n, _c in scan[q]] == [n for n, _c in want], q
+        assert [c for _n, c in scan[q]] == pytest.approx([c for _n, c in want], abs=1e-12)
+    assert [n for n, _c in scan[0]] == [7, 1]
+    unbounded = ann.lsh_topk(corpus, queries, k=k).where("query_id = 0").collect()
+    assert 4 in {r["neighbor_id"] for r in unbounded}

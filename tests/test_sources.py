@@ -1308,9 +1308,10 @@ def test_no_environment_reads_outside_session():
 
 
 def test_embedding_and_brp_cosine_each_live_once():
-    """Source guard: the per-string random-projection embedding and the BRP
-    join's 1 − e·e/2 cosine each appear once in the library, and both the
-    Spark and the driver paths call that one copy."""
+    """Source guard: the per-string random-projection embedding and the
+    1 − e·e/2 cosine each appear once in the library; both embedding
+    paths call the one embedding, and both threshold scans (driver and
+    tiled) run the one block step that applies the cosine."""
     import inspect
     import pathlib
 
@@ -1328,10 +1329,27 @@ def test_embedding_and_brp_cosine_each_live_once():
     for fn, shared in [
         (E.embed_strings, "_embed_one("),
         (E.embed_driver, "_embed_one("),
-        (E.lsh_candidates, "_euclid_cos("),
-        (E.brp_pairs, "_euclid_cos("),
+        (E._brp_block, "_euclid_cos("),
+        (E.lsh_candidates, "_brp_block("),
+        (E.brp_pairs, "_brp_block("),
     ]:
         assert shared in inspect.getsource(fn), (fn.__name__, shared)
+
+
+def test_no_mllib_brp_join_in_the_library():
+    """Source guard: one exact scan serves candidate_mode="lsh" and
+    lsh_topk, so MLlib's bucketed BRP join is not called anywhere in the
+    library (tests keep it as a reference only)."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "nama_spark"
+    hits = [
+        f"{p.relative_to(root)}:{no}"
+        for p in sorted(root.rglob("*.py"))
+        for no, line in enumerate(p.read_text().splitlines(), 1)
+        if "BucketedRandomProjectionLSH" in line or "approxSimilarityJoin" in line
+    ]
+    assert not hits, hits
 
 
 def test_pipeline_keys_once_and_the_key_window_lives_once():

@@ -336,3 +336,23 @@ def test_pipeline_partition_and_lineage_on_both_sides_of_the_pair_gate(
     assert unkeyed == driver
     assert lin_unkeyed["driver_path"] == 1.0
     assert lin_unkeyed["pair_bound"] == lin_driver["pair_bound"]
+
+
+def test_pipeline_driver_path_leaves_no_cached_data(spark):
+    """TokenSimPass's driver path releases the fit's two cached token and
+    weight frames (and its score broadcast) before it returns, so a
+    pipeline run leaves the session's cache as it found it."""
+    from nama_spark.plans.pipeline import ExactKeyPass, MatchPipeline, TokenSimPass
+
+    spark.catalog.clearCache()
+    records = spark.createDataFrame(
+        [(s,) for s in ["Acme Labs", "ACME LABS INC", "acme lab", "Globex", "globex co"]],
+        "repo string",
+    )
+    md, lineage = MatchPipeline([ExactKeyPass(), TokenSimPass(0.7)]).run(
+        records, "repo"
+    )
+    md.df.collect()
+    assert {r["value"] for r in lineage.rows
+            if r["stage"] == "token_sim" and r["metric"] == "driver_path"} == {1.0}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
