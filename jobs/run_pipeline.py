@@ -82,10 +82,6 @@ def parse_args(argv=None):
                         "exchange-free; data files land under "
                         "<output>/clusters_bucketed")
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--cc-driver-edge-cap", type=int, default=100_000,
-                   help="edge count under which connected components runs "
-                        "driver-side union-find instead of the iterative "
-                        "large-star/small-star rounds")
     return p.parse_args(argv)
 
 
@@ -149,7 +145,6 @@ def main(argv=None):
     pipe = MatchPipeline(
         passes=build_passes(args),
         checkpoint_dir=args.checkpoint_dir,
-        cc_driver_edge_cap=args.cc_driver_edge_cap,
     )
     md, lineage = pipe.run(records, string_col=args.string_col,
                            resume=not args.no_resume)

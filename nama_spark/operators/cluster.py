@@ -11,6 +11,10 @@ groupBy + join, no driver-side state.
 Scale notes:
 - node ids are compared with plain column ordering, so the same code runs on
   string ids (repo names) or longs.
+- one entry point, one small-graph decision: ``connected_components`` reads
+  the canonical edges once, bounded by ``small_graph_threshold``; a graph
+  that fits is solved by driver union-find, a larger one runs the star
+  rounds. Every unite in the library reaches CC through it.
 - `localCheckpoint()` every iteration cuts the exponentially growing lineage;
   on a real cluster use `checkpoint()` against a durable checkpoint dir
   (configurable via ``checkpoint_dir``) so the loop is resumable.
@@ -27,7 +31,7 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nama_spark.session import local_frame
+from nama_spark.session import collect_rows, local_frame
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -111,6 +115,31 @@ def _union_find_local(edge_rows) -> dict:
     return {x: find(x) for x in nodes}
 
 
+def _quotient_edges(
+    edges: DataFrame, src: str, dst: str, labels: DataFrame
+) -> DataFrame:
+    """The group-quotient graph: ``edges`` with each endpoint mapped to its
+    label in ``labels`` (node, label), an endpoint outside the table being
+    its own label. Returns (src, dst); ``connected_components`` drops the
+    self-loops and duplicates the contraction leaves."""
+    node, label = labels.columns[:2]
+
+    def side(i):
+        return labels.select(
+            F.col(node).alias(f"__n{i}"), F.col(label).alias(f"__l{i}")
+        )
+
+    return (
+        edges.select(F.col(src).alias("__n0"), F.col(dst).alias("__n1"))
+        .join(side(0), "__n0", "left")
+        .join(side(1), "__n1", "left")
+        .select(
+            F.coalesce("__l0", "__n0").alias("src"),
+            F.coalesce("__l1", "__n1").alias("dst"),
+        )
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -125,32 +154,28 @@ def connected_components(
     Returns (node, component) for every node appearing in ``edges``;
     ``component`` is the minimum node id of the component (deterministic).
 
-    Adaptive execution: below ``small_graph_threshold`` edges the O(log n)
-    shuffle rounds are pure scheduling latency, so the canonical edge set is
-    collected and solved with driver-side union-find (same partition, same
-    min-id labels) — the AQE-style small-side fast path. At data scale the
-    iterative large-star/small-star path runs. The 100k default bounds the
-    driver collect to ~10 MB of string pairs; raise it only with driver
-    memory to spare (jobs/run_pipeline.py exposes --cc-driver-edge-cap).
+    Adaptive execution, decided here and nowhere else: the canonical edge
+    set is pinned and read once, bounded by ``small_graph_threshold``
+    (``collect_rows``: an Arrow ``limit(cap + 1)`` read). A graph that fits
+    is solved by driver-side union-find (same partition, same min-id
+    labels): below the threshold the O(log n) shuffle rounds are pure
+    scheduling latency. A graph that does not fit has had its pin
+    materialized by that read, and the large-star/small-star rounds run on
+    it. The 100k default bounds the driver read to ~10 MB of string pairs.
 
-    Callers with isolated nodes union them in afterwards (see
-    ``labels_for_nodes``).
+    Callers with isolated nodes union them in afterwards
+    (``MatchData.unite``, ``labels_for_nodes``).
     """
     spark = edges.sparkSession
     if checkpoint_dir:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
 
     e = _canonical_edges(edges, src, dst)
-    # lazy pin: the checksum aggregate right below materializes the
-    # checkpoint — one job instead of an eager-checkpoint job followed by
-    # a checksum job (round 6; same result, ~0.4 s per CC invocation of
-    # pure scheduling saved)
+    # the local pin is lazy: the bounded read below materializes it
     e = e.checkpoint() if checkpoint_dir else e.localCheckpoint(eager=False)
-    prev = _checksum(e)
-    _log(lineage, "cc", 0, prev[0], "edges", float(prev[0]))
-
-    if prev[0] <= small_graph_threshold:
-        rows = [(r["u"], r["v"]) for r in e.collect()]
+    rows = collect_rows(e, small_graph_threshold)
+    if rows is not None:
+        _log(lineage, "cc", 0, len(rows), "edges", float(len(rows)))
         comp = _union_find_local(rows)
         _log(lineage, "cc", 1, len(comp), "small_graph_union_find", 1.0)
         # node ids keep the edge type (strings on the ER path; the module
@@ -160,10 +185,12 @@ def connected_components(
             spark, list(comp.items()), f"node {t}, component {t}"
         )
 
+    prev = _checksum(e)
+    _log(lineage, "cc", 0, prev[0], "edges", float(prev[0]))
     for it in range(1, max_iter + 1):
         t0 = time.time()
         e2 = _small_star(_large_star(e))
-        # lazy pin + checksum materializes in one job (see above)
+        # lazy pin: the checksum aggregate materializes it in one job
         e2 = e2.checkpoint() if checkpoint_dir else e2.localCheckpoint(eager=False)
         cur = _checksum(e2)
         e.unpersist()
@@ -241,24 +268,13 @@ def connected_components_delta(
     appear in the output even if isolated (the singleton-start invariant,
     reference match_data.py:123-126).
     """
-    spark = assignments.sparkSession
     a = assignments.select("node", "component")
     e = _canonical_edges(new_edges, src, dst)
 
-    lab_u = a.select(F.col("node").alias("u"), F.col("component").alias("cu"))
-    lab_v = a.select(F.col("node").alias("v"), F.col("component").alias("cv"))
-    label_edges = (
-        e.join(lab_u, "u", "left")
-        .join(lab_v, "v", "left")
-        .select(
-            F.coalesce("cu", F.col("u")).alias("lu"),
-            F.coalesce("cv", F.col("v")).alias("lv"),
-        )
-        .where(F.col("lu") != F.col("lv"))
-        .distinct()
-    )
     _log(lineage, "cc_delta", 0, None, "contracted_label_graph", 1.0)
-    meta = connected_components(label_edges, "lu", "lv", lineage=lineage, **cc_kwargs)
+    meta = connected_components(
+        _quotient_edges(e, "u", "v", a), lineage=lineage, **cc_kwargs
+    )
     relabel = meta.select(
         F.col("node").alias("old_label"), F.col("component").alias("merged")
     )

@@ -931,25 +931,10 @@ def unite_similar(
     that graph merged into the current partition. ``threshold`` is a
     probability; it is pushed down to a raw cosine before candidate
     generation (scoring_model.py:48-52)."""
-    from nama_spark.operators.cluster import labels_for_nodes
-    from nama_spark.operators.matchdata import MatchData
-
     cand = threshold_candidates(
         embeddings, score_to_cos(threshold, alpha), candidate_mode, **lsh_kwargs
     )
-    edges = cand.select(F.col("s0").alias("src"), F.col("s1").alias("dst"))
-    own = matchdata.df.select(
-        F.col("string").alias("src"), F.col("group").alias("dst")
-    )
-    labels = labels_for_nodes(
-        matchdata.df.select("string"), edges.union(own), node_col="string"
-    )
-    out = (
-        matchdata.df.drop("group")
-        .join(labels, matchdata.df["string"] == labels["node"])
-        .select("string", "count", F.col("component").alias("group"))
-    )
-    return MatchData(out)
+    return matchdata.unite(cand.select("s0", "s1"))
 
 
 def unite_nearest(

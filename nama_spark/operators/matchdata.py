@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nama_spark.operators.block import exact_key_edges
-from nama_spark.operators.cluster import labels_for_nodes
+from nama_spark.operators.cluster import _quotient_edges, connected_components
 from nama_spark.session import local_frame
 
 def _label_window():
@@ -78,7 +78,7 @@ class MatchData:
             .groupBy("string")
             .agg(F.sum("count").alias("count"))
         )
-        return MatchData(base.withColumn("group", F.col("string")), _relabel=False)
+        return _singletons(base)
 
     @staticmethod
     def from_groups(df: DataFrame, string_col: str = "string",
@@ -108,12 +108,7 @@ class MatchData:
             .groupBy("string")
             .agg(F.count(F.lit(1)).alias("count"))
         )
-        labels = labels_for_nodes(nodes, df, node_col="string", src=col0, dst=col1,
-                                  **cc_kwargs)
-        base = nodes.join(labels, nodes["string"] == labels["node"]).select(
-            nodes["string"], "count", F.col("component").alias("group")
-        )
-        return MatchData(base)
+        return _singletons(nodes).unite(df.select(col0, col1), **cc_kwargs)
 
     @staticmethod
     def detect(
@@ -243,7 +238,10 @@ class MatchData:
             )
         elif isinstance(arg, DataFrame):
             c0, c1 = arg.columns[:2]
-            edges = arg.select(F.col(c0).alias("src"), F.col(c1).alias("dst"))
+            edges = arg.select(
+                F.col(c0).cast("string").alias("src"),
+                F.col(c1).cast("string").alias("dst"),
+            )
         elif isinstance(arg, Mapping):
             edges = local_frame(
                 df.sparkSession,
@@ -274,8 +272,6 @@ class MatchData:
         # (round 6, guide §2.1: one full universe shuffle removed from every
         # unite). Synthetic label nodes (mapping case) land only on the
         # comp side of the left join and drop out, as before.
-        from nama_spark.operators.cluster import connected_components
-
         comp = connected_components(all_edges, src="src", dst="dst", **cc_kwargs)
         out = df.join(comp, df["string"] == comp["node"], "left").select(
             "string", "count",
@@ -306,51 +302,9 @@ class MatchData:
         moved its group's label would otherwise miss the component map.
         ``delta_fold.unite_incremental`` is the driver fold's twin of this
         rule; a change here changes there too."""
-        from nama_spark.operators.cluster import connected_components
-
         c0, c1 = edges.columns[:2]
-        gmap = self.df.select("string", "group")
-        qe = (
-            edges.select(F.col(c0).alias("__s0"), F.col(c1).alias("__s1"))
-            .join(
-                gmap.select(
-                    F.col("string").alias("__s0"), F.col("group").alias("__g0")
-                ),
-                "__s0", "left",
-            )
-            .join(
-                gmap.select(
-                    F.col("string").alias("__s1"), F.col("group").alias("__g1")
-                ),
-                "__s1", "left",
-            )
-            .select(
-                F.coalesce("__g0", F.col("__s0")).alias("src"),
-                F.coalesce("__g1", F.col("__s1")).alias("dst"),
-            )
-        )
-        # Δ-sized by contract → one bounded collect + driver union-find
-        # beats the generic CC machinery's job chain (eager checkpoint +
-        # checksum + collect = 3 scheduling rounds) for micro-batches; the
-        # limit caps driver memory, and an over-cap batch falls back to the
-        # distributed large-star/small-star pass.
-        cap = cc_kwargs.pop("driver_edge_cap", 100_000)
-        qe_rows = qe.limit(cap + 1).collect()
-        if len(qe_rows) <= cap:
-            from nama_spark.operators.cluster import _union_find_local
-
-            uf = _union_find_local(
-                [(min(r[0], r[1]), max(r[0], r[1])) for r in qe_rows]
-            )
-            if not uf:
-                return MatchData(self.df, _relabel=False)
-            comp = local_frame(
-                self.df.sparkSession,
-                list(uf.items()),
-                "node string, component string",
-            )
-        else:
-            comp = connected_components(qe, **cc_kwargs)
+        qe = _quotient_edges(edges, c0, c1, self.df.select("string", "group"))
+        comp = connected_components(qe, **cc_kwargs)
         merged = self.df.join(
             comp.select(
                 F.col("node").alias("group"), F.col("component").alias("__c")
@@ -385,9 +339,7 @@ class MatchData:
 
     def split_all(self) -> "MatchData":
         """Everything a singleton (match_data.py:372-393)."""
-        return MatchData(
-            self.df.withColumn("group", F.col("string")), _relabel=False
-        )
+        return _singletons(self.df)
 
     def __add__(self, other: "MatchData") -> "MatchData":
         """Union of two MatchDatas: add strings then unite by the other's
@@ -398,17 +350,10 @@ class MatchData:
             .groupBy("string")
             .agg(F.sum("count").alias("count"))
         )
-        edges = (
-            self.df.select(F.col("string").alias("src"), F.col("group").alias("dst"))
-            .union(
-                other.df.select(F.col("string").alias("src"), F.col("group").alias("dst"))
-            )
+        edges = self.df.select("string", "group").union(
+            other.df.select("string", "group")
         )
-        labels = labels_for_nodes(combined, edges, node_col="string")
-        out = combined.join(labels, combined["string"] == labels["node"]).select(
-            "string", "count", F.col("component").alias("group")
-        )
-        return MatchData(out)
+        return _singletons(combined).unite(edges)
 
     # ---------- output (match_data.py:580-627) ----------
 
@@ -456,6 +401,11 @@ class MatchData:
         lk = left.join(gmap, left[left_on] == gmap["string"], "left").drop("string")
         rk = right.join(gmap, right[right_on] == gmap["string"], "left").drop("string")
         return lk.join(rk, "match_group", how)
+
+
+def _singletons(counts: DataFrame) -> MatchData:
+    """Every (string, count) row its own group."""
+    return MatchData(counts.withColumn("group", F.col("string")), _relabel=False)
 
 
 def _strings_df(like: DataFrame, strings) -> DataFrame:

@@ -41,7 +41,6 @@ from nama_spark.operators.block import (
     eligible_tokens,
     token_block_pairs,
 )
-from nama_spark.operators.cluster import labels_for_nodes
 from nama_spark.operators.evaluate import score_predicted
 from nama_spark.operators.matchdata import MatchData
 from nama_spark.operators.score import token_similarity_scores
@@ -556,21 +555,9 @@ class TokenSimilarity:
 
         if scores is None:
             scores = self.pair_scores()
-        edges = scores.where(F.col("score") >= threshold).select(
-            F.col("s0").alias("src"), F.col("s1").alias("dst")
+        return matchdata.unite(
+            scores.where(F.col("score") >= threshold).select("s0", "s1")
         )
-        own = matchdata.df.select(
-            F.col("string").alias("src"), F.col("group").alias("dst")
-        )
-        labels = labels_for_nodes(
-            matchdata.df.select("string"), edges.union(own), node_col="string"
-        )
-        out = (
-            matchdata.df.drop("group")
-            .join(labels, matchdata.df["string"] == labels["node"])
-            .select("string", "count", F.col("component").alias("group"))
-        )
-        return MatchData(out)
 
     def predict_incremental(
         self,

@@ -287,9 +287,6 @@ class MatchPipeline:
 
     passes: list = field(default_factory=lambda: [ExactKeyPass(), TokenSimPass()])
     checkpoint_dir: str | None = None
-    # edge count under which CC runs driver-side union-find instead of the
-    # iterative shuffle rounds (cluster.py small_graph_threshold)
-    cc_driver_edge_cap: int = 100_000
 
     def run(
         self,
@@ -357,9 +354,7 @@ class MatchPipeline:
 
         t0 = time.time()
         if all_edges is not None:
-            md = md.unite(
-                all_edges, small_graph_threshold=self.cc_driver_edge_cap
-            )
+            md = md.unite(all_edges)
         if final_dir:
             md.df.write.mode("overwrite").parquet(final_dir)
             md = MatchData(spark.read.parquet(final_dir), _relabel=False)

@@ -72,12 +72,49 @@ def test_labels_for_nodes_includes_isolated(spark):
     assert got == {"a": "a", "b": "a", "solo": "solo"}
 
 
-def test_cc_lineage_metrics(spark):
+@pytest.mark.parametrize("threshold", [0, 10**6])
+def test_cc_lineage_metrics(spark, threshold):
+    """The ``edges`` row counts the canonical edge set on both paths: a
+    duplicate, a reversed duplicate, a self-loop and a NULL endpoint add
+    nothing. Only the driver path logs ``small_graph_union_find``."""
     lineage = []
-    edges = spark.createDataFrame([("a", "b"), ("b", "c")], ["src", "dst"])
-    connected_components(edges, lineage=lineage).collect()
-    assert any(e["metric"] == "edges" for e in lineage)
-    assert any(e["stage"] == "cc" for e in lineage)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("a", "b"), ("b", "a"), ("b", "c"), ("c", "c"),
+         ("d", None), ("x", "y")],
+        "src string, dst string",
+    )
+    got = connected_components(
+        edges, lineage=lineage, small_graph_threshold=threshold
+    )
+    assert dict(got.collect()) == {
+        "a": "a", "b": "a", "c": "a", "x": "x", "y": "x"
+    }
+    assert all(e["stage"] == "cc" for e in lineage)
+    assert [(e["rows"], e["value"]) for e in lineage
+            if e["metric"] == "edges"] == [(3, 3.0)]
+    driver = [e for e in lineage if e["metric"] == "small_graph_union_find"]
+    assert len(driver) == (1 if threshold else 0)
+    assert any(e["metric"] == "wall_sec" for e in lineage) == (not threshold)
+
+
+def test_cc_driver_path_runs_one_job(spark):
+    """Below the threshold CC is one bounded read of its pinned canonical
+    edges: no checksum job and no second collect. AQE is off here because
+    it submits each shuffle stage (the canonical distinct's) as a job of
+    its own; with it off the whole read is one job."""
+    sc = spark.sparkContext
+    edges = spark.sql(
+        "SELECT * FROM VALUES ('a', 'b'), ('b', 'c'), ('x', 'y') AS t(src, dst)"
+    )
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup("cc_driver_path", "cc_driver_path")
+    try:
+        connected_components(edges)
+    finally:
+        sc.setJobGroup("", "")
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_driver_path")) == 1
 
 
 # ---------------------------------------------------------------------------

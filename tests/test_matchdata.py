@@ -1,6 +1,7 @@
 """MatchData semantics vs the reference (nama/match_data.py) — constructors,
 label election, unite polymorphism, split/drop/keep, add_strings, merge_dfs."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from nama_spark.functions.normalize import simplify_corp
@@ -45,6 +46,12 @@ def test_from_pairs_transitive(spark):
     )
     md = MatchData.from_pairs(pairs)
     assert _partition(md) == {frozenset({"a", "b", "c"}), frozenset({"x", "y"})}
+    # integer ids become MatchData's string ids
+    ids = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
+                                "string0 long, string1 long")
+    assert _partition(MatchData.from_pairs(ids)) == {
+        frozenset({"1", "2", "3"}), frozenset({"10", "11"})
+    }
 
 
 def test_detect_dispatch(spark):
@@ -224,7 +231,10 @@ def test_matched_to_and_reset_counts(spark):
     assert {r["count"] for r in md.reset_counts().df.collect()} == {1}
 
 
-def test_unite_incremental_equals_unite(spark):
+# threshold=0 sends the quotient CC down the star rounds; 10**6 keeps it
+# on the driver union-find
+@pytest.mark.parametrize("threshold", [0, 10**6])
+def test_unite_incremental_equals_unite(spark, threshold):
     """unite_incremental (group-quotient CC + touched-only relabel) must
     reproduce unite(edges) exactly whenever every edge touches a string
     outside the previous universe — chained merges through a new string,
@@ -244,18 +254,20 @@ def test_unite_incremental_equals_unite(spark):
     edges = spark.createDataFrame(
         [("n1", "a"), ("n1", "b2"), ("c", "n2")], ["s0", "s1"])
 
-    want = {tuple(r) for r in md2.unite(edges).df.collect()}
-    got = {tuple(r) for r in md2.unite_incremental(edges).df.collect()}
+    cc = {"small_graph_threshold": threshold}
+    want = {tuple(r) for r in md2.unite(edges, **cc).df.collect()}
+    got = {tuple(r) for r in md2.unite_incremental(edges, **cc).df.collect()}
     assert got == want
 
     # empty edge set: everything untouched, byte-identical rows
     none = spark.createDataFrame([], "s0 string, s1 string")
-    got2 = {tuple(r) for r in md2.unite_incremental(none).df.collect()}
-    want2 = {tuple(r) for r in md2.unite(none).df.collect()}
+    got2 = {tuple(r) for r in md2.unite_incremental(none, **cc).df.collect()}
+    want2 = {tuple(r) for r in md2.unite(none, **cc).df.collect()}
     assert got2 == want2
 
 
-def test_unite_incremental_after_a_relabelling_redelivery(spark):
+@pytest.mark.parametrize("threshold", [0, 10**6])
+def test_unite_incremental_after_a_relabelling_redelivery(spark, threshold):
     """A delta that re-delivers a known string can move its group's label
     (add_strings re-elects): {acme:2, acme inc:2} is labelled acme until
     acme inc's count reaches 3. The quotient must use the current labels,
@@ -269,12 +281,13 @@ def test_unite_incremental_after_a_relabelling_redelivery(spark):
         [("acme inc",), ("acme incorporated",)], ["string"]))
     edges = spark.createDataFrame(
         [("acme inc", "acme incorporated")], ["s0", "s1"])
+    cc = {"small_graph_threshold": threshold}
     got = {r["string"]: r["group"]
-           for r in md2.unite_incremental(edges).df.collect()}
+           for r in md2.unite_incremental(edges, **cc).df.collect()}
     assert got == {"acme": "acme inc", "acme inc": "acme inc",
                    "acme incorporated": "acme inc"}
     assert got == {r["string"]: r["group"]
-                   for r in md2.unite(edges).df.collect()}
+                   for r in md2.unite(edges, **cc).df.collect()}
 
 
 def test_diff_partitions(spark):

@@ -1382,6 +1382,38 @@ def test_pipeline_keys_once_and_the_key_window_lives_once():
         assert "exact_key_edges(" in inspect.getsource(fn), fn.__qualname__
 
 
+def test_connected_components_decides_alone():
+    """Source guard: connected_components is the only place that chooses
+    between driver union-find and the star rounds. The union-find runs only
+    in cluster.py and in the driver fold (its own row twin), no second
+    edge-cap knob exists, and the unites reach CC through MatchData.unite
+    rather than labels_for_nodes."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    files = sorted((repo / "nama_spark").rglob("*.py")) + sorted(
+        (repo / "jobs").rglob("*.py"))
+
+    def hits(needle, paths):
+        return [
+            f"{p.relative_to(repo)}:{no}"
+            for p in paths
+            for no, line in enumerate(p.read_text().splitlines(), 1)
+            if needle in line
+        ]
+
+    uf = hits("_union_find_local(", files)
+    assert {h.split(":")[0] for h in uf} == {
+        "nama_spark/operators/cluster.py", "nama_spark/operators/delta_fold.py"
+    }, uf
+    for knob in ("driver_edge_cap", "driver-edge-cap"):
+        assert not hits(knob, files), knob
+    ops = repo / "nama_spark" / "operators"
+    assert not hits("labels_for_nodes(", [
+        ops / "matchdata.py", ops / "token_similarity.py", ops / "embed.py"
+    ])
+
+
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):
     """jobs/run_linkage.py --mode one_to_one: the peeling selection links
     every left to a distinct right and records the peel round."""
