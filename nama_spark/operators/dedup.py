@@ -13,6 +13,20 @@ Scale notes:
   deterministic (no JVM-specific hash), banded into LSH buckets so the join
   is equi on (band, band_signature);
 - near-dup *clusters* (not just pairs) come from the shared CC operator.
+
+Each step the families share is written once, and the operators call it:
+- ``_token_windows`` — the k-token window, a document shorter than k as
+  one window of its whole text, no window for a NULL text:
+  word_shingles, duplicated_span_profile, remove_duplicated_spans;
+- ``_minhash_bands`` — MinHash signatures cut into (band, bsig) keys:
+  minhash_lsh_pairs, minhash_band_index;
+- ``simhash_band_index`` — 16-bit SimHash bands: simhash_near_pairs,
+  simhash_near_pairs_delta;
+- ``_band_join`` — the collision join on (band, key): ``_band_pairs``
+  (minhash_lsh_pairs, simhash_near_pairs), ``_band_pairs_delta`` (their
+  _delta twins) and streaming/dedup.py;
+- ``_overlap_pairs`` — ub-prefilter → exact verify → measure ≥ t:
+  ngram_jaccard_pairs, containment_pairs, winnow_near_pairs.
 """
 
 from __future__ import annotations
@@ -22,7 +36,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,15 +86,9 @@ def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     hazard measured at 4× wall on winnow_fingerprints)."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     tokenized = df.select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
-    t = F.col("__toks")
-    n = F.size(t)
-    shingles = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - F.lit(k)),
-            lambda i: F.array_join(F.slice(t, i + 1, k), " "),
-        ),
-    ).otherwise(F.array(F.array_join(t, " ")))
+    shingles = _token_windows(
+        F.col("__toks"), k, lambda i, w, n: F.array_join(w, " ")
+    )
     # dedup INSIDE the array (in-JVM, per doc) before exploding: the rows
     # are then distinct by construction — the old explode-then-.distinct()
     # paid a full corpus-wide shuffle of the shingle stream for the same
@@ -88,6 +96,22 @@ def word_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return tokenized.select(
         "doc_id", F.explode(F.array_distinct(shingles)).alias("shingle")
     )
+
+
+def _token_windows(t: Column, k: int, window) -> Column:
+    """``window(start, tokens, length)`` for every k-token window of the
+    token array ``t`` (0-based start, length k); a document shorter than k
+    is one window of all its tokens at start 0. A NULL ``t`` (NULL text)
+    gives a NULL array, which explodes to no rows — a NULL text has no
+    items, so it can neither block with nor band-match another document."""
+    n = F.size(t)
+    return F.when(
+        n >= k,
+        F.transform(
+            F.sequence(F.lit(0), n - F.lit(k)),
+            lambda i: window(i, F.slice(t, i + 1, k), F.lit(k)),
+        ),
+    ).when(t.isNotNull(), F.array(window(F.lit(0), t, n)))
 
 
 def _overlap_prefilter(
@@ -123,24 +147,7 @@ def _overlap_prefilter(
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("__h"))
     )
-    out = (
-        partial.join(
-            sizes.select(F.col("doc_id").alias("id0"), F.col("__n").alias("n0")),
-            "id0",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("id1"), F.col("__n").alias("n1")),
-            "id1",
-        )
-        .join(
-            hcnt.select(F.col("doc_id").alias("id0"), F.col("__h").alias("h0")),
-            "id0", "left",
-        )
-        .join(
-            hcnt.select(F.col("doc_id").alias("id1"), F.col("__h").alias("h1")),
-            "id1", "left",
-        )
-    )
+    out = _per_side(_per_side(partial, sizes, "__n", "n"), hcnt, "__h", "h", "left")
     ub = F.col("n_elig") + F.least(
         F.coalesce(F.col("h0"), F.lit(0)), F.coalesce(F.col("h1"), F.lit(0))
     )
@@ -341,15 +348,53 @@ def _pair_overlap_joined(
         .groupBy("id0", "id1")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("id0"), F.col("__n").alias("n0")),
-            "id0",
+    return _per_side(inter, sizes, "__n", "n")
+
+
+def _per_side(
+    pairs: DataFrame, per_doc: DataFrame, col: str, name: str, how: str = "inner"
+) -> DataFrame:
+    """``pairs`` (id0, id1, ...) with the per-doc column ``col`` of
+    ``per_doc`` (doc_id, ``col``) attached to each side: as <name>0 for
+    id0, then as <name>1 for id1."""
+    for i in "01":
+        side = per_doc.select(
+            F.col("doc_id").alias(f"id{i}"), F.col(col).alias(f"{name}{i}")
         )
-        .join(
-            sizes.select(F.col("doc_id").alias("id1"), F.col("__n").alias("n1")),
-            "id1",
-        )
+        pairs = pairs.join(side, f"id{i}", how)
+    return pairs
+
+
+def _jaccard(n_inter: Column) -> Column:
+    return n_inter / (F.col("n0") + F.col("n1") - n_inter)
+
+
+def _containment(n_inter: Column) -> Column:
+    return n_inter / F.least("n0", "n1")
+
+
+def _at_least(overlap: DataFrame, name: str, measure, threshold: float) -> DataFrame:
+    """``overlap`` (id0, id1, n_inter, n0, n1) plus ``name`` =
+    measure(n_inter), keeping the pairs where it is ≥ threshold."""
+    return overlap.withColumn(name, measure(F.col("n_inter"))).where(
+        F.col(name) >= threshold
+    )
+
+
+def _overlap_pairs(
+    items: DataFrame, item_col: str, max_df: int, name: str, measure,
+    threshold: float,
+) -> DataFrame:
+    """Block → ub-prefilter → exact verify → measure ≥ threshold over an
+    exploded (doc_id, ``item_col``) set table. Only pairs whose measure AT
+    the intersection upper bound clears the threshold reach the verify:
+    ub ≥ |∩| and every measure here is monotone in |∩|, so no pair is
+    falsely dropped."""
+    pre = _overlap_prefilter(items, item_col, max_df)
+    cand = pre.where(measure(F.col("ub")) >= threshold)
+    return _at_least(
+        _pair_overlap_pre(cand, items, item_col, max_df), name, measure,
+        threshold,
     )
 
 
@@ -373,23 +418,11 @@ def ngram_jaccard_pairs(
     # (not cache) so nothing stays pinned in executor storage after the
     # returned frame is consumed (same rationale as winnow_near_pairs)
     sh = word_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
-    # block + upper-bound prefilter (guide §3.2): only pairs whose jaccard
-    # AT the intersection upper bound clears the threshold go to the exact
-    # verify — measured at sf0.1 this cuts the verify set 1.13M → ~hundreds
-    # with bit-identical output (ub ≥ |∩| and jaccard is monotone in |∩|)
-    pre = _overlap_prefilter(sh, "shingle", max_df)
-    cand = pre.where(
-        F.col("ub") / (F.col("n0") + F.col("n1") - F.col("ub")) >= threshold
-    )
-    return (
-        _pair_overlap_pre(cand, sh, "shingle", max_df)
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n0") + F.col("n1") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id0", "id1", "jaccard")
-    )
+    # block + upper-bound prefilter (guide §3.2): measured at sf0.1 this
+    # cuts the verify set 1.13M → ~hundreds with bit-identical output
+    return _overlap_pairs(
+        sh, "shingle", max_df, "jaccard", _jaccard, threshold
+    ).select("id0", "id1", "jaccard")
 
 
 def containment_pairs(
@@ -406,26 +439,16 @@ def containment_pairs(
     Catches a short document quoted inside a long one — a pair symmetric
     Jaccard scores near |A|/|B| and misses at any usable threshold.
 
-    Same candidate discipline as ngram_jaccard_pairs (dedup.py:81):
+    Same candidate discipline as ngram_jaccard_pairs (``_overlap_pairs``):
     blocks on shingles with doc-frequency in [2, max_df], exact
     intersection recomputed over ALL shingles — the df-cap only bounds
     pair enumeration, never the statistic."""
     sh = word_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
     # same ub-prefilter as ngram_jaccard_pairs: containment is monotone in
     # |∩| too, so pairs below threshold at ub are below it exactly
-    pre = _overlap_prefilter(sh, "shingle", max_df)
-    cand = pre.where(
-        F.col("ub") / F.least("n0", "n1") >= threshold
-    )
-    return (
-        _pair_overlap_pre(cand, sh, "shingle", max_df)
-        .withColumn(
-            "containment",
-            F.col("n_inter") / F.least("n0", "n1"),
-        )
-        .where(F.col("containment") >= threshold)
-        .select("id0", "id1", "n0", "n1", "containment")
-    )
+    return _overlap_pairs(
+        sh, "shingle", max_df, "containment", _containment, threshold
+    ).select("id0", "id1", "n0", "n1", "containment")
 
 
 # ---------- MinHash + LSH ----------
@@ -446,6 +469,93 @@ def minhash_signatures(
     )
 
 
+def _minhash_bands(shingles: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc_id, band, bsig): each doc's MinHash signature cut into ``bands``
+    bands of num_hashes/bands hashes, each band's hashes joined into one
+    join key. num_hashes must split evenly, or some hashes would silently
+    band nowhere (and with no hashes every band key is '')."""
+    if bands < 1 or num_hashes < 1 or num_hashes % bands:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be a positive multiple of bands ({bands})"
+        )
+    r = num_hashes // bands
+    sig = F.col("sig")
+    return _explode_bands(
+        minhash_signatures(shingles, num_hashes), ["doc_id"], "bsig",
+        [F.concat_ws("|", *[sig[b * r + i] for i in range(r)]) for b in range(bands)],
+    )
+
+
+def _explode_bands(df: DataFrame, keep: list, key: str, band_keys: list) -> DataFrame:
+    """(*keep, band, ``key``): one row per band b of every ``df`` row, with
+    band_keys[b] as its ``key`` — the band table both LSH families join."""
+    arr = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), c.alias(key))
+            for b, c in enumerate(band_keys)
+        ]
+    )
+    return df.select(*keep, F.explode(arr).alias("bb")).select(
+        *keep, F.col("bb.band").alias("band"), F.col(f"bb.{key}").alias(key)
+    )
+
+
+def _band_join(
+    left: DataFrame, right: DataFrame, key: str, ids=("id0", "id1"),
+    carry: str | None = None,
+) -> DataFrame:
+    """One row per (band, ``key``) collision of a ``left`` doc with a
+    ``right`` doc — the LSH collision join every band-signature candidate
+    set here is built from (C2Net's one join over band signatures). Rows
+    carry left's doc_id as ids[0] and right's as ids[1]; with ``carry``,
+    each side's ``carry`` column rides along as h<last char of its id>."""
+    def side(banded: DataFrame, id_name: str) -> DataFrame:
+        cols = ["band", key, F.col("doc_id").alias(id_name)]
+        if carry is not None:
+            cols.append(F.col(carry).alias("h" + id_name[-1]))
+        return banded.select(*cols)
+
+    return side(left, ids[0]).join(side(right, ids[1]), ["band", key])
+
+
+def _band_pairs(banded: DataFrame, key: str, carry: str | None = None) -> DataFrame:
+    """Distinct (id0, id1[, h0, h1]), id0 < id1, of the docs of ``banded``
+    sharing a full band signature: its self band join, where id0 < id1
+    keeps each pair once."""
+    return (
+        _band_join(banded, banded, key, carry=carry)
+        .where(F.col("id0") < F.col("id1"))
+        .select("id0", "id1", *(["h0", "h1"] if carry else []))
+        .distinct()
+    )
+
+
+def _band_pairs_delta(
+    banded: DataFrame, index: DataFrame, key: str, carry: str | None = None
+) -> DataFrame:
+    """``_band_pairs``' rows for the pairs touching the delta ``banded``,
+    joined against ``banded`` ∪ ``index``. A delta doc's partner may have
+    the smaller or the larger id, so the join keeps every pair of distinct
+    ids and orients it with least/greatest."""
+    a_first = F.col("ida") < F.col("idb")
+    cols = [
+        F.least("ida", "idb").alias("id0"),
+        F.greatest("ida", "idb").alias("id1"),
+    ]
+    if carry is not None:
+        cols += [
+            F.when(a_first, F.col("ha")).otherwise(F.col("hb")).alias("h0"),
+            F.when(a_first, F.col("hb")).otherwise(F.col("ha")).alias("h1"),
+        ]
+    both = banded.unionByName(index)
+    return (
+        _band_join(banded, both, key, ("ida", "idb"), carry)
+        .where(F.col("ida") != F.col("idb"))
+        .select(*cols)
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -462,33 +572,11 @@ def minhash_lsh_pairs(
     become candidates (equi-join on (band, signature) — shuffle-friendly,
     no cross join anywhere).
     """
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
     # compute-once pin for the multi-join consumers below; localCheckpoint
     # (not cache) so nothing stays pinned in executor storage after the
     # returned frame is consumed (same rationale as winnow_near_pairs)
     sh = word_shingles(df, text_col, id_col, k).localCheckpoint(eager=False)
-    sig = minhash_signatures(sh, num_hashes)
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("|", *[F.col("sig")[b * r + i] for i in range(r)]).alias("bsig"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select("doc_id", F.explode(band_arr).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig")
-    )
-    a = banded.select("band", "bsig", F.col("doc_id").alias("id0"))
-    b = banded.select("band", "bsig", F.col("doc_id").alias("id1"))
-    cand = (
-        a.join(b, ["band", "bsig"])
-        .where(F.col("id0") < F.col("id1"))
-        .select("id0", "id1")
-        .distinct()
-    )
+    cand = _band_pairs(_minhash_bands(sh, num_hashes, bands), "bsig")
     if verify_threshold is None:
         return cand
     # direct joined verify: LSH banding already made the candidate set
@@ -496,15 +584,10 @@ def minhash_lsh_pairs(
     # _pair_overlap only adds a count+pin pass here — measured +0.7 s at
     # sf0.1 and no win in either the sparse (1×) or duplicate-heavy (10×)
     # regime
-    return (
-        _pair_overlap_joined(cand, sh, "shingle")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n0") + F.col("n1") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= verify_threshold)
-        .select("id0", "id1", "jaccard")
-    )
+    return _at_least(
+        _pair_overlap_joined(cand, sh, "shingle"), "jaccard", _jaccard,
+        verify_threshold,
+    ).select("id0", "id1", "jaccard")
 
 
 def minhash_band_index(
@@ -520,23 +603,8 @@ def minhash_band_index(
     Write this once per corpus (ideally bucketed on (band, bsig) —
     sources/bucketed.py); daily deltas then dedup against it WITHOUT
     re-scanning corpus text: ``minhash_lsh_pairs_delta``."""
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
-    sh = word_shingles(df, text_col, id_col, k)
-    sig = minhash_signatures(sh, num_hashes)
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col("sig")[b * r + i] for i in range(r)]
-                ).alias("bsig"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_arr).alias("bb")).select(
-        "doc_id", F.col("bb.band").alias("band"), F.col("bb.bsig").alias("bsig")
+    return _minhash_bands(
+        word_shingles(df, text_col, id_col, k), num_hashes, bands
     )
 
 
@@ -564,18 +632,8 @@ def minhash_lsh_pairs_delta(
     new_banded = minhash_band_index(
         new_df, text_col, id_col, k, num_hashes, bands
     ).localCheckpoint(eager=False)
-    both = new_banded.unionByName(corpus_index)
-    a = new_banded.select("band", "bsig", F.col("doc_id").alias("ida"))
-    b = both.select("band", "bsig", F.col("doc_id").alias("idb"))
-    cand = (
-        a.join(b, ["band", "bsig"])
-        .where(F.col("ida") != F.col("idb"))
-        .select(
-            F.least("ida", "idb").alias("id0"),
-            F.greatest("ida", "idb").alias("id1"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+    cand = _band_pairs_delta(new_banded, corpus_index, "bsig").localCheckpoint(
+        eager=False
     )
     if verify_threshold is None:
         return cand
@@ -593,28 +651,28 @@ def minhash_lsh_pairs_delta(
         )
     ).join(cand_ids, "doc_id", "left_semi")
     sh = word_shingles(texts, "text", "doc_id", k).localCheckpoint(eager=False)
-    return (
-        _pair_overlap_joined(cand, sh, "shingle")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter") / (F.col("n0") + F.col("n1") - F.col("n_inter")),
-        )
-        .where(F.col("jaccard") >= verify_threshold)
-        .select("id0", "id1", "jaccard")
-    )
+    return _at_least(
+        _pair_overlap_joined(cand, sh, "shingle"), "jaccard", _jaccard,
+        verify_threshold,
+    ).select("id0", "id1", "jaccard")
 
 
 # ---------- SimHash ----------
 
 def simhash_64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, simhash): 64-bit SimHash over word tokens — one Arrow-batched
-    pandas UDF (bit math isn't expressible relationally without 64 columns)."""
+    pandas UDF (bit math isn't expressible relationally without 64 columns).
+    A NULL text has no words to hash and gets a NULL simhash, whose NULL
+    band keys join nothing."""
     @F.pandas_udf(T.LongType())
     def sh(texts: pd.Series) -> pd.Series:
         out = []
-        for t in texts.astype(str):
+        for t in texts:
+            if t is None:
+                out.append(None)
+                continue
             acc = np.zeros(64, dtype=np.int64)
-            for w in t.lower().split():
+            for w in str(t).lower().split():
                 h = int.from_bytes(
                     hashlib.md5(w.encode("utf-8")).digest()[:8], "big"
                 )
@@ -628,7 +686,7 @@ def simhash_64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
             if v >= 1 << 63:
                 v -= 1 << 64
             out.append(v)
-        return pd.Series(out, dtype="int64")
+        return pd.Series(out, dtype="Int64")
 
     return df.select(F.col(id_col).alias("doc_id"), sh(F.col(text_col)).alias("simhash"))
 
@@ -637,27 +695,13 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
                        max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming, blocked on
     16-bit bands (a pair within hamming 3 shares at least one of 4 bands)."""
-    hs = simhash_64(df, text_col, id_col)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF)).alias("bh"),
-            )
-            for b in range(4)
-        ]
+    cand = _band_pairs(
+        simhash_band_index(df, text_col, id_col), "bh", carry="simhash"
     )
-    banded = hs.select("doc_id", "simhash", F.explode(bands).alias("bb")).select(
-        "doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
-    )
-    a = banded.select("band", "bh", F.col("doc_id").alias("id0"), F.col("simhash").alias("h0"))
-    b = banded.select("band", "bh", F.col("doc_id").alias("id1"), F.col("simhash").alias("h1"))
-    cand = (
-        a.join(b, ["band", "bh"])
-        .where(F.col("id0") < F.col("id1"))
-        .select("id0", "id1", "h0", "h1")
-        .distinct()
-    )
+    return _within_hamming(cand, max_hamming)
+
+
+def _within_hamming(cand: DataFrame, max_hamming: int) -> DataFrame:
     hamming = F.bit_count(F.col("h0").bitwiseXOR(F.col("h1")))
     return (
         cand.withColumn("hamming", hamming)
@@ -671,20 +715,12 @@ def simhash_band_index(df: DataFrame, text_col: str = "text",
     """(doc_id, simhash, band, bh) — persistable SimHash band index of a
     corpus (16-bit bands; pigeonhole-complete for hamming ≤ 3). Same
     index-once / delta-join-daily pattern as minhash_band_index."""
-    hs = simhash_64(df, text_col, id_col)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), b * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("bh"),
-            )
+    return _explode_bands(
+        simhash_64(df, text_col, id_col), ["doc_id", "simhash"], "bh",
+        [
+            F.shiftrightunsigned(F.col("simhash"), b * 16).bitwiseAND(F.lit(0xFFFF))
             for b in range(4)
-        ]
-    )
-    return hs.select("doc_id", "simhash", F.explode(bands).alias("bb")).select(
-        "doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
+        ],
     )
 
 
@@ -702,30 +738,8 @@ def simhash_near_pairs_delta(
     new_banded = simhash_band_index(new_df, text_col, id_col).localCheckpoint(
         eager=False
     )
-    both = new_banded.unionByName(corpus_index)
-    a = new_banded.select(
-        "band", "bh", F.col("doc_id").alias("ida"), F.col("simhash").alias("ha")
-    )
-    b = both.select(
-        "band", "bh", F.col("doc_id").alias("idb"), F.col("simhash").alias("hb")
-    )
-    cand = (
-        a.join(b, ["band", "bh"])
-        .where(F.col("ida") != F.col("idb"))
-        .select(
-            F.least("ida", "idb").alias("id0"),
-            F.greatest("ida", "idb").alias("id1"),
-            F.when(F.col("ida") < F.col("idb"), F.col("ha")).otherwise(F.col("hb")).alias("h0"),
-            F.when(F.col("ida") < F.col("idb"), F.col("hb")).otherwise(F.col("ha")).alias("h1"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("h0").bitwiseXOR(F.col("h1")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("id0", "id1", "hamming")
-    )
+    cand = _band_pairs_delta(new_banded, corpus_index, "bh", carry="simhash")
+    return _within_hamming(cand, max_hamming)
 
 
 # ---------- winnowing (MOSS) ----------
@@ -782,7 +796,12 @@ def winnow_fingerprints(
             F.sequence(F.lit(1), n_g - F.lit(window - 1)),
             lambda j: F.array_min(F.slice(g, j, window)),
         ),
-    ).otherwise(F.when(n_g > 0, g).otherwise(F.array(F.col("__whole"))))
+    ).otherwise(
+        # a NULL text (NULL __whole) has no fingerprint at all
+        F.when(n_g > 0, g).when(
+            F.col("__whole").isNotNull(), F.array(F.col("__whole"))
+        )
+    )
     # array_distinct already ran per doc, so (doc_id, fp) rows are distinct
     # by construction — the old trailing .distinct() re-shuffled the whole
     # fingerprint stream (~4M rows at sf0.1) for nothing (guide §2.4).
@@ -829,18 +848,9 @@ def winnow_near_pairs(
     # block + ub-prefilter + exact verify on survivors (see ngram_jaccard);
     # the verify reuses the prefilter's exact n_elig/n0/n1 — only the hot
     # overlap is computed per pair (bitmask AND+popcount, _pair_overlap_pre)
-    pre = _overlap_prefilter(fps, "fp", max_df)
-    cand = pre.where(
-        F.col("ub") / (F.col("n0") + F.col("n1") - F.col("ub")) >= threshold
-    )
-    return (
-        _pair_overlap_pre(cand, fps, "fp", max_df)
-        .withColumn(
-            "jaccard", F.col("n_inter") / (F.col("n0") + F.col("n1") - F.col("n_inter"))
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id0", "id1", "jaccard")
-    )
+    return _overlap_pairs(
+        fps, "fp", max_df, "jaccard", _jaccard, threshold
+    ).select("id0", "id1", "jaccard")
 
 
 # ---------- near-dup clusters ----------
@@ -973,19 +983,13 @@ def duplicated_span_profile(
 
     Windows are counted WITH multiplicity (each position is a window);
     documents shorter than ``k`` tokens contribute their whole text as a
-    single window, so every document gets a row and dup_frac is always
-    defined."""
+    single window, so every document with a non-NULL text gets a row and
+    dup_frac is always defined."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     tokenized = docs.select(F.col(id_col).alias("__id"), toks.alias("__toks"))
-    t = F.col("__toks")
-    n = F.size(t)
-    hashes = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - F.lit(k)),
-            lambda i: F.md5(F.array_join(F.slice(t, i + 1, k), " ")),
-        ),
-    ).otherwise(F.array(F.md5(F.array_join(t, " "))))
+    hashes = _token_windows(
+        F.col("__toks"), k, lambda i, w, n: F.md5(F.array_join(w, " "))
+    )
     win = tokenized.select("__id", F.explode(hashes).alias("h"))
     occ = win.groupBy("h").agg(F.count(F.lit(1)).alias("occ"))
     return (
@@ -1052,25 +1056,14 @@ def remove_duplicated_spans(
         F.col(id_col).alias("__id"), raw.alias("__toks")
     ).localCheckpoint(eager=False)
     t = F.col("__toks")
-    n = F.size(t)
-    wins = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - F.lit(k)),
-            lambda i: F.struct(
-                i.alias("wpos"),
-                F.md5(F.lower(F.array_join(F.slice(t, i + 1, k), " "))).alias("h"),
-                F.lit(k).alias("clen"),
-            ),
+    wins = _token_windows(
+        t,
+        k,
+        lambda i, w, n: F.struct(
+            i.alias("wpos"),
+            F.md5(F.lower(F.array_join(w, " "))).alias("h"),
+            n.alias("clen"),
         ),
-    ).otherwise(
-        F.array(
-            F.struct(
-                F.lit(0).alias("wpos"),
-                F.md5(F.lower(F.array_join(t, " "))).alias("h"),
-                n.alias("clen"),
-            )
-        )
     )
     winpos = tokenized.select("__id", F.explode(wins).alias("w")).select(
         "__id", F.col("w.wpos").alias("wpos"), F.col("w.h").alias("h"),
@@ -1088,19 +1081,8 @@ def remove_duplicated_spans(
         "__id", F.posexplode(t).alias("pos", "tok")
     )
     kept = tokpos.join(covered, ["__id", "pos"], "left_anti")
-    reasm = kept.groupBy("__id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "tok"))),
-                lambda s: s["tok"],
-            ),
-            " ",
-        ).alias("text_clean"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    totals = tokpos.groupBy("__id").agg(F.count(F.lit(1)).alias("n_tokens"))
     return (
-        totals.join(reasm, "__id", "left")
+        _reassemble(kept, tokpos, "__id", "tok", " ", "n_tokens")
         .select(
             F.col("__id").alias(id_col),
             F.coalesce("text_clean", F.lit("")).alias("text_clean"),
@@ -1152,19 +1134,8 @@ def dedup_paragraphs(
         .select("h")
     )
     kept = pdf.join(hot, "h", "left_anti")
-    reassembled = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda s: s["para"],
-            ),
-            sep,
-        ).alias("text_clean"),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    totals = pdf.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_total"))
     return (
-        totals.join(reassembled, id_col, "left")
+        _reassemble(kept, pdf, id_col, "para", sep, "n_total")
         .select(
             id_col,
             F.coalesce("text_clean", F.lit("")).alias("text_clean"),
@@ -1173,6 +1144,27 @@ def dedup_paragraphs(
             .cast("long").alias("n_dropped"),
         )
     )
+
+
+def _reassemble(
+    kept: DataFrame, every: DataFrame, key: str, piece: str, sep: str, total: str
+) -> DataFrame:
+    """(``key``, ``total``, text_clean, n_kept): per document, the count of
+    all its (key, pos, ``piece``) rows in ``every`` and its ``kept`` pieces
+    re-joined by ``sep`` in pos order (an in-JVM array_sort); a document
+    with no kept piece gets NULL text_clean and n_kept."""
+    reasm = kept.groupBy(key).agg(
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", piece))),
+                lambda s: s[piece],
+            ),
+            sep,
+        ).alias("text_clean"),
+        F.count(F.lit(1)).alias("n_kept"),
+    )
+    totals = every.groupBy(key).agg(F.count(F.lit(1)).alias(total))
+    return totals.join(reasm, key, "left")
 
 
 # ---------- URL-level dedup ----------

@@ -17,6 +17,11 @@ Decisions are keep/drop per batch doc:
 - survivors' bands (only) append to the index — dropped near-dups don't
   bloat state, and future arrivals match against the cluster's survivor.
 
+Shared steps: every state load goes through er.py's ``_read_versions``
+(complete versions strictly below the batch id), the band match is
+operators/dedup.py's ``_band_join``, and the stream tail is er.py's
+``_start_stream``.
+
 Candidates-only (no exact-Jaccard verify): the state keeps bands, not
 corpus text — at stream scale that is the point. Tighten ``bands``/
 ``num_hashes`` to trade recall vs precision; run the batch
@@ -29,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nama_spark.streaming.er import _versions
+from nama_spark.streaming.er import _read_versions, _start_stream
 
 
 def load_band_index(spark, state_dir: str, before: int | None = None):
@@ -38,12 +43,7 @@ def load_band_index(spark, state_dir: str, before: int | None = None):
     survivors' bands — the index is the union, so a batch write costs
     O(Δn · bands), never O(corpus). A replayed batch overwrites its own
     delta file and reads strictly-below versions: idempotent."""
-    vs = _versions(spark, state_dir)
-    if before is not None:
-        vs = [v for v in vs if v < before]
-    if not vs:
-        return None
-    return spark.read.parquet(*[f"{state_dir}/v{v:010d}" for v in vs])
+    return _read_versions(spark, state_dir, "v", before)
 
 
 def streaming_dedup_corpus(
@@ -64,7 +64,7 @@ def streaming_dedup_corpus(
     keep/drop decisions + appended index version. Returns the started
     StreamingQuery. Each micro-batch costs O(Δn · bucket) — the corpus is
     never re-shingled."""
-    from nama_spark.operators.dedup import minhash_band_index
+    from nama_spark.operators.dedup import _band_join, minhash_band_index
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         new_bands = minhash_band_index(
@@ -76,9 +76,9 @@ def streaming_dedup_corpus(
         )
         prev = load_band_index(spark, state_dir, before=batch_id)
         both = new_bands if prev is None else new_bands.unionByName(prev)
-        a = new_bands.select("band", "bsig", F.col("doc_id").alias("ida"))
-        b = both.select("band", "bsig", F.col("doc_id").alias("idb"))
-        matched = a.join(b, ["band", "bsig"]).where(F.col("ida") != F.col("idb"))
+        matched = _band_join(new_bands, both, "bsig", ("ida", "idb")).where(
+            F.col("ida") != F.col("idb")
+        )
         # a batch doc drops if its match is already indexed (not in this
         # batch) or is a smaller-id doc of the same batch
         older = matched.join(
@@ -109,12 +109,6 @@ def streaming_dedup_corpus(
             f"{state_dir}/v{batch_id:010d}"
         )
 
-    reader = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    return _start_stream(
+        spark, source_dir, schema, process, checkpoint_dir, max_files_per_trigger
     )
-    writer = reader.writeStream.foreachBatch(process)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()

@@ -21,10 +21,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def _versions(spark, state_dir: str, prefix: str = "v") -> list[int]:
+def _versions(
+    spark, state_dir: str, prefix: str = "v", before: int | None = None
+) -> list[int]:
     """Complete state versions under state_dir (Hadoop FS — works on local
-    paths and distributed filesystems alike). ``prefix`` selects the family:
-    'v' = partition snapshots, 't' = append-only token-delta dirs."""
+    paths and distributed filesystems alike), strictly below ``before``
+    when given. ``prefix`` selects the family: 'v' = partition snapshots,
+    't' = append-only token-delta dirs."""
     sc = spark.sparkContext
     jvm = sc._jvm
     path = jvm.org.apache.hadoop.fs.Path(state_dir)
@@ -37,7 +40,18 @@ def _versions(spark, state_dir: str, prefix: str = "v") -> list[int]:
         if name.startswith(prefix) and name[len(prefix):].isdigit():
             if fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")):
                 out.append(int(name[len(prefix):]))
-    return sorted(out)
+    return sorted(v for v in out if before is None or v < before)
+
+
+def _read_versions(spark, state_dir: str, prefix: str, before, last=False):
+    """The complete versions below ``before`` as one frame (only the
+    highest with ``last``), or None: every streaming state load."""
+    vs = _versions(spark, state_dir, prefix, before)
+    if last:
+        vs = vs[-1:]
+    if not vs:
+        return None
+    return spark.read.parquet(*[f"{state_dir}/{prefix}{v:010d}" for v in vs])
 
 
 def load_token_state(spark, state_dir: str, before: int | None = None):
@@ -47,12 +61,7 @@ def load_token_state(spark, state_dir: str, before: int | None = None):
     strings' token rows — the MinHash band-index pattern), so the union IS
     the full table and a replayed batch re-reading < its own id stays
     consistent. Returns None when no delta exists yet."""
-    vs = _versions(spark, state_dir, prefix="t")
-    if before is not None:
-        vs = [v for v in vs if v < before]
-    if not vs:
-        return None
-    return spark.read.parquet(*[f"{state_dir}/t{v:010d}" for v in vs])
+    return _read_versions(spark, state_dir, "t", before)
 
 
 def _prune_versions(spark, state_dir: str, current: int) -> None:
@@ -66,8 +75,7 @@ def _prune_versions(spark, state_dir: str, current: int) -> None:
     fs = jvm.org.apache.hadoop.fs.Path(state_dir).getFileSystem(
         sc._jsc.hadoopConfiguration()
     )
-    vs = [v for v in _versions(spark, state_dir) if v < current]
-    for v in vs[:-1]:
+    for v in _versions(spark, state_dir, before=current)[:-1]:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_dir}/v{v:010d}"), True)
 
 
@@ -81,14 +89,8 @@ def load_state(spark, state_dir: str, before: int | None = None):
     that self-match would drop every doc; for ER it double-counts)."""
     from nama_spark.operators.matchdata import MatchData
 
-    vs = _versions(spark, state_dir)
-    if before is not None:
-        vs = [v for v in vs if v < before]
-    if not vs:
-        return None
-    return MatchData(
-        spark.read.parquet(f"{state_dir}/v{vs[-1]:010d}"), _relabel=False
-    )
+    df = _read_versions(spark, state_dir, "v", before, last=True)
+    return None if df is None else MatchData(df, _relabel=False)
 
 
 def streaming_unite_names(
@@ -140,9 +142,16 @@ def streaming_unite_names(
         _prune_versions(spark, state_dir, batch_id)
         ts.unpersist()
 
+    return _start_stream(
+        spark, source_dir, schema, process, checkpoint_dir, max_files_per_trigger
+    )
+
+
+def _start_stream(spark, source_dir, schema, process, checkpoint_dir, max_files):
+    """readStream(parquet) → foreachBatch(process), started."""
     reader = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", max_files)
         .parquet(source_dir)
     )
     writer = reader.writeStream.foreachBatch(process)

@@ -911,6 +911,35 @@ def test_streaming_dedup_corpus(spark, tmp_path):
     assert v1_docs == {5}
 
 
+def test_streaming_dedup_keeps_null_text_docs(spark, tmp_path):
+    """NULL-text docs have no bands, so the streaming dedup cannot match
+    one against another: both are kept, and neither enters the index."""
+    from nama_spark.streaming.dedup import load_band_index, streaming_dedup_corpus
+
+    src = tmp_path / "docs_stream"
+    src.mkdir()
+    state = str(tmp_path / "band_state")
+    dec = str(tmp_path / "decisions")
+    b1 = spark.createDataFrame(
+        [(1, None), (2, None), (3, "one real document here")],
+        "doc_id long, text string",
+    )
+    b1.coalesce(1).write.mode("append").parquet(str(src))
+    q = streaming_dedup_corpus(spark, str(src), b1.schema, state, dec)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    import glob
+
+    decisions = spark.read.parquet(*sorted(glob.glob(dec + "/b*")))
+    assert {r["doc_id"]: r["keep"] for r in decisions.collect()} == {
+        1: True, 2: True, 3: True,
+    }
+    idx = load_band_index(spark, state)
+    assert {r["doc_id"] for r in idx.select("doc_id").distinct().collect()} == {3}
+
+
 def test_streaming_er_state_pruned(spark, tmp_path):
     """_prune_versions keeps {current, predecessor} snapshots and deletes
     everything older — ER state storage is O(2 snapshots), not

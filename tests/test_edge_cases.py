@@ -320,3 +320,85 @@ def test_query_corpus_dim_mismatch_raises(spark):
     queries = spark.createDataFrame([(100, [1.0, 0.0, 1.0])], EMB)
     with pytest.raises(Exception, match="embedding: query dim 3 != corpus dim 4"):
         cosine_topk_bruteforce(corpus, queries, k=3).collect()
+
+
+def _docs_with_nulls(spark):
+    # two NULL texts, a doc that READS "None", and an exact-dup pair
+    return spark.createDataFrame(
+        [
+            (1, None),
+            (2, None),
+            (3, "None"),
+            (4, "alpha beta gamma delta"),
+            (5, "alpha beta gamma delta"),
+        ],
+        DOCS,
+    )
+
+
+def test_null_texts_have_no_items_and_never_pair(spark):
+    """A NULL text has no shingles, fingerprints or band rows, so NULL-text
+    docs can neither block nor band-match each other (an all-NULL MinHash
+    signature used to band as the empty key and pair every NULL doc)."""
+    from nama_spark.operators.dedup import (
+        duplicated_span_profile,
+        minhash_band_index,
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_delta,
+        winnow_fingerprints,
+        word_shingles,
+    )
+
+    docs = _docs_with_nulls(spark)
+
+    def ids(df):
+        return {r[0] for r in df.select("doc_id").distinct().collect()}
+
+    assert ids(word_shingles(docs)) == {3, 4, 5}
+    assert ids(winnow_fingerprints(docs, k=3, window=2)) == {3, 4, 5}
+    assert ids(minhash_band_index(docs)) == {3, 4, 5}
+    profiled = duplicated_span_profile(docs, k=2).collect()
+    assert {r["doc_id"] for r in profiled} == {3, 4, 5}
+    pairs = minhash_lsh_pairs(docs, verify_threshold=None).collect()
+    assert {(r.id0, r.id1) for r in pairs} == {(4, 5)}
+    old = docs.where(F.col("doc_id").isin(1, 4))
+    new = docs.where(F.col("doc_id").isin(2, 3, 5))
+    delta = minhash_lsh_pairs_delta(new, minhash_band_index(old), verify_threshold=None)
+    assert {(r.id0, r.id1) for r in delta.collect()} == {(4, 5)}
+
+
+def test_null_text_gets_null_simhash(spark):
+    """A NULL text hashes to NULL, not to the hash of the word "none":
+    NULL-text docs pair with nothing in the batch and delta SimHash joins."""
+    from nama_spark.operators.dedup import (
+        simhash_64,
+        simhash_band_index,
+        simhash_near_pairs,
+        simhash_near_pairs_delta,
+    )
+
+    docs = _docs_with_nulls(spark)
+    hashes = {r.doc_id: r.simhash for r in simhash_64(docs).collect()}
+    assert hashes[1] is None and hashes[2] is None
+    assert hashes[3] is not None and hashes[4] == hashes[5]
+    got = {(r.id0, r.id1) for r in simhash_near_pairs(docs).collect()}
+    assert got == {(4, 5)}
+    old = docs.where(F.col("doc_id").isin(1, 4))
+    new = docs.where(F.col("doc_id").isin(2, 3, 5))
+    got = simhash_near_pairs_delta(new, simhash_band_index(old)).collect()
+    assert {(r.id0, r.id1) for r in got} == {(4, 5)}
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "minhash_band_index"])
+def test_minhash_bands_must_divide_num_hashes(spark, op):
+    """num_hashes=10 with bands=4 would band only 8 hashes: both public
+    MinHash banding callers refuse it with a ValueError naming both values
+    (a plain check, so it holds under python -O too)."""
+    from nama_spark.operators import dedup
+
+    docs = _docs_with_nulls(spark)
+    with pytest.raises(ValueError, match=r"num_hashes \(10\).*bands \(4\)"):
+        getattr(dedup, op)(docs, num_hashes=10, bands=4)
+    # no hashes would give every doc the band key '': every pair a candidate
+    with pytest.raises(ValueError, match=r"num_hashes \(0\)"):
+        getattr(dedup, op)(docs, num_hashes=0, bands=4)

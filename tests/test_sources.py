@@ -1336,6 +1336,66 @@ def test_embedding_and_brp_cosine_each_live_once():
         assert shared in inspect.getsource(fn), (fn.__name__, shared)
 
 
+def test_document_near_dup_steps_each_live_once():
+    """Source guard: each step the document dedup families share — the
+    k-token window, the band table, the band-key join, the prefilter →
+    verify chain and the below-``before`` version filter of streaming
+    state — is written once in the library (no copy keyed on a literal
+    band column either), and every public operator that runs the step
+    calls its helper."""
+    import inspect
+    import pathlib
+
+    from nama_spark.operators import dedup as D
+    from nama_spark.streaming import dedup as SD
+    from nama_spark.streaming import er as SE
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "nama_spark"
+    for needle, n in [
+        ("F.sequence(F.lit(0), n - F.lit(k))", 1),
+        ("F.explode(arr)", 1),
+        ('["band", key]', 1),
+        ('["band", "bsig"]', 0),
+        ('["band", "bh"]', 0),
+        ("_overlap_prefilter(", 1),
+        ("v < before", 1),
+    ]:
+        hits = [
+            f"{p.relative_to(root)}:{no}"
+            for p in sorted(root.rglob("*.py"))
+            for no, line in enumerate(p.read_text().splitlines(), 1)
+            if needle in line and not line.lstrip().startswith("def ")
+        ]
+        assert len(hits) == n, (needle, hits)
+    for fn, shared in [
+        (D.word_shingles, "_token_windows("),
+        (D.duplicated_span_profile, "_token_windows("),
+        (D.remove_duplicated_spans, "_token_windows("),
+        (D.minhash_lsh_pairs, "_minhash_bands("),
+        (D.minhash_band_index, "_minhash_bands("),
+        (D._minhash_bands, "_explode_bands("),
+        (D.simhash_band_index, "_explode_bands("),
+        (D.simhash_near_pairs, "simhash_band_index("),
+        (D.simhash_near_pairs_delta, "simhash_band_index("),
+        (D._band_pairs, "_band_join("),
+        (D._band_pairs_delta, "_band_join("),
+        (D.minhash_lsh_pairs, "_band_pairs("),
+        (D.minhash_lsh_pairs_delta, "_band_pairs_delta("),
+        (D.simhash_near_pairs, "_band_pairs("),
+        (D.simhash_near_pairs_delta, "_band_pairs_delta("),
+        (SD.streaming_dedup_corpus, "_band_join("),
+        (D._overlap_pairs, "_overlap_prefilter("),
+        (D.ngram_jaccard_pairs, "_overlap_pairs("),
+        (D.containment_pairs, "_overlap_pairs("),
+        (D.winnow_near_pairs, "_overlap_pairs("),
+        (SE.load_state, "_read_versions("),
+        (SE.load_token_state, "_read_versions("),
+        (SD.load_band_index, "_read_versions("),
+        (SE._prune_versions, "before=current"),
+    ]:
+        assert shared in inspect.getsource(fn), (fn.__name__, shared)
+
+
 def test_no_mllib_brp_join_in_the_library():
     """Source guard: one exact scan serves candidate_mode="lsh" and
     lsh_topk, so MLlib's bucketed BRP join is not called anywhere in the
