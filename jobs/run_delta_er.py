@@ -8,7 +8,7 @@ so a daily increment costs O(Δ·block), never O(corpus):
     state/entity_ids.parquet   (node, entity_id)        — stable ids
     state/tokens.parquet       (string, token, tf)      — carried token table
 
-    # bootstrap
+    # bootstrap: day 0 folded into the empty state
     spark-submit --py-files /tmp/nama_spark.zip jobs/run_delta_er.py \
         --init --delta-input day0.parquet --string-col repo \
         --state /lake/er_state
@@ -18,7 +18,9 @@ so a daily increment costs O(Δ·block), never O(corpus):
         --delta-input day1.parquet --string-col repo \
         --state /lake/er_state --threshold 0.7
 
-Each fold takes one of two paths, chosen from the sizes of its inputs:
+``--init`` folds its delta into the empty state, which fits every gate,
+as every later day folds into the last version. Each fold takes one of
+two paths, chosen from the sizes of its inputs:
 
 - *Driver fold.* When the prior clusters and the entity-id rows each hold
   at most ``_TOKENSIM_DRIVER_FIT_STRINGS`` rows and the carried token table
@@ -47,8 +49,9 @@ Each fold takes one of two paths, chosen from the sizes of its inputs:
 
 Both paths write the same rows (tests/test_sources.py folds the same days
 with the gates forced each way) and record which one ran as ``"fold"`` in
-the printed summary. Old×old pairs are never re-scored and old groups never
-split — uniting is monotone. Stable entity ids carry across the
+the printed summary; its ``"delta_strings"`` counts the delta's distinct
+non-NULL strings on either path. Old×old pairs are never re-scored and old
+groups never split — uniting is monotone. Stable entity ids carry across the
 re-clustering so downstream keys survive label churn. The state tables are
 read with their known schemas. State is rewritten atomically into a
 versioned subdir and `state/CURRENT` is flipped last, so a killed run never
@@ -100,12 +103,12 @@ _CLUSTERS = "string string, count bigint NOT NULL, `group` string"
 _ENTITY_IDS = "node string, entity_id string"
 
 
-def _fits(path: str, cap: int) -> bool:
-    """Whether the parquet table at ``path`` holds at most ``cap`` rows,
-    counted from its file footers: no Spark job runs and no row moves."""
+def _fits(path: str | None, cap: int) -> bool:
+    """Whether the parquet table at ``path`` (None: empty) holds at most
+    ``cap`` rows, counted from its file footers: no Spark job runs."""
     import pyarrow.dataset as ds
 
-    return ds.dataset(path, format="parquet").count_rows() <= cap
+    return path is None or ds.dataset(path, format="parquet").count_rows() <= cap
 
 
 def _rows(df, cap: int | None = None) -> list | None:
@@ -131,8 +134,7 @@ def _write_state(state: str, version: str, clusters, entity_ids, tokens,
     entity_ids.write.mode("overwrite").parquet(
         os.path.join(base, "entity_ids")
     )
-    if tokens is not None:
-        tokens.write.mode("overwrite").parquet(os.path.join(base, "tokens"))
+    tokens.write.mode("overwrite").parquet(os.path.join(base, "tokens"))
     if golden is not None:
         golden.write.mode("overwrite").parquet(os.path.join(base, "golden"))
     # flip CURRENT last: readers always see a complete version
@@ -168,56 +170,49 @@ def main(argv=None):
     )
 
     version = _current_version(args.state)
-    fold_path = out = sizes = None
-    if args.init:
-        if version is not None:
-            raise SystemExit(f"--init but {args.state}/CURRENT exists")
-        md = MatchData.from_unmatched(delta, string_col=args.string_col)
-        ts.fit(md.df, string_col="string")
-        united = ts.predict(md, threshold=args.threshold)
-        prev_ids = local_frame(spark, [], _ENTITY_IDS)
-        tokens_out = ts._tokens
-        n_delta = md.df.count()
-        next_version = "v000001"
-    else:
-        if version is None:
-            raise SystemExit(
-                f"no {args.state}/CURRENT — bootstrap with --init first"
-            )
-        base = os.path.join(args.state, version)
-        tables = [
-            (os.path.join(base, table), schema, cap)
-            for table, schema, cap in (
-                ("clusters", _CLUSTERS, TS._TOKENSIM_DRIVER_FIT_STRINGS),
-                ("entity_ids", _ENTITY_IDS, TS._TOKENSIM_DRIVER_FIT_STRINGS),
-                ("tokens", TS._TOKEN_SCHEMA, TS._TOKENSIM_BROADCAST_TOKEN_ROWS),
-            )
-        ]
-        # the state's schemas are known: reading with them skips a
-        # footer-inference job per table
-        prior_df, prev_ids, prev_tokens = (
-            spark.read.schema(schema).parquet(path)
-            for path, schema, _cap in tables
+    if args.init and version is not None:
+        raise SystemExit(f"--init but {args.state}/CURRENT exists")
+    if not args.init and version is None:
+        raise SystemExit(
+            f"no {args.state}/CURRENT — bootstrap with --init first"
         )
-        next_version = f"v{int(version[1:]) + 1:06d}"
-        # the state gates are checked on the footers' row counts, so a
-        # state over either gate moves no row to the driver; only the
-        # delta's gate costs a bounded read
-        if all(_fits(path, cap) for path, _s, cap in tables):
-            delta_rows = _rows(
-                delta.select(F.col(args.string_col).cast("string")),
-                TS._TOKENSIM_DRIVER_FIT_STRINGS,
+    next_version = f"v{int(version[1:]) + 1 if version else 1:06d}"
+    # building from scratch is folding into the empty state: with no
+    # version yet, every table is empty
+    base = version and os.path.join(args.state, version)
+    tables = [
+        (base and os.path.join(base, t), schema, cap)
+        for t, schema, cap in (
+            ("clusters", _CLUSTERS, TS._TOKENSIM_DRIVER_FIT_STRINGS),
+            ("entity_ids", _ENTITY_IDS, TS._TOKENSIM_DRIVER_FIT_STRINGS),
+            ("tokens", TS._TOKEN_SCHEMA, TS._TOKENSIM_BROADCAST_TOKEN_ROWS),
+        )
+    ]
+    # the state's schemas are known: reading with them skips a
+    # footer-inference job per table
+    prior_df, prev_ids, prev_tokens = (
+        local_frame(spark, [], schema) if path is None
+        else spark.read.schema(schema).parquet(path)
+        for path, schema, _cap in tables
+    )
+    # the state gates are checked on the footers' row counts, so a state
+    # over either gate moves no row to the driver; only the delta's gate
+    # costs a bounded read
+    out = None
+    if all(_fits(path, cap) for path, _s, cap in tables):
+        delta_rows = _rows(
+            delta.select(F.col(args.string_col).cast("string")),
+            TS._TOKENSIM_DRIVER_FIT_STRINGS,
+        )
+        if delta_rows is not None:
+            prior_rows, id_rows, token_rows = (
+                _rows(df) for df in (prior_df, prev_ids, prev_tokens)
             )
-            if delta_rows is not None:
-                prior_rows, id_rows, token_rows = (
-                    _rows(df) for df in (prior_df, prev_ids, prev_tokens)
-                )
-                strings = [r[0] for r in delta_rows]
-                # None when the delta's blocks hold more pairs than the
-                # driver enumerates: the relational fold takes them
-                out = delta_fold.fold(prior_rows, id_rows, token_rows,
-                                      strings, ts, args.threshold)
-        fold_path = "distributed" if out is None else "driver"
+            strings = [r[0] for r in delta_rows]
+            # None when the delta's blocks hold more pairs than the
+            # driver enumerates: the relational fold takes them
+            out = delta_fold.fold(prior_rows, id_rows, token_rows,
+                                  strings, ts, args.threshold)
     if out is not None:
         # one file per table: the rows are driver-sized by the gates. The
         # carried token rows are re-read from the prior version's file by
@@ -232,28 +227,25 @@ def main(argv=None):
                 ),
             )
         )
-        n_delta = len(set(strings))
+        # delta_strings: the distinct non-NULL strings, the ones
+        # add_strings keeps (countDistinct's rule on the other path)
+        n_delta = len(set(strings) - {None})
         sizes = (len(out.clusters), len({g for _s, _c, g in out.clusters}))
     else:
-        if fold_path == "distributed":
-            # the job only ever writes elected labels, so re-electing on
-            # read would repeat a universe-wide window per reference to
-            # prior.df
-            united = ts.predict_incremental(
-                MatchData(prior_df, _relabel=False),
-                delta,
-                threshold=args.threshold,
-                string_col=args.string_col,
-                prev_tokens=prev_tokens,
-            )
-            # carried token table + this batch's delta rows = next
-            # batch's carry
-            tokens_out = (
-                prev_tokens.unionByName(ts.last_delta_tokens)
-                if ts.last_delta_tokens is not None
-                else prev_tokens
-            )
-            n_delta = delta.select(args.string_col).distinct().count()
+        # the job only ever writes elected labels, so re-electing on read
+        # would repeat a universe-wide window per reference to prior.df
+        united = ts.predict_incremental(
+            MatchData(prior_df, _relabel=False),
+            delta,
+            threshold=args.threshold,
+            string_col=args.string_col,
+            prev_tokens=prev_tokens,
+        )
+        # carried token table + this batch's delta rows = next batch's carry
+        tokens_out = prev_tokens.unionByName(ts.last_delta_tokens)
+        n_delta = delta.agg(
+            F.countDistinct(F.col(args.string_col).cast("string"))
+        ).first()[0]
         # pin the united partition once: the clusters write, the three
         # reads inside stable_entity_ids, the golden-record branch and the
         # summary all consume it, and each would otherwise re-run the
@@ -290,12 +282,9 @@ def main(argv=None):
             ),
             args.string_col,
         )
-        prev_golden_path = (
-            os.path.join(args.state, version, "golden")
-            if version is not None else None
-        )
-        if prev_golden_path and os.path.exists(prev_golden_path):
-            prev_golden = spark.read.parquet(prev_golden_path)
+        golden_path = base and os.path.join(base, "golden")
+        if golden_path and os.path.exists(golden_path):
+            prev_golden = spark.read.parquet(golden_path)
             changed = (
                 clusters.join(
                     delta.select(
@@ -320,7 +309,7 @@ def main(argv=None):
     _write_state(args.state, next_version, clusters, ids, tokens_out,
                  golden=golden_out)
 
-    if sizes is None:
+    if out is None:
         row = clusters.agg(
             F.count(F.lit(1)), F.countDistinct("group")
         ).first()
@@ -331,9 +320,8 @@ def main(argv=None):
         "strings": sizes[0],
         "groups": sizes[1],
         "wall_sec": round(time.time() - t0, 2),
+        "fold": "distributed" if out is None else "driver",
     }
-    if fold_path is not None:
-        summary["fold"] = fold_path
     if n_golden is not None:
         summary["golden_rows"] = n_golden
         if n_refused is not None:

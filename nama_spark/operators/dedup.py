@@ -1014,14 +1014,15 @@ def drop_duplicated_span_docs(
     min_occ: int = 2,
 ) -> DataFrame:
     """``docs`` with documents whose duplicated-span fraction exceeds
-    ``max_dup_frac`` REMOVED (left-semi through duplicated_span_profile) —
+    ``max_dup_frac`` REMOVED (left-anti through duplicated_span_profile) —
     the document-level action on the Lee et al. signal: drop pages that
     are mostly verbatim copies of corpus-wide spans even when no single
-    whole-document near-duplicate exists. Schema-preserving."""
-    keep = duplicated_span_profile(
+    whole-document near-duplicate exists. A NULL text has no profile row
+    and no duplicated span, so it stays. Schema-preserving."""
+    drop = duplicated_span_profile(
         docs, k=k, text_col=text_col, id_col=id_col, min_occ=min_occ
-    ).where(F.col("dup_frac") <= F.lit(float(max_dup_frac)))
-    return docs.join(keep.select(id_col), id_col, "left_semi")
+    ).where(F.col("dup_frac") > F.lit(float(max_dup_frac)))
+    return docs.join(drop.select(id_col), id_col, "left_anti")
 
 
 def remove_duplicated_spans(
@@ -1042,7 +1043,8 @@ def remove_duplicated_spans(
     block, not the page.
 
     Returns (``id_col``, text_clean, n_tokens, n_removed); fully-
-    duplicated documents survive with text_clean = ''.
+    duplicated documents survive with text_clean = ''. A NULL-text
+    document has no tokens and gets no row.
 
     Shape at scale: window hashes are md5s of joined slices (the
     duplicated_span_profile projection), ONE occurrence groupBy on the

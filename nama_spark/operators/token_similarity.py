@@ -9,8 +9,9 @@ exactly the connected components of the ≥-threshold edges — order-independen
 so the distributed CC pass is semantics-preserving (SURVEY.md §2.8).
 
 Spark plan:
-    strings → one bounded Arrow probe (limit(cap + 1))
-            → driver fit (≤ _TOKENSIM_DRIVER_FIT_STRINGS strings): tokens +
+    strings (+ carried tokens) → one bounded Arrow probe (limit(cap + 1))
+            → one fit step, from scratch or incremental (_fit):
+              driver fit (≤ _TOKENSIM_DRIVER_FIT_STRINGS strings): tokens +
               weights as Python rows, exposed as local frames
               or tokens (explode, 1 shuffle) → weights (token agg)
             → eligible-token self-join → canonical candidate pairs
@@ -283,29 +284,49 @@ class TokenSimilarity:
     ) -> "TokenSimilarity":
         """Tokenize + weight the string universe; cache both (reused across
         thresholds — the reference's embed-once/predict-many pattern,
-        baseline.py:53-57). Refitting releases the previous fit's caches
-        first — repeated incremental updates on one model must not
-        accumulate executor storage blocks.
+        baseline.py:53-57). This is the one fit step (_fit) with nothing
+        carried; fit_incremental runs it over a carried token table.
 
         ``strings``, when the caller has already read them to the driver,
         are the distinct strings of ``strings_df``; fit() then skips its
         probe."""
-        self.unpersist()
         self._strings = strings_df.select(
             F.col(string_col).alias("string")
         ).distinct()
-        # Driver fast fit (round 6): the bounded Arrow probe costs one
-        # action; under the gate the whole tokenize+weight chain (6
-        # exchanges + 2 cache materializations of pure stage latency at a
-        # few-thousand-string universe) collapses to python dict math over
-        # identical rows.
-        if strings is None:
-            probe = collect_rows(self._strings, _TOKENSIM_DRIVER_FIT_STRINGS)
-            strings = None if probe is None else [r[0] for r in probe]
-        if strings is not None and len(strings) <= _TOKENSIM_DRIVER_FIT_STRINGS:
-            self._fit_driver(self._strings.sparkSession, self._fit_rows(strings))
-            return self
-        self._tokens = tokens_table(self._strings, tokenizer=self.tokenizer).cache()
+        self._fit(self._strings, names=strings)
+        return self
+
+    def _fit(
+        self, strings: DataFrame, carried: DataFrame | None = None,
+        names: list | None = None,
+    ) -> DataFrame:
+        """The one fit step: release the previous fit's caches, tokenize
+        ``strings`` (column ``string``; ``names``, when given, are its
+        distinct values), add the ``carried`` (string, token, tf) rows as
+        they are, weight the union and cache both tables. Returns the rows
+        it tokenized. Within _TOKENSIM_DRIVER_FIT_STRINGS strings and
+        _TOKENSIM_BROADCAST_TOKEN_ROWS carried rows (each read through one
+        bounded ``limit(cap + 1)`` Arrow probe) the driver fit replaces the
+        whole tokenize+weight chain (6 exchanges + 2 cache materializations
+        of pure stage latency at a few thousand strings) with python dict
+        math over identical rows; above either, the chain runs."""
+        self.unpersist()
+        spark = strings.sparkSession
+        if names is None:
+            probe = collect_rows(strings.distinct(), _TOKENSIM_DRIVER_FIT_STRINGS)
+            names = None if probe is None else [r[0] for r in probe]
+        if names is not None and len(names) <= _TOKENSIM_DRIVER_FIT_STRINGS:
+            rows = () if carried is None else collect_rows(
+                carried, _TOKENSIM_BROADCAST_TOKEN_ROWS
+            )
+            if rows is not None:
+                fitted = self._fit_rows(names, rows)
+                self._fit_driver(spark, fitted)
+                if carried is None:
+                    return self._tokens
+                return local_frame(spark, fitted.new_tokens, _TOKEN_SCHEMA)
+        new = tokens_table(strings, tokenizer=self.tokenizer)
+        self._tokens = (new if carried is None else carried.unionByName(new)).cache()
         self._weights = token_weights(
             self._tokens,
             weighting=self.weighting,
@@ -321,7 +342,7 @@ class TokenSimilarity:
         # becomes a no-op cache hit).
         self._weights.count()
         self._n_token_rows = self._tokens.count()
-        return self
+        return new
 
     def _fit_rows(self, strings: list, carried=()) -> _DriverFit:
         """_fit_model under this matcher's tokenizer and weighting."""
@@ -364,40 +385,13 @@ class TokenSimilarity:
         union — the resulting tokens/weights are IDENTICAL to fit() on the
         union universe (weights are a pure function of the union token
         table), at O(Δn) tokenization instead of re-exploding every
-        accumulated string per increment. Returns the delta token rows so
-        the caller can persist them (streaming/er.py appends one delta dir
-        per micro-batch).
-
-        Two paths, under fit()'s gates: when the carried table has at most
-        _TOKENSIM_BROADCAST_TOKEN_ROWS rows (the score model's own bound)
-        and the delta at most _TOKENSIM_DRIVER_FIT_STRINGS strings, both
-        are collected (each through a bounded ``limit(cap + 1)`` Arrow
-        read) and fit()'s driver fit builds the tables as local frames (and
-        the score-model broadcast while the union is within the token
-        gate). Above either cap the delta is tokenized distributed and the
-        weights come from one vocabulary-sized aggregation over the union."""
-        self.unpersist()
-        delta_strings = delta_strings.select(F.col(string_col).alias("string"))
-        prev = prev_tokens.select("string", "token", "tf")
-        spark = prev.sparkSession
-        fresh = collect_rows(delta_strings.distinct(), _TOKENSIM_DRIVER_FIT_STRINGS)
-        if fresh is not None:
-            carried = collect_rows(prev, _TOKENSIM_BROADCAST_TOKEN_ROWS)
-            if carried is not None:
-                fitted = self._fit_rows([r[0] for r in fresh], carried)
-                self._fit_driver(spark, fitted)
-                self._strings = self._tokens.select("string").distinct()
-                return local_frame(spark, fitted.new_tokens, _TOKEN_SCHEMA)
-        delta = tokens_table(delta_strings, tokenizer=self.tokenizer)
-        self._tokens = prev.unionByName(delta).cache()
-        self._weights = token_weights(
-            self._tokens,
-            weighting=self.weighting,
-            reference_doc_counts=self.reference_doc_counts,
-        ).cache()
-        # eager for the same multi-branch-consumer reason as fit()
-        self._weights.count()
-        self._n_token_rows = self._tokens.count()
+        accumulated string per increment, in fit()'s fit step (_fit).
+        Returns the delta token rows so the caller can persist them
+        (streaming/er.py appends one delta dir per micro-batch)."""
+        delta = self._fit(
+            delta_strings.select(F.col(string_col).alias("string")),
+            prev_tokens.select("string", "token", "tf"),
+        )
         self._strings = self._tokens.select("string").distinct()
         return delta
 
@@ -583,10 +577,12 @@ class TokenSimilarity:
         as the corpus grows — re-predict from scratch when that matters).
 
         The refit and the scorer are the batch path's own: fit() or
-        fit_incremental (driver fit under their gates) and pair_scores'
-        dispatch (broadcast score model when the union token table is
-        within _TOKENSIM_BROADCAST_TOKEN_ROWS, else the relational
-        token_similarity_scores).
+        fit_incremental (one fit step, driver fit under its gates) and
+        pair_scores' dispatch (broadcast score model when the union token
+        table is within _TOKENSIM_BROADCAST_TOKEN_ROWS, else the relational
+        token_similarity_scores). ``last_delta_tokens`` holds the rows the
+        refit tokenized: the whole union's when nothing was carried.
+        Building from scratch is this call on an empty ``matchdata``.
 
         Beyond the reference (nama has no incremental path; its unite is
         already incremental only because everything is in one dict)."""
@@ -606,11 +602,9 @@ class TokenSimilarity:
         # (O(n) re-tokenization) or, when the caller carries the previous
         # token table (``prev_tokens``), incrementally: only strings not yet
         # in the existing universe are tokenized, and the refit weights are
-        # identical by construction. The delta rows land in
-        # ``last_delta_tokens`` for the caller to persist.
+        # identical by construction.
         if prev_tokens is None:
-            self.fit(md2.df, string_col="string")
-            self.last_delta_tokens: DataFrame | None = None
+            self.last_delta_tokens = self.fit(md2.df)._tokens
         else:
             genuinely_new = nw.join(
                 matchdata.df.select("string").distinct(), "string", "left_anti"

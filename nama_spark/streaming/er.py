@@ -3,7 +3,7 @@
 Beyond the reference (batch-only): names arrive as a stream; each micro-batch
 unites into the running partition via ``TokenSimilarity.predict_incremental``
 (new-vs-all blocking — old×old pairs never re-enumerate), inside
-``foreachBatch``.
+``foreachBatch``. The first batch folds into the empty partition.
 
 State design (the part that must survive failures):
 - the partition lives as parquet under ``<state_dir>/v<batch_id>`` — one
@@ -106,39 +106,32 @@ def streaming_unite_names(
 ):
     """readStream(parquet names) → foreachBatch(incremental unite) →
     versioned parquet state. Returns the started StreamingQuery; callers
-    stop it / processAllAvailable as needed. The first batch is a full
-    predict; every later batch a predict_incremental against the previous
-    version — each micro-batch costs O(Δn·block), not a recluster."""
+    stop it / processAllAvailable as needed. Every batch is a
+    predict_incremental against the previous version (the first against the
+    empty partition) — each costs O(Δn·block), not a recluster."""
     from nama_spark.operators.matchdata import MatchData
     from nama_spark.operators.token_similarity import TokenSimilarity
+    from nama_spark.session import local_frame
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        prev = load_state(spark, state_dir, before=batch_id)
-        prev_tokens = load_token_state(spark, state_dir, before=batch_id)
-        names = batch_df.select(string_col)
+        prev = load_state(spark, state_dir, before=batch_id) or MatchData(
+            local_frame(spark, [], "string string, count bigint, `group` string"),
+            _relabel=False,
+        )
         ts = TokenSimilarity(tokenizer=tokenizer)
-        if prev is None:
-            md = MatchData.from_unmatched(names, string_col=string_col)
-            ts.fit(md.df)
-            delta_tokens = ts._tokens  # first batch: the full table IS the delta
-            md = ts.predict(md, threshold=threshold)
-        else:
-            md = ts.predict_incremental(
-                prev, names, threshold=threshold, string_col=string_col,
-                prev_tokens=prev_tokens,
-            )
-            # no token index yet (pre-existing v-only state): bootstrap it
-            # with the full union table so later batches go incremental
-            delta_tokens = (
-                ts.last_delta_tokens if prev_tokens is not None else ts._tokens
-            )
+        md = ts.predict_incremental(
+            prev, batch_df.select(string_col), threshold=threshold,
+            string_col=string_col,
+            prev_tokens=load_token_state(spark, state_dir, before=batch_id),
+        )
         md.df.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id:010d}")
-        if delta_tokens is not None:
-            # append-only token index: O(Δn) rows per batch, so later
-            # batches never re-tokenize the accumulated universe
-            delta_tokens.write.mode("overwrite").parquet(
-                f"{state_dir}/t{batch_id:010d}"
-            )
+        # append-only token index: O(Δn) rows per batch, so later batches
+        # never re-tokenize the accumulated universe; with no index yet
+        # (the first batch, or a pre-existing v-only state) the batch
+        # writes the whole union table, so later batches go incremental
+        ts.last_delta_tokens.write.mode("overwrite").parquet(
+            f"{state_dir}/t{batch_id:010d}"
+        )
         _prune_versions(spark, state_dir, batch_id)
         ts.unpersist()
 

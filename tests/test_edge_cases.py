@@ -367,6 +367,24 @@ def test_null_texts_have_no_items_and_never_pair(spark):
     assert {(r.id0, r.id1) for r in delta.collect()} == {(4, 5)}
 
 
+def test_span_dedup_keeps_null_text_docs(spark):
+    """drop_duplicated_span_docs removes only the documents whose
+    duplicated-span fraction exceeds the cap: a NULL text has no window and
+    no duplicated span, so it survives, while the exact-dup pair goes.
+    remove_duplicated_spans gives a NULL text no row."""
+    from nama_spark.operators.dedup import (
+        drop_duplicated_span_docs,
+        remove_duplicated_spans,
+    )
+
+    docs = _docs_with_nulls(spark)
+    kept = drop_duplicated_span_docs(docs, k=2, max_dup_frac=0.5)
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 3]
+    assert kept.columns == docs.columns
+    cleaned = remove_duplicated_spans(docs, k=2).collect()
+    assert {r["doc_id"] for r in cleaned} == {3, 4, 5}
+
+
 def test_null_text_gets_null_simhash(spark):
     """A NULL text hashes to NULL, not to the hash of the word "none":
     NULL-text docs pair with nothing in the batch and delta SimHash joins."""

@@ -1165,7 +1165,7 @@ def test_run_delta_er_job(spark, tmp_path, monkeypatch, capsys):
         ]) == 0
     summaries = [json.loads(line) for line in
                  capsys.readouterr().out.strip().splitlines()]
-    assert [sm.get("fold") for sm in summaries] == [None] + ["driver"] * 3
+    assert [sm.get("fold") for sm in summaries] == ["driver"] * 4
 
     from nama_spark.operators import token_similarity as TS
 
@@ -1181,7 +1181,7 @@ def test_run_delta_er_job(spark, tmp_path, monkeypatch, capsys):
     forced_summaries = [json.loads(line) for line in
                         capsys.readouterr().out.strip().splitlines()]
     assert [sm.pop("fold", None) for sm in forced_summaries] == \
-        [None] + ["distributed"] * 3
+        ["distributed"] * 4
     for sm in summaries + forced_summaries:
         sm.pop("fold", None)
         sm.pop("wall_sec")
@@ -1394,6 +1394,79 @@ def test_document_near_dup_steps_each_live_once():
         (SE._prune_versions, "before=current"),
     ]:
         assert shared in inspect.getsource(fn), (fn.__name__, shared)
+
+
+def test_building_from_scratch_is_a_fold():
+    """Source guard: TokenSimilarity has one fit step (one tokenize, one
+    weight, one adoption of the driver fit) behind fit and
+    fit_incremental, neither of which calls the other; the delta job's
+    bootstrap and the streaming first batch fold into the empty state
+    instead of running a separate from_unmatched → fit → predict path."""
+    import inspect
+    import pathlib
+
+    from nama_spark.operators.token_similarity import TokenSimilarity
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    src = (root / "nama_spark/operators/token_similarity.py").read_text()
+    for needle in ("tokens_table(", "token_weights(", "self._fit_driver("):
+        assert src.count(needle) == 1, needle
+    for path in ("jobs/run_delta_er.py", "nama_spark/streaming/er.py"):
+        text = (root / path).read_text()
+        for needle in ("from_unmatched(", ".predict("):
+            assert needle not in text, (path, needle)
+    fit = inspect.getsource(TokenSimilarity.fit)
+    fit_incremental = inspect.getsource(TokenSimilarity.fit_incremental)
+    assert "self.fit_incremental(" not in fit
+    assert "self.fit(" not in fit_incremental
+    assert "self._fit(" in fit and "self._fit(" in fit_incremental
+
+
+def test_run_delta_er_delta_strings_counts_distinct_non_null(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """``delta_strings`` counts the delta's distinct non-NULL strings (the
+    ones add_strings keeps) on the bootstrap and on a later fold, with the
+    token-similarity gates at their defaults and forced below any input."""
+    import pathlib
+    import sys
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "jobs"))
+    try:
+        import run_delta_er
+    finally:
+        sys.path.pop(0)
+
+    from nama_spark.operators import token_similarity as TS
+
+    days = []
+    for n, rows in enumerate((
+        ["acme widget company", None, "acme widget company", "zeta corp"],
+        ["acme widget compny", None, "zeta corp", "zeta corp"],
+    )):
+        days.append(str(tmp_path / f"d{n}.parquet"))
+        spark.createDataFrame([(r,) for r in rows], "repo string").write.parquet(
+            days[-1]
+        )
+
+    def run(state):
+        for i, p in enumerate(days):
+            assert run_delta_er.main(
+                (["--init"] if i == 0 else [])
+                + ["--delta-input", p, "--string-col", "repo",
+                   "--state", state, "--threshold", "0.7"]
+            ) == 0
+        return [json.loads(line) for line in
+                capsys.readouterr().out.strip().splitlines()]
+
+    default = run(str(tmp_path / "state"))
+    monkeypatch.setattr(TS, "_TOKENSIM_BROADCAST_TOKEN_ROWS", -1)
+    monkeypatch.setattr(TS, "_TOKENSIM_DRIVER_FIT_STRINGS", -1)
+    forced = run(str(tmp_path / "state_forced"))
+    assert [sm["fold"] for sm in default] == ["driver"] * 2
+    assert [sm["fold"] for sm in forced] == ["distributed"] * 2
+    assert [sm["delta_strings"] for sm in default] == [2, 2]
+    assert [sm["delta_strings"] for sm in forced] == [2, 2]
 
 
 def test_no_mllib_brp_join_in_the_library():

@@ -39,6 +39,45 @@ def plan_candidate_scoring(spark, sf_dir):
     return ts.pair_scores()
 
 
+def _distributed_fit_weights(spark, fit):
+    """``fit(TokenSimilarity(), names)`` with the driver-fit gate forced
+    below any input (restored after), over the candidate_scoring names;
+    returns the fitted weights, whose plan covers the whole distributed
+    tokenize → weight chain."""
+    from fixtures.make_fixtures import fixture_dataframes, make_fixture
+    from nama_spark.functions.normalize import simplify_corp
+    from nama_spark.operators import token_similarity as TS
+
+    fx = make_fixture(seed=7, n_entities=300, max_files=3)
+    records, _, _ = fixture_dataframes(spark, fx)
+    names = records.select(simplify_corp(F.col("repo")).alias("string")).distinct()
+    cap, TS._TOKENSIM_DRIVER_FIT_STRINGS = TS._TOKENSIM_DRIVER_FIT_STRINGS, -1
+    try:
+        ts = TS.TokenSimilarity()
+        fit(ts, names)
+        return ts._weights
+    finally:
+        TS._TOKENSIM_DRIVER_FIT_STRINGS = cap
+
+
+def plan_tokensim_fit_distributed(spark, sf_dir):
+    """TokenSimilarity.fit's distributed token chain."""
+    return _distributed_fit_weights(spark, lambda ts, names: ts.fit(names))
+
+
+def plan_tokensim_fit_incremental_distributed(spark, sf_dir):
+    """TokenSimilarity.fit_incremental's distributed chain: half the names
+    carried as a token table, the other half tokenized and weighted with
+    them."""
+    from nama_spark.functions.tokenize import tokens_table
+
+    def fit(ts, names):
+        odd = F.hash("string") % 2 != 0
+        ts.fit_incremental(tokens_table(names.where(~odd)), names.where(odd))
+
+    return _distributed_fit_weights(spark, fit)
+
+
 def plan_winnow_near_pairs(spark, sf_dir):
     from nama_spark.operators.dedup import winnow_near_pairs
 
@@ -258,6 +297,9 @@ PLANS = {
     "remove_dup_spans": plan_remove_dup_spans,
     "dedup_paragraphs": plan_dedup_paragraphs,
     "word_shingles": plan_word_shingles,
+    "tokensim_fit_distributed": plan_tokensim_fit_distributed,
+    "tokensim_fit_incremental_distributed":
+        plan_tokensim_fit_incremental_distributed,
 }
 
 
