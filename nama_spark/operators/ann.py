@@ -1,17 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_topk_bruteforce``: exact top-k neighbors per query — the
-  correctness baseline. A numpy scan of the corpus against the broadcast
-  query side when it is small, else a crossJoin + window.
-  O(|queries|·|corpus|): for scale use the cell-probing variants.
-- ``lsh_topk``: the same exact top-k over the corpus rows within a
-  euclidean ``max_distance`` of the query.
-- ``ivf_topk``: IVF-style coarse quantization: k-means centroids (MLlib),
-  probe the nprobe nearest cells per query, exact re-rank inside the cells.
+Every exact top-k here is one scan, ``_exact_topk``: one bounded read of
+the query side, broadcast into one mapInPandas over the corpus as it lies,
+where the ``_cosine_topk_ties`` numpy kernel scores each corpus batch,
+then one rank window. Each operator only says which corpus rows a query
+may meet:
+
+- ``cosine_topk_bruteforce``: every row — the correctness baseline,
+  O(|queries|·|corpus|); for scale use the cell-probing variants.
+- ``lsh_topk``: the rows within a euclidean ``max_distance`` of the query.
+- ``ivf_topk`` / ``ivf_topk_delta``: IVF-style coarse quantization — the
+  rows of the nprobe cells nearest the query, over k-means centroids.
+- ``pq_topk`` / ``ivfpq_topk`` with ``refine``: the query's shortlist of
+  product-quantization (ADC) candidates.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import math
 
 import numpy as np
@@ -48,25 +55,28 @@ def _sq_dist(a, b):
     )
 
 
-def _top_k(df: DataFrame, k: int, by=None) -> DataFrame:
+def _top_k(df: DataFrame, k: int, by=None, distinct=False) -> DataFrame:
     """(query_id, neighbor_id, cos, rank): each query's first ``k`` rows
     ordered by ``by`` (default cos descending), ties to the lower
-    neighbor_id."""
+    neighbor_id. With ``distinct``, repeats of a (query_id, neighbor_id)
+    row — which must carry the same score — share one dense rank and are
+    reported once; the dedup runs inside the window's partitioning, so it
+    adds no exchange."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc() if by is None else by, F.col("neighbor_id").asc()
     )
-    return (
-        df.withColumn("rn", F.row_number().over(w))
+    rank = F.dense_rank() if distinct else F.row_number()
+    out = (
+        df.withColumn("rn", rank.over(w))
         .where(F.col("rn") <= k)
         .select("query_id", "neighbor_id", "cos", F.col("rn").alias("rank"))
     )
+    return out.dropDuplicates(["query_id", "neighbor_id"]) if distinct else out
 
 
 def _empty_topk(df: DataFrame, id_col: str) -> DataFrame:
     """Zero-row (query_id, neighbor_id, cos, rank) frame with the id type
-    taken from the input — MLlib fit() (k-means) throws on an
-    empty dataset, and an empty corpus/delta is routine at scale, so the
-    fit-based variants short-circuit to this."""
+    taken from the input, for an empty query side or corpus."""
     return (
         df.select(
             F.col(id_col).alias("query_id"),
@@ -91,23 +101,25 @@ def _np_elem(dt):
 
 def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
                       max_distance: float | None = None):
-    """The one numpy cosine top-k kernel: returns ``topk(qid, Q, nid, C)``
-    → DataFrame(query_id, neighbor_id, cos) holding, per query, every
-    non-self row whose cos is at or above its k-th best — ties (and NaNs,
-    kept as +inf in the truncation key) are never dropped, so a downstream
-    global rank window sees every row it could rank ≤ k: a row beaten by
-    ≥k rows of its own batch or cell is beaten by ≥k rows globally.
+    """The one numpy cosine top-k kernel: returns
+    ``topk(qid, Q, nid, C, keys=None, ckey=None)`` → DataFrame(query_id,
+    neighbor_id, cos) holding, per query, every non-self row whose cos is
+    at or above its k-th best — ties (and NaNs, kept as +inf in the
+    truncation key) are never dropped, so a row it drops is beaten by ≥k
+    rows globally and the global rank window loses nothing.
 
-    ``Q``/``C`` are sequences of per-row vectors; each side is stacked in
-    its own element dtype (a float side widened by a union casts back
-    exactly). Bit-exact vs cosine_sim_expr: each norm squares in its own
-    side's dtype (like transform(x*x) on array<float>), dot products run in
-    the wider of the two dtypes (like zip_with(x*y) after Spark's type
-    coercion), every fold is dimension-sequential float64, and
+    ``Q``/``C`` are sequences of per-row vectors, each stacked in its
+    side's element dtype. Bit-exact vs cosine_sim_expr: each norm squares
+    in its own side's dtype (like transform(x*x) on array<float>), dot
+    products run in the wider dtype (like zip_with(x*y) after Spark's
+    type coercion), every fold is dimension-sequential float64, and
     cos = dot / (norm·norm). A NULL or ragged vector raises ValueError
     naming ``vec_col`` and the first offending id. With ``max_distance``,
     only rows at euclidean distance < max_distance (folded as ``_sq_dist``
-    does) compete.
+    does) compete; with ``keys`` (per query, the ``ckey`` values it
+    admits), a row competes only for the queries that admit its ``ckey``,
+    and a neighbor id admitted through several rows (a vector in several
+    probed cells) scores once, before the truncation.
 
     Returned as a nested function so cloudpickle ships it by value: workers
     never need nama_spark importable."""
@@ -143,18 +155,21 @@ def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
             acc += prod[..., j].astype(np.float64, copy=False)
         return acc
 
-    def topk(qid, Q, nid, C):
+    def topk(qid, Q, nid, C, keys=None, ckey=None):
         qid = np.asarray(qid)
         nid = np.asarray(nid)
-        if len(qid) == 0 or len(nid) == 0:
-            return pd.DataFrame({"query_id": qid[:0], "neighbor_id": nid[:0],
-                                 "cos": np.zeros(0, dtype=np.float64)})
         Q = stack(qid, Q, q_dtype)
         C = stack(nid, C, c_dtype)
         if Q.shape[1] != C.shape[1]:
             raise ValueError(
                 f"{vec_col}: query dim {Q.shape[1]} != corpus dim {C.shape[1]}"
             )
+        if keys is not None:
+            # row → distinct neighbor id: each id scores once per query
+            nid, first, row_nid = np.unique(
+                nid, return_index=True, return_inverse=True
+            )
+            C = C[first]
         qn = np.sqrt(seq_dim_sum(Q * Q))
         cn = np.sqrt(seq_dim_sum(C * C))
         n = len(C)
@@ -179,6 +194,11 @@ def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
                 for j in range(Q.shape[1]):
                     d2 += np.subtract.outer(Q64[:, j], C64[:, j]) ** 2
                 out_mask |= ~(np.sqrt(d2) < max_distance)
+            if keys is not None:
+                admit = np.zeros((len(Qs), n), dtype=bool)
+                for i, qkeys in enumerate(keys[s:s + step]):
+                    admit[i, row_nid[np.isin(ckey, qkeys)]] = True
+                out_mask |= ~admit
             key = np.where(out_mask, -np.inf, key)
             if n > kk:
                 thr = np.partition(key, n - kk, axis=1)[:, n - kk]
@@ -197,9 +217,8 @@ def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
     return topk
 
 
-# Query-row count up to which cosine_topk_bruteforce collects the query
-# side and broadcasts it into the numpy scan; bigger query sides take the
-# broadcast-hinted crossJoin.
+# Queries per broadcast of the exact scan: a bigger query side is read in
+# chunks of this many queries, one broadcast and one corpus scan each.
 _BRUTEFORCE_QUERY_ROWS = 10_000
 
 
@@ -210,72 +229,91 @@ def cosine_topk_bruteforce(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(query_id, neighbor_id, cos) — exact top-k cosine neighbors, excluding
-    self-matches. Deterministic tie-break on neighbor id.
-
-    With float/double vectors (the small-query-batch contract), this runs
-    one eager driver action first:
-    ``queries.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()``. A query side
-    within the cap ships once as a broadcast and the scan runs as ONE
-    mapInPandas over the corpus, one partition per core: every corpus batch
-    scores against it with the _cosine_topk_ties kernel, and only
-    per-batch per-query top-k rows (ties at the k-th cos included —
-    lossless truncation) reach the global rank window, so the
-    |q|·|corpus| crossJoin rows never materialize. Scoring is bit-exact
-    vs cosine_sim_expr (tests/test_ivf_cell_topk.py). A bigger query
-    side or other element types take the broadcast-hinted crossJoin +
-    cosine_sim_expr path."""
-    return _exact_topk(corpus, queries, k, id_col, vec_col, None)
+    """(query_id, neighbor_id, cos, rank) — exact top-k cosine neighbors,
+    excluding self-matches, ties to the lower neighbor id: ``_exact_topk``
+    over every corpus row. It runs one eager driver action when called,
+    ``queries.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()``; only
+    per-batch per-query top-k rows (ties at the k-th cos included) reach
+    the rank window, so the |q|·|corpus| pairs never materialize. Scoring
+    is bit-exact vs cosine_sim_expr (tests/test_ivf_cell_topk.py)."""
+    return _exact_topk(*_sides(corpus, queries, id_col, vec_col), k, vec_col)
 
 
-def _exact_topk(corpus, queries, k, id_col, vec_col, max_distance):
-    """``cosine_topk_bruteforce`` over the corpus rows at euclidean
-    distance < ``max_distance`` (None: every row) from each query."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+def _sides(corpus, queries, id_col, vec_col):
+    """(corpus, queries) as _exact_topk reads them."""
+    return (
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q_elem = _np_elem(q.schema["qv"].dataType)
-    c_elem = _np_elem(c.schema["cv"].dataType)
-    qrows = None
-    if q_elem is not None and c_elem is not None:
-        qrows = q.limit(_BRUTEFORCE_QUERY_ROWS + 1).collect()
-        if not qrows:
-            return _empty_topk(corpus, id_col)
-    if qrows is not None and len(qrows) <= _BRUTEFORCE_QUERY_ROWS:
-        bc = corpus.sparkSession.sparkContext.broadcast((
-            np.array([r["query_id"] for r in qrows]),
-            [r["qv"] for r in qrows],
-        ))
-        topk = _cosine_topk_ties(k, q_elem, c_elem, vec_col, max_distance)
 
-        def scan(batches):
-            qid, qvecs = bc.value
+
+def _exact_topk(corpus, queries, k, vec_col, max_distance=None, key=None):
+    """The one exact top-k of this module: (query_id, neighbor_id, cos,
+    rank) of ``queries`` (query_id, qv[, keys]), one row per query,
+    against ``corpus`` (neighbor_id, cv[, <key>]). A query meets the rows
+    within euclidean ``max_distance`` (None: all) and, with ``key``, only
+    the rows whose ``key`` is in its ``keys`` (probed cells, shortlist
+    ids), each neighbor id once. Other element types than float/double
+    are cast to array<double> on entry.
+
+    The query side is read once, ``limit(cap + 1)`` with cap =
+    ``_BRUTEFORCE_QUERY_ROWS``; over the cap it is read partition by
+    partition in chunks of cap queries, so the driver holds one partition
+    plus one chunk. Each chunk is broadcast into ONE mapInPandas over the
+    corpus as it lies, one partition per core, where the kernel keeps
+    each query's rows down to its k-th best cos; one rank window takes
+    the union."""
+    def floats(df, col):
+        if _np_elem(df.schema[col].dataType) is not None:
+            return df
+        return df.withColumn(col, F.col(col).cast("array<double>"))
+
+    corpus, queries = floats(corpus, "cv"), floats(queries, "qv")
+    topk = _cosine_topk_ties(
+        k, _np_elem(queries.schema["qv"].dataType),
+        _np_elem(corpus.schema["cv"].dataType), vec_col, max_distance,
+    )
+    sc = corpus.sparkSession.sparkContext
+    out_schema = T.StructType([
+        T.StructField("query_id", queries.schema["query_id"].dataType),
+        T.StructField("neighbor_id", corpus.schema["neighbor_id"].dataType),
+        T.StructField("cos", T.DoubleType()),
+    ])
+
+    def scan(rows):
+        keys = None if key is None else [r["keys"] for r in rows]
+        bc = sc.broadcast((
+            np.array([r["query_id"] for r in rows]), [r["qv"] for r in rows],
+            keys, None if key is None else np.unique(np.concatenate(keys)),
+        ))
+
+        def run(batches):
+            qid, qvecs, keys, admitted = bc.value
             for pdf in batches:
+                if admitted is not None:  # rows no query admits
+                    pdf = pdf[np.isin(pdf[key].to_numpy(), admitted)]
                 if len(pdf):
                     yield topk(qid, qvecs, pdf["neighbor_id"].to_numpy(),
-                               pdf["cv"])
+                               pdf["cv"], keys,
+                               None if key is None else pdf[key].to_numpy())
 
-        out_schema = T.StructType([
-            T.StructField("query_id", q.schema["query_id"].dataType),
-            T.StructField("neighbor_id", c.schema["neighbor_id"].dataType),
-            T.StructField("cos", T.DoubleType()),
-        ])
         # the scan streams Arrow batches: one partition per core costs no
         # memory and skips a Python task per extra partition (bench.py
         # ann_topk, 64 partitions of 2,000 vectors: 4.5 → 0.6 s, local[4])
-        par = corpus.sparkSession.sparkContext.defaultParallelism
-        return _top_k(c.coalesce(par).mapInPandas(scan, schema=out_schema), k)
-    joined = c.crossJoin(F.broadcast(q)).where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    if max_distance is not None:
-        d2 = _sq_dist(F.col("qv").cast("array<double>"),
-                      F.col("cv").cast("array<double>"))
-        joined = joined.where(F.sqrt(d2) < max_distance)
-    return _top_k(
-        joined.withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv"))), k
-    )
+        return corpus.coalesce(sc.defaultParallelism).mapInPandas(run, out_schema)
+
+    def chunks(it):
+        while chunk := list(itertools.islice(it, cap)):
+            yield chunk
+
+    cap = max(1, _BRUTEFORCE_QUERY_ROWS)
+    rows = queries.limit(cap + 1).collect()
+    if not rows:
+        return _empty_topk(corpus, "neighbor_id")
+    parts = [rows] if len(rows) <= cap else chunks(queries.toLocalIterator())
+    hits = functools.reduce(DataFrame.unionByName, map(scan, parts))
+    # a vector held by several probed cells may score in several batches
+    return _top_k(hits, k, distinct=key is not None)
 
 
 def lsh_topk(
@@ -293,7 +331,8 @@ def lsh_topk(
     euclidean distance < ``max_distance`` from the query: every row MLlib's
     bucketed BRP join could return. ``num_hash_tables``, ``bucket_length``
     and ``seed`` were that join's; they no longer shape the result."""
-    return _exact_topk(corpus, queries, k, id_col, vec_col, max_distance)
+    return _exact_topk(*_sides(corpus, queries, id_col, vec_col), k, vec_col,
+                       max_distance)
 
 
 def ivf_topk(
@@ -308,7 +347,8 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF: cluster the corpus into n_cells (k-means), assign each vector to
     its cell; per query probe the nprobe nearest centroids and re-rank
-    exactly inside those cells. Candidate join is equi on cell id.
+    exactly inside those cells, by the exact scan restricted to each
+    query's probed cells (``ivf_topk_delta``).
 
     Composition of the persisted-index halves (``ivf_fit_centroids`` →
     ``ivf_assign`` → ``ivf_topk_delta``), so the k-means always fits on a
@@ -652,64 +692,25 @@ def ivf_topk_delta(
 ) -> DataFrame:
     """Top-k per query against a PERSISTED IVF index (``centers`` +
     ``assigned``, as built by ivf_fit_centroids/ivf_assign): probe the
-    nprobe nearest cells, exact cosine re-rank inside them. A query batch
-    of Δq rows costs O(Δq·n_cells) assignment + the probed-cell work —
-    the indexed corpus is touched only through its cell partitions.
+    nprobe nearest cells, exact cosine re-rank inside them.
     ``nprobe = n_cells`` probes everything: exact top-k (the test anchor).
     Same output contract as ivf_topk: (query_id, neighbor_id, cos, rank).
 
-    The per-cell re-rank runs as ONE grouped applyInPandas (round 6,
-    guide §4.2): probe queries and assigned vectors meet per cell, the
-    _cosine_topk_ties kernel scores them in numpy, and only each query's
-    top-k (ties included) leaves the cell — the candidate fan-out
-    (|q| · nprobe · occupancy rows through an exchange, each paying an
-    interpreted ~10 µs higher-order cosine) never materializes, and the
-    global window ranks |q| · nprobe · k rows instead. Scoring is
-    bit-exact vs the cosine_sim_expr join, mixed float/double sides
-    included; vector columns of other numeric element types are cast to
-    array<double> on entry."""
-    def float_vectors(df):
-        if _np_elem(df.schema[vec_col].dataType) is not None:
-            return df
-        return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
-
-    queries = float_vectors(queries)
-    assigned = float_vectors(assigned)
+    Runs one bounded collect when called: the queries, each with its
+    vector and the cells ``ivf_assign`` probes for it (``_nearest``'s tie
+    order), are ``_exact_topk``'s query side, and its scan reads the rows
+    of ``assigned`` in those cells where they lie — the index is never
+    shuffled. Bit-exact vs the cosine_sim_expr join, mixed float/double
+    sides included."""
     probes = ivf_assign(queries, centers, nprobe=nprobe,
                         id_col=id_col, vec_col=vec_col)
-    topk = _cosine_topk_ties(
-        k,
-        _np_elem(queries.schema[vec_col].dataType),
-        _np_elem(assigned.schema[vec_col].dataType),
-        vec_col,
+    probed = probes.groupBy(F.col(id_col).alias("query_id")).agg(
+        F.first(vec_col).alias("qv"), F.collect_list("cell").alias("keys")
     )
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        q = pdf[pdf["side"] == 0]
-        c = pdf[pdf["side"] == 1]
-        return topk(q["id"].to_numpy(), q["vec"], c["id"].to_numpy(), c["vec"])
-
-    out_schema = T.StructType([
-        T.StructField("query_id", queries.schema[id_col].dataType),
-        T.StructField("neighbor_id", queries.schema[id_col].dataType),
-        T.StructField("cos", T.DoubleType()),
-    ])
-    # one tagged union instead of a cogroup — probes and the index
-    # routinely share lineage (queries drawn from the corpus), which trips
-    # the ambiguous-self-join analyzer on cogroup's dual groupBy. Mixed
-    # element types widen to double here; the kernel casts each side back.
-    tagged = probes.select(
-        "cell", F.lit(0).alias("side"),
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
-    ).unionByName(assigned.select(
-        "cell", F.lit(1).alias("side"),
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
-    ))
-    return _top_k(
-        tagged.groupBy("cell").applyInPandas(per_cell, schema=out_schema)
-        .dropDuplicates(["query_id", "neighbor_id"]),
-        k,
+    index = assigned.select(
+        "cell", F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
+    return _exact_topk(index, probed, k, vec_col, key="cell")
 
 
 # ---------- product quantization (IVF-PQ-style ADC; Jégou et al. 2011) ----------
@@ -830,7 +831,8 @@ def _adc_topk(
 ) -> DataFrame:
     """The ADC scan shared by ``pq_topk`` and ``ivfpq_topk``: scores the
     (query_id, neighbor_id, codes) candidates ``cand`` against per-query
-    lookup tables and ranks them, optionally refining by exact cosine."""
+    lookup tables and ranks them, optionally refining the shortlist by
+    the exact scan."""
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
@@ -876,17 +878,13 @@ def _adc_topk(
     )
     if refine is None:
         return ranked
-    rv = refine.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    shortlist = ranked.groupBy("query_id").agg(
+        F.collect_list("neighbor_id").alias("keys")
+    ).join(qv, "query_id")
+    return _exact_topk(
+        refine.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
+        shortlist, k, vec_col, key="neighbor_id",
     )
-    exact = (
-        ranked.select("query_id", "neighbor_id")
-        .join(rv, "neighbor_id")
-        .join(qv, "query_id")
-        .withColumn("cos", cosine_sim_expr(F.col("qv"), F.col("cv")))
-        .select("query_id", "neighbor_id", "cos")
-    )
-    return _top_k(exact, k)
 
 
 def pq_topk(
@@ -905,12 +903,12 @@ def pq_topk(
     Σ_sub LUT[sub][codes[sub]] — the scan touches only the m-byte codes,
     never raw vectors. With ``refine`` (an (id, vec) table), the top
     refine_factor·k ADC candidates per query are re-ranked by exact cosine
-    (the standard IVF-PQ refine step); without it, ADC order stands and
-    ``cos`` is the negated squared ADC distance (rank-compatible for
-    unit-norm vectors: ||q−x||² = 2−2cos).
-
-    Output contract matches the other *_topk operators:
-    (query_id, neighbor_id, cos, rank)."""
+    (the standard IVF-PQ refine step): one bounded collect reads that
+    shortlist, and ``_exact_topk`` scans ``refine`` with each query held
+    to its own shortlist ids. Without it, ADC order stands and ``cos`` is
+    the negated squared ADC distance (rank-compatible for unit-norm
+    vectors: ||q−x||² = 2−2cos). Output: (query_id, neighbor_id, cos,
+    rank), as for the other *_topk operators."""
     if queries.isEmpty() or encoded.isEmpty():
         return _empty_topk(queries, id_col)
     cand = (

@@ -666,26 +666,22 @@ def simhash_64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     band keys join nothing."""
     @F.pandas_udf(T.LongType())
     def sh(texts: pd.Series) -> pd.Series:
+        shifts = np.arange(64, dtype=np.uint64)
         out = []
         for t in texts:
             if t is None:
                 out.append(None)
                 continue
-            acc = np.zeros(64, dtype=np.int64)
-            for w in str(t).lower().split():
-                h = int.from_bytes(
-                    hashlib.md5(w.encode("utf-8")).digest()[:8], "big"
-                )
-                bits = np.array([(h >> i) & 1 for i in range(64)], dtype=np.int64)
-                acc += np.where(bits == 1, 1, -1)
-            v = 0
-            for i in range(64):
-                if acc[i] > 0:
-                    v |= 1 << i
-            # wrap to signed 64-bit for LongType
-            if v >= 1 << 63:
-                v -= 1 << 64
-            out.append(v)
+            words = str(t).lower().split()
+            # each word's md5 prefix as a big-endian uint64, one row of bits
+            h = np.frombuffer(b"".join(
+                hashlib.md5(w.encode("utf-8")).digest()[:8] for w in words
+            ), dtype=">u8")
+            ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
+            # bit i is set where its +1 votes outnumber its −1 votes; the
+            # little-endian pack reads as the signed 64-bit LongType value
+            out.append(int(np.packbits(2 * ones > len(words),
+                                       bitorder="little").view("<i8")[0]))
         return pd.Series(out, dtype="Int64")
 
     return df.select(F.col(id_col).alias("doc_id"), sh(F.col(text_col)).alias("simhash"))

@@ -407,6 +407,42 @@ def test_null_text_gets_null_simhash(spark):
     assert {(r.id0, r.id1) for r in got} == {(4, 5)}
 
 
+def _simhash_word_loop(text):
+    """simhash_64's per-word loop as it was before its shift-and-mask: the
+    reference its vectorised form must match bit for bit."""
+    import hashlib
+
+    import numpy as np
+
+    if text is None:
+        return None
+    acc = np.zeros(64, dtype=np.int64)
+    for w in str(text).lower().split():
+        h = int.from_bytes(hashlib.md5(w.encode("utf-8")).digest()[:8], "big")
+        bits = np.array([(h >> i) & 1 for i in range(64)], dtype=np.int64)
+        acc += np.where(bits == 1, 1, -1)
+    v = 0
+    for i in range(64):
+        if acc[i] > 0:
+            v |= 1 << i
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def test_simhash_matches_the_word_loop(spark):
+    """simhash_64's vectorised accumulators give the per-word loop's values
+    on NULL, empty, whitespace-only, unicode and repeated-word texts."""
+    from nama_spark.operators.dedup import simhash_64
+
+    texts = [
+        None, "", "   ", " \t\n ", "word", "Straße ÉCOLE naïve 東京 Ωμέγα 🙂",
+        "the the the the cat", "cat cat dog dog", "a b c d e f g h i j k l",
+        "Repeat repeat REPEAT repeat", "x " * 200,
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), DOCS)
+    got = {r.doc_id: r.simhash for r in simhash_64(docs).collect()}
+    assert got == {i: _simhash_word_loop(t) for i, t in enumerate(texts)}
+
+
 @pytest.mark.parametrize("op", ["minhash_lsh_pairs", "minhash_band_index"])
 def test_minhash_bands_must_divide_num_hashes(spark, op):
     """num_hashes=10 with bands=4 would band only 8 hashes: both public

@@ -1547,6 +1547,48 @@ def test_connected_components_decides_alone():
     ])
 
 
+def test_every_ann_topk_runs_the_one_exact_scan():
+    """Source guard: every exact top-k of ann.py runs _exact_topk's
+    broadcast-query scan. cosine_sim_expr is the tests' reference and no
+    library code calls it, the numpy kernel is built once, in
+    _exact_topk, and applyInPandas serves only the k-means and codebook
+    fits (no per-cell re-rank that shuffles the index)."""
+    import ast
+    import inspect
+    import pathlib
+
+    from nama_spark.operators import ann
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "nama_spark"
+
+    def calls(needle):
+        return [
+            f"{p.relative_to(root)}:{no}"
+            for p in sorted(root.rglob("*.py"))
+            for no, line in enumerate(p.read_text().splitlines(), 1)
+            if needle in line and not line.lstrip().startswith("def ")
+        ]
+
+    assert not calls("cosine_sim_expr("), calls("cosine_sim_expr(")
+    assert len(calls("_cosine_topk_ties(")) == 1, calls("_cosine_topk_ties(")
+    assert "_cosine_topk_ties(" in inspect.getsource(ann._exact_topk)
+    path = pathlib.Path(ann.__file__)
+    src = path.read_text()
+    owner = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef):
+            for no in range(node.lineno, node.end_lineno + 1):
+                owner[no] = node.name
+    users = {
+        owner.get(no)
+        for no, line in enumerate(src.splitlines(), 1)
+        if "applyInPandas" in line
+    }
+    assert users <= {
+        "_np_kmeans", "_group_kmeans", "ivf2_fit_centroids", "pq_fit_codebooks"
+    }, users
+
+
 def test_run_linkage_job_one_to_one_mode(spark, tmp_path):
     """jobs/run_linkage.py --mode one_to_one: the peeling selection links
     every left to a distinct right and records the peel round."""

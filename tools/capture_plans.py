@@ -197,6 +197,38 @@ def plan_ann_bruteforce(spark, sf_dir):
     return cosine_topk_bruteforce(emb, queries, k=10)
 
 
+def plan_ann_bruteforce_over_cap(spark, sf_dir):
+    """cosine_topk_bruteforce with the query side over the broadcast cap:
+    64 queries with ``_BRUTEFORCE_QUERY_ROWS`` patched to 16 (restored
+    after), so the plan shows the chunked scans and their union."""
+    from pyspark.sql import functions as F
+
+    from nama_spark.operators import ann
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.where(F.col("vec_id") < 64)
+    cap, ann._BRUTEFORCE_QUERY_ROWS = ann._BRUTEFORCE_QUERY_ROWS, 16
+    try:
+        return ann.cosine_topk_bruteforce(emb, queries, k=10)
+    finally:
+        ann._BRUTEFORCE_QUERY_ROWS = cap
+
+
+def plan_ann_pq_refine(spark, sf_dir):
+    """pq_topk with an exact refine — the bench.py ann_pq region and the
+    declared ann_pq_topk query's operator: codebooks and codes built first,
+    then the ADC scan and the refine of its shortlist."""
+    from pyspark.sql import functions as F
+
+    from nama_spark.operators.ann import pq_encode, pq_fit_codebooks, pq_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    books = pq_fit_codebooks(emb, m=8, k=64).localCheckpoint()
+    codes = pq_encode(emb, books).localCheckpoint()
+    queries = emb.where(F.col("vec_id") < 64)
+    return pq_topk(queries, books, codes, k=10, refine=emb, refine_factor=16)
+
+
 def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -287,6 +319,8 @@ PLANS = {
     "pipeline_er_unite": plan_pipeline_er_unite,
     "ann_ivf_delta": plan_ann_ivf_delta,
     "ann_bruteforce": plan_ann_bruteforce,
+    "ann_bruteforce_over_cap": plan_ann_bruteforce_over_cap,
+    "ann_pq_refine": plan_ann_pq_refine,
     "minhash_corpus_job": plan_minhash_corpus_job,
     "minhash_band_index": plan_minhash_band_index,
     "minhash_delta": plan_minhash_delta,
