@@ -102,7 +102,7 @@ def _np_elem(dt):
 def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
                       max_distance: float | None = None):
     """The one numpy cosine top-k kernel: returns
-    ``topk(qid, Q, nid, C, keys=None, ckey=None)`` → DataFrame(query_id,
+    ``topk(qid, Q, nid, C, admits=None, ckey=None)`` → DataFrame(query_id,
     neighbor_id, cos) holding, per query, every non-self row whose cos is
     at or above its k-th best — ties (and NaNs, kept as +inf in the
     truncation key) are never dropped, so a row it drops is beaten by ≥k
@@ -116,10 +116,11 @@ def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
     cos = dot / (norm·norm). A NULL or ragged vector raises ValueError
     naming ``vec_col`` and the first offending id. With ``max_distance``,
     only rows at euclidean distance < max_distance (folded as ``_sq_dist``
-    does) compete; with ``keys`` (per query, the ``ckey`` values it
-    admits), a row competes only for the queries that admit its ``ckey``,
-    and a neighbor id admitted through several rows (a vector in several
-    probed cells) scores once, before the truncation.
+    does) compete. With ``admits`` — (query index, key) arrays ordered by
+    query index — a query meets only the rows whose ``ckey`` it admits:
+    those pairs alone are scored, so a batch costs O(admitted pairs·dim),
+    not O(queries·rows), and a neighbor id met through several rows (a
+    vector in several probed cells) scores once, before the truncation.
 
     Returned as a nested function so cloudpickle ships it by value: workers
     never need nama_spark importable."""
@@ -155,64 +156,71 @@ def _cosine_topk_ties(k: int, q_dtype, c_dtype, vec_col: str,
             acc += prod[..., j].astype(np.float64, copy=False)
         return acc
 
-    def topk(qid, Q, nid, C, keys=None, ckey=None):
-        qid = np.asarray(qid)
-        nid = np.asarray(nid)
-        Q = stack(qid, Q, q_dtype)
-        C = stack(nid, C, c_dtype)
+    def topk(qid, Q, nid, C, admits=None, ckey=None):
+        qid, nid = np.asarray(qid), np.asarray(nid)
+        Q, C = stack(qid, Q, q_dtype), stack(nid, C, c_dtype)
         if Q.shape[1] != C.shape[1]:
             raise ValueError(
                 f"{vec_col}: query dim {Q.shape[1]} != corpus dim {C.shape[1]}"
             )
-        if keys is not None:
-            # row → distinct neighbor id: each id scores once per query
-            nid, first, row_nid = np.unique(
-                nid, return_index=True, return_inverse=True
-            )
-            C = C[first]
-        qn = np.sqrt(seq_dim_sum(Q * Q))
-        cn = np.sqrt(seq_dim_sum(C * C))
+        qn, cn = np.sqrt(seq_dim_sum(Q * Q)), np.sqrt(seq_dim_sum(C * C))
         n = len(C)
-        kk = min(k, n)
-        out_q, out_n, out_c = [], [], []
-        # bound the (queries × corpus) cos matrix at ~128M float64 entries
-        step = max(1, (1 << 27) // n)
-        for s in range(0, len(Q), step):
-            Qs = Q[s:s + step]
-            dot = np.zeros((len(Qs), n), dtype=np.float64)
+
+        def score(qi, ri):
+            # cos and truncation key (-inf: self or too distant, +inf: NaN
+            # cos) of a query block × every row, or of index-aligned pairs
+            dot = np.zeros(np.broadcast_shapes(qi.shape, ri.shape))
             for j in range(Q.shape[1]):
-                dot += np.multiply.outer(Qs[:, j], C[:, j]).astype(
-                    np.float64, copy=False
-                )
+                dot += (Q[qi, j] * C[ri, j]).astype(np.float64, copy=False)
             with np.errstate(divide="ignore", invalid="ignore"):
-                cos = dot / np.multiply.outer(qn[s:s + step], cn)
-            key = np.where(np.isnan(cos), np.inf, cos)
-            out_mask = qid[s:s + step, None] == nid[None, :]
+                cos = dot / (qn[qi] * cn[ri])
+            out = qid[qi] == nid[ri]
             if max_distance is not None:
-                Q64, C64 = Qs.astype(np.float64), C.astype(np.float64)
-                d2 = np.zeros((len(Qs), n), dtype=np.float64)
+                d2 = np.zeros(dot.shape)
                 for j in range(Q.shape[1]):
-                    d2 += np.subtract.outer(Q64[:, j], C64[:, j]) ** 2
-                out_mask |= ~(np.sqrt(d2) < max_distance)
-            if keys is not None:
-                admit = np.zeros((len(Qs), n), dtype=bool)
-                for i, qkeys in enumerate(keys[s:s + step]):
-                    admit[i, row_nid[np.isin(ckey, qkeys)]] = True
-                out_mask |= ~admit
-            key = np.where(out_mask, -np.inf, key)
-            if n > kk:
-                thr = np.partition(key, n - kk, axis=1)[:, n - kk]
-            else:
-                thr = np.full(len(Qs), -np.inf)
-            keep = (key >= thr[:, None]) & ~out_mask
-            for i in range(len(Qs)):
-                sel = np.flatnonzero(keep[i])
-                out_q.append(np.repeat(qid[s + i], len(sel)))
-                out_n.append(nid[sel])
-                out_c.append(cos[i, sel])
-        return pd.DataFrame({"query_id": np.concatenate(out_q),
-                             "neighbor_id": np.concatenate(out_n),
-                             "cos": np.concatenate(out_c)})
+                    d2 += (Q[qi, j].astype(np.float64)
+                           - C[ri, j].astype(np.float64)) ** 2
+                out |= ~(np.sqrt(d2) < max_distance)
+            return cos, np.where(out, -np.inf,
+                                 np.where(np.isnan(cos), np.inf, cos))
+
+        if admits is not None:
+            aq, akey = admits
+            order = np.argsort(ckey, kind="stable")
+            lo = np.searchsorted(ckey[order], akey)
+            cnt = np.searchsorted(ckey[order], akey, "right") - lo
+            code = pd.factorize(nid)[0]
+        hits = []
+        # bound a block at ~16M (query, row) pairs
+        step = max(1, (1 << 24) // n)
+        for s in range(0, len(Q), step):
+            if admits is None:
+                qi = np.arange(s, min(s + step, len(Q)))[:, None]
+                cos, key = score(qi, np.arange(n)[None, :])
+                thr = np.partition(key, -min(k, n), axis=1)[:, [-min(k, n)]]
+                i, ri = np.nonzero((key >= thr) & (key > -np.inf))
+                hits.append((qi[i, 0], ri, cos[i, ri]))
+                continue
+            # the block's queries, each paired with the rows of its keys; a
+            # neighbor id met through several rows (cells) scores once
+            a, b = np.searchsorted(aq, [s, s + step])
+            c = cnt[a:b]
+            qi = np.repeat(aq[a:b], c)
+            ri = order[np.repeat(lo[a:b] - np.cumsum(c) + c, c)
+                       + np.arange(c.sum())]
+            first = np.unique(qi * n + code[ri], return_index=True)[1]
+            qi, ri = qi[first], ri[first]
+            cos, key = score(qi, ri)
+            # per query by key descending, down to its k-th key
+            o = np.lexsort((-key, qi))
+            qi, ri, cos, key = qi[o], ri[o], cos[o], key[o]
+            kth = np.minimum(np.searchsorted(qi, qi) + k - 1,
+                             np.searchsorted(qi, qi, "right") - 1)
+            keep = (key >= key[kth]) & (key > -np.inf)
+            hits.append((qi[keep], ri[keep], cos[keep]))
+        qi, ri, cos = map(np.concatenate, zip(*hits))
+        return pd.DataFrame({"query_id": qid[qi], "neighbor_id": nid[ri],
+                             "cos": cos})
 
     return topk
 
@@ -236,84 +244,80 @@ def cosine_topk_bruteforce(
     per-batch per-query top-k rows (ties at the k-th cos included) reach
     the rank window, so the |q|·|corpus| pairs never materialize. Scoring
     is bit-exact vs cosine_sim_expr (tests/test_ivf_cell_topk.py)."""
-    return _exact_topk(*_sides(corpus, queries, id_col, vec_col), k, vec_col)
+    return _exact_topk(corpus, queries, k, id_col, vec_col)
 
 
-def _sides(corpus, queries, id_col, vec_col):
-    """(corpus, queries) as _exact_topk reads them."""
-    return (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")),
-    )
-
-
-def _exact_topk(corpus, queries, k, vec_col, max_distance=None, key=None):
+def _exact_topk(corpus, queries, k, id_col, vec_col, max_distance=None,
+                key=None):
     """The one exact top-k of this module: (query_id, neighbor_id, cos,
-    rank) of ``queries`` (query_id, qv[, keys]), one row per query,
-    against ``corpus`` (neighbor_id, cv[, <key>]). A query meets the rows
-    within euclidean ``max_distance`` (None: all) and, with ``key``, only
-    the rows whose ``key`` is in its ``keys`` (probed cells, shortlist
-    ids), each neighbor id once. Other element types than float/double
-    are cast to array<double> on entry.
+    rank) of ``queries`` (<id_col>, <vec_col>[, keys]), one row per query,
+    against ``corpus`` (<id_col>, <vec_col>[, <key>]). A query meets the
+    rows within euclidean ``max_distance`` (None: all) or, with ``key``,
+    only the rows whose ``key`` is in its ``keys`` (probed cells,
+    shortlist ids): the kernel scores just those pairs, each neighbor id
+    once. Other element types than float/double are cast to
+    array<double> on entry.
 
-    The query side is read once, ``limit(cap + 1)`` with cap =
-    ``_BRUTEFORCE_QUERY_ROWS``; over the cap it is read partition by
-    partition in chunks of cap queries, so the driver holds one partition
-    plus one chunk. Each chunk is broadcast into ONE mapInPandas over the
-    corpus as it lies, one partition per core, where the kernel keeps
-    each query's rows down to its k-th best cos; one rank window takes
-    the union."""
-    def floats(df, col):
-        if _np_elem(df.schema[col].dataType) is not None:
+    The query side is read with ``limit(cap + 1)``, cap =
+    ``_BRUTEFORCE_QUERY_ROWS``; over the cap its plan runs again, read in
+    chunks of cap queries (``toLocalIterator``, one job per partition).
+    Each chunk is broadcast into ONE mapInPandas over the corpus as it
+    lies, one partition per core, where the kernel keeps each query's rows
+    down to its k-th best cos; one rank window takes the union. The
+    driver's Python heap holds one partition plus one chunk, but every
+    chunk's broadcast lives as long as the result."""
+    def floats(df):
+        if _np_elem(df.schema[vec_col].dataType) is not None:
             return df
-        return df.withColumn(col, F.col(col).cast("array<double>"))
+        return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
 
-    corpus, queries = floats(corpus, "cv"), floats(queries, "qv")
+    corpus = floats(corpus.select(*dict.fromkeys([id_col, vec_col, key or id_col])))
+    queries = floats(queries.select(id_col, vec_col, *["keys"] if key else []))
     topk = _cosine_topk_ties(
-        k, _np_elem(queries.schema["qv"].dataType),
-        _np_elem(corpus.schema["cv"].dataType), vec_col, max_distance,
+        k, _np_elem(queries.schema[vec_col].dataType),
+        _np_elem(corpus.schema[vec_col].dataType), vec_col, max_distance,
     )
     sc = corpus.sparkSession.sparkContext
     out_schema = T.StructType([
-        T.StructField("query_id", queries.schema["query_id"].dataType),
-        T.StructField("neighbor_id", corpus.schema["neighbor_id"].dataType),
+        T.StructField("query_id", queries.schema[id_col].dataType),
+        T.StructField("neighbor_id", corpus.schema[id_col].dataType),
         T.StructField("cos", T.DoubleType()),
     ])
 
     def scan(rows):
-        keys = None if key is None else [r["keys"] for r in rows]
-        bc = sc.broadcast((
-            np.array([r["query_id"] for r in rows]), [r["qv"] for r in rows],
-            keys, None if key is None else np.unique(np.concatenate(keys)),
-        ))
+        admits = None
+        if key:  # (query index, admitted key), by query index
+            keys = [r["keys"] for r in rows]
+            admits = (np.repeat(np.arange(len(rows)), [len(ks) for ks in keys]),
+                      pd.Series([x for ks in keys for x in ks]).to_numpy())
+        bc = sc.broadcast((np.array([r[id_col] for r in rows]),
+                           [r[vec_col] for r in rows], admits))
 
         def run(batches):
-            qid, qvecs, keys, admitted = bc.value
+            qid, qvecs, admits = bc.value
             for pdf in batches:
-                if admitted is not None:  # rows no query admits
-                    pdf = pdf[np.isin(pdf[key].to_numpy(), admitted)]
+                if key:  # drop the rows no query admits
+                    pdf = pdf[np.isin(pdf[key].to_numpy(), admits[1])]
                 if len(pdf):
-                    yield topk(qid, qvecs, pdf["neighbor_id"].to_numpy(),
-                               pdf["cv"], keys,
-                               None if key is None else pdf[key].to_numpy())
+                    yield topk(qid, qvecs, pdf[id_col].to_numpy(), pdf[vec_col],
+                               admits, pdf[key].to_numpy() if key else None)
 
         # the scan streams Arrow batches: one partition per core costs no
         # memory and skips a Python task per extra partition (bench.py
         # ann_topk, 64 partitions of 2,000 vectors: 4.5 → 0.6 s, local[4])
         return corpus.coalesce(sc.defaultParallelism).mapInPandas(run, out_schema)
 
-    def chunks(it):
-        while chunk := list(itertools.islice(it, cap)):
-            yield chunk
-
     cap = max(1, _BRUTEFORCE_QUERY_ROWS)
-    rows = queries.limit(cap + 1).collect()
-    if not rows:
-        return _empty_topk(corpus, "neighbor_id")
-    parts = [rows] if len(rows) <= cap else chunks(queries.toLocalIterator())
-    hits = functools.reduce(DataFrame.unionByName, map(scan, parts))
+    chunks = [queries.limit(cap + 1).collect()]
+    if len(chunks[0]) > cap:  # runs the query side's plan a second time
+        it = queries.toLocalIterator()
+        chunks = iter(lambda: list(itertools.islice(it, cap)), [])
+    scans = [scan(rows) for rows in chunks if rows]
+    if not scans:
+        return _empty_topk(corpus, id_col)
     # a vector held by several probed cells may score in several batches
-    return _top_k(hits, k, distinct=key is not None)
+    return _top_k(functools.reduce(DataFrame.unionByName, scans), k,
+                  distinct=key is not None)
 
 
 def lsh_topk(
@@ -331,8 +335,7 @@ def lsh_topk(
     euclidean distance < ``max_distance`` from the query: every row MLlib's
     bucketed BRP join could return. ``num_hash_tables``, ``bucket_length``
     and ``seed`` were that join's; they no longer shape the result."""
-    return _exact_topk(*_sides(corpus, queries, id_col, vec_col), k, vec_col,
-                       max_distance)
+    return _exact_topk(corpus, queries, k, id_col, vec_col, max_distance)
 
 
 def ivf_topk(
@@ -697,20 +700,18 @@ def ivf_topk_delta(
     Same output contract as ivf_topk: (query_id, neighbor_id, cos, rank).
 
     Runs one bounded collect when called: the queries, each with its
-    vector and the cells ``ivf_assign`` probes for it (``_nearest``'s tie
-    order), are ``_exact_topk``'s query side, and its scan reads the rows
-    of ``assigned`` in those cells where they lie — the index is never
-    shuffled. Bit-exact vs the cosine_sim_expr join, mixed float/double
-    sides included."""
+    vector and the cells ``ivf_assign`` probes for it, are
+    ``_exact_topk``'s query side; its scan streams ``assigned`` where it
+    lies (never shuffled) and scores each query against its probed cells'
+    rows only. A batch of Δq queries costs O(Δq·n_cells) assignment plus
+    Σ_cell (queries probing it)·(its rows) cosines. Bit-exact vs the
+    cosine_sim_expr join, mixed float/double sides included."""
     probes = ivf_assign(queries, centers, nprobe=nprobe,
                         id_col=id_col, vec_col=vec_col)
-    probed = probes.groupBy(F.col(id_col).alias("query_id")).agg(
-        F.first(vec_col).alias("qv"), F.collect_list("cell").alias("keys")
+    probed = probes.groupBy(id_col).agg(
+        F.first(vec_col).alias(vec_col), F.collect_list("cell").alias("keys")
     )
-    index = assigned.select(
-        "cell", F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    )
-    return _exact_topk(index, probed, k, vec_col, key="cell")
+    return _exact_topk(assigned, probed, k, id_col, vec_col, key="cell")
 
 
 # ---------- product quantization (IVF-PQ-style ADC; Jégou et al. 2011) ----------
@@ -878,13 +879,10 @@ def _adc_topk(
     )
     if refine is None:
         return ranked
-    shortlist = ranked.groupBy("query_id").agg(
+    shortlist = ranked.groupBy(F.col("query_id").alias(id_col)).agg(
         F.collect_list("neighbor_id").alias("keys")
-    ).join(qv, "query_id")
-    return _exact_topk(
-        refine.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")),
-        shortlist, k, vec_col, key="neighbor_id",
-    )
+    ).join(qv.withColumnsRenamed({"query_id": id_col, "qv": vec_col}), id_col)
+    return _exact_topk(refine, shortlist, k, id_col, vec_col, key=id_col)
 
 
 def pq_topk(
